@@ -13,21 +13,47 @@ growing directory/Kafka topic: the watermark bounds state (windows older
 than max(event_time) - 1h are finalized and evicted in append mode), and
 the windowed aggregation shuffles once on (window, event_type) with
 partial aggregation map-side — the same plan shape as the batch twin.
+
+Every query starts through `_run_streams`, which sizes its state
+partitions from the source bytes. Stateful streams get no AQE
+coalescing: each micro-batch runs exactly `spark.sql.shuffle.partitions`
+state tasks, whatever the input, and the count is frozen into the
+checkpoint. So the count is the one AQE would coalesce the source to in
+a batch query, by Spark's own rule (CoalesceShufflePartitions and
+ShufflePartitionsUtil, confs read from the session):
+
+    min_num = coalescePartitions.minPartitionNum, else defaultParallelism
+              (1 when coalescePartitions.parallelismFirst is false)
+    target  = max(coalescePartitions.minPartitionSize,
+                  min(advisoryPartitionSizeInBytes, ceil(bytes / min_num)))
+    n       = ceil(bytes / target), clamped to [1, spark.sql.shuffle.partitions]
+
+where `bytes` is the on-disk size of the files the stream reads. A
+session with `spark.sql.adaptive.enabled` or
+`adaptive.coalescePartitions.enabled` off coalesces nothing, so its
+streams keep `spark.sql.shuffle.partitions`. Small sources run one state
+task per batch. The rule uses compressed source bytes, so a
+stream-stream join's uncompressed buffered state per partition is larger
+than AQE's target; BASELINE.md records the sizes measured so far. A
+restarted query keeps the count its offset log recorded.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..datamodel import epoch_micros, epoch_micros_sql, source_fingerprint
 
 # Per-query state-store metrics captured after every completed run:
-# query name -> [{batch_id, operator, n_rows, mem_bytes, custom}, ...].
+# query name -> [{batch_id, operator, n_partitions, n_rows, mem_bytes,
+# custom}, ...].
 # This is the observability the 100-TB design needs — "state is bounded"
 # must be a NUMBER per batch, not an assertion (tools/stream_state_ab.py
 # records it in BASELINE.md).
@@ -89,23 +115,87 @@ def _rocksdb_tuning() -> dict:
     return confs
 
 
+def _source_bytes(source_dir: str) -> int:
+    """On-disk bytes of the files a file-stream source reads from
+    `source_dir`: symlinks are followed, and `_`/`.`-prefixed names
+    (markers, commit logs) are skipped, as Spark's listing skips them."""
+    return sum(
+        e.stat().st_size
+        for e in os.scandir(source_dir)
+        if not e.name.startswith(("_", ".")) and e.is_file()
+    )
+
+
+def _state_partitions(spark: SparkSession, nbytes: int) -> int:
+    """The state-partition count for a stream over `nbytes` of source:
+    the module docstring's rule, read from the session's confs."""
+    conf = spark.conf
+    cap = int(conf.get("spark.sql.shuffle.partitions"))
+    if any(
+        conf.get(k).lower() != "true"
+        for k in ("spark.sql.adaptive.enabled",
+                  "spark.sql.adaptive.coalescePartitions.enabled")
+    ):
+        return cap
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    advisory = to_bytes(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    min_size = to_bytes(conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    min_num = 1
+    if conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst").lower() == "true":
+        min_num = int(
+            conf.get("spark.sql.adaptive.coalescePartitions.minPartitionNum", None)
+            or spark.sparkContext.defaultParallelism
+        )
+    target = max(min_size, min(advisory, math.ceil(nbytes / min_num)), 1)
+    return max(1, min(cap, math.ceil(nbytes / target)))
+
+
+def _run_streams(
+    spark: SparkSession,
+    source_dir: str,
+    writers: dict[str, DataStreamWriter],
+    heavy_state: bool = False,
+) -> None:
+    """Run one operator's streaming queries to completion.
+
+    Each writer starts as an availableNow query named by its key, after
+    any same-named active query is stopped. Around the starts only, the
+    session carries the state-partition count sized from the bytes
+    under `source_dir`, plus the RocksDB provider flip for
+    `heavy_state` joins; a query clones the session conf when it
+    starts, so restoring it afterwards leaves the session's other
+    queries untouched. All queries are then awaited (recording their
+    LAST_STATE_METRICS); if any start or await fails, every query
+    started here is stopped before the error propagates."""
+    for q in spark.streams.active:
+        if q.name in writers:
+            q.stop()
+    n = _state_partitions(spark, _source_bytes(source_dir))
+    confs = {"spark.sql.shuffle.partitions": str(n)}
+    provider = _state_provider() if heavy_state else None
+    if provider is not None:
+        confs.update({_STATE_PROVIDER_CONF: provider, **_rocksdb_tuning()})
+    queries = []
+    try:
+        with _session_conf(spark, confs):
+            for name, writer in writers.items():
+                queries.append(
+                    writer.queryName(name).trigger(availableNow=True).start()
+                )
+        for q in queries:
+            _await_done(q)
+    except BaseException:
+        for q in queries:
+            q.stop()
+        raise
+
+
 @contextmanager
-def _heavy_state_session(spark: SparkSession):
-    """Scope the state-store provider flip (+ RocksDB tuning confs) to
-    one query START (they are read when the query starts; restoring the
-    confs after .start() keeps the session's other streaming queries
-    untouched)."""
-    prov = _state_provider()
-    if prov is None:
-        yield
-        return
-    flips = {_STATE_PROVIDER_CONF: prov, **_rocksdb_tuning()}
-    prevs = {}
-    for k, v in flips.items():
-        try:
-            prevs[k] = spark.conf.get(k)
-        except Exception:
-            prevs[k] = None
+def _session_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set `confs` on the session for the block, then restore each key's
+    previous value (or unset it if it was not set)."""
+    prevs = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
         spark.conf.set(k, v)
     try:
         yield
@@ -128,7 +218,7 @@ def _await_done(q) -> None:
     via SPARK_GRAFT_STREAM_TIMEOUT_S (default 3600 s).
     """
     budget = float(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT_S", "3600"))
-    if not q.awaitTermination(budget):  # pragma: no cover - needs a hang
+    if not q.awaitTermination(budget):
         q.stop()
         raise TimeoutError(f"streaming query {q.name} exceeded {budget}s")
     rows = []
@@ -137,6 +227,7 @@ def _await_done(q) -> None:
             rows.append({
                 "batch_id": p.get("batchId"),
                 "operator": op.get("operatorName"),
+                "n_partitions": op.get("numShufflePartitions"),
                 "n_rows": op.get("numRowsTotal"),
                 "mem_bytes": op.get("memoryUsedBytes"),
                 "custom": {
@@ -175,13 +266,8 @@ def streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-
-    # a previous invocation in the same session may still own the sink name
-    for q in spark.streams.active:
-        if q.name == QUERY_NAME:
-            q.stop()
-
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
+    src = _stage_dir(path)
+    stream = spark.readStream.schema(schema).parquet(src)
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -191,14 +277,9 @@ def streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(QUERY_NAME)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    _run_streams(spark, src, {
+        QUERY_NAME: agg.writeStream.format("memory").outputMode("complete"),
+    })
     return spark.table(QUERY_NAME).select(
         F.col("w").getField("start").cast("long").alias("window_start"),
         "event_type",
@@ -273,12 +354,8 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-
-    for q in spark.streams.active:
-        if q.name == SESSIONIZE_QUERY_NAME:
-            q.stop()
-
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
+    src = _stage_dir(path)
+    stream = spark.readStream.schema(schema).parquet(src)
     # epoch seconds computed Spark-side so the pandas stage sees plain
     # int64 (no timezone semantics anywhere near the state function)
     ev = stream.select(
@@ -294,14 +371,9 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(SESSIONIZE_QUERY_NAME)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    _run_streams(spark, src, {
+        SESSIONIZE_QUERY_NAME: sessions.writeStream.format("memory").outputMode("append"),
+    })
     return spark.table(SESSIONIZE_QUERY_NAME)
 
 
@@ -358,12 +430,8 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch computation, so this is a full hash-gated entry."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-
-    for q in spark.streams.active:
-        if q.name == SLIDING_QUERY_NAME:
-            q.stop()
-
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
+    src = _stage_dir(path)
+    stream = spark.readStream.schema(schema).parquet(src)
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -373,14 +441,9 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(SLIDING_QUERY_NAME)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    _run_streams(spark, src, {
+        SLIDING_QUERY_NAME: agg.writeStream.format("memory").outputMode("complete"),
+    })
     return spark.table(SLIDING_QUERY_NAME).select(
         F.col("w").getField("start").cast("long").alias("window_start"),
         "event_type",
@@ -417,25 +480,16 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark horizon; state here is O(distinct keys)."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-
-    for q in spark.streams.active:
-        if q.name == DEDUP_QUERY_NAME:
-            q.stop()
-
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
+    src = _stage_dir(path)
+    stream = spark.readStream.schema(schema).parquet(src)
     keys = stream.select(
         "user_id",
         "event_type",
         F.expr(f"({epoch_micros_sql(stream)}) div {86400 * 1_000_000}").cast("bigint").alias("day_bucket"),
     ).dropDuplicates(["user_id", "event_type", "day_bucket"])
-    q = (
-        keys.writeStream.format("memory")
-        .queryName(DEDUP_QUERY_NAME)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    _run_streams(spark, src, {
+        DEDUP_QUERY_NAME: keys.writeStream.format("memory").outputMode("append"),
+    })
     return spark.table(DEDUP_QUERY_NAME)
 
 
@@ -465,12 +519,8 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN — full hash gate."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-
-    for q in spark.streams.active:
-        if q.name == ENRICH_QUERY_NAME:
-            q.stop()
-
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
+    src = _stage_dir(path)
+    stream = spark.readStream.schema(schema).parquet(src)
     cust = (
         spark.read.parquet(f"{sf_dir}/customer.parquet")
         .select("c_custkey", "c_nationkey", "c_mktsegment")
@@ -487,14 +537,9 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("decimal(18,2)").cast("double").alias("val"),
         )
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(ENRICH_QUERY_NAME)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    _run_streams(spark, src, {
+        ENRICH_QUERY_NAME: joined.writeStream.format("memory").outputMode("append"),
+    })
     return spark.table(ENRICH_QUERY_NAME)
 
 
@@ -514,6 +559,14 @@ LEFT JOIN customer c ON e.user_id * {ENRICH_KEY_MULT} = c.c_custkey
 
 SSJOIN_QUERY_NAME = "gdalos_stream_ssjoin"
 SSJOIN_RANGE_H = 4  # purchase matches clicks in the preceding 4 hours
+
+
+def _bucket_sql(ts_col: str, w_us: int) -> str:
+    """Event-time bucket of width `w_us` for the range-join equality key.
+    `div` truncates toward zero, so the bucket around the epoch,
+    (-W, W), is two widths wide and every other bucket is exactly one;
+    see streaming_stream_join for why that keeps the replica invariant."""
+    return f"unix_micros({ts_col}) div {w_us}"
 
 
 def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -538,9 +591,13 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~2.7e9 RocksDB value reads at the 10x events upscale, where the
     corpus densifies to ~1.3k events/user/side; the r12 sweep walls of
     450-600 s are exactly this term). The range is 4 h wide, so bucket
-    event time by the range width and add the bucket to the equality
-    key: a matching pair always satisfies floor(c_us/W) IN
-    {floor(p_us/W) - 1 + 1 range} — concretely cb ∈ {pb-1, pb} — so
+    event time by the range width W and add the bucket to the equality
+    key. Invariant: a matching pair (p_us - W <= c_us <= p_us) always
+    has cb ∈ {pb-1, pb}. The bucket function (_bucket_sql, truncating
+    `div`) is monotone, and every bucket is at least W wide — the one
+    around the epoch, (-W, W), is 2W — so two times at most W apart
+    land in the same or adjacent buckets, pre-1970 times included
+    (tests pin pairs straddling 0 and -W). So
     emitting each purchase under TWO bucket keys (pb and pb-1) and
     joining on c_bk == p_bk makes every matching pair meet under
     EXACTLY ONE key (the two replica keys differ), while each probe now
@@ -557,15 +614,11 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-
-    for q in spark.streams.active:
-        if q.name == SSJOIN_QUERY_NAME:
-            q.stop()
-
+    src = _stage_dir(path)
     w_us = SSJOIN_RANGE_H * 3600 * 1_000_000
 
     def side(name: str, typ: str) -> DataFrame:
-        s = spark.readStream.schema(schema).parquet(_stage_dir(path))
+        s = spark.readStream.schema(schema).parquet(src)
         us = F.expr(epoch_micros_sql(s)).cast("bigint")
         return (
             s.filter(F.col("event_type") == typ)
@@ -577,15 +630,13 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withWatermark(f"{name}_ts", "60 days")
         )
 
-    clicks = side("c", "click").withColumn(
-        "c_bk", F.expr(f"unix_micros(c_ts) div {w_us}")
-    )
+    clicks = side("c", "click").withColumn("c_bk", F.expr(_bucket_sql("c_ts", w_us)))
     buys = side("p", "purchase").select(
         "*",
         F.explode(
             F.array(
-                F.expr(f"unix_micros(p_ts) div {w_us}"),
-                F.expr(f"unix_micros(p_ts) div {w_us} - 1"),
+                F.expr(_bucket_sql("p_ts", w_us)),
+                F.expr(f"{_bucket_sql('p_ts', w_us)} - 1"),
             )
         ).alias("p_bk"),
     )
@@ -605,15 +656,9 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(1_000_000)
         ).cast("bigint").alias("gap_sec"),
     )
-    with _heavy_state_session(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(SSJOIN_QUERY_NAME)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_done(q)
+    _run_streams(spark, src, {
+        SSJOIN_QUERY_NAME: joined.writeStream.format("memory").outputMode("append"),
+    }, heavy_state=True)
     return spark.table(SSJOIN_QUERY_NAME)
 
 
@@ -653,8 +698,9 @@ def _ssj_outer_run(
     user's ENTIRE buffered other side (O(rate^2) RocksDB reads per user
     per batch at densifying upscales; the r12 sf10 sweep walls of
     510/598 s are this term). The range width W = SSOJ_RANGE_H buckets
-    event time, and for any matching pair floor(c_us/W) and
-    floor(p_us/W) differ by at most one, so replicating ONE side under
+    event time, and for any matching pair the two buckets differ by at
+    most one (the invariant streaming_stream_join states, which holds
+    for pre-1970 times too), so replicating ONE side under
     its two possible bucket keys and adding bk-equality to the join
     makes each pair meet under exactly one key while probes touch only
     one bucket width of state. Outer-join null semantics pick WHICH
@@ -680,17 +726,11 @@ def _ssj_outer_run(
     for the gap arithmetic."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-
-    arm_l, arm_r = f"{query_name}_l", f"{query_name}_r"
-    names = {query_name, arm_l, arm_r}
-    for q in spark.streams.active:
-        if q.name in names:
-            q.stop()
-
+    src = _stage_dir(path)
     w_us = SSOJ_RANGE_H * 3600 * 1_000_000
 
     def side(name: str, typ: str) -> DataFrame:
-        s = spark.readStream.schema(schema).parquet(_stage_dir(path))
+        s = spark.readStream.schema(schema).parquet(src)
         us = F.expr(epoch_micros_sql(s)).cast("bigint")
         return (
             s.filter(F.col("event_type") == typ)
@@ -704,7 +744,7 @@ def _ssj_outer_run(
 
     def single(name: str, typ: str) -> DataFrame:
         return side(name, typ).withColumn(
-            f"{name}_bk", F.expr(f"unix_micros({name}_ts) div {w_us}")
+            f"{name}_bk", F.expr(_bucket_sql(f"{name}_ts", w_us))
         )
 
     def replicated(name: str, typ: str, ahead: bool) -> DataFrame:
@@ -716,8 +756,8 @@ def _ssj_outer_run(
             "*",
             F.explode(
                 F.array(
-                    F.expr(f"unix_micros({name}_ts) div {w_us}"),
-                    F.expr(f"unix_micros({name}_ts) div {w_us} + {delta}"),
+                    F.expr(_bucket_sql(f"{name}_ts", w_us)),
+                    F.expr(f"{_bucket_sql(f'{name}_ts', w_us)} + {delta}"),
                 )
             ).alias(f"{name}_bk"),
         )
@@ -746,15 +786,9 @@ def _ssj_outer_run(
         replicated("p", "purchase", ahead=False), cond, "leftOuter"
     ).select(*out_cols)
     if how == "leftOuter":
-        with _heavy_state_session(spark):
-            q = (
-                left_arm.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        _await_done(q)
+        _run_streams(spark, src, {
+            query_name: left_arm.writeStream.format("memory").outputMode("append"),
+        }, heavy_state=True)
         return spark.table(query_name)
 
     assert how == "fullOuter", how
@@ -764,27 +798,15 @@ def _ssj_outer_run(
         .filter(F.col("c_id").isNull())
         .select(*out_cols)
     )
-    with _heavy_state_session(spark):
-        ql = (
-            left_arm.writeStream.format("memory")
-            .queryName(arm_l)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qr = (
-            orphan_arm.writeStream.format("memory")
-            .queryName(arm_r)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_done(ql)
-    _await_done(qr)
+    arm_l, arm_r = f"{query_name}_l", f"{query_name}_r"
+    _run_streams(spark, src, {
+        arm_l: left_arm.writeStream.format("memory").outputMode("append"),
+        arm_r: orphan_arm.writeStream.format("memory").outputMode("append"),
+    }, heavy_state=True)
     LAST_STATE_METRICS[query_name] = [
         {**row, "arm": arm}
         for arm, qn in (("l", arm_l), ("r", arm_r))
-        for row in LAST_STATE_METRICS.get(qn, [])
+        for row in LAST_STATE_METRICS.pop(qn, [])
     ]
     return spark.table(arm_l).unionByName(spark.table(arm_r))
 
@@ -931,12 +953,8 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-epoch and exact-decimal columns are emitted."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-
-    for q in spark.streams.active:
-        if q.name == SW_QUERY_NAME:
-            q.stop()
-
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
+    src = _stage_dir(path)
+    stream = spark.readStream.schema(schema).parquet(src)
     ev = stream.select(
         "user_id",
         "value",
@@ -954,14 +972,9 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "session_value",
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(SW_QUERY_NAME)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    _run_streams(spark, src, {
+        SW_QUERY_NAME: agg.writeStream.format("memory").outputMode("append"),
+    })
     return spark.table(SW_QUERY_NAME)
 
 
@@ -1014,10 +1027,8 @@ def streaming_tumbling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     file set ≡ the batch groupBy, so the oracle gates values fully."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-    for q in spark.streams.active:
-        if q.name == TOPK_QUERY_NAME:
-            q.stop()
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
+    src = _stage_dir(path)
+    stream = spark.readStream.schema(schema).parquet(src)
     # tz-free day bucket from epoch micros (calendar day windows shift
     # with the session zone; the leaderboard day must not)
     ev = stream.withColumn(
@@ -1025,14 +1036,9 @@ def streaming_tumbling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"(({epoch_micros_sql(stream)}) div 86400000000) * 86400"),
     )
     agg = ev.groupBy("day_start", "event_type").agg(F.count(F.lit(1)).alias("n"))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(TOPK_QUERY_NAME)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    _run_streams(spark, src, {
+        TOPK_QUERY_NAME: agg.writeStream.format("memory").outputMode("complete"),
+    })
     from pyspark.sql.window import Window
 
     sink = spark.table(TOPK_QUERY_NAME).select("day_start", "event_type", "n")
@@ -1106,12 +1112,8 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-
-    for q in spark.streams.active:
-        if q.name == CUSUM_QUERY_NAME:
-            q.stop()
-
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
+    src = _stage_dir(path)
+    stream = spark.readStream.schema(schema).parquet(src)
     ev = stream.select(
         "user_id",
         "event_id",
@@ -1125,14 +1127,9 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        alarms.writeStream.format("memory")
-        .queryName(CUSUM_QUERY_NAME)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    _run_streams(spark, src, {
+        CUSUM_QUERY_NAME: alarms.writeStream.format("memory").outputMode("append"),
+    })
     return spark.table(CUSUM_QUERY_NAME)
 
 
@@ -1178,10 +1175,8 @@ def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink becomes a Delta/parquet sink the serving layer reads."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-    for q in spark.streams.active:
-        if q.name == OHLC_QUERY_NAME:
-            q.stop()
-    stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
+    src = _stage_dir(path)
+    stream = spark.readStream.schema(schema).parquet(src)
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
     base = ev.select(
         "event_type",
@@ -1202,14 +1197,9 @@ def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(OHLC_QUERY_NAME)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    _run_streams(spark, src, {
+        OHLC_QUERY_NAME: agg.writeStream.format("memory").outputMode("complete"),
+    })
     return spark.table(OHLC_QUERY_NAME).select(
         "event_type",
         F.col("w").getField("start").cast("long").alias("bar_start_s"),
@@ -1294,10 +1284,6 @@ def streaming_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior matches the declared semantics."""
     staged = _stage_three_batches(spark, sf_dir)
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    for q in spark.streams.active:
-        if q.name == WATERMARK_QUERY_NAME:
-            q.stop()
     # fresh in-memory state per invocation: the memory sink accumulates
     # across runs if the checkpoint is reused
     ckpt = tempfile.mkdtemp(prefix="gdalos_wm_ckpt_")
@@ -1313,15 +1299,11 @@ def streaming_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", f"{WM_WINDOW_S} seconds").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(WATERMARK_QUERY_NAME)
+    _run_streams(spark, staged, {
+        WATERMARK_QUERY_NAME: agg.writeStream.format("memory")
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+        .option("checkpointLocation", ckpt),
+    })
     return (
         spark.table(WATERMARK_QUERY_NAME)
         .select(
@@ -1405,10 +1387,6 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(base, exist_ok=True)
 
-    for q in spark.streams.active:
-        if q.name == SINK_QUERY_NAME:
-            q.stop()
-
     schema = spark.read.parquet(src).schema
     stream = (
         spark.readStream.schema(schema)
@@ -1421,16 +1399,12 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
     )
-    q = (
-        rows.writeStream.format("parquet")
-        .queryName(SINK_QUERY_NAME)
+    _run_streams(spark, staged, {
+        SINK_QUERY_NAME: rows.writeStream.format("parquet")
         .outputMode("append")
         .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+        .option("checkpointLocation", ckpt),
+    })
     sunk = spark.read.parquet(out_dir)
     return (
         sunk.groupBy("event_type")
@@ -1494,10 +1468,6 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur_ptr = os.path.join(base, "_CURRENT")
     os.makedirs(base, exist_ok=True)
 
-    for q in spark.streams.active:
-        if q.name == UPSERT_QUERY_NAME:
-            q.stop()
-
     schema = spark.read.parquet(src).schema
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1541,14 +1511,10 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(staged)
     )
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
-    q = (
-        ev.writeStream.foreachBatch(merge_batch)
-        .queryName(UPSERT_QUERY_NAME)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    _run_streams(spark, staged, {
+        UPSERT_QUERY_NAME: ev.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", ckpt),
+    })
     with open(cur_ptr) as f:
         final = spark.read.parquet(f.read().strip())
     return final.select(
@@ -1678,10 +1644,6 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the straggler rows. Output: (user_id, event_type, t_us) of every
     emitted row."""
     staged = _stage_dedup_wm_batches(spark, sf_dir)
-
-    for q in spark.streams.active:
-        if q.name == DWM_QUERY_NAME:
-            q.stop()
     ckpt = tempfile.mkdtemp(prefix="gdalos_dwm_ckpt_")
 
     stream = (
@@ -1692,15 +1654,11 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream.withWatermark(
         "ts", f"{DWM_DELAY_US // 1_000_000} seconds"
     ).dropDuplicatesWithinWatermark(["user_id", "event_type"])
-    q = (
-        out.writeStream.format("memory")
-        .queryName(DWM_QUERY_NAME)
+    _run_streams(spark, staged, {
+        DWM_QUERY_NAME: out.writeStream.format("memory")
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+        .option("checkpointLocation", ckpt),
+    })
     return (
         spark.table(DWM_QUERY_NAME)
         .select(

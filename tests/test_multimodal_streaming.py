@@ -1,6 +1,8 @@
 """Tests for multimodal decode (#40, rows-only) and structured
 streaming (#41, full oracle parity via its batch twin)."""
 
+import pytest
+
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR, assert_matches_oracle
 
@@ -97,6 +99,132 @@ def test_stateful_sessionize_emits_closed_sessions(spark):
     }
     assert len(got) > 0
     assert got == expected
+
+
+def test_state_partitions_rule_bounds(spark):
+    """The source-bytes sizing rule at its bounds: an empty source runs
+    one state task, a huge one clamps at spark.sql.shuffle.partitions."""
+    from gdalos_spark.streaming.events import _state_partitions
+
+    assert _state_partitions(spark, 0) == 1
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _state_partitions(spark, 1 << 50) == cap
+
+
+def test_state_partitions_rule_follows_aqe_confs(spark):
+    """The sizing follows the session's coalescing confs as AQE does:
+    coalescing off keeps the cap; minPartitionNum, else
+    defaultParallelism, bounds the per-partition target while
+    parallelismFirst is on, and only the advisory size when it is off."""
+    from gdalos_spark.streaming.events import _session_conf, _state_partitions
+
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    mb = 1 << 20
+    for k in ("spark.sql.adaptive.enabled",
+              "spark.sql.adaptive.coalescePartitions.enabled"):
+        with _session_conf(spark, {k: "false"}):
+            assert _state_partitions(spark, 0) == cap
+    sizes = {
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
+    }
+    with _session_conf(spark, sizes):
+        par = spark.sparkContext.defaultParallelism
+        # 64 MB per core stays under the advisory size: one per core
+        assert _state_partitions(spark, 64 * mb * par) == min(cap, par)
+        with _session_conf(
+            spark, {"spark.sql.adaptive.coalescePartitions.minPartitionNum": "3"}
+        ):
+            assert _state_partitions(spark, 30 * mb) == min(cap, 3)
+        with _session_conf(
+            spark, {"spark.sql.adaptive.coalescePartitions.parallelismFirst": "false"}
+        ):
+            assert _state_partitions(spark, 30 * mb) == 1
+            assert _state_partitions(spark, 130 * mb) == min(cap, 3)
+
+
+def _cusum_partitions(spark, ducks):
+    from gdalos_spark.streaming.events import CUSUM_QUERY_NAME, LAST_STATE_METRICS
+
+    assert_matches_oracle(
+        spark,
+        ducks,
+        entrymod.queries()["streaming_cusum"],
+        entrymod.oracle_sql()["streaming_cusum"],
+    )
+    rows = LAST_STATE_METRICS[CUSUM_QUERY_NAME]
+    assert rows
+    return {r["n_partitions"] for r in rows}
+
+
+def test_small_stateful_stream_runs_one_state_partition(spark, ducks):
+    """A stateful key over the tiny test source is sized to ONE state
+    partition (not the session's shuffle partitions), matches its
+    oracle, and leaves the session's partition count untouched."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert _cusum_partitions(spark, ducks) == {1}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_stateful_stream_clamps_at_shuffle_partitions(spark, ducks):
+    """With tiny AQE partition sizes in the session the same key sizes
+    past the cap, clamps at spark.sql.shuffle.partitions, and still
+    matches its oracle: the multi-partition state path stays covered."""
+    keys = (
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+    )
+    prev = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "1b")
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert cap > 1
+        assert _cusum_partitions(spark, ducks) == {cap}
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def test_full_outer_timeout_stops_both_arms(spark, monkeypatch):
+    """A timeout while awaiting the two-query full-outer join raises and
+    stops BOTH arms: no streaming query is left running."""
+    from gdalos_spark.streaming.events import streaming_stream_full_outer_join
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TIMEOUT_S", "0.01")
+    with pytest.raises(TimeoutError):
+        streaming_stream_full_outer_join(spark, SF_DIR)
+    assert spark.streams.active == []
+
+
+def test_range_buckets_hold_invariant_before_1970(spark):
+    """The stream-stream joins' truncating `div` bucket: for any pair a
+    range-width W apart or less, the later time's bucket is the earlier
+    one's or the next — also for pre-1970 (negative) epoch times, where
+    the bucket around 0 is 2W wide. Pairs straddle 0 and -W, and sit at
+    the exact range ends."""
+    from pyspark.sql import functions as F
+
+    from gdalos_spark.streaming.events import SSJOIN_RANGE_H, _bucket_sql
+
+    w = SSJOIN_RANGE_H * 3600 * 1_000_000
+    pairs = []  # (earlier, later) epoch micros with later - earlier <= W
+    for anchor in (0, -w, -2 * w, w):
+        for off in (-w - 1, -w, -w + 1, -1, 0, 1, w - 1, w, w + 1):
+            p_us = anchor + off
+            for gap in (0, 1, w // 2, w - 1, w):
+                pairs.append((p_us - gap, p_us))
+    assert any(c < 0 < p for c, p in pairs) and any(c < -w < p for c, p in pairs)
+    df = spark.createDataFrame(pairs, "c_us long, p_us long").select(
+        F.timestamp_micros("c_us").alias("c_ts"), F.timestamp_micros("p_us").alias("p_ts")
+    )
+    got = df.select(
+        F.expr(_bucket_sql("c_ts", w)).alias("cb"),
+        F.expr(_bucket_sql("p_ts", w)).alias("pb"),
+    ).collect()
+    for r in got:
+        # cb ∈ {pb-1, pb} (purchase replicas) <=> pb ∈ {cb, cb+1} (ahead replicas)
+        assert r.pb - r.cb in (0, 1), r
 
 
 def test_multimodal_frames_sampling(spark):

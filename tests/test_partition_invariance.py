@@ -10,11 +10,13 @@ from __future__ import annotations
 import decimal
 import glob
 import os
+from contextlib import nullcontext
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from gdalos_spark.streaming.events import LAST_STATE_METRICS, _session_conf
 from tests.conftest import SF_DIR
 
 INVARIANCE_KEYS = [
@@ -57,6 +59,9 @@ INVARIANCE_KEYS = [
     "layout_advisor_sampled",
     "dedup_incremental_minhash_stored",
     "streaming_dedup_watermark",
+    # the stream-stream join's buffered-state path (range buckets, RocksDB
+    # provider) must match the oracle with its state split across tasks
+    "streaming_stream_join",
     # round-9 additions: the COG manifest's per-level aggregates must
     # reassemble identically from any scene layout; the jpeg/h264
     # manifests pin the Arrow-batch tiling/bitstream walks; kmeans_train
@@ -101,7 +106,10 @@ def skewed_spark(spark):
     silently reuse the existing session and ignore builder confs):
     5 shuffle partitions + 128 KiB splits reshapes every exchange and
     scan, which is exactly the lever that exposes unordered float
-    reductions. Restored afterwards."""
+    reductions. Restored afterwards. Streams size their state
+    partitions from the source bytes (1 for the test data), so the
+    streaming keys also get 1-byte AQE partition sizes, which clamps
+    their state at the 5 shuffle partitions (`_stream_layout`)."""
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.shuffle.partitions", "5")
@@ -123,6 +131,18 @@ def _norm(v):
     return str(v)
 
 
+def _stream_layout(spark, key):
+    """For a streaming key, 1-byte AQE partition sizes around the query
+    call, so its state partitions clamp at spark.sql.shuffle.partitions."""
+    if not key.startswith("streaming_"):
+        return nullcontext()
+    LAST_STATE_METRICS.clear()
+    return _session_conf(spark, {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
+    })
+
+
 @pytest.mark.parametrize("key", INVARIANCE_KEYS)
 def test_values_survive_repartitioning(skewed_spark, key):
     con = duckdb.connect()
@@ -130,7 +150,11 @@ def test_values_survive_repartitioning(skewed_spark, key):
         con.execute(
             f"CREATE VIEW {os.path.basename(p)[:-8]} AS SELECT * FROM read_parquet('{p}')"
         )
-    sdf = entrymod.queries()[key](skewed_spark, SF_DIR)
+    with _stream_layout(skewed_spark, key):
+        sdf = entrymod.queries()[key](skewed_spark, SF_DIR)
+    if key.startswith("streaming_"):
+        parts = {r["n_partitions"] for v in LAST_STATE_METRICS.values() for r in v}
+        assert parts == {5}, f"{key}: state ran at {parts} partitions"
     scols = sdf.columns
     order = sorted(range(len(scols)), key=lambda i: scols[i].lower())
     s = sorted(tuple(_norm(r[scols[i]]) for i in order) for r in sdf.collect())

@@ -231,7 +231,10 @@ def test_stream_full_outer_matches_oracle(spark, ducks):
 
 def test_stream_full_outer_has_both_null_tails(spark):
     """The full-outer key must actually emit BOTH unmatched sides (else
-    it degenerates to the left-outer key)."""
+    it degenerates to the left-outer key). Its two arms' state metrics
+    end up under the combined query name only."""
+    from gdalos_spark.streaming.events import LAST_STATE_METRICS, SSFOJ_QUERY_NAME
+
     rows = entrymod.queries()["streaming_stream_full_outer_join"](
         spark, SF_DIR
     ).collect()
@@ -241,6 +244,10 @@ def test_stream_full_outer_has_both_null_tails(spark):
     assert (False, False) in kinds     # matched pairs
     assert (False, True) in kinds      # unconverted clicks
     assert (True, False) in kinds      # orphan purchases
+    assert {r["arm"] for r in LAST_STATE_METRICS[SSFOJ_QUERY_NAME]} == {"l", "r"}
+    assert [n for n in LAST_STATE_METRICS if n.startswith(SSFOJ_QUERY_NAME)] == [
+        SSFOJ_QUERY_NAME
+    ]
 
 
 # --- raster_flow_accumulation ------------------------------------------------

@@ -2,8 +2,9 @@
 
 Runs the 72h-horizon outer join (and optionally the full-outer twin)
 under both providers against a given SF dir, printing one JSON line per
-(op, arm) with wall time, output rows, and the per-batch state-operator
-metrics (numRowsTotal / memoryUsedBytes / RocksDB custom metrics) that
+(op, arm) with wall time, output rows, the state-partition count the
+run was sized to, and the per-batch state-operator metrics
+(numRowsTotal / memoryUsedBytes / RocksDB custom metrics) that
 prove state is bounded and evicted across batches — the numbers
 BASELINE.md pins for the 10M-event stress protocol.
 
@@ -63,10 +64,12 @@ def main() -> int:
             t0 = time.time()
             n = fn(spark, sf_dir).count()
             wall = round(time.time() - t0, 2)
+            state = SE.LAST_STATE_METRICS.get(qname[op], [])
             print(json.dumps({
                 "op": op, "arm": arm, "sf_dir": sf_dir,
                 "wall_s": wall, "rows": n,
-                "state": SE.LAST_STATE_METRICS.get(qname[op], []),
+                "state_partitions": sorted({r["n_partitions"] for r in state}),
+                "state": state,
             }))
     spark.stop()
     return 0
