@@ -18,6 +18,7 @@ schema, not the derivation.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -42,13 +43,16 @@ TABLES = (
 # SPARK_GRAFT_GRID_W/H make CELL COUNT a scale axis (VERDICT r11 item 1:
 # scale factor alone only grows the rows aggregated INTO each cell, never
 # the cells — a 100-TB raster is 10^10+ cells, so the dem-family plans
-# must be exercised at >=10^7 cells too; tools/grid_sweep.py). The driver
-# and every correctness gate run the 64x64 default — hash gates are
-# untouched. Both dims must be multiples of 64: that keeps the resample
-# target grids (3/2 and 3/8 of the source axis) exact AND keeps the
-# scene writers' row-major scene ids collision-free (SCENE=32 blocks;
-# a dim that is a multiple of 8 but not of SCENE would alias scene ids,
-# and a dim < SCENE would divide by zero in the scene encode).
+# must be exercised at >=10^7 cells too: the 4096x4096 sweep ran as
+# `SPARK_GRAFT_GRID_W=4096 SPARK_GRAFT_GRID_H=4096 tools/sf10_sweep.py`,
+# recorded in grid4096_sweep.json and BASELINE.md "Raster cell count as
+# a scale axis"). Every correctness gate runs the 64x64 default —
+# hash gates are untouched. Both dims must be multiples of
+# 64: that keeps the resample target grids (3/2 and 3/8 of the source
+# axis) exact AND keeps the scene writers' row-major scene ids
+# collision-free (SCENE=32 blocks; a dim that is a multiple of 8 but
+# not of SCENE would alias scene ids, and a dim < SCENE would divide by
+# zero in the scene encode).
 GRID_W = int(os.environ.get("SPARK_GRAFT_GRID_W", "64"))
 GRID_H = int(os.environ.get("SPARK_GRAFT_GRID_H", str(GRID_W)))
 if any(g % 64 or g < 64 or g > 65536 for g in (GRID_W, GRID_H)):
@@ -233,6 +237,47 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load(spark, sf_dir, t) for t in TABLES}
+
+
+def coalesced_partitions(spark: SparkSession, nbytes: int) -> int:
+    """The partition count AQE would coalesce `nbytes` of input to in a
+    batch query, for layouts that AQE cannot coalesce once written: a
+    stateful stream runs exactly `spark.sql.shuffle.partitions` state
+    tasks per micro-batch (frozen into its checkpoint), and a bucketed
+    table scans one task per bucket. Spark's own rule
+    (CoalesceShufflePartitions and ShufflePartitionsUtil), confs read
+    from the session:
+
+        min_num = coalescePartitions.minPartitionNum, else defaultParallelism
+                  (1 when coalescePartitions.parallelismFirst is false)
+        target  = max(coalescePartitions.minPartitionSize,
+                      min(advisoryPartitionSizeInBytes, ceil(bytes / min_num)))
+        n       = ceil(bytes / target), clamped to [1, spark.sql.shuffle.partitions]
+
+    A session with `spark.sql.adaptive.enabled` or
+    `adaptive.coalescePartitions.enabled` off coalesces nothing, so it
+    gets `spark.sql.shuffle.partitions`. Callers pass compressed
+    on-disk bytes, so the in-memory size per partition is larger than
+    AQE's target; BASELINE.md records the sizes measured so far."""
+    conf = spark.conf
+    cap = int(conf.get("spark.sql.shuffle.partitions"))
+    if any(
+        conf.get(k).lower() != "true"
+        for k in ("spark.sql.adaptive.enabled",
+                  "spark.sql.adaptive.coalescePartitions.enabled")
+    ):
+        return cap
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    advisory = to_bytes(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    min_size = to_bytes(conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    min_num = 1
+    if conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst").lower() == "true":
+        min_num = int(
+            conf.get("spark.sql.adaptive.coalescePartitions.minPartitionNum", None)
+            or spark.sparkContext.defaultParallelism
+        )
+    target = max(min_size, min(advisory, math.ceil(nbytes / min_num)), 1)
+    return max(1, min(cap, math.ceil(nbytes / target)))
 
 
 def split_for_cpu(df: DataFrame, *keys: str) -> DataFrame:

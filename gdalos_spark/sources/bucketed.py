@@ -9,6 +9,14 @@ orderkey/custkey join runs exchange-free (tests/test_bucketed.py proves
 the property on the executed plan; merge_upsert_plan cites it as the
 layout that makes the MERGE target side shuffle-free).
 
+A bucketed scan runs one task per bucket, and AQE cannot coalesce it,
+so `stage_facts` sizes the bucket count from the data:
+`datamodel.coalesced_partitions` of the summed on-disk bytes of the
+staged facts, the rule that also sizes stream state partitions
+(streaming/events.py). One count for all staged facts keeps every
+staged join bucket-to-bucket; it is 1 at sf0.001 and grows to the
+session's `spark.sql.shuffle.partitions` at scale.
+
 The helpers are thin by design: the VALUE is the layout contract
 (bucket count, key, sort) living in one place instead of being re-typed
 per pipeline.
@@ -25,7 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 DEFAULT_BUCKETS = 8
 
 # The facts the default loader serves bucketed when a staged copy exists,
-# as name -> (bucket key, sort columns). orders/lineitem bucket on
+# as name -> (bucket key, sort columns). All of them are staged at ONE
+# bucket count, sized from their summed bytes (stage_facts), so any two
+# of them join bucket-to-bucket. orders/lineitem bucket on
 # orderkey: it is THE repeated fact-join edge (Q3/Q5/Q21 family) — at
 # 100 TB every orders⋈lineitem runs bucket-to-bucket with zero exchanges
 # once the ingest shuffle is paid. events buckets on user_id and sorts
@@ -45,7 +55,6 @@ BUCKETED_FACTS = {
     # real cluster even where local[32] survives it.
     "customer": ("c_custkey", ()),
 }
-STAGE_BUCKETS = 32
 _MARKER = "_STAGED"  # publish_staged_dir's marker; underscore = scan-invisible
 
 
@@ -120,22 +129,34 @@ def _marker_meta(final: str) -> dict | None:
 
 
 def stage_facts(
-    spark: SparkSession, sf_dir: str, buckets: int = STAGE_BUCKETS
+    spark: SparkSession, sf_dir: str, buckets: int | None = None
 ) -> list[str]:
     """Pay the bucketing shuffle ONCE per (source fingerprint, bucket
-    count): write the orderkey-bucketed copies of orders/lineitem under
-    the stage root so every later session's `datamodel.load` serves
-    them exchange-free. Publication goes through
-    `datamodel.publish_staged_dir` — one atomic-swap protocol, not two
-    — so a concurrent reader only ever sees a complete store and a
-    failed build leaves no temp droppings. Returns the table names
-    staged this call (empty when everything was already current)."""
-    from gdalos_spark.datamodel import publish_staged_dir, read_plain
+    count): write the bucketed copies of the BUCKETED_FACTS present in
+    `sf_dir` under the stage root so every later session's
+    `datamodel.load` serves them exchange-free. The bucket count is
+    `buckets` when given, else `datamodel.coalesced_partitions` of the
+    facts' summed on-disk bytes — one count for every fact, recorded in
+    each marker, so a store staged at another count is re-staged once.
+    Publication goes through `datamodel.publish_staged_dir` — one
+    atomic-swap protocol, not two — so a concurrent reader only ever
+    sees a complete store and a failed build leaves no temp droppings.
+    Returns the table names staged this call (empty when everything was
+    already current)."""
+    from gdalos_spark.datamodel import (
+        coalesced_partitions,
+        publish_staged_dir,
+        read_plain,
+    )
 
+    # partial source dirs stage what they have
+    present = [n for n in BUCKETED_FACTS if os.path.exists(f"{sf_dir}/{n}.parquet")]
+    if buckets is None:
+        nbytes = sum(os.path.getsize(f"{sf_dir}/{n}.parquet") for n in present)
+        buckets = coalesced_partitions(spark, nbytes)
     staged: list[str] = []
-    for name, (key, sort) in BUCKETED_FACTS.items():
-        if not os.path.exists(f"{sf_dir}/{name}.parquet"):
-            continue  # partial source dirs stage what they have
+    for name in present:
+        key, sort = BUCKETED_FACTS[name]
         final = _final_dir(sf_dir, name)
         blob = _marker_blob(sf_dir, name, buckets, key, sort)
         meta = _marker_meta(final)

@@ -18,29 +18,15 @@ Every query starts through `_run_streams`, which sizes its state
 partitions from the source bytes. Stateful streams get no AQE
 coalescing: each micro-batch runs exactly `spark.sql.shuffle.partitions`
 state tasks, whatever the input, and the count is frozen into the
-checkpoint. So the count is the one AQE would coalesce the source to in
-a batch query, by Spark's own rule (CoalesceShufflePartitions and
-ShufflePartitionsUtil, confs read from the session):
-
-    min_num = coalescePartitions.minPartitionNum, else defaultParallelism
-              (1 when coalescePartitions.parallelismFirst is false)
-    target  = max(coalescePartitions.minPartitionSize,
-                  min(advisoryPartitionSizeInBytes, ceil(bytes / min_num)))
-    n       = ceil(bytes / target), clamped to [1, spark.sql.shuffle.partitions]
-
-where `bytes` is the on-disk size of the files the stream reads. A
-session with `spark.sql.adaptive.enabled` or
-`adaptive.coalescePartitions.enabled` off coalesces nothing, so its
-streams keep `spark.sql.shuffle.partitions`. Small sources run one state
-task per batch. The rule uses compressed source bytes, so a
-stream-stream join's uncompressed buffered state per partition is larger
-than AQE's target; BASELINE.md records the sizes measured so far. A
-restarted query keeps the count its offset log recorded.
+checkpoint. So the count is `datamodel.coalesced_partitions` of the
+on-disk bytes of the files the stream reads: the count AQE would
+coalesce them to in a batch query, by the same rule that sizes the
+staged bucket count (sources/bucketed.py). Small sources run one state
+task per batch. A restarted query keeps the count its offset log recorded.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import tempfile
 from contextlib import contextmanager
@@ -49,7 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..datamodel import epoch_micros, epoch_micros_sql, source_fingerprint
+from ..datamodel import (
+    coalesced_partitions,
+    epoch_micros,
+    epoch_micros_sql,
+    source_fingerprint,
+)
 
 # Per-query state-store metrics captured after every completed run:
 # query name -> [{batch_id, operator, n_partitions, n_rows, mem_bytes,
@@ -126,30 +117,6 @@ def _source_bytes(source_dir: str) -> int:
     )
 
 
-def _state_partitions(spark: SparkSession, nbytes: int) -> int:
-    """The state-partition count for a stream over `nbytes` of source:
-    the module docstring's rule, read from the session's confs."""
-    conf = spark.conf
-    cap = int(conf.get("spark.sql.shuffle.partitions"))
-    if any(
-        conf.get(k).lower() != "true"
-        for k in ("spark.sql.adaptive.enabled",
-                  "spark.sql.adaptive.coalescePartitions.enabled")
-    ):
-        return cap
-    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
-    advisory = to_bytes(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    min_size = to_bytes(conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
-    min_num = 1
-    if conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst").lower() == "true":
-        min_num = int(
-            conf.get("spark.sql.adaptive.coalescePartitions.minPartitionNum", None)
-            or spark.sparkContext.defaultParallelism
-        )
-    target = max(min_size, min(advisory, math.ceil(nbytes / min_num)), 1)
-    return max(1, min(cap, math.ceil(nbytes / target)))
-
-
 def _run_streams(
     spark: SparkSession,
     source_dir: str,
@@ -170,7 +137,7 @@ def _run_streams(
     for q in spark.streams.active:
         if q.name in writers:
             q.stop()
-    n = _state_partitions(spark, _source_bytes(source_dir))
+    n = coalesced_partitions(spark, _source_bytes(source_dir))
     confs = {"spark.sql.shuffle.partitions": str(n)}
     provider = _state_provider() if heavy_state else None
     if provider is not None:

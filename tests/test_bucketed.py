@@ -8,13 +8,22 @@ at 100 TB (bucket once at ingest, join shuffle-free forever after).
 from __future__ import annotations
 
 import os
+import re
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
+
+# The staged layout is pinned at the count these tests always used and
+# at the count stage_facts sizes by default (1 bucket at sf0.001).
+STAGED_BUCKETS = pytest.mark.parametrize(
+    "buckets", [pytest.param(4, id="buckets4"), pytest.param(None, id="sized")]
+)
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
@@ -46,7 +55,8 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
-def test_default_loader_serves_staged_bucketed_facts(spark, monkeypatch, tmp_path_factory):
+@STAGED_BUCKETS
+def test_default_loader_serves_staged_bucketed_facts(spark, monkeypatch, tmp_path_factory, buckets):
     """The VERDICT-r06 contract: once stage_facts has run for a source
     fingerprint, `datamodel.load` serves the bucketed layout and the
     Q3-family plan carries ZERO hash-partitioning exchanges — join AND
@@ -57,10 +67,10 @@ def test_default_loader_serves_staged_bucketed_facts(spark, monkeypatch, tmp_pat
     root = str(tmp_path_factory.mktemp("bucketed_root"))
     monkeypatch.setenv("GDALOS_BUCKETED_ROOT", root)
 
-    staged = bucketed.stage_facts(spark, SF_DIR, buckets=4)
+    staged = bucketed.stage_facts(spark, SF_DIR, buckets=buckets)
     assert set(staged) == {"orders", "lineitem", "events", "customer"}
     # idempotent: same fingerprint re-stages nothing
-    assert bucketed.stage_facts(spark, SF_DIR, buckets=4) == []
+    assert bucketed.stage_facts(spark, SF_DIR, buckets=buckets) == []
 
     from gdalos_spark.datamodel import load
 
@@ -106,7 +116,8 @@ def test_attach_rejects_stale_fingerprint(spark, monkeypatch, tmp_path_factory, 
     assert bucketed.attach(spark, str(sf_copy), "orders") is None
 
 
-def test_default_loader_serves_bucketed_events_window(spark, monkeypatch, tmp_path_factory):
+@STAGED_BUCKETS
+def test_default_loader_serves_bucketed_events_window(spark, monkeypatch, tmp_path_factory, buckets):
     """The user_id window family (sessionize/funnel/retention/streaks)
     over staged events must carry ZERO exchanges and ZERO sorts: the
     bucket spec satisfies the window's ClusteredDistribution and the
@@ -117,7 +128,7 @@ def test_default_loader_serves_bucketed_events_window(spark, monkeypatch, tmp_pa
 
     root = str(tmp_path_factory.mktemp("bucketed_root_ev"))
     monkeypatch.setenv("GDALOS_BUCKETED_ROOT", root)
-    assert "events" in bucketed.stage_facts(spark, SF_DIR, buckets=4)
+    assert "events" in bucketed.stage_facts(spark, SF_DIR, buckets=buckets)
 
     q = events_sessionize(spark, SF_DIR)
     plan = q._jdf.queryExecution().executedPlan().toString()
@@ -133,7 +144,8 @@ def test_default_loader_serves_bucketed_events_window(spark, monkeypatch, tmp_pa
     assert rows_bucketed == rows_plain
 
 
-def test_large_regime_custkey_edge(spark, monkeypatch, tmp_path_factory):
+@STAGED_BUCKETS
+def test_large_regime_custkey_edge(spark, monkeypatch, tmp_path_factory, buckets):
     """Above CUSTKEY_BROADCAST_MAX_ROWS the Q3/Q5 custkey edge must stop
     broadcasting fact-sized frames: top_orders runs the semi-join + SMJ
     shape with ZERO hash exchanges over the staged layout, and both keys
@@ -146,7 +158,7 @@ def test_large_regime_custkey_edge(spark, monkeypatch, tmp_path_factory):
 
     root = str(tmp_path_factory.mktemp("bucketed_root_lr"))
     monkeypatch.setenv("GDALOS_BUCKETED_ROOT", root)
-    bucketed.stage_facts(spark, SF_DIR, buckets=4)
+    bucketed.stage_facts(spark, SF_DIR, buckets=buckets)
     monkeypatch.setattr(R, "CUSTKEY_BROADCAST_MAX_ROWS", 0)
 
     t = R.top_orders(spark, SF_DIR)
@@ -154,3 +166,44 @@ def test_large_regime_custkey_edge(spark, monkeypatch, tmp_path_factory):
     assert "Exchange hashpartitioning" not in plan, plan
     assert [tuple(r) for r in t.collect()] == small_t
     assert [tuple(r) for r in R.region_volume(spark, SF_DIR).collect()] == small_r
+
+
+def _bucket_ids(final: str) -> list[int]:
+    """Bucket id of every data file in a staged dir (Spark names bucket
+    files `part-..._<id>.c000...`)."""
+    return sorted(
+        int(re.search(r"_(\d{5})\.", f).group(1))
+        for f in os.listdir(final)
+        if not f.startswith(("_", "."))
+    )
+
+
+def test_stage_facts_sizes_one_bucket_count(spark, monkeypatch, tmp_path_factory):
+    """A default stage_facts sizes ONE bucket count from the facts' bytes
+    and writes it into every marker, at most one file per bucket: 1 at sf0.001,
+    and the session's shuffle partitions (8) when 1-byte AQE sizes make
+    the rule clamp. A second call with the same sizing stages nothing."""
+    from gdalos_spark.sources import bucketed
+    from gdalos_spark.streaming.events import _session_conf
+
+    tiny = {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
+    }
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert cap == 8
+    for confs, expect in (({}, 1), (tiny, cap)):
+        root = str(tmp_path_factory.mktemp("bucketed_root_sized"))
+        monkeypatch.setenv("GDALOS_BUCKETED_ROOT", root)
+        with _session_conf(spark, confs):
+            staged = bucketed.stage_facts(spark, SF_DIR)
+            assert bucketed.stage_facts(spark, SF_DIR) == []
+        assert set(staged) == set(bucketed.BUCKETED_FACTS)
+        for name in staged:
+            final = bucketed._final_dir(SF_DIR, name)
+            assert bucketed._marker_meta(final)["buckets"] == expect, name
+            ids = _bucket_ids(final)
+            # at most one file per bucket (a bucket no key hashes to
+            # writes no file: sf0.001 events has few users)
+            assert len(ids) == len(set(ids)) and set(ids) <= set(range(expect)), name
+            assert len(ids) >= min(expect, 2), name

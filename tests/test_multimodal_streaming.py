@@ -104,11 +104,11 @@ def test_stateful_sessionize_emits_closed_sessions(spark):
 def test_state_partitions_rule_bounds(spark):
     """The source-bytes sizing rule at its bounds: an empty source runs
     one state task, a huge one clamps at spark.sql.shuffle.partitions."""
-    from gdalos_spark.streaming.events import _state_partitions
+    from gdalos_spark.datamodel import coalesced_partitions
 
-    assert _state_partitions(spark, 0) == 1
+    assert coalesced_partitions(spark, 0) == 1
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert _state_partitions(spark, 1 << 50) == cap
+    assert coalesced_partitions(spark, 1 << 50) == cap
 
 
 def test_state_partitions_rule_follows_aqe_confs(spark):
@@ -116,14 +116,15 @@ def test_state_partitions_rule_follows_aqe_confs(spark):
     coalescing off keeps the cap; minPartitionNum, else
     defaultParallelism, bounds the per-partition target while
     parallelismFirst is on, and only the advisory size when it is off."""
-    from gdalos_spark.streaming.events import _session_conf, _state_partitions
+    from gdalos_spark.datamodel import coalesced_partitions
+    from gdalos_spark.streaming.events import _session_conf
 
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     mb = 1 << 20
     for k in ("spark.sql.adaptive.enabled",
               "spark.sql.adaptive.coalescePartitions.enabled"):
         with _session_conf(spark, {k: "false"}):
-            assert _state_partitions(spark, 0) == cap
+            assert coalesced_partitions(spark, 0) == cap
     sizes = {
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
@@ -131,16 +132,16 @@ def test_state_partitions_rule_follows_aqe_confs(spark):
     with _session_conf(spark, sizes):
         par = spark.sparkContext.defaultParallelism
         # 64 MB per core stays under the advisory size: one per core
-        assert _state_partitions(spark, 64 * mb * par) == min(cap, par)
+        assert coalesced_partitions(spark, 64 * mb * par) == min(cap, par)
         with _session_conf(
             spark, {"spark.sql.adaptive.coalescePartitions.minPartitionNum": "3"}
         ):
-            assert _state_partitions(spark, 30 * mb) == min(cap, 3)
+            assert coalesced_partitions(spark, 30 * mb) == min(cap, 3)
         with _session_conf(
             spark, {"spark.sql.adaptive.coalescePartitions.parallelismFirst": "false"}
         ):
-            assert _state_partitions(spark, 30 * mb) == 1
-            assert _state_partitions(spark, 130 * mb) == min(cap, 3)
+            assert coalesced_partitions(spark, 30 * mb) == 1
+            assert coalesced_partitions(spark, 130 * mb) == min(cap, 3)
 
 
 def _cusum_partitions(spark, ducks):
