@@ -28,6 +28,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# perfbench/worker.py starts its session from bench.bench_conf
+from gdalos_spark.session import conf as bench_conf  # noqa: E402,F401
+from gdalos_spark.session import get_spark  # noqa: E402
+
 HEADLINE = [
     "pricing_summary",
     "top_orders",
@@ -78,67 +82,6 @@ def smoke() -> int:
     return 1 if failures else 0
 
 
-def bench_conf(cpus: str) -> dict[str, str]:
-    """Session configuration for the bench (shared with tools/dump_plans.py
-    so committed plan artifacts show exactly what the bench times). Every
-    entry is a production-sane default, not a local[32] tune:
-
-    - AQE + partition coalescing: the guide's (and Spark's) baseline.
-    - shuffle.partitions = max(cores, 32): scales with the session's
-      cores; AQE coalesces below it when volumes are small.
-    - maxPartitionBytes 16m: upscaled single-file parquet (600 MB+)
-      otherwise gives only size/128MB scan tasks — far fewer than cores.
-      16 MB splits keep every core scanning at sf>=1 and change nothing
-      at sf0.1 (files there are < 16 MB already).
-    - preferSortMergeJoin=false (round-12, guide §3.1/§9): lets the
-      planner pick shuffled-hash join when its size conditions hold —
-      the planner still requires the build side to fit per-partition,
-      so this is NOT a forced hint; sort-merge remains the fallback for
-      big-build joins. Plan-level effect (committed r12 artifacts): the
-      headline query it changes is dedup_clusters, whose per-round CC
-      joins go SMJ->SHJ (plans/r12: 10 SMJ -> 2, 4 SHJ appear; measured
-      4.74->3.84s same-session). The other headline plans are unchanged
-      (dims already broadcast; the full-outer mosaic edges keep SMJ at
-      plan time because their stats estimates exceed the local-hash-map
-      gate) — same-session deltas observed on them (raster_mosaic
-      1.24->0.99s, region_volume 1.01->0.78s) sit inside the host band
-      and are NOT attributed to this conf.
-    - AQE initialPartitionNum derived from the DEM cell count (round-12,
-      guide §2.2/§5 "fewer, larger reduce partitions ... let AQE
-      coalesce" + spill bounds): the big-grid stencil/kernel shuffles
-      are O(cells), so initial shuffle partitions hold a constant
-      ~2^18 cells each (~85 MB of pass-2 kernel rows) and AQE coalesces
-      everything smaller back down. shuffle.partitions itself must NOT
-      be raised for this: split_for_cpu()'s explicit repartition(n, key)
-      derives from it and is not AQE-coalescible. At the driver's 64x64
-      dims the derived value never exceeds the base partitions, so the
-      conf is omitted and the bench session is byte-identical to r11's.
-      Measured at the 8192x8192-cell grid (interleaved same-session
-      A/Bs): raster_resample_lanczos 221.4 -> 193.4s warm and the cold
-      spill cliff (370.9s) gone; raster_sieve 151.1 -> 102.4s; 512/1024
-      regress on the same data (quadratic block growth, guide §2.2) —
-      constant cells-per-partition is the scale rule, not "more".
-    """
-    base_parts = max(int(cpus), 32)
-    conf = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.shuffle.partitions": str(base_parts),
-        "spark.sql.files.maxPartitionBytes": "16m",
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.ui.enabled": "false",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-    }
-    grid_w = int(os.environ.get("SPARK_GRAFT_GRID_W", "64"))
-    grid_h = int(os.environ.get("SPARK_GRAFT_GRID_H", str(grid_w)))
-    init_parts = (grid_w * grid_h) >> 18
-    if init_parts > base_parts:
-        conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = str(
-            min(init_parts, 4096)
-        )
-    return conf
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -147,15 +90,7 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    from pyspark.sql import SparkSession
-
-    builder = SparkSession.builder.master(f"local[{cpus}]").appName(
-        "gdalos_spark-bench"
-    )
-    for k, v in bench_conf(cpus).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("gdalos_spark-bench", cpus)
 
     import __spark_entry__ as entrymod
 

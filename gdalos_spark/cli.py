@@ -29,6 +29,8 @@ from argparse import ArgumentParser
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gdalos_spark.session import get_spark
+
 _WRITE_FORMATS = ("parquet", "csv", "json", "gtiff")
 
 
@@ -147,13 +149,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         return 0
 
     if spark is None:
-        spark = (
-            SparkSession.builder.master(f"local[{args.cpus}]")
-            .appName("gdalos_spark-cli")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
-        )
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = get_spark("gdalos_spark-cli", args.cpus)
     eng = GdalosSpark(spark, args.sf_dir)
 
     if args.of == "gtiff":

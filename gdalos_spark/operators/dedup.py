@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from gdalos_spark.datamodel import (
     append_query_caches,
+    footer_count,
     load,
     register_query_caches,
     split_for_cpu,
@@ -231,7 +232,7 @@ def _signatures(
     safe choice for unknown-size batches)."""
     if docs is None:
         if n_hint is None:
-            n_hint = _docs_footer_count(sf_dir)
+            n_hint = footer_count(sf_dir, "documents")
         docs = split_for_cpu(load(spark, sf_dir, "documents"), "doc_id")
 
     def build(d: DataFrame) -> DataFrame:
@@ -353,19 +354,6 @@ def collapse_by_text(
     )
 
 
-def _docs_footer_count(sf_dir: str) -> int:
-    """Driver-side parquet-footer row count for the documents table —
-    the same metadata a catalog or manifest would serve; no Spark job."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    p = f"{sf_dir}/documents.parquet"
-    files = [p] if _os.path.isfile(p) else _glob.glob(f"{p}/*.parquet")
-    return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
 def _expand_group_pairs(
     gpairs: DataFrame, members: DataFrame, out_a: str, out_b: str, *payload: str
 ) -> DataFrame:
@@ -439,7 +427,7 @@ def dedup_minhash_lsh(
     circuits straight to the direct plan without even building the
     signature stats; the stats job only runs at a scale where its cost
     is noise against the signature build it shares."""
-    n_src = docs.count() if docs is not None else _docs_footer_count(sf_dir)
+    n_src = docs.count() if docs is not None else footer_count(sf_dir, "documents")
     if n_src < COLLAPSE_MIN_DOCS:
         return _minhash_pairs(spark, sf_dir, docs).distinct()
     sig = _signatures(spark, sf_dir, docs, n_hint=n_src).persist()
@@ -580,7 +568,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     build fingerprints; the byte join is the hamming-band trick.
     Features are word 3-grams, not tokens — token sets are near-identical
     across same-vocabulary documents and would collapse the fingerprint."""
-    n_src = _docs_footer_count(sf_dir)
+    n_src = footer_count(sf_dir, "documents")
 
     def build_fp(d: DataFrame) -> DataFrame:
         # materialize the 60-bit md5 hash once per (doc, shingle) row; the
@@ -1091,7 +1079,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig2 = (
         _signatures(
             spark, sf_dir, split_for_cpu(docs, "doc_id"),
-            n_hint=_docs_footer_count(sf_dir),
+            n_hint=footer_count(sf_dir, "documents"),
         )
         .select(
             "doc_id",
@@ -1122,7 +1110,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc id of the component, every group's srep IS its minimum doc,
     # and the CC root is the minimum srep.
     label_map, converged = _cc_label_map(
-        near_pairs, two_phase=_docs_footer_count(sf_dir) >= TWO_PHASE_MIN_DOCS
+        near_pairs, two_phase=footer_count(sf_dir, "documents") >= TWO_PHASE_MIN_DOCS
     )
     if not converged:  # pragma: no cover - needs >2^25-diameter data
         import warnings
@@ -1335,8 +1323,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join) and both the pair cosine and the keeper rule compare
     6-dp-rounded values — deterministic across engines."""
     from gdalos_spark.operators import similarity as sim
-
-    from gdalos_spark.datamodel import footer_count
 
     cc = sim.centroid_similarity(spark, sf_dir)  # vec_id, label, cos_centroid
     emb = load(spark, sf_dir, "embeddings")
@@ -1855,7 +1841,7 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     use_arrays = (
         force == "1"
         if force in ("0", "1")
-        else _docs_footer_count(sf_dir) <= CALIB_ARR_BROADCAST_MAX_DOCS
+        else footer_count(sf_dir, "documents") <= CALIB_ARR_BROADCAST_MAX_DOCS
     )
     if use_arrays:
         return _minhash_calibration_arrays(spark, sf_dir)
@@ -2321,7 +2307,7 @@ def signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             sf_dir,
             split_for_cpu(docs, "doc_id"),
             # index side is ~90% of the corpus; footers size the gate
-            n_hint=_docs_footer_count(sf_dir) * (INC_BATCH_MOD - 1) // INC_BATCH_MOD,
+            n_hint=footer_count(sf_dir, "documents") * (INC_BATCH_MOD - 1) // INC_BATCH_MOD,
         )
         mcols = [f"m{i}" for i in range(N_PERM)]
         store = sig.groupBy(*mcols).agg(F.min("doc_id").alias("idx_id"))
@@ -2357,7 +2343,7 @@ def dedup_incremental_minhash_stored(spark: SparkSession, sf_dir: str) -> DataFr
         sf_dir,
         split_for_cpu(batch_docs, "doc_id"),
         # the batch is 1/INC_BATCH_MOD of the corpus
-        n_hint=_docs_footer_count(sf_dir) // INC_BATCH_MOD,
+        n_hint=footer_count(sf_dir, "documents") // INC_BATCH_MOD,
     )
     ms = [F.col(f"m{i}") for i in range(N_PERM)]
     mcols = [f"m{i}" for i in range(N_PERM)]

@@ -3189,7 +3189,10 @@ def _flow_parent_edges(fd: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _HYDRO_CONTRACT_ROUNDS = 24  # 2^24-cell chains >> any real drainage
-_HYDRO_LAST_ROUNDS: dict[str, int] = {}  # observability for tools/hydro_ab.py
+# rounds per fixpoint, read by tests/test_hydro_condensed.py (BASELINE.md
+# "Hydrology fixpoint condensation A/B"; its A/B tool is retired; in git
+# history)
+_HYDRO_LAST_ROUNDS: dict[str, int] = {}
 
 
 def _hydro_arm() -> str:

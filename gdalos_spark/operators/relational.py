@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gdalos_spark.datamodel import load
+from gdalos_spark.datamodel import epoch_micros, load
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,7 +692,13 @@ def events_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     compiles this to one conditional aggregate — same single shuffle as
     the oracle's CASE sums."""
     ev = load(spark, sf_dir, "events")
-    day = F.date_format("ts", "yyyy-MM-dd").alias("day")
+    # the UTC calendar day of the epoch micros, so no session time zone
+    # can move an event across midnight
+    day = (
+        F.date_from_unix_date(F.floor(epoch_micros(ev) / 86_400_000_000))
+        .cast("string")
+        .alias("day")
+    )
     out = (
         ev.select(day, "event_type")
         .groupBy("day")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gdalos_spark.datamodel import load, split_for_cpu
+from gdalos_spark.datamodel import footer_count, load, split_for_cpu
 from gdalos_spark.functions import hashing
 from gdalos_spark.operators.dedup import DOCSH_SQL, SHINGLES3_SQL, doc_shingles
 
@@ -216,11 +216,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch is a pure function of the text, so the collapse is
     result-identical; the md5 gram CPU was the measured 21 s cost at
     the replica-heavy sf10 upscale)."""
-    from gdalos_spark.operators.dedup import (
-        _docs_footer_count,
-        collapse_by_text,
-        shingles3,
-    )
+    from gdalos_spark.operators.dedup import collapse_by_text, shingles3
 
     # parallelize the per-doc md5 pipeline when the table arrives as one
     # input split (split-starved scans only; skipped when the scan is wide)
@@ -251,7 +247,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every output column is a pure function of the text, so above
     # COLLAPSE_MIN_DOCS the per-doc pipeline runs once per DISTINCT text
     # behind the adaptive distinct-text collapse (result-identical)
-    return collapse_by_text(docs, build, _docs_footer_count(sf_dir))
+    return collapse_by_text(docs, build, footer_count(sf_dir, "documents"))
 
 
 DOC_FINGERPRINT_SQL = f"""

@@ -42,7 +42,7 @@ DEFAULT_BUCKETS = 8
 # (user_id, ts, event_id): that is the `Window.partitionBy("user_id")
 # .orderBy("ts", ...)` requirement of the whole sessionize / funnel /
 # retention / streaks family, so with one file per bucket (write_bucketed
-# guarantees it) and bucketed-scan output ordering on (session.py) those
+# guarantees it) and bucketed-scan output ordering on (session.conf) those
 # plans carry ZERO exchanges AND ZERO sorts.
 BUCKETED_FACTS = {
     "orders": ("o_orderkey", ()),

@@ -422,8 +422,8 @@ def vector_ingest_gml(spark: SparkSession, sf_dir: str) -> DataFrame:
 # materialized when the edge actually straddles the cell's row, and the
 # row key count carries the join parallelism. The crossover was
 # MEASURED with the paired interleaved A/B protocol
-# (tools/rasterize_ab.py; full height sweep in BASELINE.md round-11
-# section — W=256, 10k suppliers, 3 pairs per height): scanline loses
+# (full height sweep in BASELINE.md "Rasterize burn-plan height sweep",
+# whose A/B tool is retired; in git history — W=256, 10k suppliers, 3 pairs per height): scanline loses
 # ~1.5x at H=512, is a wash at H=1024 (pair ratios 0.85/0.98/1.27),
 # and wins 2.3-3.1x at H=2048; the earlier 64-row 100k-supplier run
 # (round-10 section) had bbox ~1.5x ahead. Height alone is an imperfect

@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,13 +40,15 @@ from ..datamodel import (
     epoch_micros_sql,
     source_fingerprint,
 )
+from ..session import scoped_conf
 
 # Per-query state-store metrics captured after every completed run:
 # query name -> [{batch_id, operator, n_partitions, n_rows, mem_bytes,
 # custom}, ...].
 # This is the observability the 100-TB design needs — "state is bounded"
-# must be a NUMBER per batch, not an assertion (tools/stream_state_ab.py
-# records it in BASELINE.md).
+# must be a NUMBER per batch, not an assertion (BASELINE.md "Stream-stream
+# join state-store A/B at 10M events" records it; that A/B tool is
+# retired; in git history).
 LAST_STATE_METRICS: dict[str, list[dict]] = {}
 
 _STATE_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
@@ -144,7 +145,7 @@ def _run_streams(
         confs.update({_STATE_PROVIDER_CONF: provider, **_rocksdb_tuning()})
     queries = []
     try:
-        with _session_conf(spark, confs):
+        with scoped_conf(spark, confs):
             for name, writer in writers.items():
                 queries.append(
                     writer.queryName(name).trigger(availableNow=True).start()
@@ -155,23 +156,6 @@ def _run_streams(
         for q in queries:
             q.stop()
         raise
-
-
-@contextmanager
-def _session_conf(spark: SparkSession, confs: dict[str, str]):
-    """Set `confs` on the session for the block, then restore each key's
-    previous value (or unset it if it was not set)."""
-    prevs = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, prev in prevs.items():
-            if prev is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, prev)
 
 
 def _await_done(q) -> None:

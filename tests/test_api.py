@@ -162,20 +162,32 @@ def test_bench_conf_grid_adaptive_partitions(monkeypatch):
     driver's 64x64 dims so the bench session matches the recorded
     contract, present and scale-proportional at big grids, capped at
     4096."""
-    import bench
+    from gdalos_spark.session import conf
 
     key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     monkeypatch.delenv("SPARK_GRAFT_GRID_W", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_GRID_H", raising=False)
-    assert key not in bench.bench_conf("32")
+    assert key not in conf("32")
     monkeypatch.setenv("SPARK_GRAFT_GRID_W", "8192")
-    assert bench.bench_conf("32")[key] == "256"
+    assert conf("32")[key] == "256"
     monkeypatch.setenv("SPARK_GRAFT_GRID_W", "65536")
     monkeypatch.setenv("SPARK_GRAFT_GRID_H", "65536")
-    assert bench.bench_conf("32")[key] == "4096"
+    assert conf("32")[key] == "4096"
     # base shuffle partitions are untouched by the knob (split_for_cpu
     # derives its explicit repartition width from them)
-    assert bench.bench_conf("32")["spark.sql.shuffle.partitions"] == "32"
+    assert conf("32")["spark.sql.shuffle.partitions"] == "32"
+
+
+def test_suite_session_is_the_bench_session(spark):
+    """The suite runs the bench's session: every `conf(cpus)` key is set
+    to its value, except the shuffle partitions the suite overrides and
+    the driver memory."""
+    from gdalos_spark.session import conf
+
+    expected = conf(spark.sparkContext.defaultParallelism)
+    for k in ("spark.sql.shuffle.partitions", "spark.driver.memory"):
+        del expected[k]
+    assert {k: spark.conf.get(k, None) for k in expected} == expected
 
 
 def test_append_query_caches_batch_semantics(spark):

@@ -17,6 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from gdalos_spark.session import scoped_conf
 from tests.conftest import SF_DIR
 
 # The staged layout is pinned at the count these tests always used and
@@ -30,29 +31,31 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
     from gdalos_spark.datamodel import load
 
     wh = str(tmp_path_factory.mktemp("bucketed_wh"))
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     li = load(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     orders = load(spark, SF_DIR, "orders").select("o_orderkey", "o_orderdate")
     from gdalos_spark.sources.bucketed import write_bucketed
 
-    write_bucketed(li, f"{wh}/li_b", "li_b", "l_orderkey")
-    write_bucketed(orders, f"{wh}/ord_b", "ord_b", "o_orderkey")
-    try:
-        j = spark.table("li_b").join(
-            spark.table("ord_b"), F.col("l_orderkey") == F.col("o_orderkey")
-        ).groupBy("o_orderdate").agg(F.count(F.lit(1)).alias("n"))
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        # the join itself must be exchange-free: the only exchange allowed
-        # in the whole plan is the one for the final groupBy
-        assert "SortMergeJoin" in plan
-        join_part = plan[plan.index("SortMergeJoin"):]
-        assert "Exchange" not in join_part, "bucketed join still shuffles"
-        assert j.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS ord_b")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    confs = {
+        "spark.sql.sources.bucketing.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    with scoped_conf(spark, confs):
+        write_bucketed(li, f"{wh}/li_b", "li_b", "l_orderkey")
+        write_bucketed(orders, f"{wh}/ord_b", "ord_b", "o_orderkey")
+        try:
+            j = spark.table("li_b").join(
+                spark.table("ord_b"), F.col("l_orderkey") == F.col("o_orderkey")
+            ).groupBy("o_orderdate").agg(F.count(F.lit(1)).alias("n"))
+            plan = j._jdf.queryExecution().executedPlan().toString()
+            # the join itself must be exchange-free: the only exchange allowed
+            # in the whole plan is the one for the final groupBy
+            assert "SortMergeJoin" in plan
+            join_part = plan[plan.index("SortMergeJoin"):]
+            assert "Exchange" not in join_part, "bucketed join still shuffles"
+            assert j.count() > 0
+        finally:
+            spark.sql("DROP TABLE IF EXISTS li_b")
+            spark.sql("DROP TABLE IF EXISTS ord_b")
 
 
 @STAGED_BUCKETS
@@ -184,7 +187,6 @@ def test_stage_facts_sizes_one_bucket_count(spark, monkeypatch, tmp_path_factory
     and the session's shuffle partitions (8) when 1-byte AQE sizes make
     the rule clamp. A second call with the same sizing stages nothing."""
     from gdalos_spark.sources import bucketed
-    from gdalos_spark.streaming.events import _session_conf
 
     tiny = {
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
@@ -195,7 +197,7 @@ def test_stage_facts_sizes_one_bucket_count(spark, monkeypatch, tmp_path_factory
     for confs, expect in (({}, 1), (tiny, cap)):
         root = str(tmp_path_factory.mktemp("bucketed_root_sized"))
         monkeypatch.setenv("GDALOS_BUCKETED_ROOT", root)
-        with _session_conf(spark, confs):
+        with scoped_conf(spark, confs):
             staged = bucketed.stage_facts(spark, SF_DIR)
             assert bucketed.stage_facts(spark, SF_DIR) == []
         assert set(staged) == set(bucketed.BUCKETED_FACTS)

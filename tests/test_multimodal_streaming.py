@@ -4,6 +4,7 @@ streaming (#41, full oracle parity via its batch twin)."""
 import pytest
 
 import __spark_entry__ as entrymod
+from gdalos_spark.session import scoped_conf
 from tests.conftest import SF_DIR, assert_matches_oracle
 
 
@@ -117,27 +118,26 @@ def test_state_partitions_rule_follows_aqe_confs(spark):
     defaultParallelism, bounds the per-partition target while
     parallelismFirst is on, and only the advisory size when it is off."""
     from gdalos_spark.datamodel import coalesced_partitions
-    from gdalos_spark.streaming.events import _session_conf
 
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     mb = 1 << 20
     for k in ("spark.sql.adaptive.enabled",
               "spark.sql.adaptive.coalescePartitions.enabled"):
-        with _session_conf(spark, {k: "false"}):
+        with scoped_conf(spark, {k: "false"}):
             assert coalesced_partitions(spark, 0) == cap
     sizes = {
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     }
-    with _session_conf(spark, sizes):
+    with scoped_conf(spark, sizes):
         par = spark.sparkContext.defaultParallelism
         # 64 MB per core stays under the advisory size: one per core
         assert coalesced_partitions(spark, 64 * mb * par) == min(cap, par)
-        with _session_conf(
+        with scoped_conf(
             spark, {"spark.sql.adaptive.coalescePartitions.minPartitionNum": "3"}
         ):
             assert coalesced_partitions(spark, 30 * mb) == min(cap, 3)
-        with _session_conf(
+        with scoped_conf(
             spark, {"spark.sql.adaptive.coalescePartitions.parallelismFirst": "false"}
         ):
             assert coalesced_partitions(spark, 30 * mb) == 1
@@ -171,20 +171,14 @@ def test_stateful_stream_clamps_at_shuffle_partitions(spark, ducks):
     """With tiny AQE partition sizes in the session the same key sizes
     past the cap, clamps at spark.sql.shuffle.partitions, and still
     matches its oracle: the multi-partition state path stays covered."""
-    keys = (
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-    )
-    prev = {k: spark.conf.get(k) for k in keys}
-    try:
-        for k in keys:
-            spark.conf.set(k, "1b")
+    tiny = {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
+    }
+    with scoped_conf(spark, tiny):
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
         assert cap > 1
         assert _cusum_partitions(spark, ducks) == {cap}
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
 
 
 def test_full_outer_timeout_stops_both_arms(spark, monkeypatch):

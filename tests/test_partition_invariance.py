@@ -16,7 +16,8 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-from gdalos_spark.streaming.events import LAST_STATE_METRICS, _session_conf
+from gdalos_spark.session import scoped_conf
+from gdalos_spark.streaming.events import LAST_STATE_METRICS
 from tests.conftest import SF_DIR
 
 INVARIANCE_KEYS = [
@@ -110,13 +111,11 @@ def skewed_spark(spark):
     partitions from the source bytes (1 for the test data), so the
     streaming keys also get 1-byte AQE partition sizes, which clamps
     their state at the 5 shuffle partitions (`_stream_layout`)."""
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.shuffle.partitions", "5")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "131072")
-    yield spark
-    spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
+    with scoped_conf(spark, {
+        "spark.sql.shuffle.partitions": "5",
+        "spark.sql.files.maxPartitionBytes": "131072",
+    }):
+        yield spark
 
 
 def _norm(v):
@@ -137,7 +136,7 @@ def _stream_layout(spark, key):
     if not key.startswith("streaming_"):
         return nullcontext()
     LAST_STATE_METRICS.clear()
-    return _session_conf(spark, {
+    return scoped_conf(spark, {
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
     })

@@ -20,7 +20,14 @@ from gdalos_spark.plans.asserts import (
     assert_whole_stage_codegen,
     explain_str,
 )
+from gdalos_spark.session import scoped_conf
 from tests.conftest import SF_DIR
+
+# 64 KiB scan splits: a many-file input plans one scan task per file
+SMALL_SPLITS = {
+    "spark.sql.files.maxPartitionBytes": "65536",
+    "spark.sql.files.openCostInBytes": "65536",
+}
 
 
 def q(spark, key):
@@ -82,11 +89,8 @@ def test_no_python_udfs_in_sql_operators(spark):
 
 def test_whole_stage_codegen_covers_pricing_summary(spark):
     # AQE defers codegen planning to execution; disable it to inspect
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         assert_whole_stage_codegen(q(spark, "pricing_summary"))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_hillshade_stencil_is_single_pass(spark):
@@ -216,19 +220,14 @@ def test_c4_filters_has_no_shuffle(spark, tmp_path):
     load(spark, SF_DIR, "documents").repartition(8).write.parquet(
         f"{wide_sf}/documents.parquet"
     )
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
-    spark.conf.set("spark.sql.files.openCostInBytes", "65536")
-    try:
+    with scoped_conf(spark, SMALL_SPLITS):
         plan = (
             text_c4_filters(spark, wide_sf)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
-        assert "Exchange" not in plan
-    finally:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert "Exchange" not in plan
 
 
 def test_round4_candidate_joins_stay_equi(spark):
@@ -461,19 +460,14 @@ def test_text_quality_zero_exchange_on_wide_scan(spark, tmp_path):
     load(spark, SF_DIR, "documents").repartition(8).write.parquet(
         f"{wide_sf}/documents.parquet"
     )
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
-    spark.conf.set("spark.sql.files.openCostInBytes", "65536")
-    try:
+    with scoped_conf(spark, SMALL_SPLITS):
         plan = (
             text_quality_score(spark, wide_sf)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
-        assert "Exchange" not in plan
-    finally:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert "Exchange" not in plan
 
 
 def test_round8_plan_shapes(spark):

@@ -3,6 +3,7 @@
 import pytest
 
 import __spark_entry__ as entrymod
+from gdalos_spark.session import scoped_conf
 from tests.conftest import assert_matches_oracle
 
 RELATIONAL_KEYS = [
@@ -29,6 +30,19 @@ def test_relational_matches_oracle(spark, ducks, key):
     q = entrymod.queries()[key]
     sql = entrymod.oracle_sql()[key]
     assert_matches_oracle(spark, ducks, q, sql)
+
+
+def test_events_type_pivot_is_zone_free(spark, ducks):
+    """The pivot's day is the UTC calendar day of the event whatever the
+    session time zone: a zone-adjusted day would move events before
+    08:00 UTC to the previous day under America/Los_Angeles."""
+    with scoped_conf(spark, {"spark.sql.session.timeZone": "America/Los_Angeles"}):
+        assert_matches_oracle(
+            spark,
+            ducks,
+            entrymod.queries()["events_type_pivot"],
+            entrymod.oracle_sql()["events_type_pivot"],
+        )
 
 
 def test_entry_smoke(spark):

@@ -3,8 +3,8 @@
 Usage:
     python tools/dump_plans.py --tag r12/before [--staged] [key ...]
 
-Mirrors bench.py's session configuration (AQE, shuffle partitions,
-maxPartitionBytes) so the captured plans are the ones the bench times.
+Starts the bench's session (`gdalos_spark.session.get_spark`) so the
+captured plans are the ones the bench times.
 With --staged the orderkey-bucketed facts are staged first, like the
 bench's untimed ingest step, so fact-join plans show the layout-served
 shape. Writes plans/<tag>/<key>.txt (one file per key).
@@ -29,19 +29,10 @@ def main() -> int:
         del args[i : i + 2]
     keys = args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from gdalos_spark.session import get_spark
 
-    import bench
-
-    builder = SparkSession.builder.master(f"local[{cpus}]").appName(
-        "gdalos_spark-plan-dump"
-    )
-    for k, v in bench.bench_conf(cpus).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("gdalos_spark-plan-dump")
 
     import bench
     import __spark_entry__ as entrymod

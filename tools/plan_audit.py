@@ -86,7 +86,6 @@ def main() -> int:
     from gdalos_spark.session import get_spark
 
     spark = get_spark("plan_audit", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
     if staged:
         from gdalos_spark.sources import bucketed
 

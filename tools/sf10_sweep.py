@@ -28,8 +28,8 @@ wall after host normalization (the median now/baseline ratio across
 all common keys, so a uniformly slower host flags nothing).
 
 The upscale comes from tools/make_scaled_sf.py (throughput data only).
-Session configs mirror bench.py (AQE, 16 MB splits, 32 shuffle
-partitions) so walls are comparable with the BASELINE.md tables.
+The session starts from the bench's `gdalos_spark.session.conf` so walls
+are comparable with the BASELINE.md tables.
 """
 
 from __future__ import annotations
@@ -58,26 +58,27 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from bench import bench_conf
+    from gdalos_spark.session import conf
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # The bench's session conf (incl. the grid-derived initialPartitionNum)
+    # so sweep walls stay comparable with BASELINE.md, plus two
+    # execution-harness limits, not plan properties (local-mode "driver"
+    # is the whole process): a larger driver heap for the upscale, and
+    # maxResultSize because the stream-stream join keys materialize
+    # through the memory sink (their oracle contract) and at a 10x upscale
+    # the joined micro-batch output crosses the default 1g (BASELINE.md
+    # "Stream-stream join state-store A/B at 10M events"; that A/B tool is
+    # retired; in git history).
+    harness = {
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.driver.maxResultSize": "8g",
+    }
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(
         "gdalos_spark-sf10-sweep"
     )
-    # bench-identical session (incl. the grid-derived initialPartitionNum)
-    # so sweep walls stay comparable with BASELINE.md; only driver memory
-    # is raised for the upscale.
-    for k, v in bench_conf(cpus).items():
+    for k, v in {**conf(cpus), **harness}.items():
         builder = builder.config(k, v)
-    builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    )
-    # The stream-stream join keys materialize through the memory sink
-    # (their oracle contract); at a 10x upscale the joined micro-batch
-    # output crosses the default 1g maxResultSize. Same remedy as
-    # tools/stream_state_ab.py: an execution-harness limit, not a plan
-    # property (local-mode "driver" is the whole process).
-    builder = builder.config("spark.driver.maxResultSize", "8g")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
