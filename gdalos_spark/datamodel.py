@@ -186,38 +186,29 @@ def read_plain(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Per-query persisted frames (same contract as dedup._COLLAPSE_CACHES):
-# a query function's persists must outlive its RETURNED lazy plan, so they
-# can't be unpersisted inside the function — instead each query registers
-# them here and the NEXT registering query (or an explicit release) frees
-# the previous batch, bounding a long session to one query's cached blocks
-# instead of leaking a set per call (round-9 ADVICE: dedup_clusters
-# sgroups, ann_ivfpq_residual_topk scored).
+# Every persist the engine makes, until the next query starts: a query
+# function's persists must outlive the lazy plan it RETURNS, so they can't
+# be unpersisted inside it. `__spark_entry__.queries()` releases this list
+# before each query builds, which bounds a long session to one query's
+# cached blocks; a composite that calls other operators adds to the same
+# batch.
 _QUERY_CACHES: list[DataFrame] = []
 
 
+def query_persist(df: DataFrame) -> DataFrame:
+    """Persist `df` until the next query starts (or release_query_caches)."""
+    df = df.persist()
+    _QUERY_CACHES.append(df)
+    return df
+
+
 def release_query_caches() -> None:
-    """Unpersist every frame registered by the most recent query."""
+    """Unpersist every frame persisted since the last release."""
     while _QUERY_CACHES:
         try:
             _QUERY_CACHES.pop().unpersist()
         except Exception:  # noqa: BLE001 — session already stopped
             pass
-
-
-def register_query_caches(*dfs: DataFrame) -> None:
-    """Release the previous query's registered persists, then track
-    ``dfs`` until the next query (or release_query_caches) frees them."""
-    release_query_caches()
-    _QUERY_CACHES.extend(dfs)
-
-
-def append_query_caches(*dfs: DataFrame) -> None:
-    """Track ``dfs`` WITHOUT releasing the current batch — for a
-    composite operator whose own persists are built on top of a callee's
-    registered caches (releasing those would force the composite's lazy
-    plan to recompute the callee's shared subtree)."""
-    _QUERY_CACHES.extend(dfs)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -233,10 +224,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if bt is not None:
             return bt
     return read_plain(spark, sf_dir, name)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
 def coalesced_partitions(spark: SparkSession, nbytes: int) -> int:

@@ -24,10 +24,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gdalos_spark.datamodel import (
-    append_query_caches,
     footer_count,
     load,
-    register_query_caches,
+    query_persist,
     split_for_cpu,
 )
 from gdalos_spark.functions import hashing, vectors
@@ -147,16 +146,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docsh persisted: the shingle explode is the dominant CPU at scale
     # and feeds both df_counts and the join probe (the containment-key
     # measurement: unpersisted 225.8 s -> 40.0 s at sf10).
-    # register_query_caches releases the PREVIOUS query's batch first,
-    # so repeated calls hold at most one batch (the cache-hygiene
-    # contract _COLLAPSE_CACHES appends would violate).
-    docsh = doc_shingles(spark, sf_dir).persist()
-    rare = docsh.join(
+    docsh = query_persist(doc_shingles(spark, sf_dir))
+    rare = query_persist(docsh.join(
         docsh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         .filter((F.col("df") >= 2) & (F.col("df") <= MAX_DF)),
         "shingle",
-    ).select("doc_id", "lang", "shingle").persist()
-    register_query_caches(docsh, rare)
+    ).select("doc_id", "lang", "shingle"))
     # rare-set size per doc (docs with no rare shingle can never pair)
     sizes = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a, b = rare.alias("a"), rare.alias("b")
@@ -268,25 +263,6 @@ TEXT_COLLAPSE_DISTINCT_FRAC = 0.95
 # ordinary equi-join (no null-safe comparison in the shuffle key)
 _TH_NULL = "\x00null"
 
-# Caches persisted by the PREVIOUS collapse_by_text call: the (doc_id, md5)
-# frames must stay cached until the caller materializes the returned plan,
-# so each new collapse (or an explicit release) frees the prior pair —
-# bounding a long session to at most one query's worth of cached hashes
-# instead of leaking a pair per dedup/fingerprint query.
-_COLLAPSE_CACHES: list[DataFrame] = []
-
-
-def release_collapse_caches() -> None:
-    """Unpersist the (doc_id, md5) frames cached by the most recent
-    collapse_by_text call. Safe any time after the caller has
-    materialized the returned DataFrame."""
-    while _COLLAPSE_CACHES:
-        try:
-            _COLLAPSE_CACHES.pop().unpersist()
-        except Exception:  # noqa: BLE001 — session already stopped
-            pass
-
-
 def collapse_by_text(
     docs: DataFrame,
     build,
@@ -320,17 +296,15 @@ def collapse_by_text(
     overhead). ``collapse=True/False`` forces the choice (tests)."""
     if collapse is False or (collapse is None and n_src < COLLAPSE_MIN_DOCS):
         return build(docs)
-    release_collapse_caches()
     th_col = (
         F.when(F.col("text").isNull(), F.lit(_TH_NULL))
         .otherwise(F.md5("text"))
         .alias("th")
     )
-    th = docs.select("doc_id", th_col).persist()
-    tgroups = (
+    th = query_persist(docs.select("doc_id", th_col))
+    tgroups = query_persist(
         th.groupBy("th")
         .agg(F.min("doc_id").alias("rep_id"), F.count(F.lit(1)).alias("k"))
-        .persist()
     )
     if collapse is None:
         n_texts, n_docs = tgroups.agg(F.count(F.lit(1)), F.sum("k")).first()
@@ -345,7 +319,6 @@ def collapse_by_text(
         tgroups.select(F.col("rep_id").alias("doc_id")), "doc_id", "left_semi"
     )
     rep_out = build(reps)
-    _COLLAPSE_CACHES.extend((th, tgroups))
     payload = [c for c in rep_out.columns if c != "doc_id"]
     return (
         th.join(tgroups.select("th", "rep_id"), "th")
@@ -430,11 +403,11 @@ def dedup_minhash_lsh(
     n_src = docs.count() if docs is not None else footer_count(sf_dir, "documents")
     if n_src < COLLAPSE_MIN_DOCS:
         return _minhash_pairs(spark, sf_dir, docs).distinct()
-    sig = _signatures(spark, sf_dir, docs, n_hint=n_src).persist()
+    sig = query_persist(_signatures(spark, sf_dir, docs, n_hint=n_src))
     mcols = [f"m{i}" for i in range(N_PERM)]
-    groups = sig.groupBy(*mcols).agg(
+    groups = query_persist(sig.groupBy(*mcols).agg(
         F.min("doc_id").alias("gid"), F.count(F.lit(1)).alias("k")
-    ).persist()
+    ))
     n_groups, n_docs = groups.agg(
         F.count(F.lit(1)), F.sum("k")
     ).first()  # one job: materializes the persisted sig + groups as it runs
@@ -470,7 +443,7 @@ def _minhash_pairs(
     components, whose edge ingest is already a distinct) read the raw
     stream so the 27M-pair volume of a replica-heavy corpus crosses the
     network ONCE instead of three times."""
-    return _pairs_from_sig(_signatures(spark, sf_dir, docs).persist())
+    return _pairs_from_sig(query_persist(_signatures(spark, sf_dir, docs)))
 
 
 def _band_explode(df: DataFrame, *carry: str) -> DataFrame:
@@ -596,9 +569,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # both sides of the self-join reuse the per-doc fingerprint table;
     # the shingle+vote build runs once per DISTINCT text (adaptive)
-    fp = collapse_by_text(
+    fp = query_persist(collapse_by_text(
         split_for_cpu(load(spark, sf_dir, "documents"), "doc_id"), build_fp, n_src
-    ).persist()
+    ))
 
     def byte_pairs(t: DataFrame) -> DataFrame:
         """Byte-band self-join + inline hamming over any (doc_id,
@@ -645,9 +618,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map. Identical fingerprints always share all four bytes and have
     # hamming 0, so in-group pairs are a constant-payload self pair.
     if n_src >= COLLAPSE_MIN_DOCS:
-        groups = fp.groupBy("simhash").agg(
+        groups = query_persist(fp.groupBy("simhash").agg(
             F.min("doc_id").alias("gid"), F.count(F.lit(1)).alias("k")
-        ).persist()
+        ))
         n_groups, n_docs = groups.agg(F.count(F.lit(1)), F.sum("k")).first()
         if n_groups < 0.95 * n_docs:
             reps = groups.select(F.col("gid").alias("doc_id"), "simhash")
@@ -742,9 +715,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # group identical vectors: gid = min vec_id per distinct array (one
     # shuffle on the array; sn/bucket are functions of it and ride along)
-    members = base.withColumn(
+    members = query_persist(base.withColumn(
         "gid", F.min("vec_id").over(Window.partitionBy("emb"))
-    ).persist()
+    ))
     reps = members.filter(F.col("vec_id") == F.col("gid"))
     a = reps.select(
         F.col("gid").alias("ga"), F.col("emb").alias("emb_a"),
@@ -984,7 +957,7 @@ def _cc_two_phase(pairs: DataFrame):
     label is the component minimum (a min of phase-1 minima). Returns
     (label_map, converged): label_map is a COMPLETE (node, root) map —
     roots map to themselves."""
-    q = pairs.select("doc_a", "doc_b").persist()
+    q = query_persist(pairs.select("doc_a", "doc_b"))
     und = q.union(
         q.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
@@ -1076,7 +1049,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashpartitioning(mcols) too. sig2 persists ONCE (sig alone was
     # persisted before, and sgroups separately — same bytes overall).
     wsig = Window.partitionBy(*mcols)
-    sig2 = (
+    sig2 = query_persist(
         _signatures(
             spark, sf_dir, split_for_cpu(docs, "doc_id"),
             n_hint=footer_count(sf_dir, "documents"),
@@ -1087,7 +1060,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").over(wsig).alias("srep"),
             F.count(F.lit(1)).over(wsig).alias("gk"),
         )
-        .persist()
     )
     rep_sig = sig2.filter(F.col("doc_id") == F.col("srep")).select("doc_id", *mcols)
     # raw (non-distinct) candidate stream over distinct signatures only:
@@ -1145,9 +1117,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("label").isNotNull())
     )
-    # sig2 backs the returned lazy plan — free it when the NEXT
-    # registering query runs (round-9 ADVICE cache-hygiene item)
-    register_query_caches(sig2)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return labels.join(sizes, "label").select(
         "doc_id",
@@ -1369,12 +1338,12 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n_src >= COLLAPSE_MIN_DOCS:
         wg = Window.partitionBy("label", "emb")
         wgo = Window.partitionBy("label", "emb").orderBy("vec_id")
-        mem = base.select(
+        mem = query_persist(base.select(
             "vec_id", "label", "emb", "sn", "cos_centroid",
             F.min("vec_id").over(wg).alias("gid"),
             F.count(F.lit(1)).over(wg).alias("k"),
             F.row_number().over(wgo).alias("rk"),
-        ).persist()
+        ))
         n_groups, n_rows = mem.agg(
             F.countDistinct("gid"), F.count(F.lit(1))
         ).first()
@@ -1440,12 +1409,10 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .filter(F.col("n_better_dups") > 0)
             )
-            register_query_caches(mem)
         else:
             mem.unpersist()
     if better is None:
-        base = base.persist()
-        register_query_caches(base)
+        base = query_persist(base)
         a = base.select(
             F.col("vec_id").alias("vec_a"), F.col("label").alias("lbl"),
             F.col("emb").alias("emb_a"), F.col("sn").alias("sn_a"),
@@ -1713,7 +1680,7 @@ def dedup_fuzzy_title(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize-the-signatures discipline as minhash/ngram)
     titles = _fuzzy_titles_spark(spark, sf_dir)
     half = FUZZY_PREFIX_LEN // 2
-    blocks = titles.select(
+    blocks = query_persist(titles.select(
         "doc_id",
         "title",
         F.explode(
@@ -1722,11 +1689,11 @@ def dedup_fuzzy_title(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.concat(F.lit("2|"), F.substring("title", half + 1, half)),
             )
         ).alias("blk"),
-    ).persist()
+    ))
     ok = blocks.groupBy("blk").agg(F.count(F.lit(1)).alias("n_blk")).filter(
         F.col("n_blk") <= FUZZY_BLOCK_CAP
     )
-    blocks = blocks.join(ok.select("blk"), "blk", "left_semi").persist()
+    blocks = query_persist(blocks.join(ok.select("blk"), "blk", "left_semi"))
     a = blocks.select(
         F.col("blk").alias("blk_a"), F.col("doc_id").alias("doc_a"),
         F.col("title").alias("title_a"),
@@ -1831,48 +1798,41 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same integer arithmetic as the shingle equi-join + count, the
     INNER join's drop of zero-overlap candidate pairs is reproduced by
     the ``shared > 0`` filter, and est_jaccard rides the unique
-    (doc_a, doc_b) pair rows unchanged. Above the gate (or forced via
-    SPARK_GRAFT_CALIB_ARRAYS=0) the original equi-join plan runs — at
-    true 100 TB the array table cannot broadcast and the exploded
-    shuffle IS the honest distributed intersection."""
-    import os
-
-    force = os.environ.get("SPARK_GRAFT_CALIB_ARRAYS", "").strip()
-    use_arrays = (
-        force == "1"
-        if force in ("0", "1")
-        else footer_count(sf_dir, "documents") <= CALIB_ARR_BROADCAST_MAX_DOCS
-    )
-    if use_arrays:
+    (doc_a, doc_b) pair rows unchanged. Above the gate the original
+    equi-join plan runs — at true 100 TB the array table cannot
+    broadcast and the exploded shuffle IS the honest distributed
+    intersection."""
+    if footer_count(sf_dir, "documents") <= CALIB_ARR_BROADCAST_MAX_DOCS:
         return _minhash_calibration_arrays(spark, sf_dir)
+    return _minhash_calibration_join(spark, sf_dir)
+
+
+def _minhash_calibration_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equi-join calibration plan: candidate pairs joined to the
+    exploded shingle table on both ends, intersection = the count of
+    matched shingles."""
     # Persist the candidate set: it feeds cand_docs TWICE (both union
     # arms) and the shared-shingle join. (Measured wash at the sf10
     # upscale — 228.8 s unpersisted vs 241.4 s persisted: the wall is
     # the exploded join below, and dedup_minhash_lsh's internal sig
     # persist already kept the recompute cheap. Kept because three
     # consumers of a lazy 27M-row plan is recompute exposure that only
-    # grows past the broadcast gate.) APPEND to the cache batch rather
-    # than re-register: dedup_minhash_lsh registered sig2, which backs
-    # this lazy plan — releasing it here would force the signature
-    # build to recompute inside every pairs materialization.
-    pairs = (
+    # grows past the broadcast gate.)
+    pairs = query_persist(
         dedup_minhash_lsh(spark, sf_dir)
         .select("doc_a", "doc_b", "est_jaccard")
-        .persist()
     )
     cand_docs = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .union(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    sh = (
+    sh = query_persist(
         doc_shingles(spark, sf_dir)
         .join(cand_docs, "doc_id", "left_semi")
         .select("doc_id", "shingle")
         .distinct()
-        .persist()
     )
-    append_query_caches(pairs, sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("b_doc"), F.col("shingle").alias("shingle_b"))
@@ -2182,9 +2142,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _signatures(spark, sf_dir)
     ms = [F.col(f"m{i}") for i in range(N_PERM)]
     is_batch = (F.col("doc_id") % INC_BATCH_MOD) == INC_BATCH_REM
-    docs = sig.withColumn(
+    docs = query_persist(sig.withColumn(
         "gid", F.min("doc_id").over(Window.partitionBy(*ms))
-    ).persist()
+    ))
     groups = docs.groupBy("gid", *[f"m{i}" for i in range(N_PERM)]).agg(
         F.min(F.when(~is_batch, F.col("doc_id"))).alias("min_idx"),
         F.max(is_batch.cast("int")).alias("any_batch"),
@@ -2348,9 +2308,9 @@ def dedup_incremental_minhash_stored(spark: SparkSession, sf_dir: str) -> DataFr
     ms = [F.col(f"m{i}") for i in range(N_PERM)]
     mcols = [f"m{i}" for i in range(N_PERM)]
     # collapse batch docs to distinct signatures too (replica cliques)
-    bdocs = sig.withColumn(
+    bdocs = query_persist(sig.withColumn(
         "gid", F.min("doc_id").over(Window.partitionBy(*ms))
-    ).persist()
+    ))
     bgroups = bdocs.select("gid", *mcols).distinct()
 
     def bands_of(df: DataFrame, idcol: str) -> DataFrame:
@@ -2418,15 +2378,13 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe side — the shingle explode is the dominant CPU at scale
     # (~95 s over 500k docs at the sf10 upscale) and an unpersisted plan
     # runs it twice (and the rare set three more times through sizes +
-    # both self-join sides; measured 225.8 s -> 40.0 s). Registered via
-    # register_query_caches so repeated calls hold at most one batch.
-    docsh = doc_shingles(spark, sf_dir).persist()
-    rare = docsh.join(
+    # both self-join sides; measured 225.8 s -> 40.0 s).
+    docsh = query_persist(doc_shingles(spark, sf_dir))
+    rare = query_persist(docsh.join(
         docsh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         .filter((F.col("df") >= 2) & (F.col("df") <= MAX_DF)),
         "shingle",
-    ).select("doc_id", "lang", "shingle").persist()
-    register_query_caches(docsh, rare)
+    ).select("doc_id", "lang", "shingle"))
     sizes = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a, b = rare.alias("a"), rare.alias("b")
     shared = (

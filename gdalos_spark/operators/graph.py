@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gdalos_spark.datamodel import load
+from gdalos_spark.datamodel import load, query_persist
 
 
 EDGE_GROUP_CAP = 20  # max suppliers per (part, day) block that emit pairs
@@ -94,10 +94,7 @@ def supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-ordered orientation bounds the wedge fan-out by the smaller
     endpoint's degree). Output: global triangle/wedge counts and the
     closure ratio, the clustering signal."""
-    from gdalos_spark.datamodel import register_query_caches
-
-    e = _edges(spark, sf_dir).persist()
-    register_query_caches(e)
+    e = query_persist(_edges(spark, sf_dir))
     n_edges = e.count()
     e2 = e.select(F.col("a").alias("b2"), F.col("b").alias("c"))
     wedges = e.join(e2, F.col("b") == F.col("b2")).select("a", "b", "c")
@@ -174,8 +171,6 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint. Per iteration: one degree-join, one target-key shuffle —
     the same two-exchange round as large-scale PageRank, with
     localCheckpoint cutting lineage between rounds."""
-    from gdalos_spark.datamodel import register_query_caches
-
     e = _edges(spark, sf_dir)
     # Round-12 optimization (guide §5 caching): sym is consumed by the
     # degree agg AND by every power iteration, and un-persisted each
@@ -184,9 +179,8 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Invisible at sf0.1 (~1 s edge build) but 3 recomputations ~50 s
     # each at sf10: the full-catalog sweep caught the key at 156.5 s;
     # persisting sym once drops it to the single edge-build floor.
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist()
-    deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).persist()
-    register_query_caches(sym, deg)
+    sym = query_persist(e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))))
+    deg = query_persist(sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg")))
     ranks = deg.select("a", F.lit(PR_INIT_U).cast("bigint").alias("rank_u"))
     for _ in range(PR_ITERS):
         contrib = (

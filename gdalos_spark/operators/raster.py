@@ -18,8 +18,6 @@ type-sensitive hash even when values are equal.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -40,6 +38,7 @@ from gdalos_spark.datamodel import (
     events_points,
     load,
     orders_grid,
+    query_persist,
 )
 
 # ---------------------------------------------------------------------------
@@ -1220,25 +1219,23 @@ def raster_overview_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     cascade-vs-from-base bit-identical — which is what the from-base
     DuckDB oracle checks. Each level is persisted (at 100 TB each level
     is written as its own parquet table, the .ovr analogue)."""
-    base = (
+    base = query_persist(
         dem_grid(spark, sf_dir)
         .select(
             "px", "py",
             (F.col("elev") * 100).cast("bigint").alias("sum_cents"),
             F.lit(1).cast("bigint").alias("n"),
         )
-        .persist()
     )
     levels = []
     prev = base
     for k in range(1, PYRAMID_LEVELS + 1):
-        cur = (
+        cur = query_persist(
             prev.groupBy(
                 F.floor(F.col("px") / 2).cast("int").alias("px"),
                 F.floor(F.col("py") / 2).cast("int").alias("py"),
             )
             .agg(F.sum("sum_cents").alias("sum_cents"), F.sum("n").alias("n"))
-            .persist()
         )
         levels.append(cur.withColumn("ovr_level", F.lit(k)))
         prev = cur
@@ -2133,11 +2130,11 @@ def raster_sieve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "px", "py", F.col("elev").cast("decimal(18,2)").alias("elev")
     )
     tot = g.agg(F.sum("elev").alias("tot"), F.count(F.lit(1)).alias("n"))
-    cells = g.crossJoin(F.broadcast(tot)).select(
+    cells = query_persist(g.crossJoin(F.broadcast(tot)).select(
         "px", "py",
         (F.col("elev") * F.col("n") > F.col("tot")).cast("int").alias("cls"),
         (F.col("px").cast("bigint") * GRID_H + F.col("py")).alias("id"),
-    ).persist()
+    ))
     right = cells.alias("a").join(
         cells.alias("b"),
         (F.col("b.px") == F.col("a.px") + 1)
@@ -3182,10 +3179,10 @@ def _flow_parent_edges(fd: DataFrame) -> DataFrame:
 # design the docstrings named, with condensed nodes at the graph's own
 # junctions instead of arbitrary tile boundaries: contraction cost is
 # O(log L) instead of O(tile diameter), and no cross-tile re-entry
-# bookkeeping exists. Both arms are result-identical (pinned in
-# tests/test_hydro_condensed.py on a junction-rich comb fixture, a
-# zero-junction serpentine, and the real DEM grid) and measured in
-# BASELINE.md; SPARK_GRAFT_HYDRO_ARM=levelsync forces the naive arm.
+# bookkeeping exists. The condensed result equals the cell-level
+# fixpoint's (pinned in tests/test_hydro_condensed.py on a junction-rich
+# comb fixture, a zero-junction serpentine, and the real DEM grid), and
+# both are measured in BASELINE.md.
 # ---------------------------------------------------------------------------
 
 _HYDRO_CONTRACT_ROUNDS = 24  # 2^24-cell chains >> any real drainage
@@ -3195,22 +3192,13 @@ _HYDRO_CONTRACT_ROUNDS = 24  # 2^24-cell chains >> any real drainage
 _HYDRO_LAST_ROUNDS: dict[str, int] = {}
 
 
-def _hydro_arm() -> str:
-    arm = os.environ.get("SPARK_GRAFT_HYDRO_ARM", "condensed").strip().lower()
-    if arm not in ("condensed", "levelsync"):
-        raise ValueError(
-            f"SPARK_GRAFT_HYDRO_ARM must be condensed|levelsync, got {arm!r}"
-        )
-    return arm
-
-
 def _acc_fixpoint(
     nodes: DataFrame, edges: DataFrame, max_rounds: int, label: str
 ) -> DataFrame:
     """Monotone integer fixpoint acc(n) = sum over in-edges (m -> n, w)
     of (acc(m) + w); one equi-join + groupBy per round, convergence =
     the global SUM going stable (one tiny agg per round). Cell-level
-    callers pass w = 1; the condensed arm passes w = chain length + 1."""
+    callers pass w = 1; the condensed graph passes w = chain length + 1."""
     acc = nodes.select("px", "py", F.lit(0).cast("bigint").alias("acc"))
     prev_total = -1
     rounds = 0
@@ -3417,18 +3405,11 @@ def _condensed_flow(
 def _flow_acc_on(
     fd: DataFrame, edges: DataFrame, cells: DataFrame | None = None
 ) -> DataFrame:
-    """(px, py, acc) upstream-cell counts over an explicit flow field —
-    the arm switch shared by raster_flow_accumulation and the A/B tool.
-    Pass the _flow_cells_npar frame as `cells` to share it with the
-    caller's own n_parents column."""
+    """(px, py, acc) upstream-cell counts over an explicit flow field,
+    by the fixpoint on the condensed junction/head graph. Pass the
+    _flow_cells_npar frame as `cells` to share it with the caller's own
+    n_parents column."""
     nodes = fd.select("px", "py")
-    if _hydro_arm() == "levelsync":
-        return _acc_fixpoint(
-            nodes,
-            edges.withColumn("w", F.lit(1).cast("bigint")),
-            _FLOW_ACC_MAX_ROUNDS,
-            "flow_acc levelsync",
-        )
     cond_nodes, cond_edges, state = _condensed_flow(nodes, edges, cells)
     accc = _acc_fixpoint(
         cond_nodes, cond_edges, _FLOW_ACC_MAX_ROUNDS, "flow_acc condensed"
@@ -3447,12 +3428,9 @@ def _flow_acc_on(
 def _strahler_on(
     fd: DataFrame, edges: DataFrame, cells: DataFrame | None = None
 ) -> DataFrame:
-    """(px, py, ord) Strahler orders over an explicit flow field."""
+    """(px, py, ord) Strahler orders over an explicit flow field, by the
+    fixpoint on the condensed junction/head graph."""
     nodes = fd.select("px", "py")
-    if _hydro_arm() == "levelsync":
-        return _strahler_fixpoint(
-            nodes, edges, _STRAHLER_ROUNDS, "strahler levelsync"
-        )
     cond_nodes, cond_edges, state = _condensed_flow(nodes, edges, cells)
     ordc = _strahler_fixpoint(
         cond_nodes, cond_edges.drop("w"), _STRAHLER_ROUNDS, "strahler condensed"
@@ -5617,15 +5595,14 @@ def raster_flow_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint exists). Each round is ONE equi-join on the child cell +
     a groupBy — rounds = longest flow path (level-synchronous, the
     TauDEM shape); convergence is the monotone global SUM going stable,
-    checked as one tiny agg per round. At continental scale the fixpoint
-    runs on the CONDENSED junction/head graph (the default arm — see the
-    chain-contraction block above _acc_fixpoint): unary chains contract
-    by pointer doubling in O(log chain) rounds, the fixpoint's round
-    count drops from the longest path's CELL count to its JUNCTION
-    depth (the drainage network's segment count), and acc expands back
-    as acc(rep) + chain distance. Both arms are result-identical
-    (test-pinned) and measured in BASELINE.md;
-    SPARK_GRAFT_HYDRO_ARM=levelsync forces the naive arm.
+    checked as one tiny agg per round. The fixpoint runs on the
+    CONDENSED junction/head graph (see the chain-contraction block above
+    _acc_fixpoint): unary chains contract by pointer doubling in
+    O(log chain) rounds, the fixpoint's round count drops from the
+    longest path's CELL count to its JUNCTION depth (the drainage
+    network's segment count), and acc expands back as acc(rep) + chain
+    distance. The result equals the cell-level fixpoint's (test-pinned);
+    both are measured in BASELINE.md.
 
     Oracle: recursive CTE walking every cell's path one step at a time
     and counting landings per cell."""
@@ -5863,12 +5840,11 @@ def raster_stream_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie count at the max) — the flow-accumulation plan shape; the
     oracle unrolls the identical update as a CTE chain.
 
-    Default arm runs the fixpoint on the CONDENSED junction/head graph
-    (see the chain-contraction block above _acc_fixpoint): a
-    single-parent cell's order equals its parent's, so unary chains are
-    pass-through and order expands back as ord(rep). Rounds = junction
-    depth, not cell count; SPARK_GRAFT_HYDRO_ARM=levelsync forces the
-    naive arm (result-identical, test-pinned)."""
+    The fixpoint runs on the CONDENSED junction/head graph (see the
+    chain-contraction block above _acc_fixpoint): a single-parent cell's
+    order equals its parent's, so unary chains are pass-through and
+    order expands back as ord(rep). Rounds = junction depth, not cell
+    count; the result equals the cell-level fixpoint's (test-pinned)."""
     fd = _flow_field(spark, sf_dir)
     edges = _flow_parent_edges(fd)
     cells = _flow_cells_npar(fd.select("px", "py"), edges)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gdalos_spark.datamodel import epoch_micros, load
+from gdalos_spark.datamodel import epoch_micros, load, query_persist
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2498,11 +2498,11 @@ def events_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     # load() normalizes events.ts to TIMESTAMP, so the BIGINT cast is
     # epoch seconds (same idiom as events_sessionize)
-    ctx = ev.select(
+    ctx = query_persist(ev.select(
         "user_id",
         F.expr("CAST(ts AS LONG) div 86400").alias("day"),
         "event_type",
-    ).distinct().persist()
+    ).distinct())
     nctx = ctx.select("user_id", "day").distinct().agg(
         F.count(F.lit(1)).alias("n_ctx")
     )
@@ -3045,7 +3045,7 @@ def basket_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ok = op.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("nb")).filter(
         F.col("nb") <= BASKET_CAP
     )
-    op_c = op.join(ok.select("l_orderkey"), "l_orderkey", "left_semi").persist()
+    op_c = query_persist(op.join(ok.select("l_orderkey"), "l_orderkey", "left_semi"))
     n_orders = op_c.select("l_orderkey").distinct().agg(
         F.count(F.lit(1)).alias("n_orders")
     )
@@ -3117,9 +3117,9 @@ def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct counts; averages of DAU within the week divide exact sums.
     Output per epoch-week: avg_dau, wau, mau (of the containing month
     bucket), stickiness ratios."""
-    ev = load(spark, sf_dir, "events").select(
+    ev = query_persist(load(spark, sf_dir, "events").select(
         "user_id", F.expr("CAST(ts AS LONG) div 86400").alias("day")
-    ).distinct().persist()
+    ).distinct())
     dau = ev.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     wau = (
         ev.select(F.expr("day div 7").alias("wk"), "user_id")
@@ -4252,7 +4252,7 @@ def item_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ok = op.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("nb")).filter(
         F.col("nb") <= BASKET_CAP
     )
-    op_c = op.join(ok.select("l_orderkey"), "l_orderkey", "left_semi").persist()
+    op_c = query_persist(op.join(ok.select("l_orderkey"), "l_orderkey", "left_semi"))
     marg = op_c.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_p"))
     a = op_c.select("l_orderkey", F.col("l_partkey").alias("pa"))
     b = op_c.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("pb"))
@@ -4600,10 +4600,7 @@ def layout_advisor_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("in_sample"),
         )
     )
-    sample = keyed.filter("in_sample").persist()
-    from gdalos_spark.datamodel import register_query_caches
-
-    register_query_caches(sample)
+    sample = query_persist(keyed.filter("in_sample"))
 
     def boundaries(col: str) -> DataFrame:
         w = Window.orderBy(col, "l_orderkey", "l_linenumber")

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gdalos_spark.datamodel import load, register_query_caches, split_for_cpu
+from gdalos_spark.datamodel import load, query_persist, split_for_cpu
 from gdalos_spark.functions import vectors
 
 N_PROBES = 10  # probe set = vec_id < N_PROBES
@@ -245,17 +245,17 @@ def _emb_groups(spark: SparkSession, sf_dir: str):
     the narrow (vec_id, gid) membership map, ``reps`` one raw-array row
     per DISTINCT vector. Both are persisted, and every consumer builds
     the exact same plan, so Spark's plan-keyed cache computes the
-    embedding-partition window once per session however many IVF/PQ
-    operators run."""
+    embedding-partition window once per query however many IVF/PQ
+    operators it composes."""
     gmw = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.min("vec_id").over(Window.partitionBy("embedding")).alias("gid"),
         "embedding",
     )
-    gm = gmw.select("vec_id", "gid").persist()
-    reps = gmw.filter(F.col("vec_id") == F.col("gid")).select(
+    gm = query_persist(gmw.select("vec_id", "gid"))
+    reps = query_persist(gmw.filter(F.col("vec_id") == F.col("gid")).select(
         "gid", "embedding"
-    ).persist()
+    ))
     return gm, reps
 
 
@@ -324,7 +324,7 @@ def _ivf_topk_impl(spark: SparkSession, sf_dir: str, massign: int) -> DataFrame:
     duplicate candidates collapse via one DISTINCT on the narrow
     (probe_id, gid, cosine) stream before ranking)."""
     gm, reps, crank_g = _ivf_parts(spark, sf_dir)
-    crank_g = crank_g.persist()
+    crank_g = query_persist(crank_g)
     assign_g = crank_g.filter(F.col("crank") <= massign).select("gid", "list_id")
     probe_gids = gm.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("gid").alias("p_gid")
@@ -909,9 +909,9 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; inertia is non-increasing in round for every run."""
     gm, reps = _emb_groups(spark, sf_dir)
     kdf = gm.groupBy("gid").agg(F.count(F.lit(1)).alias("k"))
-    base = reps.join(kdf, "gid").select(
+    base = query_persist(reps.join(kdf, "gid").select(
         "gid", vectors.emb_double(F.col("embedding")).alias("emb"), "k"
-    ).persist()
+    ))
     cents = (
         load(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < KM_K)
@@ -1091,8 +1091,8 @@ def _adc_scores(
     or persisted in the PQ path. `codebook` defaults to the seeded one
     (pass the trained codebook for the ivfpq_t path)."""
     gm, reps, crank_g = _ivf_parts(spark, sf_dir)
-    scored = (
-        gm.join(crank_g, "gid").select("vec_id", "list_id", "crank").persist()
+    scored = query_persist(
+        gm.join(crank_g, "gid").select("vec_id", "list_id", "crank")
     )
     assign = scored.filter(F.col("crank") == 1).select("vec_id", "list_id")
     plists = (
@@ -1143,7 +1143,7 @@ def _pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     gm, reps = _emb_groups(spark, sf_dir)
     kdf = gm.groupBy("gid").agg(F.count(F.lit(1)).alias("k"))
     subs = spark.range(PQ_M).select(F.col("id").cast("int").alias("sub_id"))
-    rep_sliced = (
+    rep_sliced = query_persist(
         reps.join(kdf, "gid")
         .select("gid", vectors.emb_double(F.col("embedding")).alias("emb"), "k")
         .crossJoin(F.broadcast(subs))
@@ -1151,7 +1151,6 @@ def _pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gid", "sub_id", "k",
             F.slice(F.col("emb"), F.col("sub_id") * PQ_SUB + 1, PQ_SUB).alias("sx"),
         )
-        .persist()
     )
     cb = _pq_codebook(_pq_sliced(spark, sf_dir))
     d2 = vectors.fold_sum(
@@ -1310,14 +1309,13 @@ def _res_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-VEC training rows for the sampled prefix, weight 1 each (the
     # SQL twin trains per-vec over the same predicate)
-    sl = (
+    sl = query_persist(
         gm.filter(F.col("vec_id") < RES_TRAIN_CAP)
         .join(sl, "gid")
         .select(
             F.col("vec_id").alias("gid"), "sub_id",
             F.lit(1).alias("k"), "rx1", "rx2",
         )
-        .persist()
     )
     for _ in range(RES_TRAIN_ROUNDS):
         scored = sl.join(F.broadcast(cb), sl.sub_id == cb.c_sub).select(
@@ -1379,7 +1377,7 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     list assignment, inverted lists scan at 32 B/row, the probe-side
     prep is the only full-vector math."""
     gm, reps, crank_g = _ivf_parts(spark, sf_dir)
-    scored = gm.join(crank_g, "gid").select("vec_id", "list_id", "crank").persist()
+    scored = query_persist(gm.join(crank_g, "gid").select("vec_id", "list_id", "crank"))
     assign = scored.filter(F.col("crank") == 1).select("vec_id", "list_id")
     plists = scored.filter(
         (F.col("vec_id") < N_PROBES) & (F.col("crank") <= RES_NPROBE)
@@ -1438,9 +1436,6 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("probe_id", "vec_id")
         .agg(F.sum("pd2u").alias("adc_u"))
     )
-    # scored backs the returned lazy plan — registered so the next query
-    # (or an explicit release) frees it (round-9 ADVICE cache hygiene)
-    register_query_caches(scored)
     w = Window.partitionBy("probe_id").orderBy(F.asc("adc_u"), F.asc("vec_id"))
     return (
         adc.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -2551,8 +2546,8 @@ def embedding_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold — two shuffles per round, the scalable label-propagation shape.
     localCheckpoint cuts lineage between rounds as in pagerank_exact."""
     edges, nodes = _knn_edges(spark, sf_dir)
-    edges = edges.persist()
-    nodes = nodes.persist()
+    edges = query_persist(edges)
+    nodes = query_persist(nodes)
     is_seed = (F.col("gid") % LP_SEED_MOD) == 0
     cur = nodes.select(
         "gid",

@@ -32,6 +32,7 @@ from gdalos_spark.datamodel import (
     dem_grid,
     events_points,
     load,
+    query_persist,
 )
 
 # observer for single-observer LOS (#19): grid center, antenna at z=500
@@ -1815,7 +1816,7 @@ def viewshed_greedy_observers(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted). Ties break on (ox, oy), so the pick is total-ordered.
     Output per round: the chosen observer, its own coverage, its
     marginal gain, and the cumulative union size."""
-    vis = _vis_pairs(spark, sf_dir).persist()
+    vis = query_persist(_vis_pairs(spark, sf_dir))
     counts = vis.groupBy("ox", "oy").agg(F.count(F.lit(1)).alias("cov"))
     w = Window.orderBy(F.desc("cov"), "ox", "oy")
     best1 = counts.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)
@@ -2096,7 +2097,7 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("ea", "eb")
     )
-    cand = cand.persist()
+    cand = query_persist(cand)
     ncnt = cand.groupBy("ea").agg(F.count(F.lit(1)).alias("n"))
     core = ncnt.where(F.col("n") >= DBSCAN_MIN_PTS).select(
         F.col("ea").alias("event_id")

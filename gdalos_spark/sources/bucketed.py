@@ -220,13 +220,3 @@ def attach(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
             f"INTO {meta['buckets']} BUCKETS LOCATION '{final}'"
         )
     return spark.table(tbl)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back WITH its bucket spec (a plain
-    spark.read.parquet of the path would drop it and re-shuffle)."""
-    return spark.table(table)
-
-
-def drop_bucketed(spark: SparkSession, table: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -38,6 +38,7 @@ from ..datamodel import (
     coalesced_partitions,
     epoch_micros,
     epoch_micros_sql,
+    query_persist,
     source_fingerprint,
 )
 from ..session import scoped_conf
@@ -51,60 +52,20 @@ from ..session import scoped_conf
 # retired; in git history).
 LAST_STATE_METRICS: dict[str, list[dict]] = {}
 
-_STATE_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def _state_provider() -> str | None:
-    """The heavy-state joins default to the RocksDB state store: the
-    72h-horizon outer joins hold O(rate x horizon) rows, and the default
-    HDFS-backed provider keeps ALL of it on the executor heap — at
-    100 TB/day that is an OOM, while RocksDB spills to local SSD with
-    bounded memtables. SPARK_GRAFT_STATE_STORE=hdfs forces the heap
-    provider (the A/B arm)."""
-    choice = os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb").strip().lower()
-    if choice not in ("rocksdb", "hdfs"):
-        raise ValueError(
-            f"SPARK_GRAFT_STATE_STORE must be rocksdb|hdfs, got {choice!r}"
-        )
-    return _ROCKSDB_PROVIDER if choice == "rocksdb" else None
-
-
-def _rocksdb_tuning() -> dict:
-    """RocksDB knobs that ride along with the provider flip.
-
-    Changelog checkpointing commits per-batch row-level deltas instead
-    of copying changed SST files every batch. Measured 3-arm A/B at 10M
-    events (BASELINE 'RocksDB changelog checkpointing A/B'): it zeroes
-    the per-batch SST copies (rocksdbFilesCopied 64 -> 0) but costs
-    +28% wall and ~4x the rocksdbTotalMemoryUsage metric on LOCAL
-    checkpoints — serializing 4.4M state puts as changelog rows is
-    pure overhead when the file copy is a local rename. So the DEFAULT
-    is OFF (snapshot mode, the measured local winner); flip
-    SPARK_GRAFT_ROCKSDB_CHANGELOG=true when the checkpoint location is
-    an object store, where per-batch SST uploads — not correctness —
-    become the binding cost. (Unlike the heap-vs-RocksDB default, both
-    modes are CORRECT at scale, so the local measurement decides.)
-    SPARK_GRAFT_ROCKSDB_WRITEBUF_MB optionally sizes the memtable
-    (engine default 64 MB) for write-heavy state."""
-    confs = {}
-    if os.environ.get("SPARK_GRAFT_ROCKSDB_CHANGELOG", "false").strip().lower() == "true":
-        confs[
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        ] = "true"
-    wb = os.environ.get("SPARK_GRAFT_ROCKSDB_WRITEBUF_MB", "").strip()
-    if wb:
-        confs["spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB"] = wb
-    track = os.environ.get("SPARK_GRAFT_ROCKSDB_TRACK_ROWS", "").strip().lower()
-    if track in ("true", "false"):
-        # numRowsTotal maintenance costs one RocksDB get per put; for the
-        # write-heavy stream-stream joins (every event buffered once) the
-        # documented perf remedy is turning it off. A/B knob — see
-        # BASELINE.md for the measured arms before changing any default.
-        confs["spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"] = track
-    return confs
+# The heavy-state joins run on the RocksDB state store. Their 72h-horizon
+# outer joins hold O(rate x horizon) rows; the default HDFS-backed provider
+# keeps all of it on the executor heap (an OOM at 100 TB/day), while RocksDB
+# spills to local disk with bounded memtables (BASELINE.md "Stream-stream
+# join state-store A/B at 10M events"). RocksDB stays in snapshot mode:
+# changelog checkpointing zeroed the per-batch SST copies (64 -> 0) but cost
+# +28% wall and ~4x rocksdbTotalMemoryUsage on local checkpoints, and both
+# modes are correct, so the measurement decides (BASELINE.md "RocksDB
+# changelog checkpointing A/B"). Changelog mode is the one to measure again
+# when checkpoints live on an object store.
+_ROCKSDB_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+}
 
 
 def _source_bytes(source_dir: str) -> int:
@@ -129,7 +90,7 @@ def _run_streams(
     Each writer starts as an availableNow query named by its key, after
     any same-named active query is stopped. Around the starts only, the
     session carries the state-partition count sized from the bytes
-    under `source_dir`, plus the RocksDB provider flip for
+    under `source_dir`, plus the RocksDB state store for
     `heavy_state` joins; a query clones the session conf when it
     starts, so restoring it afterwards leaves the session's other
     queries untouched. All queries are then awaited (recording their
@@ -140,9 +101,8 @@ def _run_streams(
             q.stop()
     n = coalesced_partitions(spark, _source_bytes(source_dir))
     confs = {"spark.sql.shuffle.partitions": str(n)}
-    provider = _state_provider() if heavy_state else None
-    if provider is not None:
-        confs.update({_STATE_PROVIDER_CONF: provider, **_rocksdb_tuning()})
+    if heavy_state:
+        confs.update(_ROCKSDB_STATE_STORE)
     queries = []
     try:
         with scoped_conf(spark, confs):
@@ -1523,7 +1483,7 @@ def _stage_dedup_wm_batches(spark: SparkSession, sf_dir: str) -> str:
         us = F.expr(epoch_micros_sql(ev)).alias("us")
         base = ev.select("user_id", "event_type", us)
         day0 = base.agg(F.min(F.expr("us div 86400000000"))).collect()[0][0]
-        keyed = (
+        keyed = query_persist(
             base.withColumn(
                 "w",
                 F.least(
@@ -1535,7 +1495,6 @@ def _stage_dedup_wm_batches(spark: SparkSession, sf_dir: str) -> str:
             )
             .groupBy("user_id", "event_type", "w")
             .agg(F.min("us").alias("t_us"))
-            .persist()
         )
         # wm_1: watermark established by batch 1's data (max staged t - delay)
         wm1 = (

@@ -190,25 +190,69 @@ def test_suite_session_is_the_bench_session(spark):
     assert {k: spark.conf.get(k, None) for k in expected} == expected
 
 
-def test_append_query_caches_batch_semantics(spark):
-    """append_query_caches (round-12: minhash_calibration's pairs persist)
-    must extend the current batch WITHOUT releasing the callee's persists,
-    and the next register_query_caches must free the whole batch."""
-    from gdalos_spark import datamodel as dm
+def test_query_persist_is_the_only_persist():
+    """Every engine persist goes through datamodel.query_persist, so the
+    release at the query boundary (__spark_entry__.queries()) frees all
+    of them: the one `.persist(`/`.cache(` call in gdalos_spark/ is the
+    one inside that helper."""
+    import ast
+    import pathlib
 
-    a = spark.range(3).persist()
-    b = spark.range(4).persist()
-    c = spark.range(5)
-    a.count(), b.count()
-    dm.register_query_caches(a)
-    dm.append_query_caches(b)
-    # the callee's persist survives the append
-    assert a.storageLevel.useMemory and b.storageLevel.useMemory
-    assert dm._QUERY_CACHES == [a, b]
-    # the NEXT query's registration frees the whole composite batch
-    dm.register_query_caches(c)
-    assert not a.storageLevel.useMemory and not b.storageLevel.useMemory
-    dm.release_query_caches()
+    import gdalos_spark
+
+    root = pathlib.Path(gdalos_spark.__file__).parent
+    calls = [
+        (path.relative_to(root).as_posix(), node.lineno)
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("persist", "cache")
+    ]
+    helper = next(
+        n for n in ast.walk(ast.parse((root / "datamodel.py").read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == "query_persist"
+    )
+    assert len(calls) == 1, calls
+    assert calls[0][0] == "datamodel.py"
+    assert helper.lineno <= calls[0][1] <= helper.end_lineno
+
+
+# The keys that, each run alone at sf0.001, left a cache behind after
+# release_query_caches() before every persist went through query_persist
+# (BASELINE.md "One persist lifetime"). Four more (ann_ivf_topk,
+# ann_ivfpq_topk, ann_ivfpq_trained_topk, ann_ivfpq_residual_topk) run
+# here inside ann_recall_report, which composes them.
+_PERSISTING_KEYS = (
+    "dedup_union_report", "raster_sieve", "dbscan_grid_clusters",
+    "dedup_minhash_lsh", "item_item_similarity", "viewshed_greedy_observers",
+    "ann_ivfpq_rerank", "dedup_embedding_cosine", "dedup_incremental_minhash",
+    "dedup_incremental_minhash_stored", "dedup_simhash",
+    "embedding_label_propagation", "kmeans_train", "raster_overview_pyramid",
+    "embedding_pq", "ann_recall_report", "split_leakage_report",
+    "basket_lift_pairs", "dedup_fuzzy_title", "events_pmi_pairs",
+    "events_stickiness", "minhash_calibration",
+)
+
+
+def test_query_boundary_releases_every_persist(spark):
+    """A query's persists live until the next query starts: starting a
+    key through queries() frees what the previous one persisted, and
+    after release_query_caches() nothing any key persisted is cached."""
+    import __spark_entry__ as E
+    from gdalos_spark.datamodel import query_persist, release_query_caches
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    release_query_caches()
+    spark.catalog.clearCache()
+    qs = E.queries()
+    query_persist(spark.range(3)).count()
+    qs["pricing_summary"](spark, SF_DIR)
+    assert cache.isEmpty()
+    for key in _PERSISTING_KEYS:
+        qs[key](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        release_query_caches()
+        assert cache.isEmpty(), key
 
 
 def test_bench_smoke_passes(spark):

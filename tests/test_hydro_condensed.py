@@ -1,18 +1,19 @@
-"""Result-identity pinning for the two hydrology fixpoint arms.
+"""Result-identity pinning for the condensed hydrology fixpoint.
 
-The condensed arm (chain contraction by pointer doubling + the fixpoint
+The condensed path (chain contraction by pointer doubling + the fixpoint
 on the junction/head graph — see operators/raster.py) must be
-result-identical to the level-synchronous arm on:
+result-identical to the level-synchronous fixpoint run directly on the
+cell graph (one round per cell of the longest path) on:
 
   * a junction-rich "comb" drainage (main channel + periodic
     tributaries — the shape where the condensed fixpoint's round count
     is junction depth, far below the path's cell count),
   * a zero-junction serpentine (one maximal unary chain — the pure
     chain-contraction edge case: the condensed graph is a single head),
-  * the real DEM-derived flow field (both public keys, both arms).
+  * the real DEM-derived flow field (both public keys).
 
 Both synthetic fixtures are also checked against an independent
-pure-Python D8 walker, so the two Spark arms can't be identically wrong.
+pure-Python D8 walker, so the two Spark paths can't be identically wrong.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from __future__ import annotations
 from collections import defaultdict
 
 import pytest
+from pyspark.sql import functions as F
 
 from gdalos_spark.operators import raster
 
@@ -86,27 +88,47 @@ def _serpentine(width: int = 8, rows: int = 4) -> dict:
     return cells
 
 
-def _run_arms(spark, monkeypatch, cells):
+def _levelsync(fd, edges):
+    """The cell-level reference: both fixpoints run directly on the cell
+    graph, w = 1 per flow edge."""
+    nodes = fd.select("px", "py")
+    acc = raster._acc_fixpoint(
+        nodes,
+        edges.withColumn("w", F.lit(1).cast("bigint")),
+        raster._FLOW_ACC_MAX_ROUNDS,
+        "flow_acc levelsync",
+    )
+    ordv = raster._strahler_fixpoint(
+        nodes, edges, raster._STRAHLER_ROUNDS, "strahler levelsync"
+    )
+    return acc, ordv
+
+
+def _run_arms(spark, cells):
     fd = spark.createDataFrame(
         [(x, y, d) for (x, y), d in sorted(cells.items())],
         "px int, py int, flow_dir int",
     ).localCheckpoint()
     edges = raster._flow_parent_edges(fd)
+    arms = {
+        "condensed": (raster._flow_acc_on(fd, edges), raster._strahler_on(fd, edges)),
+        "levelsync": _levelsync(fd, edges),
+    }
     out = {}
-    for arm in ("condensed", "levelsync"):
-        monkeypatch.setenv("SPARK_GRAFT_HYDRO_ARM", arm)
-        acc = {(r.px, r.py): r.acc for r in raster._flow_acc_on(fd, edges).collect()}
-        acc_rounds = raster._HYDRO_LAST_ROUNDS[f"flow_acc {arm}"]
-        ordv = {(r.px, r.py): r.ord for r in raster._strahler_on(fd, edges).collect()}
-        ord_rounds = raster._HYDRO_LAST_ROUNDS[f"strahler {arm}"]
-        out[arm] = (acc, ordv, acc_rounds, ord_rounds)
+    for arm, (acc, ordv) in arms.items():
+        out[arm] = (
+            {(r.px, r.py): r.acc for r in acc.collect()},
+            {(r.px, r.py): r.ord for r in ordv.collect()},
+            raster._HYDRO_LAST_ROUNDS[f"flow_acc {arm}"],
+            raster._HYDRO_LAST_ROUNDS[f"strahler {arm}"],
+        )
     return out
 
 
 @pytest.mark.slow
-def test_comb_arms_identical_and_exact(spark, monkeypatch):
+def test_comb_arms_identical_and_exact(spark):
     cells = _comb()
-    res = _run_arms(spark, monkeypatch, cells)
+    res = _run_arms(spark, cells)
     ref_acc, ref_ord = _ref_hydro(cells)
     assert res["condensed"][0] == ref_acc
     assert res["levelsync"][0] == ref_acc
@@ -121,9 +143,9 @@ def test_comb_arms_identical_and_exact(spark, monkeypatch):
 
 
 @pytest.mark.slow
-def test_serpentine_arms_identical_and_exact(spark, monkeypatch):
+def test_serpentine_arms_identical_and_exact(spark):
     cells = _serpentine()
-    res = _run_arms(spark, monkeypatch, cells)
+    res = _run_arms(spark, cells)
     ref_acc, ref_ord = _ref_hydro(cells)
     assert res["condensed"][0] == ref_acc
     assert res["levelsync"][0] == ref_acc
@@ -135,14 +157,21 @@ def test_serpentine_arms_identical_and_exact(spark, monkeypatch):
     assert max(ref_ord.values()) == 1  # no junctions -> all order 1
 
 
-@pytest.mark.parametrize("key", ["raster_flow_accumulation", "raster_stream_order"])
-def test_real_dem_arms_identical(spark, monkeypatch, key):
+# key -> (its output column, index and column of the _levelsync reference)
+_REAL_DEM = {
+    "raster_flow_accumulation": ("flow_acc", 0, "acc"),
+    "raster_stream_order": ("strahler", 1, "ord"),
+}
+
+
+@pytest.mark.parametrize("key", list(_REAL_DEM))
+def test_real_dem_arms_identical(spark, key):
     import __spark_entry__ as entrymod
 
-    fn = entrymod.queries()[key]
-    monkeypatch.setenv("SPARK_GRAFT_HYDRO_ARM", "condensed")
-    a = {tuple(r)[:2]: tuple(r)[2:] for r in fn(spark, SF_DIR).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_HYDRO_ARM", "levelsync")
-    b = {tuple(r)[:2]: tuple(r)[2:] for r in fn(spark, SF_DIR).collect()}
+    col, i, ref_col = _REAL_DEM[key]
+    a = {(r.px, r.py): r[col] for r in entrymod.queries()[key](spark, SF_DIR).collect()}
+    fd = raster._flow_field(spark, SF_DIR)
+    ref = _levelsync(fd, raster._flow_parent_edges(fd))[i]
+    b = {(r.px, r.py): r[ref_col] for r in ref.collect()}
     assert a == b
     assert len(a) > 0

@@ -365,13 +365,13 @@ def test_minhash_lsh_collapse_matches_direct(spark, tmp_path, monkeypatch):
     assert sim_collapsed == sim_direct
 
 
-def test_minhash_calibration_arrays_matches_equijoin(spark, tmp_path, monkeypatch):
+def test_minhash_calibration_arrays_matches_equijoin(spark, tmp_path):
     """Round-12: the broadcast-array calibration plan (size of
     array_intersect, shared>0 filter) must be row-identical to the
     exploded shingle equi-join plan — including the INNER-join drop of
     zero-overlap candidate pairs and the decile-edge FLOOR arithmetic.
-    Forced both ways via SPARK_GRAFT_CALIB_ARRAYS on a corpus with
-    replica cliques AND near-dup variants (non-trivial exact_j)."""
+    Both plan functions run directly on a corpus with replica cliques
+    AND near-dup variants (non-trivial exact_j)."""
     from gdalos_spark.operators import dedup as D
 
     rows, did = [], 0
@@ -383,10 +383,8 @@ def test_minhash_calibration_arrays_matches_equijoin(spark, tmp_path, monkeypatc
         rows.append((did, base + " extra tail words"))
         did += 1
     d = _write_docs(tmp_path, rows)
-    monkeypatch.setenv("SPARK_GRAFT_CALIB_ARRAYS", "1")
-    arrays = sorted(tuple(r) for r in D.minhash_calibration(spark, d).collect())
-    monkeypatch.setenv("SPARK_GRAFT_CALIB_ARRAYS", "0")
-    equijoin = sorted(tuple(r) for r in D.minhash_calibration(spark, d).collect())
+    arrays = sorted(tuple(r) for r in D._minhash_calibration_arrays(spark, d).collect())
+    equijoin = sorted(tuple(r) for r in D._minhash_calibration_join(spark, d).collect())
     assert arrays and arrays == equijoin
 
 
