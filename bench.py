@@ -115,17 +115,12 @@ def main() -> None:
     # the default loader serves the exchange-free layout for every
     # fact-join query below — the "pay the bucketing shuffle once at
     # ingest" contract, exercised the way a real deployment would.
-    # SPARK_GRAFT_SKIP_STAGE=1 skips the ingest staging — the A/B knob for
-    # measuring the plain-parquet arm (pair it with a throwaway
-    # GDALOS_BUCKETED_ROOT so attach() finds nothing). Compared against
-    # the literal "1" so =0/false doesn't silently skip.
-    if os.environ.get("SPARK_GRAFT_SKIP_STAGE") != "1":
-        try:
-            from gdalos_spark.sources.bucketed import stage_facts
+    try:
+        from gdalos_spark.sources.bucketed import stage_facts
 
-            stage_facts(spark, sf_dir)
-        except Exception as e:  # noqa: BLE001
-            errors["stage_bucketed"] = f"{type(e).__name__}: {e}"[:300]
+        stage_facts(spark, sf_dir)
+    except Exception as e:  # noqa: BLE001
+        errors["stage_bucketed"] = f"{type(e).__name__}: {e}"[:300]
     for t in ("lineitem", "orders", "events", "documents", "embeddings"):
         try:
             load(spark, sf_dir, t).count()

@@ -4,11 +4,14 @@ A gdalos user drives the reference through a handful of functions —
 `gdalos_trans`, `gdalos_info`, `los_calc`, `viewshed_calc`, combine,
 scale, color-relief, gdal2xyz, point sampling. This module exposes the
 same vocabulary over the distributed engine so switching is a matter of
-passing DataFrames instead of dataset paths. Each function is a thin
-composition over the operator library and returns a lazy DataFrame —
-nothing executes until the caller acts on it.
+passing DataFrames instead of dataset paths. A verb is a reference name
+for one `__spark_entry__.queries()` key and runs that function, so it
+returns the same lazy DataFrame and starts at the same query boundary:
+the persists of the previous query are released first
+(datamodel.query_persist).
 
-Reference mapping (file:line cited per function):
+Reference mapping (further file:line citations in the operator
+docstrings each verb carries):
   gdalos_trans      gdalos_trans.py:82   -> crop / warp / overview / scale
   gdalos_info       gdalos_trans.py:1220 -> raster_info / raster_histogram
   gdalos_combine    calc/gdalos_combine.py -> combine count/max/unique
@@ -24,13 +27,11 @@ Reference mapping (file:line cited per function):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
-from gdalos_spark.operators import export, raster, relational, similarity, text, viewshed
-from gdalos_spark.operators import dedup as dedup_ops
-from gdalos_spark.operators import multimodal as multimodal_ops
-from gdalos_spark.operators import pipeline as pipeline_ops
-from gdalos_spark.streaming import events as streaming_events
+from __spark_entry__ import queries
 
 
 class GdalosSpark:
@@ -41,6 +42,9 @@ class GdalosSpark:
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
+
+    def _run(self, key: str) -> DataFrame:
+        return queries()[key](self.spark, self.sf_dir)
 
     def register_views(self) -> None:
         """Register every testdata table as a temp view so users can run
@@ -70,89 +74,6 @@ class GdalosSpark:
 
         return vector_src.vector_layer_features(self.spark, list(paths))
 
-    # --- gdalos_trans family (translate = crop/warp/overview/scale) ---
-    def crop(self) -> DataFrame:
-        return raster.raster_crop(self.spark, self.sf_dir)
-
-    def warp(self) -> DataFrame:
-        return raster.raster_warp_affine(self.spark, self.sf_dir)
-
-    def reproject(self) -> DataFrame:
-        """True CRS reprojection (warp_srs path): geographic -> UTM 36N
-        ellipsoidal regrid (gdalos_trans.py:82, osr_utm_util.py:52)."""
-        return raster.crs_reproject_utm(self.spark, self.sf_dir)
-
-    def overviews(self) -> DataFrame:
-        return raster.raster_overview(self.spark, self.sf_dir)
-
-    def overviews_discrete(self) -> DataFrame:
-        return raster.raster_overview_mode(self.spark, self.sf_dir)
-
-    def scale(self) -> DataFrame:
-        return raster.raster_scale(self.spark, self.sf_dir)
-
-    def color_relief(self) -> DataFrame:
-        return raster.raster_color_relief(self.spark, self.sf_dir)
-
-    # --- info / stats ---
-    def info(self) -> DataFrame:
-        return raster.raster_info(self.spark, self.sf_dir)
-
-    def histogram(self) -> DataFrame:
-        return raster.raster_histogram(self.spark, self.sf_dir)
-
-    def partition_stats(self) -> DataFrame:
-        return raster.raster_partition_stats(self.spark, self.sf_dir)
-
-    # --- combine / calc / mosaic ---
-    def calc(self) -> DataFrame:
-        return raster.raster_calc_expr(self.spark, self.sf_dir)
-
-    def combine_count(self) -> DataFrame:
-        return raster.raster_combine_count(self.spark, self.sf_dir)
-
-    def combine_max(self) -> DataFrame:
-        return raster.raster_combine_max(self.spark, self.sf_dir)
-
-    def combine_unique(self) -> DataFrame:
-        return raster.raster_combine_unique(self.spark, self.sf_dir)
-
-    def mosaic(self) -> DataFrame:
-        return raster.raster_mosaic(self.spark, self.sf_dir)
-
-    def rasterize(self) -> DataFrame:
-        return raster.rasterize_points(self.spark, self.sf_dir)
-
-    # --- viewshed / geo ---
-    def los(self, refraction: bool = False) -> DataFrame:
-        fn = viewshed.viewshed_los_refraction if refraction else viewshed.viewshed_los
-        return fn(self.spark, self.sf_dir)
-
-    def viewshed_combine(self) -> DataFrame:
-        """CalcOperation max/min/count_z/unique over the observer fan
-        (viewshed_calc.py:63, gdalos_combine.py)."""
-        return viewshed.viewshed_combine_modes(self.spark, self.sf_dir)
-
-    def jpeg_features(self) -> DataFrame:
-        """Real baseline-JPEG round-trip features over the media table."""
-        return multimodal_ops.multimodal_jpeg_features(self.spark, self.sf_dir)
-
-    def viewshed(self) -> DataFrame:
-        return viewshed.viewshed_observer_count(self.spark, self.sf_dir)
-
-    def free_space_loss(self) -> DataFrame:
-        return viewshed.free_space_loss(self.spark, self.sf_dir)
-
-    def utm_convergence(self) -> DataFrame:
-        return viewshed.utm_zone_convergence(self.spark, self.sf_dir)
-
-    # --- export / sampling ---
-    def to_xyz(self) -> DataFrame:
-        return raster.raster_to_xyz(self.spark, self.sf_dir)
-
-    def to_czml(self) -> DataFrame:
-        return export.raster_to_czml(self.spark, self.sf_dir)
-
     def to_cog(self, path: str, overwrite: bool = False):
         """Write the whole DEM as ONE Cloud-Optimized GeoTIFF (full-res
         + overview IFDs, atomic temp+rename commit, skip-if-exists) —
@@ -161,308 +82,27 @@ class GdalosSpark:
 
         return write_cog_file(self.spark, self.sf_dir, path, overwrite)
 
-    def sample_points(self) -> DataFrame:
-        return raster.pixel_lookup(self.spark, self.sf_dir)
-
-    def select_datasets(self) -> DataFrame:
-        return raster.extent_selector(self.spark, self.sf_dir)
-
-    # --- LLM-pipeline extensions ---
-    def dedup_exact(self) -> DataFrame:
-        return dedup_ops.dedup_exact(self.spark, self.sf_dir)
-
-    def dedup_minhash(self) -> DataFrame:
-        return dedup_ops.dedup_minhash_lsh(self.spark, self.sf_dir)
-
-    def dedup_simhash(self) -> DataFrame:
-        return dedup_ops.dedup_simhash(self.spark, self.sf_dir)
-
-    def dedup_jaccard(self) -> DataFrame:
-        return dedup_ops.dedup_ngram_jaccard(self.spark, self.sf_dir)
-
-    def dedup_embeddings(self) -> DataFrame:
-        return dedup_ops.dedup_embedding_cosine(self.spark, self.sf_dir)
+    # --- verbs that select one of several keys -------------------------
+    def los(self, refraction: bool = False) -> DataFrame:
+        return self._run("viewshed_los_refraction" if refraction else "viewshed_los")
 
     def ann(self, method: str = "brute") -> DataFrame:
-        fns = {
-            "brute": similarity.ann_cosine_topk,
-            "lsh": similarity.ann_lsh_topk,
-            "ivf": similarity.ann_ivf_topk,
-            "ivfpq": similarity.ann_ivfpq_topk,
-        }
-        return fns[method](self.spark, self.sf_dir)
+        key = {
+            "brute": "ann_cosine_topk",
+            "lsh": "ann_lsh_topk",
+            "ivf": "ann_ivf_topk",
+            "ivfpq": "ann_ivfpq_topk",
+        }[method]
+        return self._run(key)
+
+    def funnel(self, windowed: bool = True) -> DataFrame:
+        """Conversion funnel (1h conversion window by default)."""
+        return self._run("events_funnel_windowed" if windowed else "events_funnel")
+
+    def ohlc(self, streaming: bool = False) -> DataFrame:
+        """Hypertable-style OHLC bars (batch or continuous aggregate)."""
+        return self._run("streaming_ohlc_bars" if streaming else "events_ohlc_bars")
 
-    def centroids(self) -> DataFrame:
-        return similarity.centroid_similarity(self.spark, self.sf_dir)
-
-    def language_id(self) -> DataFrame:
-        return text.text_language_id(self.spark, self.sf_dir)
-
-    def quality(self) -> DataFrame:
-        return text.text_quality_score(self.spark, self.sf_dir)
-
-    def token_stats(self) -> DataFrame:
-        return text.text_token_stats(self.spark, self.sf_dir)
-
-    def fingerprints(self) -> DataFrame:
-        return text.doc_fingerprint(self.spark, self.sf_dir)
-
-    def decode_media(self) -> DataFrame:
-        return multimodal_ops.multimodal_decode(self.spark, self.sf_dir)
-
-    def sample_frames(self) -> DataFrame:
-        return multimodal_ops.multimodal_frames(self.spark, self.sf_dir)
-
-    def stream_event_counts(self) -> DataFrame:
-        return streaming_events.streaming_event_counts(self.spark, self.sf_dir)
-
-    def stream_sessions(self) -> DataFrame:
-        return streaming_events.streaming_sessionize(self.spark, self.sf_dir)
-
-    def sessionize(self) -> DataFrame:
-        return relational.events_sessionize(self.spark, self.sf_dir)
-
-    # --- round-2 additions (#63-75) ---
-    def crop_cutline(self) -> DataFrame:
-        return raster.raster_cutline(self.spark, self.sf_dir)
-
-    def discrete_updown(self) -> DataFrame:
-        return raster.raster_discrete_updown(self.spark, self.sf_dir)
-
-    def warp_resolution(self) -> DataFrame:
-        return raster.transform_resolution(self.spark, self.sf_dir)
-
-    def overview_select(self) -> DataFrame:
-        return raster.overview_level_select(self.spark, self.sf_dir)
-
-    def empty_raster(self) -> DataFrame:
-        return raster.empty_raster_generate(self.spark, self.sf_dir)
-
-    def los_range(self) -> DataFrame:
-        return viewshed.viewshed_los_range(self.spark, self.sf_dir)
-
-    def normalize_azimuths(self) -> DataFrame:
-        return viewshed.azimuth_normalize(self.spark, self.sf_dir)
-
-    def coord_precision(self) -> DataFrame:
-        return viewshed.coord_precision_report(self.spark, self.sf_dir)
-
-    def dedup_lines(self) -> DataFrame:
-        return dedup_ops.dedup_lines(self.spark, self.sf_dir)
-
-    def rarity(self) -> DataFrame:
-        return text.text_rarity_score(self.spark, self.sf_dir)
-
-    def stream_enrich(self) -> DataFrame:
-        return streaming_events.streaming_enrich_join(self.spark, self.sf_dir)
-
-    # --- round-3 additions ---
-    def geodesic_distance(self) -> DataFrame:
-        """calc_dist (viewshed_calc.py:620) — WGS-84 link distances + FSPL."""
-        return viewshed.geo_distance(self.spark, self.sf_dir)
-
-    def calc_multi(self) -> DataFrame:
-        """gdal_calc A..Z lettered expressions (calc/gdal_calc.py:3)."""
-        return raster.raster_calc_multi(self.spark, self.sf_dir)
-
-    def polygonize(self) -> DataFrame:
-        """Visible-region polygon CZML (viewshed_calc.py:148/:577)."""
-        return export.viewshed_polygonize(self.spark, self.sf_dir)
-
-    def contour_polygons(self) -> DataFrame:
-        """Per-observer-count contour polygons with palette colors."""
-        return export.viewshed_contour_polygons(self.spark, self.sf_dir)
-
-    def resolve_jobs(self) -> DataFrame:
-        """do_skip_if_exists overwrite/skip resolution (gdalos_util.py:69)."""
-        return relational.job_skip_overwrite(self.spark, self.sf_dir)
-
-    def decontaminate(self) -> DataFrame:
-        """Benchmark n-gram contamination scan over the corpus."""
-        return pipeline_ops.benchmark_contamination(self.spark, self.sf_dir)
-
-    def mix_sample(self) -> DataFrame:
-        """Weighted source-mixture sampling to a target corpus size."""
-        return pipeline_ops.corpus_mix_sample(self.spark, self.sf_dir)
-
-    def top_ngrams(self) -> DataFrame:
-        """Corpus-wide most-frequent word trigrams."""
-        return text.text_ngram_topk(self.spark, self.sf_dir)
-
-    def map_scales(self) -> DataFrame:
-        """Web-map scale denominators per zoom (scale_calc.py)."""
-        return viewshed.map_scale_zoom(self.spark, self.sf_dir)
-
-    def sector_rings(self) -> DataFrame:
-        """PolygonizeSector ring vertices (talos/geom_arc.py:9)."""
-        return viewshed.sector_ring_points(self.spark, self.sf_dir)
-
-    def los_links(self) -> DataFrame:
-        """Multi-point observer->target LOS verdicts (los_calc)."""
-        return viewshed.point_to_point_los(self.spark, self.sf_dir)
-
-    def quantize_pq(self) -> DataFrame:
-        """Product-quantization codes + reconstruction error."""
-        return similarity.embedding_pq(self.spark, self.sf_dir)
-
-    def repetition(self) -> DataFrame:
-        """Gopher-style repetition signals + repetitive flag."""
-        return text.text_repetition_score(self.spark, self.sf_dir)
-
-    def pack_sequences(self) -> DataFrame:
-        """Concat-and-chunk context-window packing per (source, shard)."""
-        return pipeline_ops.sequence_packing(self.spark, self.sf_dir)
-
-    def kmeans_step(self) -> DataFrame:
-        """One exact Lloyd iteration: counts, inertia, centroid shift."""
-        return similarity.kmeans_refine(self.spark, self.sf_dir)
-
-    def zorder_layout(self) -> DataFrame:
-        """Morton-tile layout index + per-tile locality bounds."""
-        return raster.raster_zorder_index(self.spark, self.sf_dir)
-
-    # --- round-4 additions ---
-    def c4_filters(self) -> DataFrame:
-        """C4-style line-level cleaning report + page keep rule."""
-        return text.text_c4_filters(self.spark, self.sf_dir)
-
-    def dedup_semantic(self) -> DataFrame:
-        """SemDeDup cluster-scoped embedding dedup report."""
-        return dedup_ops.semantic_dedup(self.spark, self.sf_dir)
-
-    def ann_recall(self) -> DataFrame:
-        """recall@k of lsh/ivf/ivfpq vs the brute-force ground truth."""
-        return similarity.ann_recall_report(self.spark, self.sf_dir)
-
-    def stream_attribution(self) -> DataFrame:
-        """Stream-stream click->purchase range join (append mode)."""
-        return streaming_events.streaming_stream_join(self.spark, self.sf_dir)
-
-    def proximity(self) -> DataFrame:
-        """Bounded-radius distance transform (gdal_proximity -maxdist)."""
-        return raster.raster_proximity(self.spark, self.sf_dir)
-
-    def perplexity(self) -> DataFrame:
-        """Unigram-LM surprise per document (perplexity-proxy gate)."""
-        return text.text_unigram_logprob(self.spark, self.sf_dir)
-
-    def curate(self) -> DataFrame:
-        """End-to-end keep/drop decision table over every signal."""
-        return pipeline_ops.corpus_curation_report(self.spark, self.sf_dir)
-
-    def dsir_weights(self) -> DataFrame:
-        """DSIR importance weights toward the target-source distribution."""
-        return text.dsir_importance(self.spark, self.sf_dir)
-
-    def sieve(self) -> DataFrame:
-        """gdal_sieve: flag small 4-connected regions for removal."""
-        return raster.raster_sieve(self.spark, self.sf_dir)
-
-    def export_shards(self) -> DataFrame:
-        """Deterministic JSONL shard manifest (counts + content digests)."""
-        return export.export_jsonl_shards(self.spark, self.sf_dir)
-
-    def disjunctive_revenue(self) -> DataFrame:
-        """TPC-H Q19-shape OR-of-AND revenue bands."""
-        return relational.disjunctive_revenue(self.spark, self.sf_dir)
-
-    def stream_sessions_native(self) -> DataFrame:
-        """Built-in session_window sessionization (JVM state)."""
-        return streaming_events.streaming_session_window(self.spark, self.sf_dir)
-
-    def funnel(self) -> DataFrame:
-        """Ordered signup->click->purchase conversion funnel."""
-        return relational.events_funnel(self.spark, self.sf_dir)
-
-    def media_manifest(self) -> DataFrame:
-        """Magic-byte + size manifest over the media lake's binary column."""
-        return multimodal_ops.multimodal_manifest(self.spark, self.sf_dir)
-
-    def bm25(self) -> DataFrame:
-        """BM25 top-k relevance ranking against the fixed query set."""
-        return text.text_bm25_topk(self.spark, self.sf_dir)
-
-    def audit_split(self) -> DataFrame:
-        """Train/val split with near-duplicate leakage audit."""
-        return pipeline_ops.split_leakage_report(self.spark, self.sf_dir)
-
-    def retention(self) -> DataFrame:
-        """Cohort retention matrix over the events stream."""
-        return relational.events_retention(self.spark, self.sf_dir)
-
-    def flow_direction(self) -> DataFrame:
-        """D8 steepest-descent flow direction over the DEM grid."""
-        return raster.raster_flow_direction(self.spark, self.sf_dir)
-
-    # --- round-5 verbs ---------------------------------------------------
-
-    def asof_enrich(self) -> DataFrame:
-        """Point-in-time-correct as-of join: latest prior click per
-        purchase (the join DuckDB spells ASOF JOIN; here one shuffle +
-        a running window)."""
-        from gdalos_spark.operators import temporal
-
-        return temporal.asof_join_enrich(self.spark, self.sf_dir)
-
-    def range_attribution(self) -> DataFrame:
-        """Event-time range join: views within the hour before each
-        purchase, as a bucketed equi-join."""
-        from gdalos_spark.operators import temporal
-
-        return temporal.interval_range_join(self.spark, self.sf_dir)
-
-    def distinct_hll(self) -> DataFrame:
-        """HyperLogLog distinct user-days per event type (deterministic
-        md5 registers, exact count alongside)."""
-        from gdalos_spark.operators import sketch
-
-        return sketch.sketch_hll_distinct(self.spark, self.sf_dir)
-
-    def distinct_kmv(self) -> DataFrame:
-        """KMV (k-minimum-values) distinct estimator next to the exact
-        count."""
-        from gdalos_spark.operators import sketch
-
-        return sketch.sketch_kmv_distinct(self.spark, self.sf_dir)
-
-    def dedup_spans(self) -> DataFrame:
-        """ExactSubstr-style duplicated-span report (Lee et al. 2021)."""
-        return dedup_ops.dedup_substring(self.spark, self.sf_dir)
-
-    def blame_late_suppliers(self) -> DataFrame:
-        """TPC-H Q21 shape: suppliers solely responsible for late
-        multi-supplier orders."""
-        return relational.late_supplier_blame(self.spark, self.sf_dir)
-
-    def idle_customers(self) -> DataFrame:
-        """TPC-H Q22 shape: above-average balances with no recent
-        orders, per nation."""
-        return relational.idle_customer_balance(self.spark, self.sf_dir)
-
-    def resample_bilinear(self) -> DataFrame:
-        """Bilinear warp of the DEM to a 96x96 grid (gdal 'bilinear'
-        resampleAlg) in exact rational arithmetic."""
-        return raster.raster_resample_bilinear(self.spark, self.sf_dir)
-
-    def quantiles(self) -> DataFrame:
-        """Exact p50/p90/p99 value quantiles per event type (sort-based,
-        no engine percentile function)."""
-        return relational.quantile_report(self.spark, self.sf_dir)
-
-    def audience_jaccard(self) -> DataFrame:
-        """KMV-sketch Jaccard similarity between event-type audiences,
-        next to the exact value."""
-        from gdalos_spark.operators import sketch
-
-        return sketch.sketch_kmv_jaccard(self.spark, self.sf_dir)
-
-    def flow_path_length(self) -> DataFrame:
-        """Downstream flow path length per DEM cell via pointer jumping
-        (O(log path) rounds)."""
-        return raster.raster_flow_path_length(self.spark, self.sf_dir)
-
-    # --- round-4 session verbs: TPC-H completion, vocabulary family,
-    #     lakehouse maintenance, media lake, monitoring -----------------
     def tpch(self, n: int) -> DataFrame:
         """Run the TPC-H Q{n} plan-shape analog (all 22 covered)."""
         key = {
@@ -478,294 +118,177 @@ class GdalosSpark:
             20: "excess_shipper", 21: "late_supplier_blame",
             22: "idle_customer_balance",
         }[n]
-        import __spark_entry__ as entrymod
-
-        return entrymod.queries()[key](self.spark, self.sf_dir)
-
-    def bpe_pairs(self) -> DataFrame:
-        """One BPE training iteration's merge-candidate pair counts."""
-        from gdalos_spark.operators import vocab
-
-        return vocab.bpe_merge_step(self.spark, self.sf_dir)
-
-    def zipf(self) -> DataFrame:
-        from gdalos_spark.operators import vocab
-
-        return vocab.zipf_law_report(self.spark, self.sf_dir)
-
-    def heavy_hitters(self) -> DataFrame:
-        """Count-Min-sketch frequent tokens with the overcount audit."""
-        from gdalos_spark.operators import vocab
-
-        return vocab.cms_heavy_hitters(self.spark, self.sf_dir)
-
-    def blocklist_probe(self) -> DataFrame:
-        """Bloom-filter token blocklist probe with per-source FP audit."""
-        from gdalos_spark.operators import vocab
-
-        return vocab.bloom_blocklist(self.spark, self.sf_dir)
-
-    def classify_quality(self) -> DataFrame:
-        """Linear (fasttext-style) keep/drop quality scores."""
-        from gdalos_spark.operators import vocab
-
-        return vocab.quality_classifier_score(self.spark, self.sf_dir)
-
-    def focal_median(self) -> DataFrame:
-        return raster.raster_focal_median(self.spark, self.sf_dir)
-
-    def stream_leaderboard(self) -> DataFrame:
-        """Per-day top-K event types via Structured Streaming counts."""
-        return streaming_events.streaming_tumbling_topk(self.spark, self.sf_dir)
-
-    def scd2(self) -> DataFrame:
-        """Slowly-changing-dimension type-2 validity intervals."""
-        from gdalos_spark.operators import temporal
-
-        return temporal.scd2_apply(self.spark, self.sf_dir)
-
-    def merge_plan(self) -> DataFrame:
-        """MERGE INTO action resolution (update/insert/keep) report."""
-        return relational.merge_upsert_plan(self.spark, self.sf_dir)
-
-    def cube(self) -> DataFrame:
-        return relational.pricing_cube(self.spark, self.sf_dir)
-
-    def geohash(self) -> DataFrame:
-        """Geohash spatial bucketing of the event point cloud."""
-        return viewshed.geohash_bucket(self.spark, self.sf_dir)
-
-    def media_dedup(self) -> DataFrame:
-        """Exact media dedup by payload digest, per media type."""
-        return multimodal_ops.multimodal_dedup(self.spark, self.sf_dir)
-
-    def media_shards(self) -> DataFrame:
-        """Size-balanced media shard plan (WebDataset-style)."""
-        return multimodal_ops.multimodal_shard_plan(self.spark, self.sf_dir)
-
-    def anomalies(self) -> DataFrame:
-        """Per-type z-score outlier report over event values."""
-        return relational.events_anomaly_zscore(self.spark, self.sf_dir)
-
-    def triangles(self) -> DataFrame:
-        """Triangle census of the supplier competitor graph."""
-        from gdalos_spark.operators import graph
-
-        return graph.supplier_triangles(self.spark, self.sf_dir)
-
-    def pagerank(self) -> DataFrame:
-        """Fixed-iteration exact integer PageRank over the competitor graph."""
-        from gdalos_spark.operators import graph
-
-        return graph.pagerank_exact(self.spark, self.sf_dir)
-
-    def matryoshka_report(self) -> DataFrame:
-        """Truncated-dimension (MRL) retrieval-quality report."""
-        from gdalos_spark.operators import similarity
-
-        return similarity.embedding_matryoshka(self.spark, self.sf_dir)
-
-    def keywords(self) -> DataFrame:
-        """Per-document top TF-IDF keywords."""
-        from gdalos_spark.operators import text as text_ops
-
-        return text_ops.doc_tfidf_topk(self.spark, self.sf_dir)
-
-    def markov(self) -> DataFrame:
-        """First-order event-type transition matrix."""
-        return relational.events_markov_transitions(self.spark, self.sf_dir)
-
-    def rfm(self) -> DataFrame:
-        """RFM (recency/frequency/monetary) customer segmentation."""
-        return relational.customer_rfm_scores(self.spark, self.sf_dir)
-
-    def pmi(self) -> DataFrame:
-        """PMI of event-type pairs within (user, day) contexts."""
-        return relational.events_pmi_pairs(self.spark, self.sf_dir)
-
-    def dedup_fuzzy(self) -> DataFrame:
-        """Levenshtein typo-level near-dup title pairs."""
-        return dedup_ops.dedup_fuzzy_title(self.spark, self.sf_dir)
-
-    def twap(self) -> DataFrame:
-        """Per-user time-weighted average of the value stream."""
-        from gdalos_spark.operators import temporal
-
-        return temporal.events_time_weighted_avg(self.spark, self.sf_dir)
-
-    # --- round-5 additions ---
-    def bpe_train(self) -> DataFrame:
-        """k greedy BPE merge iterations over the word-frequency table."""
-        from gdalos_spark.operators import vocab
-
-        return vocab.bpe_train_merges(self.spark, self.sf_dir)
-
-    def color_relief_interp(self) -> DataFrame:
-        """Linear-interpolated (gdaldem default) color relief."""
-        return raster.raster_color_interp(self.spark, self.sf_dir)
-
-    def dedup_normalized(self) -> DataFrame:
-        """Duplicate-mass report under text canonicalization."""
-        return text.text_normalize_dedup(self.spark, self.sf_dir)
-
-    def k_anonymity(self) -> DataFrame:
-        """Quasi-identifier equivalence-class audit at several k."""
-        return pipeline_ops.k_anonymity_report(self.spark, self.sf_dir)
-
-    def snapshot_diff(self) -> DataFrame:
-        """Row-level CDC diff between two table snapshots."""
-        return relational.snapshot_diff(self.spark, self.sf_dir)
-
-    def dbscan(self) -> DataFrame:
-        """Grid-blocked DBSCAN over the hash-scattered point cloud."""
-        return viewshed.dbscan_grid_clusters(self.spark, self.sf_dir)
-
-    def resize_media(self) -> DataFrame:
-        """Real-codec nearest-neighbor image resize via mapInPandas."""
-        return multimodal_ops.multimodal_resize(self.spark, self.sf_dir)
-
-    def audio_features(self) -> DataFrame:
-        """Real-codec WAV peak/ZCR/RMS features via mapInPandas."""
-        return multimodal_ops.multimodal_audio_features(self.spark, self.sf_dir)
-
-    def bpe_encode_stats(self) -> DataFrame:
-        """Corpus tokenization stats after the trained BPE merges."""
-        from gdalos_spark.operators import vocab
-
-        return vocab.bpe_apply_encode(self.spark, self.sf_dir)
-
-    def skyline(self) -> DataFrame:
-        """Pareto front of the part catalog (min price, max size)."""
-        return relational.parts_skyline(self.spark, self.sf_dir)
-
-    def mine_contrastive_pairs(self) -> DataFrame:
-        """Positive + hard-negative mining from LSH buckets."""
-        return similarity.contrastive_pair_mining(self.spark, self.sf_dir)
-
-    def quality_ablation(self) -> DataFrame:
-        """Token mass retained at each quality-decile cut."""
-        return pipeline_ops.quality_ablation_report(self.spark, self.sf_dir)
-
-    def zonal_stats(self) -> DataFrame:
-        """Per-zone raster statistics (value raster x zone raster)."""
-        return raster.raster_zonal_stats(self.spark, self.sf_dir)
-
-    def bloom_prune(self) -> DataFrame:
-        """Runtime-filter (Bloom) join pruning sizing report."""
-        return relational.bloom_join_prune(self.spark, self.sf_dir)
-
-    def embedding_qa(self) -> DataFrame:
-        """Per-label embedding norm outlier report."""
-        return similarity.embedding_norm_outliers(self.spark, self.sf_dir)
-
-    def integrity_audit(self) -> DataFrame:
-        """FK orphan / null-key audit over the schema's edges."""
-        return pipeline_ops.referential_integrity_report(self.spark, self.sf_dir)
-
-    def funnel(self, windowed: bool = True) -> DataFrame:
-        """Conversion funnel (1h conversion window by default)."""
-        if windowed:
-            return relational.events_funnel_windowed(self.spark, self.sf_dir)
-        return relational.events_funnel(self.spark, self.sf_dir)
-
-    def dedup_consensus(self) -> DataFrame:
-        """Exact + minhash + simhash pair union with vote counts."""
-        return dedup_ops.dedup_union_report(self.spark, self.sf_dir)
-
-    def ohlc(self, streaming: bool = False) -> DataFrame:
-        """Hypertable-style OHLC bars (batch or continuous aggregate)."""
-        if streaming:
-            return streaming_events.streaming_ohlc_bars(self.spark, self.sf_dir)
-        from gdalos_spark.operators import temporal
-
-        return temporal.events_ohlc_bars(self.spark, self.sf_dir)
-
-    def incremental_refresh(self) -> DataFrame:
-        """Incremental view maintenance with a self-audit column."""
-        return relational.incremental_agg_update(self.spark, self.sf_dir)
-
-    def zonemap_audit(self) -> DataFrame:
-        """Zone-map data-skipping effectiveness report."""
-        return relational.zonemap_prune_report(self.spark, self.sf_dir)
-
-    def maxsim(self) -> DataFrame:
-        """ColBERT-style late-interaction retrieval baseline."""
-        return similarity.multivector_maxsim(self.spark, self.sf_dir)
-
-    def activity_streaks(self) -> DataFrame:
-        """Gaps-and-islands consecutive-day activity streaks."""
-        return relational.user_activity_streaks(self.spark, self.sf_dir)
-
-    def attribute_conversions(self) -> DataFrame:
-        """Last-touch attribution with a 7-day lookback."""
-        from gdalos_spark.operators import temporal
-
-        return temporal.attribution_last_touch(self.spark, self.sf_dir)
-
-    def langid_eval(self) -> DataFrame:
-        """Language-ID confusion matrix with per-cell recall."""
-        return text.langid_confusion_matrix(self.spark, self.sf_dir)
-
-    def morphology_open(self) -> DataFrame:
-        """Binary morphological opening of the elevation mask."""
-        return raster.raster_morphology_open(self.spark, self.sf_dir)
-
-    def sample_gif_frames(self) -> DataFrame:
-        """Real animated-GIF frame sampling (encode->decode round trip)."""
-        return multimodal_ops.multimodal_gif_frames(self.spark, self.sf_dir)
-
-    def resample_events(self) -> DataFrame:
-        """Per-user regular time grid with linear interpolation."""
-        from gdalos_spark.operators import temporal
-
-        return temporal.events_resample_interpolate(self.spark, self.sf_dir)
-
-    def assign_splits(self) -> DataFrame:
-        """Deterministic leakage-free train/val/test assignment."""
-        return pipeline_ops.corpus_split_assign(self.spark, self.sf_dir)
-
-    def dedup_incremental(self) -> DataFrame:
-        """New-batch-vs-index minhash delta dedup (the daily-crawl shape)."""
-        return dedup_ops.dedup_incremental_minhash(self.spark, self.sf_dir)
-
-    def knn_graph(self) -> DataFrame:
-        """LSH-bucketed k-NN edge list over distinct embedding vectors."""
-        return similarity.embedding_knn_graph(self.spark, self.sf_dir)
-
-    def stream_watermark_audit(self) -> DataFrame:
-        """Three-micro-batch watermark run with real late-data drops."""
-        return streaming_events.streaming_watermark_audit(self.spark, self.sf_dir)
-
-    def propagate_labels(self) -> DataFrame:
-        """Label spreading over the kNN graph from 20% trusted seeds."""
-        return similarity.embedding_label_propagation(self.spark, self.sf_dir)
-
-    def ingest_csv(self) -> DataFrame:
-        """Schema-enforced CSV ingest with corrupt-record accounting."""
-        from gdalos_spark.sources import csv_ingest
-
-        return csv_ingest.csv_ingest_audit(self.spark, self.sf_dir)
-
-    def stream_to_parquet(self) -> DataFrame:
-        """Append-mode parquet file sink with the exactly-once commit log."""
-        return streaming_events.streaming_parquet_sink(self.spark, self.sf_dir)
-
-    def stream_upsert(self) -> DataFrame:
-        """foreachBatch merge-upsert: per-user latest event, last-writer-wins."""
-        return streaming_events.streaming_upsert_sink(self.spark, self.sf_dir)
-
-    def seasonal_decompose(self) -> DataFrame:
-        """Trend + weekday seasonality + residual of daily event volume."""
-        from gdalos_spark.operators import temporal
-
-        return temporal.events_seasonal_decompose(self.spark, self.sf_dir)
-
-    def ann_rerank(self) -> DataFrame:
-        """Two-stage search: PQ shortlist, exact-cosine rerank."""
-        return similarity.ann_ivfpq_rerank(self.spark, self.sf_dir)
-
-    def ingest_jsonl(self) -> DataFrame:
-        """Schema-enforced JSONL ingest with torn-object accounting."""
-        from gdalos_spark.sources import csv_ingest
-
-        return csv_ingest.jsonl_ingest_audit(self.spark, self.sf_dir)
+        return self._run(key)
+
+
+# Every other verb: the reference name -> its queries() key.
+_VERBS: dict[str, str] = {
+    "crop": "raster_crop",
+    "warp": "raster_warp_affine",
+    "reproject": "crs_reproject_utm",
+    "overviews": "raster_overview",
+    "overviews_discrete": "raster_overview_mode",
+    "scale": "raster_scale",
+    "color_relief": "raster_color_relief",
+    "info": "raster_info",
+    "histogram": "raster_histogram",
+    "partition_stats": "raster_partition_stats",
+    "calc": "raster_calc_expr",
+    "combine_count": "raster_combine_count",
+    "combine_max": "raster_combine_max",
+    "combine_unique": "raster_combine_unique",
+    "mosaic": "raster_mosaic",
+    "rasterize": "rasterize_points",
+    "viewshed_combine": "viewshed_combine_modes",
+    "jpeg_features": "multimodal_jpeg_features",
+    "viewshed": "viewshed_observer_count",
+    "free_space_loss": "free_space_loss",
+    "utm_convergence": "utm_zone_convergence",
+    "to_xyz": "raster_to_xyz",
+    "to_czml": "raster_to_czml",
+    "sample_points": "pixel_lookup",
+    "select_datasets": "extent_selector",
+    "dedup_exact": "dedup_exact",
+    "dedup_minhash": "dedup_minhash_lsh",
+    "dedup_simhash": "dedup_simhash",
+    "dedup_jaccard": "dedup_ngram_jaccard",
+    "dedup_embeddings": "dedup_embedding_cosine",
+    "centroids": "centroid_similarity",
+    "language_id": "text_language_id",
+    "quality": "text_quality_score",
+    "token_stats": "text_token_stats",
+    "fingerprints": "doc_fingerprint",
+    "decode_media": "multimodal_decode",
+    "sample_frames": "multimodal_frames",
+    "stream_event_counts": "streaming_event_counts",
+    "stream_sessions": "streaming_sessionize",
+    "sessionize": "events_sessionize",
+    "crop_cutline": "raster_cutline",
+    "discrete_updown": "raster_discrete_updown",
+    "warp_resolution": "transform_resolution",
+    "overview_select": "overview_level_select",
+    "empty_raster": "empty_raster_generate",
+    "los_range": "viewshed_los_range",
+    "normalize_azimuths": "azimuth_normalize",
+    "coord_precision": "coord_precision_report",
+    "dedup_lines": "dedup_lines",
+    "rarity": "text_rarity_score",
+    "stream_enrich": "streaming_enrich_join",
+    "geodesic_distance": "geo_distance",
+    "calc_multi": "raster_calc_multi",
+    "polygonize": "viewshed_polygonize",
+    "contour_polygons": "viewshed_contour_polygons",
+    "resolve_jobs": "job_skip_overwrite",
+    "decontaminate": "benchmark_contamination",
+    "mix_sample": "corpus_mix_sample",
+    "top_ngrams": "text_ngram_topk",
+    "map_scales": "map_scale_zoom",
+    "sector_rings": "sector_ring_points",
+    "los_links": "point_to_point_los",
+    "quantize_pq": "embedding_pq",
+    "repetition": "text_repetition_score",
+    "pack_sequences": "sequence_packing",
+    "kmeans_step": "kmeans_refine",
+    "zorder_layout": "raster_zorder_index",
+    "c4_filters": "text_c4_filters",
+    "dedup_semantic": "semantic_dedup",
+    "ann_recall": "ann_recall_report",
+    "stream_attribution": "streaming_stream_join",
+    "proximity": "raster_proximity",
+    "perplexity": "text_unigram_logprob",
+    "curate": "corpus_curation_report",
+    "dsir_weights": "dsir_importance",
+    "sieve": "raster_sieve",
+    "export_shards": "export_jsonl_shards",
+    "disjunctive_revenue": "disjunctive_revenue",
+    "stream_sessions_native": "streaming_session_window",
+    "media_manifest": "multimodal_manifest",
+    "bm25": "text_bm25_topk",
+    "audit_split": "split_leakage_report",
+    "retention": "events_retention",
+    "flow_direction": "raster_flow_direction",
+    "asof_enrich": "asof_join_enrich",
+    "range_attribution": "interval_range_join",
+    "distinct_hll": "sketch_hll_distinct",
+    "distinct_kmv": "sketch_kmv_distinct",
+    "dedup_spans": "dedup_substring",
+    "blame_late_suppliers": "late_supplier_blame",
+    "idle_customers": "idle_customer_balance",
+    "resample_bilinear": "raster_resample_bilinear",
+    "quantiles": "quantile_report",
+    "audience_jaccard": "sketch_kmv_jaccard",
+    "flow_path_length": "raster_flow_path_length",
+    "bpe_pairs": "bpe_merge_step",
+    "zipf": "zipf_law_report",
+    "heavy_hitters": "cms_heavy_hitters",
+    "blocklist_probe": "bloom_blocklist",
+    "classify_quality": "quality_classifier_score",
+    "focal_median": "raster_focal_median",
+    "stream_leaderboard": "streaming_tumbling_topk",
+    "scd2": "scd2_apply",
+    "merge_plan": "merge_upsert_plan",
+    "cube": "pricing_cube",
+    "geohash": "geohash_bucket",
+    "media_dedup": "multimodal_dedup",
+    "media_shards": "multimodal_shard_plan",
+    "anomalies": "events_anomaly_zscore",
+    "triangles": "supplier_triangles",
+    "pagerank": "pagerank_exact",
+    "matryoshka_report": "embedding_matryoshka",
+    "keywords": "doc_tfidf_topk",
+    "markov": "events_markov_transitions",
+    "rfm": "customer_rfm_scores",
+    "pmi": "events_pmi_pairs",
+    "dedup_fuzzy": "dedup_fuzzy_title",
+    "twap": "events_time_weighted_avg",
+    "bpe_train": "bpe_train_merges",
+    "color_relief_interp": "raster_color_interp",
+    "dedup_normalized": "text_normalize_dedup",
+    "k_anonymity": "k_anonymity_report",
+    "snapshot_diff": "snapshot_diff",
+    "dbscan": "dbscan_grid_clusters",
+    "resize_media": "multimodal_resize",
+    "audio_features": "multimodal_audio_features",
+    "bpe_encode_stats": "bpe_apply_encode",
+    "skyline": "parts_skyline",
+    "mine_contrastive_pairs": "contrastive_pair_mining",
+    "quality_ablation": "quality_ablation_report",
+    "zonal_stats": "raster_zonal_stats",
+    "bloom_prune": "bloom_join_prune",
+    "embedding_qa": "embedding_norm_outliers",
+    "integrity_audit": "referential_integrity_report",
+    "dedup_consensus": "dedup_union_report",
+    "incremental_refresh": "incremental_agg_update",
+    "zonemap_audit": "zonemap_prune_report",
+    "maxsim": "multivector_maxsim",
+    "activity_streaks": "user_activity_streaks",
+    "attribute_conversions": "attribution_last_touch",
+    "langid_eval": "langid_confusion_matrix",
+    "morphology_open": "raster_morphology_open",
+    "sample_gif_frames": "multimodal_gif_frames",
+    "resample_events": "events_resample_interpolate",
+    "assign_splits": "corpus_split_assign",
+    "dedup_incremental": "dedup_incremental_minhash",
+    "knn_graph": "embedding_knn_graph",
+    "stream_watermark_audit": "streaming_watermark_audit",
+    "propagate_labels": "embedding_label_propagation",
+    "ingest_csv": "csv_ingest_audit",
+    "stream_to_parquet": "streaming_parquet_sink",
+    "stream_upsert": "streaming_upsert_sink",
+    "seasonal_decompose": "events_seasonal_decompose",
+    "ann_rerank": "ann_ivfpq_rerank",
+    "ingest_jsonl": "jsonl_ingest_audit",
+}
+
+
+def _verb(name: str, key: str, doc: str | None) -> Callable[[GdalosSpark], DataFrame]:
+    def verb(self: GdalosSpark) -> DataFrame:
+        return self._run(key)
+
+    verb.__name__, verb.__qualname__, verb.__doc__ = name, f"GdalosSpark.{name}", doc
+    return verb
+
+
+_OPS = queries()
+for _name, _key in _VERBS.items():
+    setattr(GdalosSpark, _name, _verb(_name, _key, _OPS[_key].__doc__))

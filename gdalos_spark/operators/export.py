@@ -223,6 +223,7 @@ VIS_COLOR = "#00ff00c0"  # polygon fill for visible regions (single res=1)
 
 
 def viewshed_polygonize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Visible-region polygon CZML (viewshed_calc.py:148/:577)."""
     from pyspark.sql.window import Window
 
     from gdalos_spark.operators.viewshed import viewshed_los
@@ -366,6 +367,7 @@ CONTOUR_COLORS = (
 
 
 def viewshed_contour_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-observer-count contour polygons with palette colors."""
     from pyspark.sql.window import Window
 
     from gdalos_spark.operators.viewshed import viewshed_observer_count

@@ -1847,7 +1847,8 @@ def _lettered_rasters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def raster_calc_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """General k-raster lettered calc over letters A, B, C: one union +
+    """General k-raster lettered calc (calc/gdal_calc.py:3) over letters
+    A, B, C: one union +
     one conditional-aggregate groupBy evaluates four gdal_calc-style
     expressions simultaneously:
 

@@ -805,7 +805,8 @@ def job_skip_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-job action resolution over the same nation x level job catalog
     job_schedule_order derives: a deterministic existing-outputs table
     (nation table x levels, every 3rd output present) is LEFT-joined to
-    the catalog; action = skip / overwrite / run per do_skip_if_exists,
+    the catalog; action = skip / overwrite / run per do_skip_if_exists
+    (gdalos_util.py:69),
     and run_order is a conditional running count so skipped jobs never
     occupy a slot. Catalog-sized data -> the existing-outputs side is
     always broadcastable; the plan is one broadcast join + one window."""

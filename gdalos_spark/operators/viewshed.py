@@ -1159,6 +1159,7 @@ MAX_ZOOM = 20
 
 
 def map_scale_zoom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Web-map scale denominators per zoom (scale_calc.py)."""
     z = spark.range(MAX_ZOOM + 1).select(F.col("id").cast("int").alias("zoom"))
     pixels = (F.lit(_SCALE_PX0).cast("bigint") * F.pow(F.lit(2.0), F.col("zoom").cast("double")).cast("bigint")).alias("pixels_at_zoom")
     scale = F.lit(_SCALE_PERIMETER) / (F.col("pixels_at_zoom").cast("double") * F.lit(_SCALE_DOT_PITCH))
@@ -1256,9 +1257,10 @@ def sector_ring_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ring vertices for every sampled sector spec (event_id %
     ARC_SECTOR_MOD == 0): point 0 and point ARC_POINT_COUNT are the
     sector center, points 1..ARC_POINT_COUNT-1 sweep the arc exactly as
-    PolygonizeSector does at Theta=0 (the reference default). Centers
-    and radii derive from event arithmetic (the events_points mapping);
-    from/to radians from the azimuth_normalize chain."""
+    PolygonizeSector (talos/geom_arc.py:9) does at Theta=0 (the reference
+    default). Centers and radii derive from event arithmetic (the
+    events_points mapping); from/to radians from the azimuth_normalize
+    chain."""
     specs = (
         azimuth_normalize(spark, sf_dir)
         .filter(F.col("event_id") % ARC_SECTOR_MOD == 0)
@@ -1323,6 +1325,7 @@ LOS_TARGET_MOD = 23  # c_custkey % 23 == 0 -> sampled link targets
 
 
 def point_to_point_los(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-point observer->target LOS verdicts (los_calc)."""
     obs = spark.createDataFrame(list(OBSERVERS), "ox int, oy int")
     tgts = (
         customer_points(spark, sf_dir)
@@ -2235,9 +2238,10 @@ COMB_RANGES = tuple(18 + 6 * i for i in range(len(OBSERVERS)))
 
 
 def viewshed_combine_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All four remaining CalcOperation combine modes over the
-    multi-observer LOS fan (max / min / count_z / unique; count is the
-    certified viewshed_observer_count). Per cell: the max and min status
+    """All four remaining CalcOperation combine modes
+    (viewshed_calc.py:63, gdalos_combine.py) over the multi-observer LOS
+    fan (max / min / count_z / unique; count is the certified
+    viewshed_observer_count). Per cell: the max and min status
     among in-range observers (COMB_NDV when none is in range), the
     NDV-aware visible count (vs_count_z: COMB_NDV where all observers
     are out of range), and the unique-observer index (vs_unique:

@@ -255,6 +255,95 @@ def test_query_boundary_releases_every_persist(spark):
         assert cache.isEmpty(), key
 
 
+# The facade's public names, as they were when every verb was a
+# hand-written method; `cli list` prints them minus register_views, plus
+# trans.
+_FACADE_NAMES = """
+    activity_streaks ann ann_recall ann_rerank anomalies asof_enrich
+    assign_splits attribute_conversions audience_jaccard audio_features
+    audit_split blame_late_suppliers blocklist_probe bloom_prune bm25
+    bpe_encode_stats bpe_pairs bpe_train c4_filters calc calc_multi
+    centroids classify_quality color_relief color_relief_interp
+    combine_count combine_max combine_unique contour_polygons
+    coord_precision crop crop_cutline cube curate dbscan decode_media
+    decontaminate dedup_consensus dedup_embeddings dedup_exact
+    dedup_fuzzy dedup_incremental dedup_jaccard dedup_lines
+    dedup_minhash dedup_normalized dedup_semantic dedup_simhash
+    dedup_spans discrete_updown disjunctive_revenue distinct_hll
+    distinct_kmv dsir_weights embedding_qa empty_raster export_shards
+    fingerprints flow_direction flow_path_length focal_median
+    free_space_loss funnel geodesic_distance geohash heavy_hitters
+    histogram idle_customers incremental_refresh info ingest_csv
+    ingest_jsonl integrity_audit jpeg_features k_anonymity keywords
+    kmeans_step knn_graph langid_eval language_id los los_links
+    los_range map_scales markov matryoshka_report maxsim media_dedup
+    media_manifest media_shards merge_plan mine_contrastive_pairs
+    mix_sample morphology_open mosaic normalize_azimuths ohlc
+    open_raster open_vector overview_select overviews overviews_discrete
+    pack_sequences pagerank partition_stats perplexity pmi polygonize
+    propagate_labels proximity quality quality_ablation quantiles
+    quantize_pq range_attribution rarity rasterize register_views
+    repetition reproject resample_bilinear resample_events resize_media
+    resolve_jobs retention rfm sample_frames sample_gif_frames
+    sample_points scale scd2 seasonal_decompose sector_rings
+    select_datasets sessionize sieve skyline snapshot_diff
+    stream_attribution stream_enrich stream_event_counts
+    stream_leaderboard stream_sessions stream_sessions_native
+    stream_to_parquet stream_upsert stream_watermark_audit to_cog
+    to_czml to_xyz token_stats top_ngrams tpch triangles twap
+    utm_convergence viewshed viewshed_combine warp warp_resolution zipf
+    zonal_stats zonemap_audit zorder_layout
+""".split()
+
+
+def test_facade_verbs_are_query_keys():
+    """Every verb reaches its operator through a queries() key: the
+    table's keys and every key a selector verb picks exist in the
+    catalog, each table verb runs its own key, and the public names are
+    the same set as before the table."""
+    import __spark_entry__ as E
+    from gdalos_spark import api
+
+    class Recorder(GdalosSpark):
+        def _run(self, key):
+            return key
+
+    eng = Recorder(None, None)
+    selected = {
+        eng.los(), eng.los(refraction=True), eng.funnel(), eng.funnel(windowed=False),
+        eng.ohlc(), eng.ohlc(streaming=True),
+        *(eng.ann(m) for m in ("brute", "lsh", "ivf", "ivfpq")),
+        *(eng.tpch(n) for n in range(1, 23)),
+    }
+    assert len(selected) == 32
+    keys = set(E.queries())
+    assert selected <= keys, selected - keys
+    assert set(api._VERBS.values()) <= keys, set(api._VERBS.values()) - keys
+    for verb, key in api._VERBS.items():
+        assert getattr(eng, verb)() == key, verb
+    public = sorted(n for n in vars(GdalosSpark) if not n.startswith("_"))
+    assert public == sorted(_FACADE_NAMES)
+
+
+def test_facade_call_starts_at_the_query_boundary(spark):
+    """A facade verb frees what the previous query persisted before it
+    builds, like a queries() call: once dedup_fuzzy builds, every frame
+    pmi persisted is unpersisted."""
+    from gdalos_spark import datamodel
+
+    eng = GdalosSpark(spark, SF_DIR)
+    eng.pmi().write.format("noop").mode("overwrite").save()
+    first = list(datamodel._QUERY_CACHES)
+    assert first
+    eng.dedup_fuzzy().write.format("noop").mode("overwrite").save()
+    try:
+        for df in first:
+            level = df.storageLevel
+            assert not (level.useMemory or level.useDisk), level
+    finally:
+        datamodel.release_query_caches()
+
+
 def test_bench_smoke_passes(spark):
     """The bench pre-flight must load every table cleanly — this is the
     guard against the round-3 failure mode (a parquet physical-type change

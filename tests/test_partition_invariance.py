@@ -1,24 +1,21 @@
 """Aggregation-order independence, tested for real: the float-heaviest
-operators re-run under a deliberately different layout (3 cores, 5
-shuffle partitions, 128 KiB input splits) must still match the DuckDB
-oracle value-for-value. Any hidden unordered float reduction would
+operators re-run under a deliberately different layout (5 shuffle
+partitions, 128 KiB input splits) must still match the DuckDB oracle
+value-for-value. Any hidden unordered float reduction would
 shift values with the partitioning and fail here — this is the
 executable form of the 'no unordered float addition' claim every
 docstring makes."""
 from __future__ import annotations
 
-import decimal
-import glob
-import os
 from contextlib import nullcontext
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
 from gdalos_spark.session import scoped_conf
 from gdalos_spark.streaming.events import LAST_STATE_METRICS
 from tests.conftest import SF_DIR
+from tools.drive_values import norm
 
 INVARIANCE_KEYS = [
     "text_unigram_logprob",
@@ -118,18 +115,6 @@ def skewed_spark(spark):
         yield spark
 
 
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, decimal.Decimal):
-        return format(v.normalize(), "f")
-    if isinstance(v, float):
-        return repr(v)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()[:26]
-    return str(v)
-
-
 def _stream_layout(spark, key):
     """For a streaming key, 1-byte AQE partition sizes around the query
     call, so its state partitions clamp at spark.sql.shuffle.partitions."""
@@ -143,12 +128,7 @@ def _stream_layout(spark, key):
 
 
 @pytest.mark.parametrize("key", INVARIANCE_KEYS)
-def test_values_survive_repartitioning(skewed_spark, key):
-    con = duckdb.connect()
-    for p in glob.glob(f"{SF_DIR}/*.parquet"):
-        con.execute(
-            f"CREATE VIEW {os.path.basename(p)[:-8]} AS SELECT * FROM read_parquet('{p}')"
-        )
+def test_values_survive_repartitioning(skewed_spark, ducks, key):
     with _stream_layout(skewed_spark, key):
         sdf = entrymod.queries()[key](skewed_spark, SF_DIR)
     if key.startswith("streaming_"):
@@ -156,12 +136,12 @@ def test_values_survive_repartitioning(skewed_spark, key):
         assert parts == {5}, f"{key}: state ran at {parts} partitions"
     scols = sdf.columns
     order = sorted(range(len(scols)), key=lambda i: scols[i].lower())
-    s = sorted(tuple(_norm(r[scols[i]]) for i in order) for r in sdf.collect())
-    cur = con.execute(entrymod.oracle_sql()[key])
+    s = sorted(tuple(norm(r[scols[i]]) for i in order) for r in sdf.collect())
+    cur = ducks.execute(entrymod.oracle_sql()[key])
     dcols = [d[0] for d in cur.description]
     didx = {c.lower(): j for j, c in enumerate(dcols)}
     d = sorted(
-        tuple(_norm(row[didx[scols[i].lower()]]) for i in order)
+        tuple(norm(row[didx[scols[i].lower()]]) for i in order)
         for row in cur.fetchall()
     )
     assert s == d, f"{key}: values shifted under different partitioning"
