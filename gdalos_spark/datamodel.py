@@ -18,8 +18,11 @@ schema, not the derivation.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,6 +117,57 @@ def footer_count(sf_dir: str, name: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
+def scratch_dir(kind: str, key: str, *parts: str) -> str:
+    """`<tempdir>/<kind>/<key as one path segment>/<parts...>` — the one
+    spelling of every engine scratch path (staged stream inputs, stream
+    sinks with their checkpoints, CSV/JSONL copies, the signature store).
+    `tempfile.gettempdir()` is read at call time, so a caller that
+    points `tempfile.tempdir` at a fresh root gets fresh scratch."""
+    return os.path.join(
+        tempfile.gettempdir(), kind, key.strip("/").replace("/", "_"), *parts
+    )
+
+
+def scene_out_dir(sf_dir: str, root_env: str, default_root: str) -> str:
+    """Output dir of a scene writer: `$root_env` (else `default_root`)
+    plus a slug of the source, its lineitem fingerprint and the grid.
+    Rerunning over unchanged data skips every file (exercising the skip
+    protocol); regenerated testdata gets a fresh dir and writes. GRID
+    dims are part of the key: they became an env-controlled scale axis,
+    and a slug without them would silently serve scenes written at a
+    different grid size (stale data, gate divergence, bogus sweep walls)
+    instead of rebuilding."""
+    fp = source_fingerprint(f"{sf_dir}/lineitem.parquet")
+    key = f"{os.path.abspath(sf_dir)}:{fp}:{GRID_W}x{GRID_H}"
+    slug = hashlib.md5(key.encode()).hexdigest()[:12]
+    return os.path.join(os.environ.get(root_env, default_root), slug)
+
+
+def commit_file(final: str, write) -> None:
+    """The two-step file commit of gdalos_trans.py:91/:328:
+    `write(tmp_path)` fills a hidden temp file that `mkstemp` creates in
+    `final`'s directory, then one `os.replace` moves it onto `final`, so
+    a reader sees the old file or the whole new one, never a partial
+    write. On any failure the temp file is removed: a dying task must
+    not leave `.part` droppings that a skip-unless-overwrite rerun would
+    never clean."""
+    fd, tmp = tempfile.mkstemp(
+        dir=os.path.dirname(os.path.abspath(final)),
+        prefix=f".{os.path.basename(final)}.",
+        suffix=".part",
+    )
+    os.close(fd)
+    try:
+        write(tmp)
+        os.replace(tmp, final)
+    except BaseException:
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
+        raise
+
+
 def publish_staged_dir(build, final_dir: str, fingerprint: str) -> str:
     """Fingerprint-gated staging with an ATOMIC publish: if `final_dir`
     already carries `fingerprint` in its `_STAGED` marker, return it
@@ -123,9 +177,6 @@ def publish_staged_dir(build, final_dir: str, fingerprint: str) -> str:
     a complete store — never the rmtree/overwrite window of the naive
     check-then-rebuild (a marker written after an in-place rebuild
     leaves readers a missing or partially written store mid-build)."""
-    import shutil
-    import tempfile
-
     marker = os.path.join(final_dir, "_STAGED")
     try:
         with open(marker) as f:

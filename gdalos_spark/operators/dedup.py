@@ -26,7 +26,10 @@ from pyspark.sql.window import Window
 from gdalos_spark.datamodel import (
     footer_count,
     load,
+    publish_staged_dir,
     query_persist,
+    scratch_dir,
+    source_fingerprint,
     split_for_cpu,
 )
 from gdalos_spark.functions import hashing, vectors
@@ -2238,12 +2241,7 @@ DEDUP_INCREMENTAL_MINHASH_SQL = _inc_minhash_sql()
 
 
 def _sig_store_dir(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    return os.path.join(
-        tempfile.gettempdir(), "gdalos_sigstore", sf_dir.strip("/").replace("/", "_")
-    )
+    return scratch_dir("gdalos_sigstore", sf_dir)
 
 
 def signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2256,7 +2254,6 @@ def signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a first-class dataset (append new signatures after each batch);
     here the staging key is the documents.parquet fingerprint so the
     store rebuilds when the driver regenerates testdata."""
-    from gdalos_spark.datamodel import publish_staged_dir, source_fingerprint
 
     def build(path: str) -> None:
         docs = load(spark, sf_dir, "documents").filter(

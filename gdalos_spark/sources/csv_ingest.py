@@ -22,8 +22,6 @@ files) and the report is one partial-aggregated groupBy.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,7 +33,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gdalos_spark.datamodel import load, source_fingerprint
+from gdalos_spark.datamodel import (
+    load,
+    publish_staged_dir,
+    scratch_dir,
+    source_fingerprint,
+)
 
 CORRUPT_MOD = 97
 CORRUPT_REM = 13
@@ -52,20 +55,39 @@ _CSV_SCHEMA = StructType(
 )
 
 
+def _stage_lines(
+    spark: SparkSession, sf_dir: str, kind: str, line_col, ext: str
+) -> str:
+    """Stage `events` as text lines (`line_col` per row) once per events
+    fingerprint, as `part0.<ext>`, `part1.<ext>`, ... under the `kind`
+    scratch dir. Publication goes through `publish_staged_dir`: a
+    restage builds the new parts in a hidden sibling and swaps it in, so
+    a failed restage leaves the published store as it was."""
+
+    def build(d: str) -> None:
+        # Spark's own output (and its _SUCCESS/.crc files) stays in
+        # publish_staged_dir's temp dir, which is removed after the swap
+        spark_out = d + "_spark"
+        load(spark, sf_dir, "events").select(line_col.alias("value")).write.text(
+            spark_out
+        )
+        os.makedirs(d)
+        parts = sorted(f for f in os.listdir(spark_out) if f.endswith(".txt"))
+        for i, f in enumerate(parts):
+            os.replace(os.path.join(spark_out, f), os.path.join(d, f"part{i}.{ext}"))
+
+    return publish_staged_dir(
+        build,
+        scratch_dir(kind, sf_dir),
+        source_fingerprint(f"{sf_dir}/events.parquet"),
+    )
+
+
 def _stage_csv(spark: SparkSession, sf_dir: str) -> str:
     """Write events as CSV once per sf_dir: value rendered from the exact
     DECIMAL(18,2) so the double round-trips bit-exactly, ts as epoch
     micros (no timestamp codec in a text format), and the corruption rule
     applied to the value token."""
-    d = os.path.join(
-        tempfile.gettempdir(), "gdalos_csv", sf_dir.strip("/").replace("/", "_")
-    )
-    done = os.path.join(d, "_STAGED")
-    src = f"{sf_dir}/events.parquet"
-    fp = source_fingerprint(src)
-    if os.path.exists(done) and open(done).read() == fp:
-        return d
-    ev = load(spark, sf_dir, "events")
     bad = (F.col("event_id") % CORRUPT_MOD) == CORRUPT_REM
     line = F.concat_ws(
         ",",
@@ -77,18 +99,7 @@ def _stage_csv(spark: SparkSession, sf_dir: str) -> str:
             F.col("value").cast("decimal(18,2)").cast("string")
         ),
     )
-    ev.select(line.alias("value")).write.mode("overwrite").text(d + "_tmp")
-    shutil.rmtree(d, ignore_errors=True)  # restage: drop any stale part files
-    os.makedirs(d, exist_ok=True)
-    i = 0
-    for f in sorted(os.listdir(d + "_tmp")):
-        if f.endswith(".txt"):
-            os.replace(os.path.join(d + "_tmp", f), os.path.join(d, f"part{i}.csv"))
-            i += 1
-    shutil.rmtree(d + "_tmp")
-    with open(done, "w") as f:
-        f.write(fp)
-    return d
+    return _stage_lines(spark, sf_dir, "gdalos_csv", line, "csv")
 
 
 def csv_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,15 +186,6 @@ def _stage_jsonl(spark: SparkSession, sf_dir: str) -> str:
     """Write events as JSON-lines once per sf_dir: the corruption rule
     truncates the corrupted rows' JSON mid-object (a torn write — the
     failure mode JSONL drops actually exhibit)."""
-    d = os.path.join(
-        tempfile.gettempdir(), "gdalos_jsonl", sf_dir.strip("/").replace("/", "_")
-    )
-    done = os.path.join(d, "_STAGED")
-    src = f"{sf_dir}/events.parquet"
-    fp = source_fingerprint(src)
-    if os.path.exists(done) and open(done).read() == fp:
-        return d
-    ev = load(spark, sf_dir, "events")
     bad = (F.col("event_id") % JSON_CORRUPT_MOD) == JSON_CORRUPT_REM
     obj = F.concat(
         F.lit('{"event_id":'), F.col("event_id").cast("string"),
@@ -194,18 +196,7 @@ def _stage_jsonl(spark: SparkSession, sf_dir: str) -> str:
         F.lit("}"),
     )
     line = F.when(bad, F.substring(obj, 1, 25)).otherwise(obj)
-    ev.select(line.alias("value")).write.mode("overwrite").text(d + "_tmp")
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    i = 0
-    for f in sorted(os.listdir(d + "_tmp")):
-        if f.endswith(".txt"):
-            os.replace(os.path.join(d + "_tmp", f), os.path.join(d, f"part{i}.jsonl"))
-            i += 1
-    shutil.rmtree(d + "_tmp")
-    with open(done, "w") as f:
-        f.write(fp)
-    return d
+    return _stage_lines(spark, sf_dir, "gdalos_jsonl", line, "jsonl")
 
 
 def jsonl_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

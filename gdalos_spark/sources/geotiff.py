@@ -30,17 +30,23 @@ tile-pruned layout every raster operator reads.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import struct
-import tempfile
 import zlib
 from collections.abc import Iterator
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gdalos_spark.datamodel import DEM_GRID_SQL, GRID_H, GRID_W, dem_grid
+from gdalos_spark.datamodel import (
+    DEM_GRID_SQL,
+    GRID_H,
+    GRID_W,
+    commit_file,
+    dem_grid,
+    scene_out_dir,
+)
 
 # scene / geo layout: 2x2 quadrant scenes over the 64x64 DEM grid,
 # 0.5-degree pixels anchored at (-180, 60) north-up — every lon/lat is
@@ -1199,21 +1205,7 @@ def write_cog_scenes(
                 if os.path.exists(final) and not overwrite:
                     action = "skipped"
                 else:
-                    fd, tmp = tempfile.mkstemp(
-                        dir=out_dir, prefix=f".scene_{int(sid):05d}.", suffix=".part"
-                    )
-                    try:
-                        with os.fdopen(fd, "wb") as f:
-                            f.write(bytes(payload))
-                        os.replace(tmp, final)
-                    except BaseException:
-                        # a dying task must not leave .part droppings the
-                        # skip protocol would never clean
-                        try:
-                            os.unlink(tmp)
-                        except OSError:
-                            pass
-                        raise
+                    commit_file(final, lambda tmp: Path(tmp).write_bytes(bytes(payload)))
                     action = "written"
                 rows.append((int(sid), final, action, os.path.getsize(final)))
             yield pd.DataFrame(
@@ -1240,8 +1232,6 @@ def full_grid_tiff(spark: SparkSession, sf_dir: str, encoder=None) -> DataFrame:
     def encode(pdf):
         import numpy as np
         import pandas as pd
-
-        from gdalos_spark.datamodel import GRID_H
 
         vals = pdf["elev_cents"].to_numpy()
         if (vals == NODATA).any():
@@ -1274,20 +1264,7 @@ def write_cog_file(
                 if os.path.exists(path) and not overwrite:
                     action = "skipped"
                 else:
-                    d = os.path.dirname(os.path.abspath(path))
-                    fd, tmp = tempfile.mkstemp(
-                        dir=d, prefix=f".{os.path.basename(path)}.", suffix=".part"
-                    )
-                    try:
-                        with os.fdopen(fd, "wb") as f:
-                            f.write(bytes(payload))
-                        os.replace(tmp, path)
-                    except BaseException:
-                        try:
-                            os.unlink(tmp)
-                        except OSError:
-                            pass
-                        raise
+                    commit_file(path, lambda tmp: Path(tmp).write_bytes(bytes(payload)))
                     action = "written"
                 rows.append((path, action, os.path.getsize(path)))
             yield pd.DataFrame(rows, columns=["path", "action", "n_bytes"])
@@ -1296,22 +1273,6 @@ def write_cog_file(
         write, schema="path string, action string, n_bytes bigint"
     )
     return out.collect()[0]  # one row: the job's commit record
-
-
-def _cog_out_dir(sf_dir: str) -> str:
-    """Fingerprint-keyed output dir: rerunning over unchanged data skips
-    every file (exercising the skip protocol); regenerated testdata gets
-    a fresh dir and writes."""
-    from gdalos_spark.datamodel import source_fingerprint
-
-    fp = source_fingerprint(f"{sf_dir}/lineitem.parquet")
-    # GRID dims are part of the key: they became an env-controlled scale
-    # axis, and a slug without them would silently serve scenes written
-    # at a different grid size (stale data, gate divergence, bogus sweep
-    # walls) instead of rebuilding.
-    key = f"{os.path.abspath(sf_dir)}:{fp}:{GRID_W}x{GRID_H}"
-    slug = hashlib.md5(key.encode()).hexdigest()[:12]
-    return os.path.join(os.environ.get("GDALOS_COG_ROOT", "/tmp/gdalos_cog"), slug)
 
 
 def cog_write_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1324,7 +1285,9 @@ def cog_write_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode trip. The decode stage consumes the writer's output rows, so
     per-task pipelining guarantees each file is committed before it is
     re-opened."""
-    written = write_cog_scenes(spark, sf_dir, _cog_out_dir(sf_dir))
+    written = write_cog_scenes(
+        spark, sf_dir, scene_out_dir(sf_dir, "GDALOS_COG_ROOT", "/tmp/gdalos_cog")
+    )
 
     def stats(batches: Iterator) -> Iterator:
         import numpy as np
@@ -1508,21 +1471,6 @@ def write_ovr_scenes(
 
         os.makedirs(out_dir, exist_ok=True)
 
-        def commit(data: bytes, final: str) -> None:
-            fd, tmp = tempfile.mkstemp(
-                dir=out_dir, prefix=f".{os.path.basename(final)}.", suffix=".part"
-            )
-            try:
-                with os.fdopen(fd, "wb") as f:
-                    f.write(bytes(data))
-                os.replace(tmp, final)
-            except BaseException:
-                try:
-                    os.unlink(tmp)
-                except OSError:
-                    pass
-                raise
-
         for pdf in batches:
             rows = []
             for sid, base, ovr in zip(pdf["scene_id"], pdf["payload"], pdf["ovr"]):
@@ -1531,8 +1479,8 @@ def write_ovr_scenes(
                 if os.path.exists(tif) and os.path.exists(sidecar) and not overwrite:
                     action = "skipped"
                 else:
-                    commit(ovr, sidecar)
-                    commit(base, tif)
+                    commit_file(sidecar, lambda tmp: Path(tmp).write_bytes(bytes(ovr)))
+                    commit_file(tif, lambda tmp: Path(tmp).write_bytes(bytes(base)))
                     action = "written"
                 rows.append(
                     (int(sid), tif, action,
@@ -1550,19 +1498,6 @@ def write_ovr_scenes(
     )
 
 
-def _ovr_out_dir(sf_dir: str) -> str:
-    from gdalos_spark.datamodel import source_fingerprint
-
-    fp = source_fingerprint(f"{sf_dir}/lineitem.parquet")
-    # GRID dims are part of the key: they became an env-controlled scale
-    # axis, and a slug without them would silently serve scenes written
-    # at a different grid size (stale data, gate divergence, bogus sweep
-    # walls) instead of rebuilding.
-    key = f"{os.path.abspath(sf_dir)}:{fp}:{GRID_W}x{GRID_H}"
-    slug = hashlib.md5(key.encode()).hexdigest()[:12]
-    return os.path.join(os.environ.get("GDALOS_OVR_ROOT", "/tmp/gdalos_ovr"), slug)
-
-
 def ovr_write_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end gate for the external-overview flavor: write the
     (.tif, .tif.ovr) pairs, read BOTH files back, and report base
@@ -1570,7 +1505,9 @@ def ovr_write_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     must decode to exactly one full-geometry IFD and the sidecar to the
     overview levels — same floor-average integer reduction as the COG,
     so the SQL oracle recomputes every column from lineitem."""
-    written = write_ovr_scenes(spark, sf_dir, _ovr_out_dir(sf_dir))
+    written = write_ovr_scenes(
+        spark, sf_dir, scene_out_dir(sf_dir, "GDALOS_OVR_ROOT", "/tmp/gdalos_ovr")
+    )
 
     def stats(batches: Iterator) -> Iterator:
         import pandas as pd

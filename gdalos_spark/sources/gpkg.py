@@ -30,18 +30,22 @@ encode -> file -> decode hash gate as cog_write_manifest.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sqlite3
 import struct
-import tempfile
 import zlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gdalos_spark.datamodel import DEM_GRID_SQL, GRID_H, GRID_W, dem_grid
+from gdalos_spark.datamodel import (
+    DEM_GRID_SQL,
+    GRID_W,
+    commit_file,
+    dem_grid,
+    scene_out_dir,
+)
 from gdalos_spark.sources.geotiff import LAT0, LON0, PIX, SCENE
 
 GPKG_TILE = 16          # tile_width = tile_height
@@ -166,14 +170,11 @@ def _scene_tiles(pdf, div: int = GPKG_DIV):
     return sid, ox, oy, z1, ov
 
 
-def _write_gpkg_file(path_dir: str, sid: int, ox: int, oy: int, z1, ov) -> str:
-    """Assemble one scene GeoPackage at a temp path; return the temp path."""
-    fd, tmp = tempfile.mkstemp(
-        dir=path_dir, prefix=f".scene_{sid:05d}.", suffix=".part"
-    )
-    os.close(fd)
-    os.unlink(tmp)  # sqlite3 creates the file itself
-    con = sqlite3.connect(tmp)
+def _write_gpkg_file(path: str, sid: int, ox: int, oy: int, z1, ov) -> None:
+    """Assemble one scene GeoPackage at `path` (sqlite opens an existing
+    empty file as an empty database, so `commit_file`'s temp file works
+    as is)."""
+    con = sqlite3.connect(path)
     try:
         cur = con.cursor()
         cur.execute(f"PRAGMA application_id = {GPKG_APP_ID}")
@@ -260,21 +261,6 @@ def _write_gpkg_file(path_dir: str, sid: int, ox: int, oy: int, z1, ov) -> str:
         con.commit()
     finally:
         con.close()
-    return tmp
-
-
-def _gpkg_out_dir(sf_dir: str) -> str:
-    """Fingerprint-keyed output dir (the cog_write_manifest protocol)."""
-    from gdalos_spark.datamodel import source_fingerprint
-
-    fp = source_fingerprint(f"{sf_dir}/lineitem.parquet")
-    # GRID dims are part of the key: they became an env-controlled scale
-    # axis, and a slug without them would silently serve scenes written
-    # at a different grid size (stale data, gate divergence, bogus sweep
-    # walls) instead of rebuilding.
-    key = f"{os.path.abspath(sf_dir)}:{fp}:{GRID_W}x{GRID_H}"
-    slug = hashlib.md5(key.encode()).hexdigest()[:12]
-    return os.path.join(os.environ.get("GDALOS_GPKG_ROOT", "/tmp/gdalos_gpkg"), slug)
 
 
 def write_gpkg_scenes(
@@ -321,15 +307,9 @@ def write_gpkg_scenes(
         if os.path.exists(final) and not overwrite:
             action = "skipped"
         else:
-            tmp = _write_gpkg_file(out_dir, sid, ox, oy, z1, ov)
-            try:
-                os.replace(tmp, final)
-            except BaseException:
-                try:
-                    os.unlink(tmp)
-                except OSError:
-                    pass
-                raise
+            commit_file(
+                final, lambda tmp: _write_gpkg_file(tmp, sid, ox, oy, z1, ov)
+            )
             action = "written"
         return pd.DataFrame(
             {"scene_id": [sid], "path": [final], "action": [action],
@@ -352,7 +332,9 @@ def gpkg_write_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     overview is the per-block floor-average of present samples). The
     decode stage consumes the writer's output rows, so each file is
     committed before it is re-opened."""
-    written = write_gpkg_scenes(spark, sf_dir, _gpkg_out_dir(sf_dir))
+    written = write_gpkg_scenes(
+        spark, sf_dir, scene_out_dir(sf_dir, "GDALOS_GPKG_ROOT", "/tmp/gdalos_gpkg")
+    )
 
     def stats(batches: Iterator) -> Iterator:
         import pandas as pd

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,9 +37,12 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from ..datamodel import (
     coalesced_partitions,
+    commit_file,
     epoch_micros,
     epoch_micros_sql,
+    publish_staged_dir,
     query_persist,
+    scratch_dir,
     source_fingerprint,
 )
 from ..session import scoped_conf
@@ -157,9 +161,7 @@ def _stage_dir(path: str) -> str:
     """The file-stream source only accepts directories; stage the single
     parquet file into a stable temp dir via symlink (hardlink/copy are
     equivalent — in production the source IS a directory or Kafka)."""
-    d = os.path.join(
-        tempfile.gettempdir(), "gdalos_stream", path.strip("/").replace("/", "_")
-    )
+    d = scratch_dir("gdalos_stream", path)
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, "events.parquet")
     # a dangling link (testdata regenerated) makes os.path.exists False but
@@ -1133,6 +1135,25 @@ WM_DELAY_S = 4 * 3600  # watermark delay
 WM_WINDOW_S = 3600     # tumbling window
 
 
+def _write_batch_files(d: str, batches: list[DataFrame]) -> None:
+    """A `publish_staged_dir` build body: write each frame as ONE parquet
+    file in `d` — `batch_a.parquet`, `batch_b.parquet`, ... — with
+    strictly increasing mtimes, so a file stream with maxFilesPerTrigger=1
+    replays them as deterministic micro-batches in that order. Spark's
+    own output dirs sit beside `d` in publish_staged_dir's temp dir,
+    which is removed after the swap."""
+    os.makedirs(d)
+    t0 = 1_600_000_000
+    for i, df in enumerate(batches):
+        tag = f"batch_{'abc'[i]}"
+        final = os.path.join(d, f"{tag}.parquet")
+        spark_out = f"{d}_{tag}"
+        df.coalesce(1).write.parquet(spark_out)
+        part = [f for f in os.listdir(spark_out) if f.endswith(".parquet")][0]
+        os.replace(os.path.join(spark_out, part), final)
+        os.utime(final, (t0 + 100 * i, t0 + 100 * i))
+
+
 def _stage_three_batches(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as THREE parquet files — event_id mod 3 = 0, 1, 2 —
     with strictly increasing mtimes, so maxFilesPerTrigger=1 processes
@@ -1143,33 +1164,14 @@ def _stage_three_batches(spark: SparkSession, sf_dir: str) -> str:
     the first batch whose rows can be dropped as late is the third. In
     production the batches are whatever the source delivers; here
     determinism is what lets the result be oracle-gated."""
-    import shutil
-
-    from gdalos_spark.datamodel import publish_staged_dir
-
     src = f"{sf_dir}/events.parquet"
 
     def build(d: str) -> None:
-        os.makedirs(d, exist_ok=True)
         ev = spark.read.parquet(src)
-        t0 = 1_600_000_000
-        for i, tag in enumerate(("batch_a", "batch_b", "batch_c")):
-            tmp = os.path.join(d, f"_tmp_{tag}")
-            ev.filter((F.col("event_id") % 3) == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            os.replace(os.path.join(tmp, part), os.path.join(d, f"{tag}.parquet"))
-            shutil.rmtree(tmp)
-            os.utime(os.path.join(d, f"{tag}.parquet"), (t0 + 100 * i, t0 + 100 * i))
+        _write_batch_files(d, [ev.filter(F.col("event_id") % 3 == i) for i in range(3)])
 
     return publish_staged_dir(
-        build,
-        os.path.join(
-            tempfile.gettempdir(), "gdalos_stream_wm",
-            sf_dir.strip("/").replace("/", "_"),
-        ),
-        source_fingerprint(src),
+        build, scratch_dir("gdalos_stream_wm", sf_dir), source_fingerprint(src)
     )
 
 
@@ -1290,10 +1292,7 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = _stage_three_batches(spark, sf_dir)
     src = f"{sf_dir}/events.parquet"
     fp = source_fingerprint(src).replace(":", "_")
-    base = os.path.join(
-        tempfile.gettempdir(), "gdalos_stream_sink",
-        sf_dir.strip("/").replace("/", "_"), fp,
-    )
+    base = scratch_dir("gdalos_stream_sink", sf_dir, fp)
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(base, exist_ok=True)
@@ -1371,10 +1370,7 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = _stage_three_batches(spark, sf_dir)
     src = f"{sf_dir}/events.parquet"
     fp = source_fingerprint(src).replace(":", "_")
-    base = os.path.join(
-        tempfile.gettempdir(), "gdalos_stream_upsert",
-        sf_dir.strip("/").replace("/", "_"), fp,
-    )
+    base = scratch_dir("gdalos_stream_upsert", sf_dir, fp)
     ckpt = os.path.join(base, "ckpt")
     cur_ptr = os.path.join(base, "_CURRENT")
     os.makedirs(base, exist_ok=True)
@@ -1411,10 +1407,7 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # version dirs stay on disk until the fingerprint rotates)
         vdir = tempfile.mkdtemp(prefix=f"v{batch_id}_", dir=base)
         latest.write.mode("overwrite").parquet(vdir)
-        tmp = cur_ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(vdir)
-        os.replace(tmp, cur_ptr)
+        commit_file(cur_ptr, lambda tmp: Path(tmp).write_text(vdir))
 
     stream = (
         spark.readStream.schema(schema)
@@ -1471,14 +1464,9 @@ def _stage_dedup_wm_batches(spark: SparkSession, sf_dir: str) -> str:
     same wm arithmetic the oracle does), so the run exercises genuine
     late-row drops alongside state-alive drops and post-eviction
     re-emissions."""
-    import shutil
-
-    from gdalos_spark.datamodel import publish_staged_dir
-
     src = f"{sf_dir}/events.parquet"
 
     def build(d: str) -> None:
-        os.makedirs(d, exist_ok=True)
         ev = spark.read.parquet(src)
         us = F.expr(epoch_micros_sql(ev)).alias("us")
         base = ev.select("user_id", "event_type", us)
@@ -1506,29 +1494,16 @@ def _stage_dedup_wm_batches(spark: SparkSession, sf_dir: str) -> str:
             & (F.col("user_id") % DWM_STRAGGLER_MOD == 0)
             & (F.col("t_us") <= wm1)  # guaranteed late in batch 3 (t <= wm lag)
         )
-        t0 = 1_600_000_000
-        for i, tag in enumerate(("batch_a", "batch_b", "batch_c")):
-            part_df = keyed.filter(F.col("w") == i)
-            if i == 2:
-                part_df = part_df.unionByName(stragglers)
-            out = part_df.select(
-                "user_id", "event_type", F.timestamp_micros("t_us").alias("ts")
-            )
-            tmp = os.path.join(d, f"_tmp_{tag}")
-            out.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            os.replace(os.path.join(tmp, part), os.path.join(d, f"{tag}.parquet"))
-            shutil.rmtree(tmp)
-            os.utime(os.path.join(d, f"{tag}.parquet"), (t0 + 100 * i, t0 + 100 * i))
+        batches = [keyed.filter(F.col("w") == i) for i in range(3)]
+        batches[2] = batches[2].unionByName(stragglers)
+        _write_batch_files(d, [
+            b.select("user_id", "event_type", F.timestamp_micros("t_us").alias("ts"))
+            for b in batches
+        ])
         keyed.unpersist()
 
     return publish_staged_dir(
-        build,
-        os.path.join(
-            tempfile.gettempdir(), "gdalos_stream_dwm",
-            sf_dir.strip("/").replace("/", "_"),
-        ),
-        source_fingerprint(src),
+        build, scratch_dir("gdalos_stream_dwm", sf_dir), source_fingerprint(src)
     )
 
 

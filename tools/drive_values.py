@@ -33,16 +33,10 @@ def norm(v):
 def main() -> int:
     only = set(sys.argv[1:])
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    # hostile-layout knobs (partition-invariance sweeps): e.g.
-    #   SPARK_GRAFT_DRIVE_MASTER=local[3] SPARK_GRAFT_DRIVE_SHUFFLE=5 \
-    #   SPARK_GRAFT_DRIVE_MAXPART=131072 python tools/drive_values.py ...
-    master = os.environ.get("SPARK_GRAFT_DRIVE_MASTER", "local[8]")
-    shuffle = os.environ.get("SPARK_GRAFT_DRIVE_SHUFFLE", "8")
-    maxpart = os.environ.get("SPARK_GRAFT_DRIVE_MAXPART", "134217728")
     spark = (
-        SparkSession.builder.master(master)
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.files.maxPartitionBytes", maxpart)
+        SparkSession.builder.master("local[8]")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
