@@ -237,13 +237,14 @@ def read_plain(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Every persist the engine makes, until the next query starts: a query
-# function's persists must outlive the lazy plan it RETURNS, so they can't
-# be unpersisted inside it. `__spark_entry__.queries()` releases this list
-# before each query builds, which bounds a long session to one query's
-# cached blocks; a composite that calls other operators adds to the same
-# batch.
+# Every persist and local checkpoint the engine makes, until the next
+# query starts: a query function's persists and checkpoints must outlive
+# the lazy plan it RETURNS, so they can't be freed inside it.
+# `__spark_entry__.queries()` releases both lists before each query
+# builds, which bounds a long session to one query's cached blocks; a
+# composite that calls other operators adds to the same batch.
 _QUERY_CACHES: list[DataFrame] = []
+_QUERY_CHECKPOINTS: list[tuple[DataFrame, object]] = []  # (frame, JVM RDD)
 
 
 def query_persist(df: DataFrame) -> DataFrame:
@@ -253,13 +254,69 @@ def query_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def query_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Local checkpoint of `df` until the next query starts (or
+    release_query_caches). The returned frame, and every frame built on
+    it, is readable until then; after that its blocks are gone and its
+    lineage is cut, so reading it raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+    df = df.localCheckpoint(eager=eager)
+    _QUERY_CHECKPOINTS.append((df, df._jdf.queryExecution().logical().rdd()))
+    return df
+
+
+def _free_checkpoint(df: DataFrame) -> None:
+    """Free `df`'s blocks now if query_checkpoint made it."""
+    for i, (held, rdd) in enumerate(_QUERY_CHECKPOINTS):
+        if held is df:
+            del _QUERY_CHECKPOINTS[i]
+            rdd.unpersist(False)
+            return
+
+
 def release_query_caches() -> None:
-    """Unpersist every frame persisted since the last release."""
+    """Unpersist every frame persisted and every checkpoint made since
+    the last release (no JVM call when there is none)."""
     while _QUERY_CACHES:
         try:
             _QUERY_CACHES.pop().unpersist()
         except Exception:  # noqa: BLE001 — session already stopped
             pass
+    while _QUERY_CHECKPOINTS:
+        try:
+            _QUERY_CHECKPOINTS.pop()[1].unpersist(False)
+        except Exception:  # noqa: BLE001 — session already stopped
+            pass
+
+
+def fixpoint(state: DataFrame, step, done, max_rounds: int):
+    """Iterate `state = step(state)` until `done(prev, cur)`, at most
+    `max_rounds` rounds; returns (state, rounds, converged). Each round
+    checkpoints step(state) lazily and runs `done` as its one job, which
+    must read every row of `cur` (a count or full aggregate, never a
+    limit probe) so it materializes the checkpoint; `prev`'s checkpoint
+    (round 1: an ingest from query_checkpoint) is then freed, because
+    `cur`'s lineage is cut and nothing reads `prev` again."""
+    rounds, converged = 0, False
+    while rounds < max_rounds and not converged:
+        rounds += 1
+        cur = query_checkpoint(step(state), eager=False)
+        converged = done(state, cur)
+        _free_checkpoint(state)
+        state = cur
+    return state, rounds, converged
+
+
+def total_unchanged(column: Column):
+    """`done` for a monotone fixpoint: sum(column) over `cur` equals it
+    over `prev` — one aggregate that reads every row of both."""
+
+    def done(prev: DataFrame, cur: DataFrame) -> bool:
+        both = cur.select(column.alias("t")).unionByName(
+            prev.select((-column).alias("t"))
+        )
+        return (both.agg(F.sum("t")).first()[0] or 0) == 0
+
+    return done
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -212,14 +212,16 @@ class ScalarChain:
 
         `segment` caps the PLAN DEPTH a single Spark query tree carries:
         every `segment` emitted levels the frame is cut with a lazy
-        localCheckpoint, so Catalyst's tree recursion and whole-stage
-        codegen's consume() recursion each see at most `segment` stacked
-        projections. Both recursions overflow the JVM stack somewhere
+        datamodel.query_checkpoint, so Catalyst's tree recursion and
+        whole-stage codegen's consume() recursion each see at most
+        `segment` stacked projections. Both recursions overflow the JVM stack somewhere
         past ~300 stacked projections (measured: 307 renders fine, 487
         overflows — analysis when wide, codegen when narrow), and the
         checkpointed intermediate is link-cardinality rows, so the cut
         is free at any scale."""
         from pyspark.sql import functions as F
+
+        from gdalos_spark.datamodel import query_checkpoint
 
         if keep is None:
             for batch in self.levels():
@@ -234,7 +236,7 @@ class ScalarChain:
             )
             emitted += 1
             if segment and emitted % segment == 0:
-                df = df.localCheckpoint(eager=False)
+                df = query_checkpoint(df, eager=False)
         return df
 
     def wrap_sql(self, inner: str, keep=None, inputs=()) -> str:

@@ -24,9 +24,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gdalos_spark.datamodel import (
+    fixpoint,
     footer_count,
     load,
     publish_staged_dir,
+    query_checkpoint,
     query_persist,
     scratch_dir,
     source_fingerprint,
@@ -794,12 +796,13 @@ def _cc_alternating(pairs: DataFrame, max_rounds: int = _CC_MAX_ROUNDS):
 
     ``pairs`` is an undirected edge list (doc_a, doc_b) with
     doc_a < doc_b. Each round runs one large-star then one small-star
-    step — both plain equi-join + groupBy-min plans, localCheckpoint
-    per round to keep lineage flat — and then one convergence check
-    (edge-set fixed point). Checking only every second round was
-    measured SLOWER (13.1s vs 10.8s on the sf1 upscale): detection
-    lags up to two star rounds, and a star round costs far more than
-    the anti-join + count pair it would save. At the fixed point the
+    step — both plain equi-join + groupBy-min plans — as one
+    datamodel.fixpoint round: a lazy checkpoint keeps lineage flat and
+    the convergence check (edge-set fixed point) is the round's one
+    job. Checking only every second round was measured SLOWER (13.1s
+    vs 10.8s on the sf1 upscale): detection lags up to two star
+    rounds, and a star round costs far more than the convergence check
+    it would save. At the fixed point the
     directed edges form stars: every non-root vertex points at its
     component's minimum vertex.
 
@@ -811,12 +814,8 @@ def _cc_alternating(pairs: DataFrame, max_rounds: int = _CC_MAX_ROUNDS):
     previously a groupBy + equi-join pair (agg exchange + join exchange +
     SMJ sorts), now ONE window over ``partitionBy(u)`` (one exchange +
     one sort — the sort SMJ paid anyway). Per round the plan drops from
-    ~5 exchanges to 3 (large-window, small-window, small-distinct), and
-    the per-round eager-checkpoint job + count job collapse into one
-    job via ``localCheckpoint(eager=False)`` — the checkpoint's lineage
-    cut happens at plan level immediately and the blocks cache inside
-    the count action (verified: the returned plan is Scan ExistingRDD
-    before any action). Skew note: the window puts all rows of one u in
+    ~5 exchanges to 3 (large-window, small-window, small-distinct).
+    Skew note: the window puts all rows of one u in
     one task, exactly like the join's hashpartitioning(u) did — no new
     hot-key exposure. Measured: sf0.1 CC 2.09s -> 1.10s (min of 4);
     13M-edge hostile graph (2k chains x 1k + 200 cliques x 300 + 20
@@ -826,15 +825,12 @@ def _cc_alternating(pairs: DataFrame, max_rounds: int = _CC_MAX_ROUNDS):
     wu = Window.partitionBy("u")
     wo = Window.partitionBy("u").orderBy("v")
     # directed large->small: (u, v) with u > v
-    edges = (
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    edges = query_checkpoint(
+        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")).distinct(),
+        eager=False,
     )
-    n_edges = edges.count()
-    rounds, converged = 0, False
-    while rounds < max_rounds:
-        rounds += 1
+
+    def star_round(edges: DataFrame) -> DataFrame:
         # large-star: for each u, attach every strictly-larger neighbor to
         # m = min(neighborhood(u) + {u}); every undirected edge is emitted
         # by exactly one endpoint's neighborhood
@@ -870,7 +866,7 @@ def _cc_alternating(pairs: DataFrame, max_rounds: int = _CC_MAX_ROUNDS):
             F.min("v").over(wu).alias("m"),
             F.row_number().over(wo).alias("rn"),
         )
-        small = (
+        return (
             sm.select(
                 F.explode(
                     F.when(
@@ -887,23 +883,21 @@ def _cc_alternating(pairs: DataFrame, max_rounds: int = _CC_MAX_ROUNDS):
             .select(F.col("e.a").alias("u"), F.col("e.b").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=False)
         )
-        # edge-set fixed point: counts first (one cheap agg — rounds
-        # that are still contracting almost always change the edge
-        # count), then ONE anti-join only when counts tie (equal-size
-        # distinct sets + one-sided containment = set equality; the
-        # second anti-join of the old symmetric-difference check was
-        # redundant given the counts)
-        n_small = small.count()
-        if n_small == n_edges and small.join(
-            edges, ["u", "v"], "left_anti"
-        ).isEmpty():
-            edges = small
-            converged = True
-            break
-        n_edges = n_small
-        edges = small
+
+    def same_edges(prev: DataFrame, cur: DataFrame) -> bool:
+        # edge-set fixed point in one aggregate over both (distinct)
+        # sets: +1 per cur edge, -1 per prev edge, so an edge in only
+        # one of them leaves a nonzero (u, v) group
+        signed = cur.select("u", "v", F.lit(1).alias("s")).unionByName(
+            prev.select("u", "v", F.lit(-1).alias("s"))
+        )
+        return (
+            signed.groupBy("u", "v").agg(F.sum("s").alias("s"))
+            .filter(F.col("s") != 0).count() == 0
+        )
+
+    edges, rounds, converged = fixpoint(edges, star_round, same_edges, max_rounds)
     return (
         edges.select(F.col("u").alias("node"), F.col("v").alias("root")),
         rounds,
@@ -973,13 +967,11 @@ def _cc_two_phase(pairs: DataFrame):
         )
     )
     rm1, _, conv1 = _cc_alternating(e1)
-    l1 = (
-        rm1.select(F.col("node").alias("n"), F.col("root").alias("r"))
-        .union(
+    l1 = query_checkpoint(
+        rm1.select(F.col("node").alias("n"), F.col("root").alias("r")).union(
             rm1.select(F.col("root").alias("n"), F.col("root").alias("r"))
             .distinct()
         )
-        .localCheckpoint()
     )
     resid = (
         q.join(
@@ -1106,9 +1098,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the identical row semantics: a group with a CC label takes it,
     # a group with none and gk >= 2 labels itself, a pairless singleton
     # group drops out via the NULL filter.
-    glabel = label_map.select(
-        F.col("node").alias("srep"), F.col("root").alias("label")
-    ).localCheckpoint()
+    glabel = query_checkpoint(
+        label_map.select(F.col("node").alias("srep"), F.col("root").alias("label"))
+    )
     labels = (
         sig2.select("doc_id", "srep", "gk")
         .join(glabel, "srep", "left")

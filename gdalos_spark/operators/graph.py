@@ -26,7 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gdalos_spark.datamodel import load, query_persist
+from gdalos_spark.datamodel import (
+    fixpoint,
+    load,
+    query_checkpoint,
+    query_persist,
+    total_unchanged,
+)
 
 
 EDGE_GROUP_CAP = 20  # max suppliers per (part, day) block that emit pairs
@@ -170,7 +176,7 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration count makes the oracle a finite CTE chain, not a
     fixpoint. Per iteration: one degree-join, one target-key shuffle —
     the same two-exchange round as large-scale PageRank, with
-    localCheckpoint cutting lineage between rounds."""
+    query_checkpoint cutting lineage between rounds."""
     e = _edges(spark, sf_dir)
     # Round-12 optimization (guide §5 caching): sym is consumed by the
     # degree agg AND by every power iteration, and un-persisted each
@@ -203,7 +209,7 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("rank_u"),
             )
         )
-        ranks = ranks.localCheckpoint(eager=False)
+        ranks = query_checkpoint(ranks, eager=False)
     out = ranks.join(deg, "a").select(
         F.col("a").alias("suppkey"),
         F.col("deg").cast("bigint").alias("degree"),
@@ -264,28 +270,23 @@ def supplier_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the oracle's remaining fixed rounds are provably no-ops). Output:
     surviving vertices with their final in-core degree."""
     edges = _edges(spark, sf_dir)
-    und = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint()
-    n_edges = und.count()
-    for _ in range(KCORE_ROUNDS):
+    und = query_checkpoint(
+        edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
+            edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
+        )
+    )
+
+    def peel(und: DataFrame) -> DataFrame:
         deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
         keep = deg.where(F.col("d") >= KCORE_K).select("u")
-        und = (
-            und.join(keep, "u", "left_semi")
-            .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-            .localCheckpoint()
+        return und.join(keep, "u", "left_semi").join(
+            keep.withColumnRenamed("u", "v"), "v", "left_semi"
         )
-        # convergence early-exit: a round that removes no edge is a fixed
-        # point — every later round is a no-op, so stopping here keeps the
-        # oracle's fixed-8-round schedule bit-identical while guaranteeing
-        # the degree>=k property whenever the peel converges within the cap
-        # (driver-side count on checkpointed data, same discipline as
-        # _cc_alternating's convergence probe)
-        n_next = und.count()
-        if n_next == n_edges:
-            break
-        n_edges = n_next
+
+    # a round that removes no edge (peeling only shrinks the set, so an
+    # unchanged count) is a fixed point: stopping there keeps the
+    # oracle's fixed-8-round result bit-identical
+    und, _, _ = fixpoint(und, peel, total_unchanged(F.lit(1)), KCORE_ROUNDS)
     return (
         und.groupBy("u")
         .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))

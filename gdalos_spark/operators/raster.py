@@ -37,8 +37,11 @@ from gdalos_spark.datamodel import (
     dem_grid,
     events_points,
     load,
+    fixpoint,
     orders_grid,
+    query_checkpoint,
     query_persist,
+    total_unchanged,
 )
 
 # ---------------------------------------------------------------------------
@@ -3123,10 +3126,8 @@ def _flow_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     would recompute the full DEM aggregation + stencil behind
     raster_flow_direction (measured 58 -> ~14 s for stream_order at the
     sf10 upscale)."""
-    return (
-        raster_flow_direction(spark, sf_dir)
-        .select("px", "py", "flow_dir")
-        .localCheckpoint()
+    return query_checkpoint(
+        raster_flow_direction(spark, sf_dir).select("px", "py", "flow_dir")
     )
 
 
@@ -3153,7 +3154,7 @@ def _flow_parent_edges(fd: DataFrame) -> DataFrame:
         (F.col("py") + dy_expr).alias("cy"),
     )
     domain = fd.select(F.col("px").alias("cx"), F.col("py").alias("cy"))
-    return moving.join(domain, ["cx", "cy"], "left_semi").localCheckpoint()
+    return query_checkpoint(moving.join(domain, ["cx", "cy"], "left_semi"))
 
 
 # ---------------------------------------------------------------------------
@@ -3186,7 +3187,7 @@ def _flow_parent_edges(fd: DataFrame) -> DataFrame:
 # both are measured in BASELINE.md.
 # ---------------------------------------------------------------------------
 
-_HYDRO_CONTRACT_ROUNDS = 24  # 2^24-cell chains >> any real drainage
+_HYDRO_CONTRACT_ROUNDS = 24  # 2^24-cell paths >> any real drainage
 # rounds per fixpoint, read by tests/test_hydro_condensed.py (BASELINE.md
 # "Hydrology fixpoint condensation A/B"; its A/B tool is retired; in git
 # history)
@@ -3198,17 +3199,10 @@ def _acc_fixpoint(
 ) -> DataFrame:
     """Monotone integer fixpoint acc(n) = sum over in-edges (m -> n, w)
     of (acc(m) + w); one equi-join + groupBy per round, convergence =
-    the global SUM going stable (one tiny agg per round). Cell-level
-    callers pass w = 1; the condensed graph passes w = chain length + 1."""
-    acc = nodes.select("px", "py", F.lit(0).cast("bigint").alias("acc"))
-    prev_total = -1
-    rounds = 0
-    for _ in range(max_rounds):
-        total = acc.agg(F.sum("acc")).collect()[0][0]
-        if total == prev_total:
-            break
-        prev_total = total
-        rounds += 1
+    the global SUM going stable. Cell-level callers pass w = 1; the
+    condensed graph passes w = chain length + 1."""
+
+    def step(acc: DataFrame) -> DataFrame:
         contrib = (
             edges.join(
                 acc.select(
@@ -3219,22 +3213,17 @@ def _acc_fixpoint(
             .groupBy(F.col("cx").alias("px"), F.col("cy").alias("py"))
             .agg(F.sum(F.col("acc") + F.col("w")).alias("inflow"))
         )
-        acc = (
+        return (
             nodes.select("px", "py")
             .join(contrib, ["px", "py"], "left")
             .select(
                 "px", "py",
                 F.coalesce(F.col("inflow"), F.lit(0)).cast("bigint").alias("acc"),
             )
-            .localCheckpoint()
         )
-    else:  # pragma: no cover - a path longer than the cap
-        raise RuntimeError(
-            f"{label}: fixpoint did not converge in {max_rounds} rounds "
-            "(flow path exceeds the cap)"
-        )
-    _HYDRO_LAST_ROUNDS[label] = rounds
-    return acc
+
+    acc0 = nodes.select("px", "py", F.lit(0).cast("bigint").alias("acc"))
+    return _hydro_fixpoint(acc0, step, total_unchanged(F.col("acc")), max_rounds, label)
 
 
 def _strahler_fixpoint(
@@ -3243,15 +3232,8 @@ def _strahler_fixpoint(
     """Strahler fixpoint ord(n) = 1 if no parents, else max parent order
     (+1 on a >=2-way tie at the max); same loop shape as _acc_fixpoint
     with two groupBys (parent max, tie count at the max) per round."""
-    ordv = nodes.select("px", "py", F.lit(1).cast("int").alias("ord"))
-    prev_total = -1
-    rounds = 0
-    for _ in range(max_rounds):
-        total = ordv.agg(F.sum("ord")).collect()[0][0]
-        if total == prev_total:
-            break
-        prev_total = total
-        rounds += 1
+
+    def step(ordv: DataFrame) -> DataFrame:
         joined = edges.join(
             ordv.select(F.col("px").alias("ux"), F.col("py").alias("uy"), "ord"),
             ["ux", "uy"],
@@ -3266,7 +3248,7 @@ def _strahler_fixpoint(
             ties,
             (pmax.px == ties.px) & (pmax.py == ties.py) & (pmax.mx == ties.ord),
         ).select(pmax.px.alias("px"), pmax.py.alias("py"), "mx", "k")
-        ordv = (
+        return (
             nodes.select("px", "py")
             .join(pm, ["px", "py"], "left")
             .select(
@@ -3277,16 +3259,25 @@ def _strahler_fixpoint(
                 .cast("int")
                 .alias("ord"),
             )
-            .localCheckpoint()
         )
-    else:  # pragma: no cover - a path longer than the cap
+
+    ord0 = nodes.select("px", "py", F.lit(1).cast("int").alias("ord"))
+    return _hydro_fixpoint(ord0, step, total_unchanged(F.col("ord")), max_rounds, label)
+
+
+def _hydro_fixpoint(state, step, done, max_rounds: int, label: str):
+    """datamodel.fixpoint for the hydrology loops: raises past the cap
+    and records the round count under `label`. The acc and Strahler
+    updates only grow a cell's value, so a stable sum is a fixed point."""
+    state, rounds, converged = fixpoint(state, step, done, max_rounds)
+    if not converged:  # pragma: no cover - a path longer than the cap
         raise RuntimeError(
             f"{label}: fixpoint did not converge in {max_rounds} rounds "
             "(flow path exceeds the cap; the unrolled oracle would "
             "diverge identically)"
         )
     _HYDRO_LAST_ROUNDS[label] = rounds
-    return ordv
+    return state
 
 
 def _flow_cells_npar(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -3297,13 +3288,43 @@ def _flow_cells_npar(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     npar = edges.groupBy(F.col("cx").alias("px"), F.col("cy").alias("py")).agg(
         F.count(F.lit(1)).alias("n_par")
     )
-    return (
+    return query_checkpoint(
         nodes.select("px", "py")
         .join(npar, ["px", "py"], "left")
         .select(
             "px", "py", F.coalesce(F.col("n_par"), F.lit(0)).cast("int").alias("n_par")
         )
-        .localCheckpoint()
+    )
+
+
+def _pointer_jump(state: DataFrame, label: str) -> DataFrame:
+    """Pointer jumping over a functional graph: state rows (px, py, rx,
+    ry, d, done) point at (rx, ry) at distance d; each round every
+    undone row jumps to its pointer's pointer and adds its distance, so
+    the covered distance doubles and the rounds are O(log longest
+    path). Convergence = no undone row."""
+
+    def step(cur: DataFrame) -> DataFrame:
+        ptr = cur.select(
+            F.col("px").alias("t_px"), F.col("py").alias("t_py"),
+            F.col("rx").alias("t_rx"), F.col("ry").alias("t_ry"),
+            F.col("d").alias("t_d"), F.col("done").alias("t_done"),
+        )
+        kept = F.col("done") == 1
+        return cur.join(
+            ptr, (cur.rx == ptr.t_px) & (cur.ry == ptr.t_py), "left"
+        ).select(
+            "px", "py",
+            F.when(kept, F.col("rx")).otherwise(F.col("t_rx")).alias("rx"),
+            F.when(kept, F.col("ry")).otherwise(F.col("t_ry")).alias("ry"),
+            F.when(kept, F.col("d")).otherwise(F.col("d") + F.col("t_d")).alias("d"),
+            F.when(kept, F.lit(1)).otherwise(F.col("t_done")).alias("done"),
+        )
+
+    undone = F.col("done") == 0
+    return _hydro_fixpoint(
+        state, step, lambda _, cur: cur.filter(undone).count() == 0,
+        _HYDRO_CONTRACT_ROUNDS, label,
     )
 
 
@@ -3341,36 +3362,9 @@ def _chain_contract(
         .join(anc, ["rx", "ry"])
         .select("px", "py", "rx", "ry", "d", F.col("anc_done").alias("done"))
     )
-    state = st_cond.unionByName(st_chain).localCheckpoint()
-    rounds = 0
-    for _ in range(_HYDRO_CONTRACT_ROUNDS):
-        if state.filter(F.col("done") == 0).limit(1).count() == 0:
-            break
-        ptr = state.select(
-            F.col("px").alias("t_px"), F.col("py").alias("t_py"),
-            F.col("rx").alias("t_rx"), F.col("ry").alias("t_ry"),
-            F.col("d").alias("t_d"), F.col("done").alias("t_done"),
-        )
-        state = (
-            state.join(ptr, (state.rx == ptr.t_px) & (state.ry == ptr.t_py), "left")
-            .select(
-                "px", "py",
-                F.when(F.col("done") == 1, F.col("rx")).otherwise(F.col("t_rx")).alias("rx"),
-                F.when(F.col("done") == 1, F.col("ry")).otherwise(F.col("t_ry")).alias("ry"),
-                F.when(F.col("done") == 1, F.col("d"))
-                .otherwise(F.col("d") + F.col("t_d"))
-                .alias("d"),
-                F.when(F.col("done") == 1, F.lit(1)).otherwise(F.col("t_done")).alias("done"),
-            )
-            .localCheckpoint()
-        )
-        rounds += 1
-    else:  # pragma: no cover - needs a >16M-cell unary chain
-        raise RuntimeError(
-            "hydrology chain contraction: pointer doubling did not converge "
-            f"in {_HYDRO_CONTRACT_ROUNDS} rounds"
-        )
-    _HYDRO_LAST_ROUNDS["contract"] = rounds
+    state = _pointer_jump(
+        query_checkpoint(st_cond.unionByName(st_chain)), "contract"
+    )
     return state.select("px", "py", "rx", "ry", "d"), cells
 
 
@@ -3391,14 +3385,12 @@ def _condensed_flow(
     rep = state.select(
         F.col("px").alias("ux"), F.col("py").alias("uy"), "rx", "ry", "d"
     )
-    cond_edges = (
-        jedges.join(rep, ["ux", "uy"])
-        .select(
+    cond_edges = query_checkpoint(
+        jedges.join(rep, ["ux", "uy"]).select(
             F.col("rx").alias("ux"), F.col("ry").alias("uy"),
             "cx", "cy",
             (F.col("d") + 1).cast("bigint").alias("w"),
         )
-        .localCheckpoint()
     )
     return cond_nodes, cond_edges, state
 
@@ -3456,8 +3448,9 @@ def raster_flow_path_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Terminals: flow_dir = 0 (pit/flat) or next cell outside the
     flow_dir domain (drains off the tile edge). Each round is one
-    equi-join of the state table with itself on the pointer key +
-    localCheckpoint to cut lineage; convergence = no undone rows.
+    equi-join of the state table with itself on the pointer key
+    (_pointer_jump, the loop the chain contraction shares); convergence
+    = no undone rows.
 
     Oracle: recursive CTE walking ONE step at a time over the same
     flow field (fine at 4k cells; the point of the Spark side is that
@@ -3477,82 +3470,37 @@ def raster_flow_path_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ny"),
     )
     domain = fd.select(F.col("px").alias("dpx"), F.col("py").alias("dpy"))
-    state = (
-        nxt.join(
-            domain,
-            (nxt.nx == domain.dpx) & (nxt.ny == domain.dpy),
-            "left",
-        )
-        .select(
-            "px",
-            "py",
-            # terminal: pit OR next off-domain -> pointer stays home
-            F.when(
-                (F.col("flow_dir") == 0) | F.col("dpx").isNull(), F.col("px")
-            ).otherwise(F.col("nx")).alias("cx"),
-            F.when(
-                (F.col("flow_dir") == 0) | F.col("dpx").isNull(), F.col("py")
-            ).otherwise(F.col("ny")).alias("cy"),
-            F.when(
-                (F.col("flow_dir") == 0) | F.col("dpx").isNull(), F.lit(0)
-            ).otherwise(F.lit(1)).cast("bigint").alias("steps"),
-            ((F.col("flow_dir") == 0) | F.col("dpx").isNull())
-            .cast("int")
-            .alias("done"),
-        )
-        .localCheckpoint()
-    )
-    for _ in range(24):  # 2^24 steps >> any grid diameter we run
-        if state.filter(F.col("done") == 0).limit(1).count() == 0:
-            break
-        ptr = state.select(
-            F.col("px").alias("t_px"),
-            F.col("py").alias("t_py"),
-            F.col("cx").alias("t_cx"),
-            F.col("cy").alias("t_cy"),
-            F.col("steps").alias("t_steps"),
-            F.col("done").alias("t_done"),
-        )
-        state = (
-            state.join(
-                ptr, (state.cx == ptr.t_px) & (state.cy == ptr.t_py), "left"
-            )
-            .select(
+    # terminal: pit OR next off-domain -> pointer stays home
+    term = (F.col("flow_dir") == 0) | F.col("dpx").isNull()
+    state = _pointer_jump(
+        query_checkpoint(
+            nxt.join(
+                domain, (nxt.nx == domain.dpx) & (nxt.ny == domain.dpy), "left"
+            ).select(
                 "px",
                 "py",
-                F.when(F.col("done") == 1, F.col("cx"))
-                .otherwise(F.col("t_cx"))
-                .alias("cx"),
-                F.when(F.col("done") == 1, F.col("cy"))
-                .otherwise(F.col("t_cy"))
-                .alias("cy"),
-                F.when(F.col("done") == 1, F.col("steps"))
-                .otherwise(F.col("steps") + F.col("t_steps"))
-                .alias("steps"),
-                F.when(F.col("done") == 1, F.lit(1))
-                .otherwise(F.col("t_done"))
-                .alias("done"),
+                F.when(term, F.col("px")).otherwise(F.col("nx")).alias("rx"),
+                F.when(term, F.col("py")).otherwise(F.col("ny")).alias("ry"),
+                F.when(term, F.lit(0)).otherwise(F.lit(1)).cast("bigint").alias("d"),
+                term.cast("int").alias("done"),
             )
-            .localCheckpoint()
-        )
-    else:  # pragma: no cover - needs a >16M-step flow path
-        raise RuntimeError(
-            "raster_flow_path_length: pointer jumping did not converge in 24 rounds"
-        )
+        ),
+        "path_length",
+    )
     is_pit = fd.select(
         F.col("px").alias("q_px"), F.col("py").alias("q_py"),
         (F.col("flow_dir") == 0).cast("int").alias("term_is_pit"),
     )
     return (
         state.join(
-            is_pit, (state.cx == is_pit.q_px) & (state.cy == is_pit.q_py)
+            is_pit, (state.rx == is_pit.q_px) & (state.ry == is_pit.q_py)
         )
         .select(
             "px",
             "py",
-            F.col("steps").alias("path_steps"),
-            F.col("cx").cast("int").alias("term_x"),
-            F.col("cy").cast("int").alias("term_y"),
+            F.col("d").alias("path_steps"),
+            F.col("rx").cast("int").alias("term_x"),
+            F.col("ry").cast("int").alias("term_y"),
             "term_is_pit",
         )
     )
@@ -4469,7 +4417,7 @@ def raster_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     entering a cell costs its elevation in cents, and each of
     COST_ROUNDS Bellman-Ford rounds relaxes cost(c) = min(cost(c),
     min over 8-neighbors n of cost(n) + w(c)) — one broadcast 9-offset
-    join + one groupBy-min per round, localCheckpoint cutting lineage
+    join + one groupBy-min per round, query_checkpoint cutting lineage
     exactly like the CC loop. k rounds bound the frontier to k cells
     (the honest contract, stated in the output); production runs
     delta-stepping to the fixed point with the same per-round plan. All
@@ -4483,7 +4431,7 @@ def raster_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") == 1)
         .select(F.col("px").alias("sx"), F.col("py").alias("sy"))
     )
-    cost = dem.crossJoin(F.broadcast(src)).select(
+    cost = query_checkpoint(dem.crossJoin(F.broadcast(src)).select(
         "px",
         "py",
         "w",
@@ -4491,7 +4439,7 @@ def raster_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(None))
         .cast("bigint")
         .alias("cost"),
-    ).localCheckpoint()
+    ))
     offsets = spark.createDataFrame(
         [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if not (dx == 0 and dy == 0)],
         "dx int, dy int",
@@ -4508,13 +4456,12 @@ def raster_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("tx", "ty")
             .agg(F.min("ncost").alias("best_nb"))
         )
-        cost = (
+        cost = query_checkpoint(
             cost.join(
                 nb,
                 (F.col("px") == F.col("tx")) & (F.col("py") == F.col("ty")),
                 "left",
-            )
-            .select(
+            ).select(
                 "px",
                 "py",
                 "w",
@@ -4523,7 +4470,6 @@ def raster_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("best_nb") + F.col("w"),
                 ).alias("cost"),
             )
-            .localCheckpoint()
         )
     return cost.where(F.col("cost").isNotNull()).select(
         "px", "py", F.col("cost").alias("cost_cents")

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gdalos_spark.datamodel import epoch_micros, load, query_persist
+from gdalos_spark.datamodel import epoch_micros, load, query_checkpoint, query_persist
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4789,23 +4789,21 @@ def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("event_type").over(w).alias("from_type"),
         F.col("event_type").alias("to_type"),
     ).filter(F.col("from_type").isNotNull())
-    counts = (
+    counts = query_checkpoint(
         stream.groupBy("from_type", "to_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .withColumn(
             "row_total", F.sum("n").over(Window.partitionBy("from_type"))
         )
-        .localCheckpoint()
     )
     k = counts.select("from_type").distinct().count()
-    pi = (
+    pi = query_checkpoint(
         counts.select(F.col("from_type").alias("state"))
         .distinct()
         .select("state", F.lit(_MK_MICRO // k).cast("bigint").alias("micro"))
-        .localCheckpoint()
     )
     for _ in range(MARKOV_POWER_ROUNDS):
-        pi = (
+        pi = query_checkpoint(
             counts.join(pi, counts.from_type == pi.state)
             .select(
                 F.col("to_type").alias("state"),
@@ -4813,7 +4811,6 @@ def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("state")
             .agg(F.sum("term").cast("bigint").alias("micro"))
-            .localCheckpoint()
         )
     return pi.select(
         "state",

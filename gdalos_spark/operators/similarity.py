@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gdalos_spark.datamodel import load, query_persist, split_for_cpu
+from gdalos_spark.datamodel import load, query_checkpoint, query_persist, split_for_cpu
 from gdalos_spark.functions import vectors
 
 N_PROBES = 10  # probe set = vec_id < N_PROBES
@@ -896,7 +896,7 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-unit integer distance, recompute centroids from exact BIGINT
     per-dim micro sums — so every iterated centroid is the same double
     on both engines and the whole trajectory is hash-stable. Centroids
-    are localCheckpoint'ed between rounds (the pagerank_exact pattern):
+    are checkpointed between rounds (the pagerank_exact pattern):
     the lineage stays flat however many rounds run.
 
     Identical-vector collapse (the shared `_emb_groups` discipline):
@@ -933,9 +933,9 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned = scored.withColumn("rnk", F.row_number().over(w)).filter(
             F.col("rnk") == 1
         )
-        # localCheckpoint the KM_K-row report so `base` can be released
-        # at the end instead of staying pinned for the consumer's sake
-        rounds.append(
+        # checkpoint the KM_K-row report so `base` can be released at
+        # the end instead of staying pinned for the consumer's sake
+        rounds.append(query_checkpoint(
             assigned.groupBy("cid").agg(
                 F.sum("k").alias("n_members"),
                 F.sum(F.col("d2u") * F.col("k")).alias("inertia_u"),
@@ -946,8 +946,8 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("inertia_u").cast("double") / 1_000_000.0, 6).alias(
                     "inertia"
                 ),
-            ).localCheckpoint()
-        )
+            )
+        ))
         if r < KM_ROUNDS:
             dims = assigned.select(
                 "cid", "k", F.posexplode(F.col("emb")).alias("dim", "x")
@@ -959,7 +959,7 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("xu") * F.col("k")).alias("sum_xu"),
                 F.sum("k").alias("n"),
             )
-            cents = (
+            cents = query_checkpoint(
                 per_dim.select(
                     "cid", "dim",
                     (
@@ -974,7 +974,6 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                         lambda s: s["v"],
                     ).alias("cx")
                 )
-                .localCheckpoint()
             )
     base.unpersist()
     out = rounds[0]
@@ -1137,7 +1136,7 @@ def _pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmeans_train: argmin on micro-unit integer distances, codeword
     update from exact BIGINT per-dim micro sums, identical-vector
     collapse with group-size weights (result-identical to the
-    uncollapsed loop the SQL oracle runs), localCheckpoint between
+    uncollapsed loop the SQL oracle runs), query_checkpoint between
     rounds. A codeword that loses every member drops out — deterministic
     on both engines."""
     gm, reps = _emb_groups(spark, sf_dir)
@@ -1177,7 +1176,7 @@ def _pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("xu") * F.col("k")).alias("sum_xu"),
             F.sum("k").alias("n"),
         )
-        cb = (
+        cb = query_checkpoint(
             per_dim.select(
                 "sub_id", "code", "dim",
                 (
@@ -1193,7 +1192,6 @@ def _pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("cx")
             )
             .select(F.col("sub_id").alias("c_sub"), "code", "cx")
-            .localCheckpoint()
         )
     # the final checkpoint truncated the lineage, so the rep slices can
     # be released instead of staying pinned for the session
@@ -1292,7 +1290,7 @@ def _res_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     per 2-dim subspace over the residual slices, seeded from the first
     RES_PQ_K vectors' residuals. Same exactness discipline as
     _pq_trained_codebook (micro-int argmin, exact BIGINT codeword sums,
-    group-size weights, localCheckpoint per round); at 100 TB the
+    group-size weights, query_checkpoint per round); at 100 TB the
     training input is a bounded sample, the assignment pass is the
     full scan."""
     gm, _, _ = _ivf_parts(spark, sf_dir)
@@ -1349,7 +1347,7 @@ def _res_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("x2u") * F.col("k")).alias("s2"),
             F.sum("k").alias("n"),
         )
-        cb = (
+        cb = query_checkpoint(
             per.select(
                 F.col("sub_id").alias("c_sub"),
                 "code",
@@ -1358,7 +1356,6 @@ def _res_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ((F.col("s2").cast("double") / F.lit(1_000_000.0))
                  / F.col("n").cast("double")).alias("cx2"),
             )
-            .localCheckpoint()
         )
     sl.unpersist()
     return cb
@@ -2544,7 +2541,7 @@ def embedding_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical-vector collapse included); each round is ONE join of edges
     to current labels and ONE (node, label) count agg with an argmax
     fold — two shuffles per round, the scalable label-propagation shape.
-    localCheckpoint cuts lineage between rounds as in pagerank_exact."""
+    query_checkpoint cuts lineage between rounds as in pagerank_exact."""
     edges, nodes = _knn_edges(spark, sf_dir)
     edges = query_persist(edges)
     nodes = query_persist(nodes)
@@ -2563,15 +2560,15 @@ def embedding_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max(F.struct(F.col("n"), (-F.col("label")).alias("neg"))).alias("best"))
             .select("gid", (-F.col("best.neg")).cast("int").alias("vote"))
         )
-        cur = (
+        cur = query_checkpoint(
             nodes.select("gid", F.when(is_seed, F.col("true_label")).alias("seed_label"))
             .join(cur.select("gid", F.col("label").alias("prev")), "gid")
             .join(votes, "gid", "left")
             .select(
                 "gid",
                 F.coalesce(F.col("seed_label"), F.col("vote"), F.col("prev")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return (
         nodes.join(cur, "gid")

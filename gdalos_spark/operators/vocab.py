@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gdalos_spark.datamodel import load, split_for_cpu
+from gdalos_spark.datamodel import load, query_checkpoint, split_for_cpu
 from gdalos_spark.functions import hashing
 from gdalos_spark.operators.text import _STOP_IN, _log2_col, _log2_lateral_sql
 
@@ -678,7 +678,7 @@ def _bpe_train_loop(spark: SparkSession, sf_dir: str):
             ).alias("w")
         )
     )
-    wf = (
+    wf = query_checkpoint(
         words.select(hashing.md5_int60(F.col("w")).alias("h"), "w")
         .groupBy("h")
         .agg(F.min("w").alias("w"), F.count(F.lit(1)).alias("wn"))
@@ -686,7 +686,6 @@ def _bpe_train_loop(spark: SparkSession, sf_dir: str):
             F.expr("trim(regexp_replace(w, '(.)', '$1 '))").alias("s"),
             "wn",
         )
-        .localCheckpoint()
     )
     merges: list[tuple[int, str, str, int]] = []
     for step in range(1, BPE_TRAIN_STEPS + 1):
@@ -719,9 +718,9 @@ def _bpe_train_loop(spark: SparkSession, sf_dir: str):
             break
         a, b, n = best[0]["a"], best[0]["b"], int(best[0]["n_occ"])
         merges.append((step, a, b, n))
-        wf = wf.select(
-            F.expr(_merge_apply_expr("s", a, b)).alias("s"), "wn"
-        ).localCheckpoint()
+        wf = query_checkpoint(
+            wf.select(F.expr(_merge_apply_expr("s", a, b)).alias("s"), "wn")
+        )
     return wf, merges
 
 
@@ -733,7 +732,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     space-joined symbol string (`'h e l l o'`); one step =
     adjacent-pair weighted count (one shuffle), a ONE-ROW argmax fetch
     (count desc, then pair — total order, engine-identical), then the
-    merge applied map-side via `_merge_apply_expr`. `localCheckpoint`
+    merge applied map-side via `_merge_apply_expr`. `query_checkpoint`
     cuts the growing lineage each round, exactly like the dedup_clusters
     CC loop. Output = the merge table the k steps produced, i.e. the
     tokenizer's first k vocabulary entries."""

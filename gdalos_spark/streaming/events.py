@@ -122,6 +122,20 @@ def _run_streams(
         raise
 
 
+def _run_memory_stream(
+    spark: SparkSession, source_dir: str, name: str, writer: DataStreamWriter
+) -> None:
+    """Run one append-mode query into the memory sink `name` from a
+    fresh checkpoint, removed once the run ends (the sink's rows live in
+    the JVM, so `spark.table(name)` still reads them)."""
+    with tempfile.TemporaryDirectory(prefix=f"{name}_ckpt_") as ckpt:
+        _run_streams(spark, source_dir, {
+            name: writer.format("memory")
+            .outputMode("append")
+            .option("checkpointLocation", ckpt),
+        })
+
+
 def _await_done(q) -> None:
     """Block until the availableNow query commits its final batch.
 
@@ -1197,10 +1211,6 @@ def streaming_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior matches the declared semantics."""
     staged = _stage_three_batches(spark, sf_dir)
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # fresh in-memory state per invocation: the memory sink accumulates
-    # across runs if the checkpoint is reused
-    ckpt = tempfile.mkdtemp(prefix="gdalos_wm_ckpt_")
-
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1212,11 +1222,7 @@ def streaming_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", f"{WM_WINDOW_S} seconds").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    _run_streams(spark, staged, {
-        WATERMARK_QUERY_NAME: agg.writeStream.format("memory")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt),
-    })
+    _run_memory_stream(spark, staged, WATERMARK_QUERY_NAME, agg.writeStream)
     return (
         spark.table(WATERMARK_QUERY_NAME)
         .select(
@@ -1529,8 +1535,6 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the straggler rows. Output: (user_id, event_type, t_us) of every
     emitted row."""
     staged = _stage_dedup_wm_batches(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="gdalos_dwm_ckpt_")
-
     stream = (
         spark.readStream.schema("user_id long, event_type string, ts timestamp")
         .option("maxFilesPerTrigger", "1")
@@ -1539,11 +1543,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream.withWatermark(
         "ts", f"{DWM_DELAY_US // 1_000_000} seconds"
     ).dropDuplicatesWithinWatermark(["user_id", "event_type"])
-    _run_streams(spark, staged, {
-        DWM_QUERY_NAME: out.writeStream.format("memory")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt),
-    })
+    _run_memory_stream(spark, staged, DWM_QUERY_NAME, out.writeStream)
     return (
         spark.table(DWM_QUERY_NAME)
         .select(

@@ -191,31 +191,41 @@ def test_suite_session_is_the_bench_session(spark):
 
 
 def test_query_persist_is_the_only_persist():
-    """Every engine persist goes through datamodel.query_persist, so the
+    """Every engine persist goes through datamodel.query_persist and
+    every local checkpoint through datamodel.query_checkpoint, so the
     release at the query boundary (__spark_entry__.queries()) frees all
     of them: the one `.persist(`/`.cache(` call in gdalos_spark/ is the
-    one inside that helper."""
+    one inside query_persist, and the one `.localCheckpoint(` call the
+    one inside query_checkpoint."""
     import ast
     import pathlib
 
     import gdalos_spark
 
     root = pathlib.Path(gdalos_spark.__file__).parent
-    calls = [
-        (path.relative_to(root).as_posix(), node.lineno)
+    trees = {
+        path.relative_to(root).as_posix(): ast.parse(path.read_text())
         for path in sorted(root.rglob("*.py"))
-        for node in ast.walk(ast.parse(path.read_text()))
-        if isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr in ("persist", "cache")
-    ]
-    helper = next(
-        n for n in ast.walk(ast.parse((root / "datamodel.py").read_text()))
-        if isinstance(n, ast.FunctionDef) and n.name == "query_persist"
-    )
-    assert len(calls) == 1, calls
-    assert calls[0][0] == "datamodel.py"
-    assert helper.lineno <= calls[0][1] <= helper.end_lineno
+    }
+    for attrs, helper_name in (
+        (("persist", "cache"), "query_persist"),
+        (("localCheckpoint",), "query_checkpoint"),
+    ):
+        calls = [
+            (path, node.lineno)
+            for path, tree in trees.items()
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in attrs
+        ]
+        helper = next(
+            n for n in ast.walk(trees["datamodel.py"])
+            if isinstance(n, ast.FunctionDef) and n.name == helper_name
+        )
+        assert len(calls) == 1, calls
+        assert calls[0][0] == "datamodel.py"
+        assert helper.lineno <= calls[0][1] <= helper.end_lineno
 
 
 # The keys that, each run alone at sf0.001, left a cache behind after
@@ -232,13 +242,17 @@ _PERSISTING_KEYS = (
     "embedding_pq", "ann_recall_report", "split_leakage_report",
     "basket_lift_pairs", "dedup_fuzzy_title", "events_pmi_pairs",
     "events_stickiness", "minhash_calibration",
+    # keys whose loops checkpoint (datamodel.query_checkpoint)
+    "pagerank_exact", "supplier_kcore", "markov_stationary",
+    "raster_flow_path_length",
 )
 
 
 def test_query_boundary_releases_every_persist(spark):
-    """A query's persists live until the next query starts: starting a
-    key through queries() frees what the previous one persisted, and
-    after release_query_caches() nothing any key persisted is cached."""
+    """A query's persists and checkpoints live until the next query
+    starts: starting a key through queries() frees what the previous one
+    persisted, and after release_query_caches() nothing any key
+    persisted or checkpointed is cached."""
     import __spark_entry__ as E
     from gdalos_spark.datamodel import query_persist, release_query_caches
 
@@ -253,6 +267,25 @@ def test_query_boundary_releases_every_persist(spark):
         qs[key](spark, SF_DIR).write.format("noop").mode("overwrite").save()
         release_query_caches()
         assert cache.isEmpty(), key
+        assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty(), key
+
+
+def test_stale_frame_fails_after_the_next_query(spark):
+    """A returned frame is readable until the next query starts: its
+    checkpoints are freed there, so reading pagerank_exact's frame after
+    another key started fails naming the freed checkpoint block."""
+    import __spark_entry__ as E
+    from gdalos_spark.datamodel import release_query_caches
+
+    qs = E.queries()
+    ranks = qs["pagerank_exact"](spark, SF_DIR)
+    assert ranks.collect()
+    qs["pricing_summary"](spark, SF_DIR)
+    try:
+        with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+            ranks.collect()
+    finally:
+        release_query_caches()
 
 
 # The facade's public names, as they were when every verb was a

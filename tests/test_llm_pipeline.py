@@ -85,6 +85,30 @@ def test_cc_alternating_logn_rounds_on_chain(spark):
     assert all(r.root == 0 for r in rows)
 
 
+def test_cc_alternating_holds_only_its_last_round(spark):
+    """Each star round frees the previous round's checkpoint (and round
+    1 the ingest's) once it is materialized: on the 64-node chain the
+    loop returns holding one checkpoint, its last round's, which the
+    query boundary then frees."""
+    from gdalos_spark.datamodel import release_query_caches
+    from gdalos_spark.operators.dedup import _cc_alternating
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    release_query_caches()
+    before = persistent()
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "doc_a bigint, doc_b bigint"
+    )
+    roots, rounds, converged = _cc_alternating(chain)
+    assert converged and rounds > 1
+    assert len(persistent() - before) == 1
+    assert len(roots.collect()) == 63
+    release_query_caches()
+    assert persistent() <= before
+
+
 def test_cc_alternating_multiple_components(spark):
     """Two components + a singleton pair: roots must be per-component
     minima, never cross-linked."""

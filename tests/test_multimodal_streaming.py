@@ -192,6 +192,22 @@ def test_full_outer_timeout_stops_both_arms(spark, monkeypatch):
     assert spark.streams.active == []
 
 
+@pytest.mark.parametrize(
+    "key", ["streaming_watermark_audit", "streaming_dedup_watermark"]
+)
+def test_watermark_stream_leaves_no_checkpoint(spark, monkeypatch, tmp_path, key):
+    """Each run checkpoints into a fresh dir under the tempfile root and
+    removes it when the stream ends: two runs return identical rows (the
+    memory sink is read after the removal) and no checkpoint dir stays
+    behind."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    runs = [entrymod.queries()[key](spark, SF_DIR).collect() for _ in range(2)]
+    assert runs[0] and runs[0] == runs[1]
+    assert not [p.name for p in tmp_path.iterdir() if "ckpt" in p.name]
+
+
 def test_range_buckets_hold_invariant_before_1970(spark):
     """The stream-stream joins' truncating `div` bucket: for any pair a
     range-width W apart or less, the later time's bucket is the earlier
