@@ -14,32 +14,52 @@ than max(event_time) - 1h are finalized and evicted in append mode), and
 the windowed aggregation shuffles once on (window, event_type) with
 partial aggregation map-side — the same plan shape as the batch twin.
 
-Every query starts through `_run_streams`, which sizes its state
-partitions from the source bytes. Stateful streams get no AQE
-coalescing: each micro-batch runs exactly `spark.sql.shuffle.partitions`
-state tasks, whatever the input, and the count is frozen into the
-checkpoint. So the count is `datamodel.coalesced_partitions` of the
-on-disk bytes of the files the stream reads: the count AQE would
-coalesce them to in a batch query, by the same rule that sizes the
-staged bucket count (sources/bucketed.py). Small sources run one state
-task per batch. A restarted query keeps the count its offset log recorded.
+Every key runs through one lifecycle:
+
+* Source: `_events_source` stages events.parquet (one file, or the three
+  mtime-ordered batch files) and returns the staged dir with a function
+  that opens a new stream on it; a stream-stream join opens one per
+  side. `_batch_source` is the one reader that replays a staged dir one
+  file per micro-batch.
+* Run: every query starts through `_run_streams`, the one `.trigger(`
+  call, which sizes its state partitions from the source bytes.
+  Stateful streams get no AQE coalescing: each micro-batch runs exactly
+  `spark.sql.shuffle.partitions` state tasks, whatever the input, and
+  the count is frozen into the checkpoint. So the count is
+  `datamodel.coalesced_partitions` of the on-disk bytes of the files the
+  stream reads: the count AQE would coalesce them to in a batch query,
+  by the same rule that sizes the staged bucket count
+  (sources/bucketed.py). Small sources run one state task per batch. A
+  restarted query keeps the count its offset log recorded.
+* Sink: memory sinks go through `_run_memory_sinks`. Each run
+  checkpoints into a fresh `tempfile.TemporaryDirectory` under the
+  tempfile root, removed when the run ends, on success and on failure,
+  so no Spark `temporary-*` checkpoint is ever made. The sink's temp
+  view is dropped once read: the returned frame is the only handle on
+  the sink's rows, which live as long as that frame does. The file and
+  foreachBatch sinks (`streaming_parquet_sink`, `streaming_upsert_sink`)
+  keep fingerprinted checkpoints under `datamodel.scratch_dir`, because
+  their re-run against the same checkpoint is part of their contract.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 
 from ..datamodel import (
     coalesced_partitions,
     commit_file,
     epoch_micros,
     epoch_micros_sql,
+    load,
     publish_staged_dir,
     query_persist,
     scratch_dir,
@@ -122,18 +142,33 @@ def _run_streams(
         raise
 
 
-def _run_memory_stream(
-    spark: SparkSession, source_dir: str, name: str, writer: DataStreamWriter
-) -> None:
-    """Run one append-mode query into the memory sink `name` from a
-    fresh checkpoint, removed once the run ends (the sink's rows live in
-    the JVM, so `spark.table(name)` still reads them)."""
-    with tempfile.TemporaryDirectory(prefix=f"{name}_ckpt_") as ckpt:
-        _run_streams(spark, source_dir, {
-            name: writer.format("memory")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt),
-        })
+def _run_memory_sinks(
+    spark: SparkSession,
+    source_dir: str,
+    sinks: dict[str, tuple[DataFrame, str]],
+    heavy_state: bool = False,
+) -> list[DataFrame]:
+    """Run each `{query_name: (frame, output_mode)}` into the memory sink
+    of that name through `_run_streams`, and return the sinks' rows as
+    batch frames, in the order of `sinks`.
+
+    The queries checkpoint into one `tempfile.TemporaryDirectory`
+    (a subdir per query), removed when the run ends, failed or not.
+    Every sink's temp view is dropped before this returns or raises:
+    the returned frame still holds the sink's rows, and they live as
+    long as it does."""
+    try:
+        with tempfile.TemporaryDirectory(prefix="gdalos_stream_ckpt_") as ckpt:
+            _run_streams(spark, source_dir, {
+                name: frame.writeStream.format("memory")
+                .outputMode(mode)
+                .option("checkpointLocation", os.path.join(ckpt, name))
+                for name, (frame, mode) in sinks.items()
+            }, heavy_state)
+        return [spark.table(name) for name in sinks]
+    finally:
+        for name in sinks:
+            spark.catalog.dropTempView(name)
 
 
 def _await_done(q) -> None:
@@ -168,9 +203,6 @@ def _await_done(q) -> None:
     LAST_STATE_METRICS[q.name] = rows
 
 
-QUERY_NAME = "gdalos_stream_event_counts"
-
-
 def _stage_dir(path: str) -> str:
     """The file-stream source only accepts directories; stage the single
     parquet file into a stable temp dir via symlink (hardlink/copy are
@@ -187,32 +219,69 @@ def _stage_dir(path: str) -> str:
     return d
 
 
-def streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event-time window counts per event_type, computed
-    by Structured Streaming (availableNow) and materialized through the
-    memory sink."""
+def _events_source(
+    spark: SparkSession, sf_dir: str, three_batches: bool = False
+) -> tuple[str, Callable[[], DataFrame]]:
+    """The events file-stream source of a streaming key: the staged dir
+    (what `_run_streams` sizes state partitions from) and a function
+    opening a new stream on it. Events are staged as one file, or with
+    `three_batches` as the `_stage_three_batches` files replayed one per
+    micro-batch."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
+    if three_batches:
+        return _batch_source(spark, _stage_three_batches(spark, sf_dir), schema)
     src = _stage_dir(path)
-    stream = spark.readStream.schema(schema).parquet(src)
+    return src, lambda: spark.readStream.schema(schema).parquet(src)
+
+
+def _batch_source(
+    spark: SparkSession, staged: str, schema: StructType | str
+) -> tuple[str, Callable[[], DataFrame]]:
+    """A dir of mtime-ordered batch files (`_write_batch_files`) as a
+    source that replays one file per micro-batch."""
+    return staged, lambda: (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(staged)
+    )
+
+
+QUERY_NAME = "gdalos_stream_event_counts"
+
+
+def _window_counts(
+    spark: SparkSession, sf_dir: str, query_name: str, slide: str | None = None
+) -> DataFrame:
+    """Shared body of the windowed-count keys: 1-hour event-time windows
+    (tumbling, or sliding by `slide`) per event_type with a 1-hour
+    watermark, in complete mode, so the availableNow run equals the
+    batch computation."""
+    src, open_stream = _events_source(spark, sf_dir)
+    stream = open_stream()
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
     agg = (
         ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .groupBy(F.window("ts", "1 hour", slide).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-    _run_streams(spark, src, {
-        QUERY_NAME: agg.writeStream.format("memory").outputMode("complete"),
-    })
-    return spark.table(QUERY_NAME).select(
+    sink = _run_memory_sinks(spark, src, {query_name: (agg, "complete")})[0]
+    return sink.select(
         F.col("w").getField("start").cast("long").alias("window_start"),
         "event_type",
         "n",
         "total_value",
     )
+
+
+def streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling 1-hour event-time window counts per event_type, computed
+    by Structured Streaming (availableNow) and materialized through the
+    memory sink."""
+    return _window_counts(spark, sf_dir, QUERY_NAME)
 
 
 SESSION_GAP_S = 1800
@@ -266,6 +335,39 @@ def _sessionize_state_fn(key, pdfs, state):
         )
 
 
+def _per_user_state_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    query_name: str,
+    state_fn,
+    out_schema: str,
+    state_schema: str,
+) -> DataFrame:
+    """Shared body of the custom stateful keys: `state_fn` runs per
+    user_id through applyInPandasWithState (append mode, no timeout)
+    over (user_id, event_id, ts_sec, value) events."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    src, open_stream = _events_source(spark, sf_dir)
+    stream = open_stream()
+    # epoch seconds computed Spark-side so the pandas stage sees plain
+    # int64 (no timezone semantics anywhere near the state function)
+    ev = stream.select(
+        "user_id",
+        "event_id",
+        F.expr(f"({epoch_micros_sql(stream)}) div 1000000").cast("bigint").alias("ts_sec"),
+        "value",
+    )
+    out = ev.groupBy("user_id").applyInPandasWithState(
+        state_fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return _run_memory_sinks(spark, src, {query_name: (out, "append")})[0]
+
+
 def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization as a REAL custom stateful streaming
     operator (applyInPandasWithState): per-user state carries the open
@@ -277,31 +379,10 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (STREAMING_SESSIONIZE_SQL = batch sessionization with each user's max
     session_id filtered out). At scale this runs continuously with
     event-time timeouts evicting idle users' state."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src = _stage_dir(path)
-    stream = spark.readStream.schema(schema).parquet(src)
-    # epoch seconds computed Spark-side so the pandas stage sees plain
-    # int64 (no timezone semantics anywhere near the state function)
-    ev = stream.select(
-        "user_id",
-        "event_id",
-        F.expr(f"({epoch_micros_sql(stream)}) div 1000000").cast("bigint").alias("ts_sec"),
-        "value",
+    return _per_user_state_stream(
+        spark, sf_dir, SESSIONIZE_QUERY_NAME, _sessionize_state_fn,
+        SESSIONIZE_OUT_SCHEMA, SESSIONIZE_STATE_SCHEMA,
     )
-    sessions = ev.groupBy("user_id").applyInPandasWithState(
-        _sessionize_state_fn,
-        outputStructType=SESSIONIZE_OUT_SCHEMA,
-        stateStructType=SESSIONIZE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    _run_streams(spark, src, {
-        SESSIONIZE_QUERY_NAME: sessions.writeStream.format("memory").outputMode("append"),
-    })
-    return spark.table(SESSIONIZE_QUERY_NAME)
 
 
 # append-mode closed sessions == batch sessionization (the events_sessionize
@@ -355,28 +436,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     two overlapping windows; the oracle reproduces that with a 2-row
     offset cross join on the batch data. Complete mode over availableNow
     equals the batch computation, so this is a full hash-gated entry."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src = _stage_dir(path)
-    stream = spark.readStream.schema(schema).parquet(src)
-    ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-    )
-    _run_streams(spark, src, {
-        SLIDING_QUERY_NAME: agg.writeStream.format("memory").outputMode("complete"),
-    })
-    return spark.table(SLIDING_QUERY_NAME).select(
-        F.col("w").getField("start").cast("long").alias("window_start"),
-        "event_type",
-        "n",
-        "total_value",
-    )
+    return _window_counts(spark, sf_dir, SLIDING_QUERY_NAME, "30 minutes")
 
 
 # batch twin: each event belongs to the two 30-min-aligned windows
@@ -405,19 +465,14 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     values). In production the same query runs with
     dropDuplicatesWithinWatermark so state stays bounded to the
     watermark horizon; state here is O(distinct keys)."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src = _stage_dir(path)
-    stream = spark.readStream.schema(schema).parquet(src)
+    src, open_stream = _events_source(spark, sf_dir)
+    stream = open_stream()
     keys = stream.select(
         "user_id",
         "event_type",
         F.expr(f"({epoch_micros_sql(stream)}) div {86400 * 1_000_000}").cast("bigint").alias("day_bucket"),
     ).dropDuplicates(["user_id", "event_type", "day_bucket"])
-    _run_streams(spark, src, {
-        DEDUP_QUERY_NAME: keys.writeStream.format("memory").outputMode("append"),
-    })
-    return spark.table(DEDUP_QUERY_NAME)
+    return _run_memory_sinks(spark, src, {DEDUP_QUERY_NAME: (keys, "append")})[0]
 
 
 STREAMING_DEDUP_SQL = f"""
@@ -444,16 +499,12 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day the stream never shuffles and the dim is rebroadcast per
     batch. Append output over availableNow is row-for-row the batch LEFT
     JOIN — full hash gate."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src = _stage_dir(path)
-    stream = spark.readStream.schema(schema).parquet(src)
-    cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .select("c_custkey", "c_nationkey", "c_mktsegment")
+    src, open_stream = _events_source(spark, sf_dir)
+    cust = load(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey", "c_mktsegment"
     )
     joined = (
-        stream.withColumn("join_key", F.col("user_id") * ENRICH_KEY_MULT)
+        open_stream().withColumn("join_key", F.col("user_id") * ENRICH_KEY_MULT)
         .join(F.broadcast(cust), F.col("join_key") == F.col("c_custkey"), "left")
         .select(
             "event_id",
@@ -464,10 +515,7 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("decimal(18,2)").cast("double").alias("val"),
         )
     )
-    _run_streams(spark, src, {
-        ENRICH_QUERY_NAME: joined.writeStream.format("memory").outputMode("append"),
-    })
-    return spark.table(ENRICH_QUERY_NAME)
+    return _run_memory_sinks(spark, src, {ENRICH_QUERY_NAME: (joined, "append")})[0]
 
 
 STREAMING_ENRICH_JOIN_SQL = f"""
@@ -486,6 +534,7 @@ LEFT JOIN customer c ON e.user_id * {ENRICH_KEY_MULT} = c.c_custkey
 
 SSJOIN_QUERY_NAME = "gdalos_stream_ssjoin"
 SSJOIN_RANGE_H = 4  # purchase matches clicks in the preceding 4 hours
+SSJOIN_DELAY_D = 60  # watermark delay: beyond the dataset's span
 
 
 def _bucket_sql(ts_col: str, w_us: int) -> str:
@@ -539,54 +588,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigints stay out of state — unix_micros(ts) reproduces them exactly
     (ts IS timestamp_micros(us)) for the gap arithmetic after the
     join."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src = _stage_dir(path)
-    w_us = SSJOIN_RANGE_H * 3600 * 1_000_000
-
-    def side(name: str, typ: str) -> DataFrame:
-        s = spark.readStream.schema(schema).parquet(src)
-        us = F.expr(epoch_micros_sql(s)).cast("bigint")
-        return (
-            s.filter(F.col("event_type") == typ)
-            .select(
-                F.col("user_id").alias(f"{name}_user"),
-                F.col("event_id").alias(f"{name}_id"),
-                F.timestamp_micros(us).alias(f"{name}_ts"),
-            )
-            .withWatermark(f"{name}_ts", "60 days")
-        )
-
-    clicks = side("c", "click").withColumn("c_bk", F.expr(_bucket_sql("c_ts", w_us)))
-    buys = side("p", "purchase").select(
-        "*",
-        F.explode(
-            F.array(
-                F.expr(_bucket_sql("p_ts", w_us)),
-                F.expr(f"{_bucket_sql('p_ts', w_us)} - 1"),
-            )
-        ).alias("p_bk"),
-    )
-    joined = clicks.join(
-        buys,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("c_bk") == F.col("p_bk"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {SSJOIN_RANGE_H} HOURS")),
-        "inner",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        F.col("c_id").alias("click_id"),
-        F.col("p_id").alias("buy_id"),
-        (
-            (F.expr("unix_micros(p_ts)") - F.expr("unix_micros(c_ts)"))
-            / F.lit(1_000_000)
-        ).cast("bigint").alias("gap_sec"),
-    )
-    _run_streams(spark, src, {
-        SSJOIN_QUERY_NAME: joined.writeStream.format("memory").outputMode("append"),
-    }, heavy_state=True)
-    return spark.table(SSJOIN_QUERY_NAME)
+    return _ssj_run(spark, sf_dir, "inner", SSJOIN_QUERY_NAME)
 
 
 STREAMING_STREAM_JOIN_SQL = f"""
@@ -612,52 +614,52 @@ SSOJ_RANGE_H = SSJOIN_RANGE_H   # same 4-hour attribution horizon
 SSOJ_DELAY_H = 72               # watermark delay: leaves a real state tail
 
 
-def _ssj_outer_run(
+def _ssj_run(
     spark: SparkSession, sf_dir: str, how: str, query_name: str
 ) -> DataFrame:
-    """Shared body of the left-/full-outer stream-stream range joins:
-    one place owns the side builder, watermark delay, range condition,
-    sentinel encoding, and sink block, so the two keys cannot drift on
-    their shared rows.
+    """The one builder of the stream-stream range joins (`how` is
+    inner, leftOuter or fullOuter): one place owns the side builder,
+    range condition, bucket replication, sentinel encoding and sink, so
+    the three keys cannot drift on their shared rows. The inner join
+    keeps its 60-day watermark and un-coalesced output columns; the
+    outer joins use the SSOJ_DELAY_H watermark their oracles pin.
 
-    Round-13 (guide §2.5): same range-bucketed equality key as
-    streaming_stream_join — user_id alone made every probe scan the
-    user's ENTIRE buffered other side (O(rate^2) RocksDB reads per user
-    per batch at densifying upscales; the r12 sf10 sweep walls of
-    510/598 s are this term). The range width W = SSOJ_RANGE_H buckets
-    event time, and for any matching pair the two buckets differ by at
-    most one (the invariant streaming_stream_join states, which holds
-    for pre-1970 times too), so replicating ONE side under
-    its two possible bucket keys and adding bk-equality to the join
-    makes each pair meet under exactly one key while probes touch only
-    one bucket width of state. Outer-join null semantics pick WHICH
-    side replicates: a replicated side would emit its unmatched-null
-    row once per replica, so the side that emits nulls must stay
-    un-replicated. leftOuter therefore replicates the purchase side
-    only (clicks emit nulls exactly once; purchases never emit nulls).
+    Round-13 (guide §2.5): every join carries the range-bucketed
+    equality key streaming_stream_join describes — user_id alone made
+    every probe scan the user's ENTIRE buffered other side (O(rate^2)
+    RocksDB reads per user per batch at densifying upscales; the r12
+    sf10 sweep walls of 510/598 s are this term). The range width W =
+    SSJOIN_RANGE_H buckets event time, and for any matching pair the two
+    buckets differ by at most one (the invariant streaming_stream_join
+    states, which holds for pre-1970 times too), so replicating ONE side
+    under its two possible bucket keys and adding bk-equality to the
+    join makes each pair meet under exactly one key while probes touch
+    only one bucket width of state. Outer-join null semantics pick WHICH
+    side replicates: a replicated side would emit its unmatched-null row
+    once per replica, so the side that emits nulls must stay
+    un-replicated. leftOuter therefore replicates the purchase side only
+    (clicks emit nulls exactly once; purchases never emit nulls).
     fullOuter decomposes into TWO concurrent leftOuter arms over the
     same staged source: arm L = the leftOuter above (matched rows +
-    unmatched-click nulls), arm R = purchases leftOuter
-    click-replicas, post-filtered to its null rows only (the orphan
-    purchases) — matched rows surface once (arm L), each null tail
-    surfaces from the arm where its side is un-replicated, and the
-    union is row-for-row the single fullOuter. Eviction bounds are
-    derived from the unchanged time predicates, and both arms see the
-    same min-across-nodes watermark (both carry one click + one
-    purchase watermark node with the same delay), so the pinned
-    watermark arithmetic in the oracle is untouched. State rows grow
-    1.5x (one side doubled per arm); probe reads drop by the
-    events-per-user-horizon / events-per-user-range ratio (~180x at
-    the upscales). Buffered rows are projected to the minimum — epoch
-    micros stay out of state; unix_micros(ts) re-derives them exactly
-    for the gap arithmetic."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src = _stage_dir(path)
-    w_us = SSOJ_RANGE_H * 3600 * 1_000_000
+    unmatched-click nulls), arm R = purchases leftOuter click-replicas,
+    post-filtered to its null rows only (the orphan purchases) — matched
+    rows surface once (arm L), each null tail surfaces from the arm
+    where its side is un-replicated, and the union is row-for-row the
+    single fullOuter. Eviction bounds are derived from the unchanged
+    time predicates, and both arms see the same min-across-nodes
+    watermark (both carry one click + one purchase watermark node with
+    the same delay), so the pinned watermark arithmetic in the oracle is
+    untouched. State rows grow 1.5x (one side doubled per arm); probe
+    reads drop by the events-per-user-horizon / events-per-user-range
+    ratio (~180x at the upscales). Buffered rows are projected to the
+    minimum — epoch micros stay out of state; unix_micros(ts) re-derives
+    them exactly for the gap arithmetic."""
+    src, open_stream = _events_source(spark, sf_dir)
+    w_us = SSJOIN_RANGE_H * 3600 * 1_000_000
+    delay = f"{SSJOIN_DELAY_D} days" if how == "inner" else f"{SSOJ_DELAY_H} hours"
 
     def side(name: str, typ: str) -> DataFrame:
-        s = spark.readStream.schema(schema).parquet(src)
+        s = open_stream()
         us = F.expr(epoch_micros_sql(s)).cast("bigint")
         return (
             s.filter(F.col("event_type") == typ)
@@ -666,7 +668,7 @@ def _ssj_outer_run(
                 F.col("event_id").alias(f"{name}_id"),
                 F.timestamp_micros(us).alias(f"{name}_ts"),
             )
-            .withWatermark(f"{name}_ts", f"{SSOJ_DELAY_H} hours")
+            .withWatermark(f"{name}_ts", delay)
         )
 
     def single(name: str, typ: str) -> DataFrame:
@@ -693,32 +695,40 @@ def _ssj_outer_run(
         (F.col("c_user") == F.col("p_user"))
         & (F.col("c_bk") == F.col("p_bk"))
         & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {SSOJ_RANGE_H} HOURS"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {SSJOIN_RANGE_H} HOURS"))
     )
     gap = (
         (F.expr("unix_micros(p_ts)") - F.expr("unix_micros(c_ts)"))
         / F.lit(1_000_000)
     ).cast("bigint")
-    # -1 sentinels for the unmatched-null sides: event ids are
-    # non-negative, and the driver's value compare sorts rows —
-    # NULLs don't order against integers there
-    out_cols = [
-        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
-        F.coalesce(F.col("c_id"), F.lit(-1)).cast("bigint").alias("click_id"),
-        F.coalesce(F.col("p_id"), F.lit(-1)).cast("bigint").alias("buy_id"),
-        F.coalesce(gap, F.lit(-1)).alias("gap_sec"),
-    ]
+    if how == "inner":
+        out_cols = [
+            F.col("c_user").alias("user_id"),
+            F.col("c_id").alias("click_id"),
+            F.col("p_id").alias("buy_id"),
+            gap.alias("gap_sec"),
+        ]
+    else:
+        # -1 sentinels for the unmatched-null sides: event ids are
+        # non-negative, and the driver's value compare sorts rows —
+        # NULLs don't order against integers there
+        out_cols = [
+            F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
+            F.coalesce(F.col("c_id"), F.lit(-1)).cast("bigint").alias("click_id"),
+            F.coalesce(F.col("p_id"), F.lit(-1)).cast("bigint").alias("buy_id"),
+            F.coalesce(gap, F.lit(-1)).alias("gap_sec"),
+        ]
 
     left_arm = single("c", "click").join(
-        replicated("p", "purchase", ahead=False), cond, "leftOuter"
+        replicated("p", "purchase", ahead=False),
+        cond,
+        "inner" if how == "inner" else "leftOuter",
     ).select(*out_cols)
-    if how == "leftOuter":
-        _run_streams(spark, src, {
-            query_name: left_arm.writeStream.format("memory").outputMode("append"),
-        }, heavy_state=True)
-        return spark.table(query_name)
+    if how != "fullOuter":
+        return _run_memory_sinks(
+            spark, src, {query_name: (left_arm, "append")}, heavy_state=True
+        )[0]
 
-    assert how == "fullOuter", how
     orphan_arm = (
         single("p", "purchase")
         .join(replicated("c", "click", ahead=True), cond, "leftOuter")
@@ -726,16 +736,16 @@ def _ssj_outer_run(
         .select(*out_cols)
     )
     arm_l, arm_r = f"{query_name}_l", f"{query_name}_r"
-    _run_streams(spark, src, {
-        arm_l: left_arm.writeStream.format("memory").outputMode("append"),
-        arm_r: orphan_arm.writeStream.format("memory").outputMode("append"),
+    sink_l, sink_r = _run_memory_sinks(spark, src, {
+        arm_l: (left_arm, "append"),
+        arm_r: (orphan_arm, "append"),
     }, heavy_state=True)
     LAST_STATE_METRICS[query_name] = [
         {**row, "arm": arm}
         for arm, qn in (("l", arm_l), ("r", arm_r))
         for row in LAST_STATE_METRICS.pop(qn, [])
     ]
-    return spark.table(arm_l).unionByName(spark.table(arm_r))
+    return sink_l.unionByName(sink_r)
 
 
 def streaming_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -756,9 +766,7 @@ def streaming_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins for append-mode aggregation, here pinned for outer-join state
     eviction. At 100 TB the identical plan runs unbounded with join
     state bounded to O(rate x horizon)."""
-    return _ssj_outer_run(spark, sf_dir, "leftOuter", SSOJ_QUERY_NAME).select(
-        "user_id", "click_id", "buy_id", "gap_sec"
-    )
+    return _ssj_run(spark, sf_dir, "leftOuter", SSOJ_QUERY_NAME)
 
 
 # Oracle: matched rows are the plain range join; null rows are the
@@ -791,8 +799,6 @@ _SSOJ_WM_US = (
 )
 
 
-
-
 # ---------------------------------------------------------------------------
 # streaming_stream_full_outer_join — both unmatched tails at once
 # ---------------------------------------------------------------------------
@@ -813,7 +819,7 @@ def streaming_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFr
     against the ms-floored min-across-nodes watermark the left-outer
     key pinned. Same bounded state at 100 TB: O(rate x horizon) rows
     per side."""
-    return _ssj_outer_run(spark, sf_dir, "fullOuter", SSFOJ_QUERY_NAME)
+    return _ssj_run(spark, sf_dir, "fullOuter", SSFOJ_QUERY_NAME)
 
 
 # shared oracle text: matched rows + the unmatched-click tail (the
@@ -857,7 +863,6 @@ WHERE epoch_ns(p.ts) // 1000 < wm.w_us
 """
 
 
-
 # ---------------------------------------------------------------------------
 # 114. streaming_session_window — built-in session windows (JVM state)
 # ---------------------------------------------------------------------------
@@ -878,10 +883,8 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose end <= max event time, which the oracle reproduces as a
     gaps-and-islands aggregation with the same tail filter. Only
     integer-epoch and exact-decimal columns are emitted."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src = _stage_dir(path)
-    stream = spark.readStream.schema(schema).parquet(src)
+    src, open_stream = _events_source(spark, sf_dir)
+    stream = open_stream()
     ev = stream.select(
         "user_id",
         "value",
@@ -899,10 +902,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "session_value",
     )
-    _run_streams(spark, src, {
-        SW_QUERY_NAME: agg.writeStream.format("memory").outputMode("append"),
-    })
-    return spark.table(SW_QUERY_NAME)
+    return _run_memory_sinks(spark, src, {SW_QUERY_NAME: (agg, "append")})[0]
 
 
 STREAMING_SESSION_WINDOW_SQL = f"""
@@ -952,10 +952,8 @@ def streaming_tumbling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — exactly how production leaderboards split the work (the stream
     maintains counts, the reader ranks). availableNow over the full
     file set ≡ the batch groupBy, so the oracle gates values fully."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src = _stage_dir(path)
-    stream = spark.readStream.schema(schema).parquet(src)
+    src, open_stream = _events_source(spark, sf_dir)
+    stream = open_stream()
     # tz-free day bucket from epoch micros (calendar day windows shift
     # with the session zone; the leaderboard day must not)
     ev = stream.withColumn(
@@ -963,12 +961,10 @@ def streaming_tumbling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"(({epoch_micros_sql(stream)}) div 86400000000) * 86400"),
     )
     agg = ev.groupBy("day_start", "event_type").agg(F.count(F.lit(1)).alias("n"))
-    _run_streams(spark, src, {
-        TOPK_QUERY_NAME: agg.writeStream.format("memory").outputMode("complete"),
-    })
     from pyspark.sql.window import Window
 
-    sink = spark.table(TOPK_QUERY_NAME).select("day_start", "event_type", "n")
+    sink = _run_memory_sinks(spark, src, {TOPK_QUERY_NAME: (agg, "complete")})[0]
+    sink = sink.select("day_start", "event_type", "n")
     w = Window.partitionBy("day_start").orderBy(F.desc("n"), "event_type")
     return (
         sink.withColumn("rk", F.row_number().over(w).cast("int"))
@@ -1035,29 +1031,10 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     No reset after alarm, so availableNow output is EXACTLY the batch
     prefix-window derivation and the oracle gates every value (unlike
     sessionize there is no open-tail asymmetry to filter)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src = _stage_dir(path)
-    stream = spark.readStream.schema(schema).parquet(src)
-    ev = stream.select(
-        "user_id",
-        "event_id",
-        F.expr(f"({epoch_micros_sql(stream)}) div 1000000").cast("bigint").alias("ts_sec"),
-        "value",
+    return _per_user_state_stream(
+        spark, sf_dir, CUSUM_QUERY_NAME, _cusum_state_fn,
+        CUSUM_OUT_SCHEMA, CUSUM_STATE_SCHEMA,
     )
-    alarms = ev.groupBy("user_id").applyInPandasWithState(
-        _cusum_state_fn,
-        outputStructType=CUSUM_OUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    _run_streams(spark, src, {
-        CUSUM_QUERY_NAME: alarms.writeStream.format("memory").outputMode("append"),
-    })
-    return spark.table(CUSUM_QUERY_NAME)
 
 
 STREAMING_CUSUM_SQL = f"""
@@ -1100,10 +1077,8 @@ def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME oracle (temporal.EVENTS_OHLC_BARS_SQL). This is the
     TimescaleDB-style continuous aggregate: at production scale the
     memory sink becomes a Delta/parquet sink the serving layer reads."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src = _stage_dir(path)
-    stream = spark.readStream.schema(schema).parquet(src)
+    src, open_stream = _events_source(spark, sf_dir)
+    stream = open_stream()
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
     base = ev.select(
         "event_type",
@@ -1124,10 +1099,8 @@ def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
         )
     )
-    _run_streams(spark, src, {
-        OHLC_QUERY_NAME: agg.writeStream.format("memory").outputMode("complete"),
-    })
-    return spark.table(OHLC_QUERY_NAME).select(
+    sink = _run_memory_sinks(spark, src, {OHLC_QUERY_NAME: (agg, "complete")})[0]
+    return sink.select(
         "event_type",
         F.col("w").getField("start").cast("long").alias("bar_start_s"),
         (F.col("o.cents").cast("double") / 100.0).alias("open"),
@@ -1209,23 +1182,17 @@ def streaming_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces the batch-schedule watermark arithmetic in SQL, so
     this is a hash-gated certification that the engine's late-data
     behavior matches the declared semantics."""
-    staged = _stage_three_batches(spark, sf_dir)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
+    staged, open_stream = _events_source(spark, sf_dir, three_batches=True)
+    stream = open_stream()
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
     agg = (
         ev.withWatermark("ts", f"{WM_DELAY_S} seconds")
         .groupBy(F.window("ts", f"{WM_WINDOW_S} seconds").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    _run_memory_stream(spark, staged, WATERMARK_QUERY_NAME, agg.writeStream)
+    sink = _run_memory_sinks(spark, staged, {WATERMARK_QUERY_NAME: (agg, "append")})[0]
     return (
-        spark.table(WATERMARK_QUERY_NAME)
-        .select(
+        sink.select(
             F.col("w").getField("start").cast("long").alias("window_start"),
             "event_type",
             F.col("n").cast("bigint").alias("n"),
@@ -1295,21 +1262,14 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     The staged inputs, sink, and checkpoint all re-key on the source
     fingerprint, so regenerated testdata restages instead of appending
     to a stale sink."""
-    staged = _stage_three_batches(spark, sf_dir)
-    src = f"{sf_dir}/events.parquet"
-    fp = source_fingerprint(src).replace(":", "_")
+    staged, open_stream = _events_source(spark, sf_dir, three_batches=True)
+    fp = source_fingerprint(f"{sf_dir}/events.parquet").replace(":", "_")
     base = scratch_dir("gdalos_stream_sink", sf_dir, fp)
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(base, exist_ok=True)
 
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    rows = stream.select(
+    rows = open_stream().select(
         "event_id",
         "user_id",
         "event_type",
@@ -1373,15 +1333,12 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Last-writer-wins over a total (ts, event_id) order is
     batch-schedule-independent, so the final state equals the batch
     argmax and the entry is fully oracle-gated."""
-    staged = _stage_three_batches(spark, sf_dir)
-    src = f"{sf_dir}/events.parquet"
-    fp = source_fingerprint(src).replace(":", "_")
+    staged, open_stream = _events_source(spark, sf_dir, three_batches=True)
+    fp = source_fingerprint(f"{sf_dir}/events.parquet").replace(":", "_")
     base = scratch_dir("gdalos_stream_upsert", sf_dir, fp)
     ckpt = os.path.join(base, "ckpt")
     cur_ptr = os.path.join(base, "_CURRENT")
     os.makedirs(base, exist_ok=True)
-
-    schema = spark.read.parquet(src).schema
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window as W
@@ -1415,11 +1372,7 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         latest.write.mode("overwrite").parquet(vdir)
         commit_file(cur_ptr, lambda tmp: Path(tmp).write_text(vdir))
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
+    stream = open_stream()
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
     _run_streams(spark, staged, {
         UPSERT_QUERY_NAME: ev.writeStream.foreachBatch(merge_batch)
@@ -1534,19 +1487,17 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-3 duplicates still held by live state, and genuine late drops
     of the straggler rows. Output: (user_id, event_type, t_us) of every
     emitted row."""
-    staged = _stage_dedup_wm_batches(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("user_id long, event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+    staged, open_stream = _batch_source(
+        spark,
+        _stage_dedup_wm_batches(spark, sf_dir),
+        "user_id long, event_type string, ts timestamp",
     )
-    out = stream.withWatermark(
+    out = open_stream().withWatermark(
         "ts", f"{DWM_DELAY_US // 1_000_000} seconds"
     ).dropDuplicatesWithinWatermark(["user_id", "event_type"])
-    _run_memory_stream(spark, staged, DWM_QUERY_NAME, out.writeStream)
+    sink = _run_memory_sinks(spark, staged, {DWM_QUERY_NAME: (out, "append")})[0]
     return (
-        spark.table(DWM_QUERY_NAME)
-        .select(
+        sink.select(
             "user_id",
             "event_type",
             F.unix_micros("ts").alias("t_us"),

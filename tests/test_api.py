@@ -196,7 +196,9 @@ def test_query_persist_is_the_only_persist():
     release at the query boundary (__spark_entry__.queries()) frees all
     of them: the one `.persist(`/`.cache(` call in gdalos_spark/ is the
     one inside query_persist, and the one `.localCheckpoint(` call the
-    one inside query_checkpoint."""
+    one inside query_checkpoint. Likewise every streaming query starts
+    through streaming/events.py's `_run_streams`, the one `.trigger(`
+    call."""
     import ast
     import pathlib
 
@@ -207,9 +209,10 @@ def test_query_persist_is_the_only_persist():
         path.relative_to(root).as_posix(): ast.parse(path.read_text())
         for path in sorted(root.rglob("*.py"))
     }
-    for attrs, helper_name in (
-        (("persist", "cache"), "query_persist"),
-        (("localCheckpoint",), "query_checkpoint"),
+    for attrs, helper_path, helper_name in (
+        (("persist", "cache"), "datamodel.py", "query_persist"),
+        (("localCheckpoint",), "datamodel.py", "query_checkpoint"),
+        (("trigger",), "streaming/events.py", "_run_streams"),
     ):
         calls = [
             (path, node.lineno)
@@ -220,11 +223,11 @@ def test_query_persist_is_the_only_persist():
             and node.func.attr in attrs
         ]
         helper = next(
-            n for n in ast.walk(trees["datamodel.py"])
+            n for n in ast.walk(trees[helper_path])
             if isinstance(n, ast.FunctionDef) and n.name == helper_name
         )
         assert len(calls) == 1, calls
-        assert calls[0][0] == "datamodel.py"
+        assert calls[0][0] == helper_path
         assert helper.lineno <= calls[0][1] <= helper.end_lineno
 
 

@@ -5,6 +5,7 @@ import pytest
 
 import __spark_entry__ as entrymod
 from gdalos_spark.session import scoped_conf
+from gdalos_spark.streaming import events
 from tests.conftest import SF_DIR, assert_matches_oracle
 
 
@@ -64,12 +65,15 @@ def test_multimodal_real_codec_uncompressed_formats():
         _decode_real(b"\xff\xd8\xff\xe0jpeg-ish", "image")
 
 
-def test_streaming_matches_batch_oracle(spark, ducks):
+@pytest.mark.parametrize(
+    "key", ["streaming_event_counts", "streaming_sliding_counts"]
+)
+def test_streaming_matches_batch_oracle(spark, ducks, key):
     assert_matches_oracle(
         spark,
         ducks,
-        entrymod.queries()["streaming_event_counts"],
-        entrymod.oracle_sql()["streaming_event_counts"],
+        entrymod.queries()[key],
+        entrymod.oracle_sql()[key],
     )
 
 
@@ -192,20 +196,65 @@ def test_full_outer_timeout_stops_both_arms(spark, monkeypatch):
     assert spark.streams.active == []
 
 
-@pytest.mark.parametrize(
-    "key", ["streaming_watermark_audit", "streaming_dedup_watermark"]
-)
+# every memory sink each key runs: one per query (two arms for the
+# full-outer join)
+_SINK_NAMES = {
+    "streaming_watermark_audit": [events.WATERMARK_QUERY_NAME],
+    "streaming_dedup_watermark": [events.DWM_QUERY_NAME],
+    "streaming_event_counts": [events.QUERY_NAME],
+    "streaming_cusum": [events.CUSUM_QUERY_NAME],
+    "streaming_stream_full_outer_join": [
+        f"{events.SSFOJ_QUERY_NAME}_l", f"{events.SSFOJ_QUERY_NAME}_r"
+    ],
+}
+
+
+@pytest.mark.parametrize("key", list(_SINK_NAMES))
 def test_watermark_stream_leaves_no_checkpoint(spark, monkeypatch, tmp_path, key):
     """Each run checkpoints into a fresh dir under the tempfile root and
-    removes it when the stream ends: two runs return identical rows (the
-    memory sink is read after the removal) and no checkpoint dir stays
-    behind."""
+    removes it when the stream ends, and drops its sinks' temp views:
+    two runs return identical rows, no checkpoint dir stays behind, no
+    sink name resolves, and the returned frame is what holds the sink's
+    rows (the first run's frame still collects them after the second
+    run replaced its sinks)."""
     import tempfile
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    runs = [entrymod.queries()[key](spark, SF_DIR).collect() for _ in range(2)]
+    frames, runs = [], []
+    for _ in range(2):
+        frames.append(entrymod.queries()[key](spark, SF_DIR))
+        assert not [n for n in _SINK_NAMES[key] if spark.catalog.tableExists(n)]
+        runs.append(sorted(frames[-1].collect()))
     assert runs[0] and runs[0] == runs[1]
+    assert sorted(frames[0].collect()) == runs[0]
     assert not [p.name for p in tmp_path.iterdir() if "ckpt" in p.name]
+
+
+def test_failed_memory_stream_leaves_nothing(spark, monkeypatch, tmp_path):
+    """A memory-sink key whose batch fails raises, stops its query,
+    removes its checkpoint from the tempfile root, drops its sink's temp
+    view, and leaves no Spark `temporary-*` checkpoint under the JVM's
+    java.io.tmpdir."""
+    import os
+    import tempfile
+
+    def broken_state_fn(key, pdfs, state):
+        raise RuntimeError("cusum batch failed")
+
+    jvm_tmp = spark._jvm.java.lang.System.getProperty("java.io.tmpdir")
+
+    def spark_temp_ckpts():
+        return {n for n in os.listdir(jvm_tmp) if n.startswith("temporary-")}
+
+    before = spark_temp_ckpts()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(events, "_cusum_state_fn", broken_state_fn)
+    with pytest.raises(Exception, match="cusum batch failed"):
+        entrymod.queries()["streaming_cusum"](spark, SF_DIR)
+    assert spark.streams.active == []
+    assert not [p.name for p in tmp_path.iterdir() if "ckpt" in p.name]
+    assert spark_temp_ckpts() <= before
+    assert not spark.catalog.tableExists(events.CUSUM_QUERY_NAME)
 
 
 def test_range_buckets_hold_invariant_before_1970(spark):
