@@ -160,17 +160,10 @@ def main() -> None:
     # (VERDICT r11 item 4). The wall stays for continuity.
     duck_timings: dict[str, float] = {}
     try:
-        import glob as _glob
+        from tools.drive_values import duck_views
 
-        import duckdb
-
-        con = duckdb.connect()
+        con = duck_views(sf_dir)
         con.execute(f"SET threads TO {int(cpus)}")
-        for p in _glob.glob(f"{sf_dir}/*.parquet"):
-            con.execute(
-                f"CREATE VIEW {os.path.basename(p)[:-8]} AS "
-                f"SELECT * FROM read_parquet('{p}')"
-            )
         oracles = entrymod.oracle_sql()
         for name in names:
             sql = oracles.get(name)

