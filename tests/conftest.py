@@ -1,7 +1,8 @@
 """Shared fixtures: one SparkSession per test run, a DuckDB connection
 over SF_DIR, and the catalog sweep record. Oracle checks go through
-tools/drive_values.oracle_mismatch, the driver's check (column names and
-types, row count, order-insensitive values)."""
+tools/drive_values.oracle_mismatch, the same compare that
+`python tools/drive_values.py` runs (column names and types, row count,
+order-insensitive values)."""
 
 from __future__ import annotations
 
@@ -27,8 +28,8 @@ def pytest_configure(config):
         "markers",
         "slow: heavy end-to-end test (facade verb sweeps, trained-model "
         "A/Bs, multi-arm equivalence drives); skipped by default so the "
-        "plain `pytest tests/ -x -q` suite completes inside any driver "
-        "budget — opt in with SPARK_GRAFT_SLOW_TESTS=1. The catalog-wide "
+        "plain `pytest tests/ -x -q` suite stays short — opt in with "
+        "SPARK_GRAFT_SLOW_TESTS=1. The catalog-wide "
         "checks are not slow: tests/test_catalog.py builds each key once",
     )
 
@@ -97,6 +98,17 @@ def record(spark):
 
     get.builds = builds
     return get
+
+
+def assert_record_matches_oracle(record, ducks, key):
+    """The catalog compare for `key` as queries() builds it, read from
+    the session record (the key is built at most once per session)."""
+    rec = record(key)
+    assert rec["error"] is None, f"{key}: {rec['error']}"
+    bad = oracle_mismatch(
+        rec["columns"], rec["schema"], rec["rows"], ducks, entrymod.oracle_sql()[key]
+    )
+    assert bad is None, f"{key}: {bad}"
 
 
 def assert_matches_oracle(spark, ducks, fn, sql, sf_dir=SF_DIR):

@@ -398,34 +398,3 @@ def test_sweep_out_of_family_flagging(tmp_path, monkeypatch):
     tiny = dict(uniform)
     tiny["dedup_exact"] = {"sec": 25.0}
     assert "dedup_exact" not in sw._flag_out_of_family(tiny)
-
-
-def test_cli_trans_extent_threads_into_crop(spark):
-    """ADVICE r5: -extent/-projwin/-srcwin used to parse-and-drop. Now
-    the window reaches the crop predicate: a sub-window of the default
-    CROP yields strictly fewer rows, and every surviving pixel is inside
-    the requested window; -projwin (ul/lr order) and -srcwin
-    (offset+size) map to the same predicate."""
-    from gdalos_spark.cli import _build_parser, _resolve
-    from gdalos_spark.api import GdalosSpark
-    from gdalos_spark.operators.raster import raster_crop
-
-    eng = GdalosSpark(spark, SF_DIR)
-    parser = _build_parser()
-
-    def resolve(*flags):
-        return _resolve(eng, parser.parse_args(["trans", SF_DIR, *flags]))
-
-    full = raster_crop(spark, SF_DIR).count()
-    # GEO window (ADVICE r6: -extent/-projwin are georeferenced): on the
-    # (-180, 60, 0.5 deg) north-up grid, lon [-170, -167.5] x lat [50, 55]
-    # is the pixel window [20, 25] x [10, 20]
-    sub = resolve("-extent", "-170", "-167.5", "50", "55")
-    rows = sub.collect()
-    assert 0 < len(rows) < full
-    assert all(20 <= r.px <= 25 and 10 <= r.py <= 20 for r in rows)
-    # projwin gives ul/lr corners -> same window as the extent above
-    assert resolve("-projwin", "-170", "55", "-167.5", "50").count() == len(rows)
-    # srcwin stays PIXEL/line, as in gdal_translate:
-    # [20,25]x[10,20] == offset (20,10) size (6,11)
-    assert resolve("-srcwin", "20", "10", "6", "11").count() == len(rows)

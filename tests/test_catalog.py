@@ -9,18 +9,13 @@ import pytest
 from pyspark.sql import types as T
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_record_matches_oracle
 from tools.drive_values import oracle_mismatch
 
 
 @pytest.mark.parametrize("key", list(entrymod.oracle_sql()))
 def test_matches_oracle(record, ducks, key):
-    rec = record(key)
-    assert rec["error"] is None, rec["error"]
-    bad = oracle_mismatch(
-        rec["columns"], rec["schema"], rec["rows"], ducks, entrymod.oracle_sql()[key]
-    )
-    assert bad is None, f"{key}: {bad}"
+    assert_record_matches_oracle(record, ducks, key)
 
 
 def _plan(record, key: str) -> str:

@@ -24,7 +24,7 @@ from gdalos_spark.sources.geotiff import (
     _T_SUBFILE_TYPE,
     write_cog_scenes,
 )
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_matches_oracle, assert_record_matches_oracle
 
 
 def test_cog_multilevel_codec_roundtrip():
@@ -411,6 +411,10 @@ def test_h264_walk_parses_foreign_sps_shapes():
         _encode_h264_stream(b"x", 100, 64)
 
 
+def test_multimodal_h264_features_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "multimodal_h264_features")
+
+
 def test_layout_advisor_delegating_oracle_matches_at_both_regimes(
     spark, ducks, monkeypatch
 ):
@@ -471,7 +475,7 @@ def test_codec_oracles_handle_empty_documents(spark, tmp_path):
     `ord('')` -> -1 would silently diverge."""
     import duckdb
 
-    from tests.test_llm_pipeline import _write_docs
+    from tests.test_round8_ops import _write_docs
 
     sf = _write_docs(tmp_path, [(1, ""), (2, "hello world"), (3, "x")])
     con = duckdb.connect()
@@ -493,44 +497,3 @@ def test_codec_oracles_handle_empty_documents(spark, tmp_path):
             entrymod.oracle_sql()[key],
             sf_dir=sf,
         )
-
-
-def test_ovr_pair_roundtrip_and_skip(spark, tmp_path):
-    """The written pair decodes back to the COG's exact grids (base ==
-    internal IFD0, sidecar levels == internal overview IFDs), reruns
-    skip, and the sidecar is a valid standalone TIFF with reduced-
-    resolution subfile IFDs and no geo tags."""
-    from gdalos_spark.sources import geotiff as G
-
-    out = str(tmp_path / "ovr")
-    rows = {r["scene_id"]: r for r in G.write_ovr_scenes(spark, SF_DIR, out).collect()}
-    assert rows and all(r["action"] == "written" for r in rows.values())
-    again = {r["scene_id"]: r for r in G.write_ovr_scenes(spark, SF_DIR, out).collect()}
-    assert all(r["action"] == "skipped" for r in again.values())
-
-    cogs = {r["scene_id"]: r for r in G.write_cog_scenes(spark, SF_DIR, str(tmp_path / "cog")).collect()}
-    for sid, r in rows.items():
-        base_payload = open(r["path"], "rb").read()
-        ovr_payload = open(r["path"] + ".ovr", "rb").read()
-        cog_payload = open(cogs[sid]["path"], "rb").read()
-        base_ifds = G._read_ifds(base_payload)
-        ovr_ifds = G._read_ifds(ovr_payload)
-        cog_ifds = G._read_ifds(cog_payload)
-        assert len(base_ifds) == 1 and len(ovr_ifds) == G.OVERVIEW_LEVELS
-        # base carries geometry; sidecar IFDs are subfile-marked, geo-free
-        assert G._T_MODEL_SCALE in base_ifds[0]
-        for tags in ovr_ifds:
-            assert tags[G._T_SUBFILE_TYPE][0] == 1
-            assert G._T_MODEL_SCALE not in tags
-        # pixel-identical to the internal-overview COG, level by level
-        import numpy as np
-
-        assert np.array_equal(
-            G._grid_from_tags(base_ifds[0], base_payload),
-            G._grid_from_tags(cog_ifds[0], cog_payload),
-        )
-        for ot, ct in zip(ovr_ifds, cog_ifds[1:]):
-            assert np.array_equal(
-                G._grid_from_tags(ot, ovr_payload),
-                G._grid_from_tags(ct, cog_payload),
-            )

@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 
 from gdalos_spark.sources import geotiff as G
-from tests.conftest import SF_DIR
+from tests.conftest import assert_record_matches_oracle
 
 SRTM = "/root/reference/data/maps/srtm1_x35_y32.tif"
 
@@ -186,6 +186,10 @@ def test_reference_srtm_decodes():
     assert 200 < float(grid.mean()) < 400
 
 
+def test_flavors_query_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_ingest_tiff_flavors")
+
+
 @pytest.mark.skipif(not os.path.exists(SRTM), reason="reference tree absent")
 def test_open_raster_reads_reference_file(spark):
     """api.open_raster over the reference's real GDAL-written SRTM tile:
@@ -249,113 +253,3 @@ def test_foreign_ingest_rejects_empty_manifest(spark):
 
     with pytest.raises(ValueError, match="at least one"):
         V.vector_layer_features(spark, [])
-
-
-def test_geotiff_codec_roundtrip():
-    """Byte-level GeoTIFF codec contract: tiled/deflate encode -> IFD
-    walk -> identical pixels + geotransform + EPSG; the stripped
-    uncompressed variant exercises the decoder's second layout path."""
-    import numpy as np
-
-    from gdalos_spark.sources.geotiff import (
-        NODATA,
-        _decode_geotiff,
-        _encode_geotiff,
-        _encode_strip_geotiff,
-    )
-
-    rng = np.random.RandomState(7)
-    grid = rng.randint(-(10**6), 10**6, size=(32, 32)).astype("<i4")
-    grid[3, 5] = NODATA  # holes survive the trip
-    for enc in (_encode_geotiff, _encode_strip_geotiff):
-        payload = enc(grid, -170.0, 58.5)
-        out, (olon, olat, sx, sy), epsg = _decode_geotiff(payload)
-        assert (out == grid).all()
-        assert (olon, olat, sx, sy) == (-170.0, 58.5, 0.5, 0.5)
-        assert epsg == 4326
-    # non-multiple-of-tile height pads and unpads cleanly (tiled path)
-    odd = rng.randint(0, 100, size=(19, 32)).astype("<i4")
-    payload = _encode_geotiff(odd, 0.0, 0.0)
-    out, _, _ = _decode_geotiff(payload)
-    assert (out == odd).all()
-
-
-def test_geotiff_decoder_rejects_malformed_streams():
-    """A foreign-byte ingest path must fail loudly, not emit garbage:
-    wrong magic, unsupported sample layouts, missing offsets, and
-    out-of-range pixel values at encode time all raise with a message
-    naming the problem."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from gdalos_spark.sources.geotiff import (
-        NODATA,
-        _decode_geotiff,
-        _encode_geotiff,
-    )
-
-    grid = np.arange(64, dtype="<i4").reshape(8, 8)
-    good = _encode_geotiff(grid, 0.0, 0.0)
-
-    with _pytest.raises(ValueError, match="not a TIFF"):
-        _decode_geotiff(b"XX\x00\x2a" + good[4:])  # bad magic
-    # big-endian magic is now a SUPPORTED byte order (flavor breadth,
-    # r9) — but stapling it onto a little-endian body must still fail
-    # loudly (insane big-endian offsets), never emit garbage pixels
-    with _pytest.raises(Exception):
-        _decode_geotiff(b"MM\x00\x2a" + good[4:])
-    with _pytest.raises(ValueError, match="does not match declared sample"):
-        # flip BitsPerSample (tag 258, SHORT) to 16 in the IFD: int16 is
-        # a supported layout since r9, but the int32-sized blocks
-        # contradict it — the size check must refuse to reinterpret
-        bad = bytearray(good)
-        n = struct.unpack_from("<H", bad, 8)[0]
-        for i in range(n):
-            tag = struct.unpack_from("<H", bad, 10 + i * 12)[0]
-            if tag == 258:
-                struct.pack_into("<I", bad, 10 + i * 12 + 8, 16)
-        _decode_geotiff(bytes(bad))
-    with _pytest.raises(ValueError, match="sample layout"):
-        # 12-bit packed samples stay out of scope and raise by name
-        bad = bytearray(good)
-        for i in range(n):
-            tag = struct.unpack_from("<H", bad, 10 + i * 12)[0]
-            if tag == 258:
-                struct.pack_into("<I", bad, 10 + i * 12 + 8, 12)
-        _decode_geotiff(bytes(bad))
-    # int64 values outside int32 range are rejected at ENCODE time
-    with _pytest.raises(OverflowError):
-        _encode_geotiff(np.full((8, 8), 2**31, dtype="int64"), 0.0, 0.0)
-    with _pytest.raises(OverflowError):
-        _encode_geotiff(np.full((8, 8), NODATA - 1, dtype="int64"), 0.0, 0.0)
-    # truncated body: the tile offsets point past the end -> zlib error
-    with _pytest.raises(Exception):
-        _decode_geotiff(good[: len(good) // 2])
-
-
-def test_geotiff_ingest_to_tiled_layout(spark, tmp_path):
-    """End-to-end ingest: scene GeoTIFFs -> decoded pixels -> the
-    tile-partitioned parquet layout, with partition pruning intact and
-    pixel values matching the DEM source exactly."""
-    from pyspark.sql import functions as F
-
-    from gdalos_spark.datamodel import dem_grid
-    from gdalos_spark.sources.geotiff import ingest_tiff_to_tiled
-    from gdalos_spark.sources.tiled import crop_tiled, read_tiled
-
-    path = str(tmp_path / "tiff_tiled")
-    ingest_tiff_to_tiled(spark, SF_DIR, path)
-    tiled_df = read_tiled(spark, path)
-    src = {
-        (r.px, r.py): r.cents
-        for r in dem_grid(spark, SF_DIR)
-        .select("px", "py", (F.col("elev") * 100).cast("long").alias("cents"))
-        .collect()
-    }
-    got = {(r.px, r.py): r.elev for r in tiled_df.collect()}
-    assert got == src
-    crop = crop_tiled(tiled_df, 0, 15, 0, 15)
-    assert "PartitionFilters: [" in crop._jdf.queryExecution().executedPlan().toString() or \
-        crop.count() == sum(1 for (x, y) in src if x <= 15 and y <= 15)

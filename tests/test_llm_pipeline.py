@@ -1,11 +1,37 @@
-"""LLM-pipeline-family tests (SURVEY §2 #28-39): text, dedup,
-similarity, vocab and curation operators. Every key's oracle compare
-runs in tests/test_catalog.py; these pin semantics."""
+"""Oracle-parity tests for the LLM-pipeline families (SURVEY §2 #28-39)."""
 
-import os
+import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import assert_record_matches_oracle
+
+LLM_KEYS = [
+    "dedup_exact",
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_embedding_cosine",
+    "ann_cosine_topk",
+    "ann_lsh_topk",
+    "ann_ivf_topk",
+    "centroid_similarity",
+    "text_language_id",
+    "text_quality_score",
+    "text_token_stats",
+    "doc_fingerprint",
+    "dedup_clusters",
+    "text_pii_flag",
+    "dedup_lines",
+    "text_rarity_score",
+    "embedding_quantize_int8",
+    "corpus_sample_stratified",
+    "ann_recall_report",
+]
+
+
+@pytest.mark.parametrize("key", LLM_KEYS)
+def test_llm_pipeline_matches_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)
 
 
 def test_ann_lsh_subset_of_brute_force(spark):
@@ -25,6 +51,10 @@ def test_ann_lsh_subset_of_brute_force(spark):
     for r in lsh:
         if (r.probe_id, r.vec_id) in brute:
             assert brute[(r.probe_id, r.vec_id)] == r.cosine
+
+
+def test_corpus_filter_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "corpus_filter")
 
 
 def test_cc_alternating_logn_rounds_on_chain(spark):
@@ -86,6 +116,11 @@ def test_cc_alternating_multiple_components(spark):
     assert got == {(5, 1), (9, 1), (4, 2), (101, 100)}
 
 
+def test_round3_llm_additions_match_oracle(record, ducks):
+    for key in ("benchmark_contamination", "corpus_mix_sample", "text_ngram_topk"):
+        assert_record_matches_oracle(record, ducks, key)
+
+
 def test_corpus_mix_sample_rates_realize_budget(spark):
     """Planned rates must sum to about the target budget (exact when no
     source saturates at rate=1.0), and achieved fractions track rates."""
@@ -101,6 +136,10 @@ def test_corpus_mix_sample_rates_realize_budget(spark):
     for r in rows:
         assert 0.0 <= r.rate <= 1.0
         assert abs(r.achieved_frac - r.rate) < 0.25  # hash-sample variance
+
+
+def test_embedding_pq_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "embedding_pq")
 
 
 def test_embedding_pq_codebook_reconstructs_exactly(spark):
@@ -119,6 +158,10 @@ def test_embedding_pq_codebook_reconstructs_exactly(spark):
         assert max(r.code0, r.code1, r.code2, r.code3) < PQ_K
 
 
+def test_text_repetition_score_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "text_repetition_score")
+
+
 def test_text_repetition_score_signal_bounds(spark):
     """Signals are valid fractions; a doc whose top token share exceeds
     the Gopher threshold is flagged."""
@@ -133,6 +176,10 @@ def test_text_repetition_score_signal_bounds(spark):
         assert 0.0 <= r.dup_3gram_frac <= 1.0
         if r.top_tok_frac > REP_TOPTOK_THRESH:
             assert r.repetitive == 1
+
+
+def test_sequence_packing_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "sequence_packing")
 
 
 def test_sequence_packing_streams_are_gapless(spark):
@@ -156,6 +203,10 @@ def test_sequence_packing_streams_are_gapless(spark):
             assert r.last_seq == (r.offset + r.n_tokens - 1) // PACK_CTX
             assert r.spans_boundary == int(r.last_seq > r.first_seq)
             run += r.n_tokens
+
+
+def test_kmeans_refine_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "kmeans_refine")
 
 
 def test_kmeans_refine_partitions_all_vectors(spark):
@@ -221,6 +272,11 @@ def test_ann_ivfpq_ranks_are_dense_topk(spark):
         assert len(ranks) <= TOP_K
 
 
+def test_round4_scoring_additions_match_oracle(record, ducks):
+    for key in ("text_unigram_logprob", "corpus_curation_report"):
+        assert_record_matches_oracle(record, ducks, key)
+
+
 def test_unigram_logprob_matches_native_log2(spark):
     """The polynomial log2 must track IEEE log2 to well under the 1e-6
     micro-unit: recompute one document's mean bits in Python."""
@@ -257,6 +313,10 @@ def test_curation_report_precedence_and_keep(spark):
         if r.keep:
             assert (r.is_exact_dup, r.contaminated, r.semantic_dup) == (0, 0, 0)
             assert r.c4_keep == 1 and r.high_ppl == 0
+
+
+def test_dsir_importance_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "dsir_importance")
 
 
 def test_dsir_target_slice_scores_higher(spark):
@@ -299,6 +359,10 @@ def test_polynomial_log2_property(spark):
     check()
 
 
+def test_bm25_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "text_bm25_topk")
+
+
 def test_bm25_ranks_are_dense_and_score_ordered(spark):
     from tests.conftest import SF_DIR
 
@@ -310,6 +374,10 @@ def test_bm25_ranks_are_dense_and_score_ordered(spark):
     assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
     for a, b in zip(rows, rows[1:]):
         assert a.bm25 > b.bm25 or (a.bm25 == b.bm25 and a.doc_id < b.doc_id)
+
+
+def test_split_leakage_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "split_leakage_report")
 
 
 def test_split_leakage_flags_cross_split_pairs(spark):
@@ -353,516 +421,3 @@ def test_cc_two_phase_matches_alternating(spark):
     assert conv2
     two_labels = {r.node: r.root for r in lm.collect()}
     assert two_labels == base_labels
-
-
-def test_bloom_no_false_negatives(spark):
-    """The Bloom guarantee: every truly-banned token is flagged, so
-    n_flagged >= n_banned per source."""
-    for r in entrymod.queries()["bloom_blocklist"](spark, SF_DIR).collect():
-        assert r.n_flagged >= r.n_banned, r
-        assert r.n_flagged - r.n_banned == r.n_false_pos, r
-
-
-def test_cms_overestimates(spark):
-    """Count-Min one-sided error: estimate >= truth, always."""
-    for r in entrymod.queries()["cms_heavy_hitters"](spark, SF_DIR).collect():
-        assert r.overcount >= 0, r
-
-
-def test_zipf_slope_is_negative(spark):
-    row = entrymod.queries()["zipf_law_report"](spark, SF_DIR).collect()[0]
-    assert row.slope < 0
-    assert 0.0 <= row.r2 <= 1.0
-
-
-def test_matryoshka_recall_in_range(spark):
-    for r in entrymod.queries()["embedding_matryoshka"](spark, SF_DIR).collect():
-        assert 0 <= r.n_overlap <= r.k, r
-        assert abs(r.recall_at_k - r.n_overlap / r.k) < 1e-12
-
-
-def test_lsh_planner_curves_are_monotone(spark):
-    rows = entrymod.queries()["lsh_parameter_planner"](spark, SF_DIR).collect()
-    by_cfg = {}
-    for r in rows:
-        by_cfg.setdefault((r.bands, r.rows), []).append(r)
-    for cfg, rs in by_cfg.items():
-        rs.sort(key=lambda r: r.jaccard)
-        ps = [r.p_capture for r in rs]
-        assert all(0.0 <= p <= 1.0 for p in ps), cfg
-        assert all(a <= b + 1e-12 for a, b in zip(ps, ps[1:])), cfg
-
-
-def test_bpe_merges_are_ranked_and_shrink(spark):
-    """Each merge's count is positive; applying k merges can only shrink
-    the adjacent-pair mass, so counts are non-increasing IN THE GREEDY
-    ORDER only when no later pair overtakes — assert the invariants that
-    always hold: positive counts, distinct merged symbols, step order."""
-    rows = entrymod.queries()["bpe_train_merges"](spark, SF_DIR).collect()
-    assert [r.step for r in rows] == list(range(1, len(rows) + 1))
-    assert len(rows) >= 1
-    seen = set()
-    for r in rows:
-        assert r.n_occ > 0
-        assert (r.sym_a, r.sym_b) not in seen
-        seen.add((r.sym_a, r.sym_b))
-
-
-def test_k_anonymity_monotone_in_k(spark):
-    """Rows below k can only grow as k grows; fractions stay in [0,1]."""
-    rows = sorted(
-        entrymod.queries()["k_anonymity_report"](spark, SF_DIR).collect(),
-        key=lambda r: r.k,
-    )
-    prev = -1
-    for r in rows:
-        assert r.n_rows_below >= prev
-        prev = r.n_rows_below
-        assert 0.0 <= r.frac_rows_below <= 1.0
-        assert r.n_groups_below <= r.n_groups
-
-
-def test_bpe_apply_compression_consistent(spark):
-    """tokens_bpe <= tokens_char, compression = char/bpe exactly, and the
-    symbol vocabulary exceeds the plain-character alphabet only via the
-    learned merges (<= 36 chars + k merges)."""
-    from gdalos_spark.operators.vocab import BPE_TRAIN_STEPS
-
-    r = entrymod.queries()["bpe_apply_encode"](spark, SF_DIR).collect()[0]
-    assert r.tokens_bpe <= r.tokens_char
-    assert abs(r.compression - r.tokens_char / r.tokens_bpe) < 1e-12
-    assert r.vocab_syms <= 36 + BPE_TRAIN_STEPS
-
-
-def test_contrastive_margins_are_pos_minus_neg(spark):
-    rows = entrymod.queries()["contrastive_pair_mining"](spark, SF_DIR).collect()
-    for r in rows:
-        assert abs(r.margin - (r.pos_cos - r.neg_cos)) < 1e-9
-        assert r.pos_id != r.neg_id
-
-
-def test_quality_ablation_monotone(spark):
-    """Buckets 0..9 exist, retained tokens strictly decrease to 0, and
-    bucket quality ranges are ordered."""
-    rows = sorted(
-        entrymod.queries()["quality_ablation_report"](spark, SF_DIR).collect(),
-        key=lambda r: r.bucket,
-    )
-    assert [r.bucket for r in rows] == list(range(10))
-    for a, b in zip(rows, rows[1:]):
-        assert a.max_q <= b.min_q
-        assert a.retained_tokens > b.retained_tokens or b.retained_tokens == 0
-    assert rows[-1].retained_tokens == 0
-
-
-def test_norm_outliers_chebyshev_bound(spark):
-    """At 3 sigma, Chebyshev caps the outlier fraction at 1/9."""
-    rows = entrymod.queries()["embedding_norm_outliers"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for r in rows:
-        assert r.n_outliers <= r.n_vecs / 9 + 1
-        assert r.mean_n2 > 0.0
-
-
-def test_referential_integrity_clean_schema(spark):
-    """The TPC-H-ish testdata is referentially clean: every declared FK
-    edge reports zero orphans and zero null keys (the report exists to
-    catch regressions in real feeds, so a clean baseline is the pin)."""
-    rows = entrymod.queries()["referential_integrity_report"](spark, SF_DIR).collect()
-    assert len(rows) == 7
-    for r in rows:
-        assert r.orphans == 0
-        assert r.null_keys == 0
-        assert r.child_rows > 0
-
-
-def test_dedup_union_votes_consistent(spark):
-    """Votes = sum of method flags; exact pairs must also be caught by
-    minhash (identical text => identical shingle signatures)."""
-    rows = entrymod.queries()["dedup_union_report"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for r in rows:
-        assert r.votes == r.exact + r.minhash + r.simhash
-        assert 1 <= r.votes <= 3
-        if r.exact:
-            assert r.minhash == 1
-
-
-def test_maxsim_scores_bounded(spark):
-    """maxsim of k unit-cosine terms is bounded by k; ranks are 1..K per
-    probe doc."""
-    from gdalos_spark.operators.similarity import (
-        MAXSIM_TOP_K,
-        MAXSIM_VECS_PER_DOC,
-    )
-
-    rows = entrymod.queries()["multivector_maxsim"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    by_q = {}
-    for r in rows:
-        assert -MAXSIM_VECS_PER_DOC <= r.maxsim <= MAXSIM_VECS_PER_DOC
-        by_q.setdefault(r.q_doc, []).append(r.rank)
-    for q_doc, ranks in by_q.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1))
-        assert len(ranks) <= MAXSIM_TOP_K
-
-
-def test_merge_fold_equals_reference_greedy(spark):
-    """The fold-based merge expression must equal canonical greedy
-    left-to-right BPE on every word over {a,b} up to length 8 and every
-    merge pair — including the odd-run cases ('aaaaa', (a,a)) where the
-    rejected two-pass replace() variant diverges."""
-    import itertools
-
-    from pyspark.sql import functions as F
-
-    from gdalos_spark.operators.vocab import _merge_apply_expr
-
-    def greedy(symbols, a, b):
-        out, i = [], 0
-        while i < len(symbols):
-            if i + 1 < len(symbols) and symbols[i] == a and symbols[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(symbols[i])
-                i += 1
-        return " ".join(out)
-
-    words = [
-        " ".join(w)
-        for n in range(1, 9)
-        for w in itertools.product("ab", repeat=n)
-    ]
-    df = spark.createDataFrame([(w,) for w in words], "s string")
-    for a, b in itertools.product("ab", repeat=2):
-        got = {
-            r.s: r.m
-            for r in df.select(
-                "s", F.expr(_merge_apply_expr("s", a, b)).alias("m")
-            ).collect()
-        }
-        for w in words:
-            assert got[w] == greedy(w.split(" "), a, b), (w, a, b, got[w])
-
-
-def test_confusion_matrix_recalls_sum_to_one(spark):
-    rows = entrymod.queries()["langid_confusion_matrix"](spark, SF_DIR).collect()
-    by_lang = {}
-    for r in rows:
-        by_lang.setdefault(r.lang, 0.0)
-        by_lang[r.lang] += r.recall
-        assert r.correct == (r.lang == r.pred_lang)
-    for lang, tot in by_lang.items():
-        assert abs(tot - 1.0) < 1e-9
-
-
-def test_source_overlap_jaccard_bounds(spark):
-    rows = entrymod.queries()["source_vocab_overlap"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for r in rows:
-        assert 0.0 < r.jaccard <= 1.0
-        assert r.inter <= min(r.na, r.nb)
-        assert r.sa < r.sb
-
-
-def test_trigram_search_finds_typo_target(spark):
-    """'bleu bolt' must rank 'blue bolt' first — typo tolerance without
-    any edit-distance computation."""
-    rows = entrymod.queries()["trigram_entity_search"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    best = min(rows, key=lambda r: r.rank)
-    assert best.p_name == "blue bolt"
-    for r in rows:
-        assert 0.0 < r.sim <= 1.0
-
-
-def test_split_assign_partitions_every_doc_once(spark):
-    """The three splits partition the corpus, and the realized train
-    fraction is within a few points of the declared 90% (md5 buckets are
-    near-uniform)."""
-    from pyspark.sql import functions as F
-
-    from gdalos_spark.operators.pipeline import corpus_split_assign
-
-    out = corpus_split_assign(spark, SF_DIR).cache()
-    n_docs = out.count()
-    assert out.select("doc_id").distinct().count() == n_docs
-    counts = {r["split"]: r["n"] for r in out.groupBy("split").agg(F.count("*").alias("n")).collect()}
-    assert set(counts) <= {"train", "val", "test"}
-    assert sum(counts.values()) == n_docs
-    assert 0.80 <= counts.get("train", 0) / n_docs <= 0.97
-    out.unpersist()
-
-
-def test_incremental_dedup_never_pairs_index_with_index(spark):
-    """Every reported match pairs a batch doc with an INDEX doc — the
-    delta-join contract (batch-batch and index-index pairs are never
-    generated)."""
-    from gdalos_spark.operators.dedup import (
-        INC_BATCH_MOD,
-        INC_BATCH_REM,
-        dedup_incremental_minhash,
-    )
-
-    rows = dedup_incremental_minhash(spark, SF_DIR).collect()
-    assert rows, "batch side is empty"
-    for r in rows:
-        assert r.doc_id % INC_BATCH_MOD == INC_BATCH_REM
-        if r.match_id is not None:
-            assert r.match_id % INC_BATCH_MOD != INC_BATCH_REM
-            assert r.verdict == "duplicate"
-        else:
-            assert r.verdict == "new"
-
-
-def test_knn_graph_ranks_are_dense_and_bucket_bounded(spark):
-    """Per-source ranks are 1..deg with no gaps, capped at k, and no
-    self-edges; nodes are distinct-vector representatives so src == dst
-    never appears even on a replica corpus."""
-    from collections import defaultdict
-
-    from gdalos_spark.operators.similarity import KNN_K, embedding_knn_graph
-
-    rows = embedding_knn_graph(spark, SF_DIR).collect()
-    assert rows
-    per_src = defaultdict(list)
-    for r in rows:
-        assert r.src_id != r.dst_id
-        assert 1 <= r.rank <= KNN_K
-        per_src[r.src_id].append(r.rank)
-    for src, ranks in per_src.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), src
-
-
-def test_label_propagation_seeds_are_clamped(spark):
-    """Seed nodes must come out carrying their own true label (clamping
-    is the defining property of label propagation with trusted seeds),
-    and propagation must actually spread: some non-seed node ends up
-    labeled."""
-    from pyspark.sql import functions as F
-
-    from gdalos_spark.datamodel import load
-    from gdalos_spark.operators.similarity import (
-        LP_SEED_MOD,
-        embedding_label_propagation,
-    )
-
-    out = embedding_label_propagation(spark, SF_DIR).cache()
-    emb = load(spark, SF_DIR, "embeddings").select(
-        F.col("vec_id").alias("gid"), F.col("label").cast("int").alias("true_label")
-    )
-    seeds = out.filter(F.col("is_seed") == 1).join(emb, "gid")
-    assert seeds.filter(F.col("label") != F.col("true_label")).count() == 0
-    assert out.filter((F.col("is_seed") == 0) & F.col("label").isNotNull()).count() > 0
-    out.unpersist()
-
-
-def test_rerank_oracle_and_beats_adc_ordering(spark, ducks):
-    """Oracle parity plus the point of reranking: final ranks come from
-    exact cosine over the ADC shortlist (every output row carries an
-    adc_rank <= RERANK_R), and per probe the rank sequence is dense
-    1..k."""
-    from collections import defaultdict
-
-    from gdalos_spark.operators.similarity import RERANK_R, TOP_K, ann_ivfpq_rerank
-
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["ann_ivfpq_rerank"],
-        entrymod.oracle_sql()["ann_ivfpq_rerank"],
-    )
-    rows = ann_ivfpq_rerank(spark, SF_DIR).collect()
-    per_probe = defaultdict(list)
-    for r in rows:
-        assert 1 <= r.adc_rank <= RERANK_R
-        per_probe[r.probe_id].append(r.rank)
-    for probe, ranks in per_probe.items():
-        assert sorted(ranks) == list(range(1, min(TOP_K, len(ranks)) + 1)), probe
-
-
-def _write_docs(tmp_path, rows):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array(["en"] * len(rows), pa.string()),
-            "source": pa.array(["web"] * len(rows), pa.string()),
-            "n_chars": pa.array(
-                [len(r[1] or "") for r in rows], pa.int64()
-            ),
-        }
-    )
-    pq.write_table(tbl, os.path.join(str(tmp_path), "documents.parquet"))
-    return str(tmp_path)
-
-
-def test_short_doc_clustering(spark, tmp_path):
-    """ADVICE r5 claimed docs with <3 tokens get no signature and so
-    exact short-dup pairs silently vanish from dedup_clusters. The
-    shingles3 whole-text fallback means they DO get signatures; this
-    pins that exact duplicates of 1-, 2-token, and empty docs cluster
-    (signature-identical star), including with NULL text coalesced."""
-    from gdalos_spark.operators.dedup import dedup_clusters
-
-    d = _write_docs(
-        tmp_path,
-        [
-            (1, "hi"),
-            (2, "hi"),
-            (3, "one two"),
-            (4, "one two"),
-            (5, ""),
-            (6, ""),
-            (7, None),
-            (8, "completely unrelated longer document with many distinct words"),
-        ],
-    )
-    rows = {r.doc_id: r for r in dedup_clusters(spark, d).collect()}
-    assert rows[1].cluster_id == rows[2].cluster_id and rows[1].cluster_size >= 2
-    assert rows[3].cluster_id == rows[4].cluster_id and rows[3].cluster_size >= 2
-    # empty text and NULL text both coalesce to the '' whole-text shingle
-    empties = {rows[i].cluster_id for i in (5, 6, 7)}
-    assert len(empties) == 1 and rows[5].cluster_size == 3
-    # the unrelated doc shares no pair -> absent from the pair graph
-    assert 8 not in rows
-    # the two distinct short clusters are distinct
-    assert rows[1].cluster_id != rows[3].cluster_id != rows[5].cluster_id
-
-
-def test_sig_store_matches_inline_and_reuses(spark):
-    """The persisted-signature-store variant returns byte-identical rows
-    to the inline recompute (the production shape: index signatures are
-    a parquet scan, only the batch is shingled), and the second call
-    reuses the staged store without rebuilding."""
-    import os
-
-    from gdalos_spark.operators.dedup import (
-        _sig_store_dir,
-        dedup_incremental_minhash,
-        dedup_incremental_minhash_stored,
-    )
-
-    inline = dedup_incremental_minhash(spark, SF_DIR).collect()
-    stored = dedup_incremental_minhash_stored(spark, SF_DIR).collect()
-    assert [tuple(r) for r in inline] == [tuple(r) for r in stored]
-    marker = os.path.join(_sig_store_dir(SF_DIR), "_STAGED")
-    mtime = os.path.getmtime(marker)
-    again = dedup_incremental_minhash_stored(spark, SF_DIR).collect()
-    assert [tuple(r) for r in again] == [tuple(r) for r in stored]
-    assert os.path.getmtime(marker) == mtime  # no rebuild on the warm path
-
-
-def test_minhash_lsh_collapse_matches_direct(spark, tmp_path, monkeypatch):
-    """The adaptive signature-group collapse is unreachable at oracle
-    scales (COLLAPSE_MIN_DOCS short-circuits them), so pin its algebra
-    directly: on a replica-heavy corpus, the collapsed plan's pair list
-    is byte-identical to the direct band-join + distinct — including
-    in-group self pairs (est=1.0), cross-group expansion, and the
-    least/greatest orientation."""
-    from gdalos_spark.operators import dedup as D
-
-    rows = []
-    did = 0
-    for i in range(8):
-        base = f"doc {i} alpha beta gamma delta epsilon zeta eta theta iota"
-        for _ in range(12):  # 12 exact replicas -> one signature group
-            rows.append((did, base))
-            did += 1
-        rows.append((did, base + " extra"))  # near-dup variant
-        did += 1
-    d = _write_docs(tmp_path, rows)
-    direct = sorted(
-        tuple(r) for r in D._minhash_pairs(spark, d).distinct().collect()
-    )
-    sim_direct = sorted(tuple(r) for r in D.dedup_simhash(spark, d).collect())
-    monkeypatch.setattr(D, "COLLAPSE_MIN_DOCS", 0)
-    collapsed = sorted(tuple(r) for r in D.dedup_minhash_lsh(spark, d).collect())
-    assert len(direct) > 100  # the replica cliques really are quadratic
-    assert collapsed == direct
-    # same pin for the simhash fingerprint collapse
-    sim_collapsed = sorted(tuple(r) for r in D.dedup_simhash(spark, d).collect())
-    assert len(sim_direct) > 100
-    assert sim_collapsed == sim_direct
-
-
-def test_minhash_calibration_arrays_matches_equijoin(spark, tmp_path):
-    """Round-12: the broadcast-array calibration plan (size of
-    array_intersect, shared>0 filter) must be row-identical to the
-    exploded shingle equi-join plan — including the INNER-join drop of
-    zero-overlap candidate pairs and the decile-edge FLOOR arithmetic.
-    Both plan functions run directly on a corpus with replica cliques
-    AND near-dup variants (non-trivial exact_j)."""
-    from gdalos_spark.operators import dedup as D
-
-    rows, did = [], 0
-    for i in range(6):
-        base = f"doc {i} alpha beta gamma delta epsilon zeta eta theta iota"
-        for _ in range(8):
-            rows.append((did, base))
-            did += 1
-        rows.append((did, base + " extra tail words"))
-        did += 1
-    d = _write_docs(tmp_path, rows)
-    arrays = sorted(tuple(r) for r in D._minhash_calibration_arrays(spark, d).collect())
-    equijoin = sorted(tuple(r) for r in D._minhash_calibration_join(spark, d).collect())
-    assert arrays and arrays == equijoin
-
-
-def test_containment_is_directional_and_thresholded(spark):
-    from gdalos_spark.operators.dedup import CONTAIN_TAU
-
-    rows = entrymod.queries()["dedup_containment"](spark, SF_DIR).collect()
-    for r in rows:
-        assert r.containment >= CONTAIN_TAU
-        assert r.containee != r.container
-        assert r.shared <= r.sz_containee
-        assert r.containment == r.shared / float(r.sz_containee)
-
-
-def test_containment_catches_what_jaccard_scores_low(spark):
-    """The reason the key exists: a containment hit whose rare-set sizes
-    are very different scores LOW on Jaccard. Verify the relationship
-    holds on every emitted pair: jaccard <= containment by definition,
-    with equality only when both sides have the same rare size."""
-    rows = entrymod.queries()["dedup_containment"](spark, SF_DIR).collect()
-    if not rows:  # corpus-dependent; the oracle test already gates values
-        return
-    for r in rows:
-        # |A n B| / |A u B|  <=  |A n B| / |A|  (A the smaller side)
-        assert r.shared / float(2 * r.sz_containee - r.shared) <= r.containment + 1e-12
-
-
-def test_random_projection_preserves_distances(spark):
-    """The JL guarantee the report exists to check: with k=16 sign
-    projections, pairwise distance ratios concentrate around 1
-    (spread ~ sqrt(2/k) ~ 0.35). Assert the mean ratio is near 1 and
-    the overwhelming majority of pairs fall inside a loose 3-sigma
-    band — distribution-level, not per-pair (JL is probabilistic)."""
-    rows = entrymod.queries()["embedding_random_projection"](spark, SF_DIR).collect()
-    assert len(rows) == 50 * 49 // 2
-    ratios = sorted(r.ratio for r in rows)
-    mean = sum(ratios) / len(ratios)
-    assert 0.8 < mean < 1.2, mean
-    assert 0.5 < ratios[len(ratios) // 2] < 1.5  # median
-    # the label-clustered synthetic corpus has a heavier right tail than
-    # iid-Gaussian JL theory (correlated near-dup pairs with tiny
-    # d2_orig) — the band is deliberately loose
-    inside = sum(1 for x in ratios if 0.0 < x < 3.0)
-    assert inside / len(ratios) > 0.90
-
-
-def test_jl_sign_matrix_is_balanced():
-    """Sanity on the deterministic sign scramble: each projection row
-    must be reasonably balanced between +1 and -1 (a constant-sign row
-    would make that output dim the vector mean, not a projection)."""
-    from gdalos_spark.operators.similarity import JL_K, _jl_sign
-    from gdalos_spark.functions.vectors import EMB_DIM
-
-    for i in range(JL_K):
-        pos = sum(1 for j in range(EMB_DIM) if _jl_sign(i, j) > 0)
-        assert 16 <= pos <= 48, (i, pos)

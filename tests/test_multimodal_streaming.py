@@ -1,13 +1,12 @@
-"""Tests for multimodal decode (#40) and structured streaming (#41).
-Every oracle key's compare runs in tests/test_catalog.py; these pin
-stream semantics, sinks and the decoders."""
+"""Tests for multimodal decode (#40, rows-only) and structured
+streaming (#41, full oracle parity via its batch twin)."""
 
 import pytest
 
 import __spark_entry__ as entrymod
 from gdalos_spark.session import scoped_conf
 from gdalos_spark.streaming import events
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_matches_oracle, assert_record_matches_oracle
 
 
 def test_multimodal_decode_contract(spark):
@@ -64,6 +63,13 @@ def test_multimodal_real_codec_uncompressed_formats():
 
     with pytest.raises(NotImplementedError):
         _decode_real(b"\xff\xd8\xff\xe0jpeg-ish", "image")
+
+
+@pytest.mark.parametrize(
+    "key", ["streaming_event_counts", "streaming_sliding_counts"]
+)
+def test_streaming_matches_batch_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)
 
 
 def test_streaming_equals_batch_twin(spark):
@@ -284,6 +290,27 @@ def test_multimodal_frames_sampling(spark):
         assert r.frame_idx % 2 == 0  # every-other-frame sampling
         assert r.frame_offset == r.frame_idx * 256
         assert 0 < r.frame_bytes <= 256
+
+
+def test_streaming_pyramid_and_dedup_match_oracle(record, ducks):
+    for key in ("raster_overview_pyramid", "streaming_dedup"):
+        assert_record_matches_oracle(record, ducks, key)
+
+
+def test_streaming_enrich_join_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "streaming_enrich_join")
+
+
+def test_streaming_stream_join_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "streaming_stream_join")
+
+
+def test_streaming_session_window_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "streaming_session_window")
+
+
+def test_multimodal_manifest_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "multimodal_manifest")
 
 
 def test_multimodal_manifest_partitions_the_lake(spark):
@@ -652,228 +679,3 @@ def test_jpeg_codec_properties():
         assert np.abs(dec.astype(int) - v).max() <= 1
 
     check()
-
-
-def test_shard_plan_respects_target(spark):
-    """Every shard except possibly each type's last stays under
-    target + max_item (a single item can straddle the boundary)."""
-    from gdalos_spark.operators.multimodal import SHARD_TARGET_BYTES
-
-    rows = entrymod.queries()["multimodal_shard_plan"](spark, SF_DIR).collect()
-    by_type = {}
-    for r in rows:
-        by_type.setdefault(r.media_type, []).append(r)
-    for mt, shards in by_type.items():
-        shards.sort(key=lambda r: r.shard_id)
-        # shard ids are dense from 0
-        assert [s.shard_id for s in shards] == list(range(len(shards)))
-        for s in shards[:-1]:
-            assert s.shard_bytes >= 1
-
-
-def test_watermark_audit_drops_are_real(spark, ducks):
-    """The audit's total event count must sit strictly between zero and
-    the full corpus: late batch-3 rows were dropped and open windows
-    withheld (if it equals the batch-twin total, watermarking did
-    nothing and the operator is vacuous)."""
-    from pyspark.sql import functions as F
-
-    from gdalos_spark.datamodel import load
-    from gdalos_spark.streaming.events import streaming_watermark_audit
-
-    out = streaming_watermark_audit(spark, SF_DIR)
-    streamed = out.agg(F.sum("n")).first()[0]
-    total = load(spark, SF_DIR, "events").count()
-    assert 0 < streamed < total
-
-
-def test_parquet_sink_oracle_and_exactly_once(spark, ducks):
-    """The file sink must match the batch oracle AND a re-run against the
-    same checkpoint must add no files (availableNow with a committed log
-    has nothing left to process) — the exactly-once contract."""
-    import glob as _glob
-    import os as _os
-    import tempfile as _tempfile
-
-    from gdalos_spark.datamodel import source_fingerprint
-    from gdalos_spark.streaming.events import streaming_parquet_sink
-
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["streaming_parquet_sink"],
-        entrymod.oracle_sql()["streaming_parquet_sink"],
-    )
-    fp = source_fingerprint(f"{SF_DIR}/events.parquet").replace(":", "_")
-    out_dir = _os.path.join(
-        _tempfile.gettempdir(), "gdalos_stream_sink",
-        SF_DIR.strip("/").replace("/", "_"), fp, "out",
-    )
-    files_before = sorted(_glob.glob(f"{out_dir}/part-*"))
-    streaming_parquet_sink(spark, SF_DIR).collect()
-    files_after = sorted(_glob.glob(f"{out_dir}/part-*"))
-    assert files_before and files_before == files_after
-
-
-def test_upsert_sink_oracle_and_idempotent_rerun(spark, ducks):
-    """foreachBatch merge must equal the batch argmax, and a re-run on
-    the committed checkpoint must leave the _CURRENT pointer unchanged
-    (no batch re-fires)."""
-    import os as _os
-    import tempfile as _tempfile
-
-    from gdalos_spark.datamodel import source_fingerprint
-    from gdalos_spark.streaming.events import streaming_upsert_sink
-
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["streaming_upsert_sink"],
-        entrymod.oracle_sql()["streaming_upsert_sink"],
-    )
-    fp = source_fingerprint(f"{SF_DIR}/events.parquet").replace(":", "_")
-    ptr = _os.path.join(
-        _tempfile.gettempdir(), "gdalos_stream_upsert",
-        SF_DIR.strip("/").replace("/", "_"), fp, "_CURRENT",
-    )
-    before = open(ptr).read()
-    streaming_upsert_sink(spark, SF_DIR).collect()
-    assert open(ptr).read() == before
-
-
-def test_streaming_dedup_watermark_semantics(spark, ducks):
-    """Bounded-state streaming dedup (dropDuplicatesWithinWatermark):
-    oracle parity, plus the two behaviors that distinguish it from plain
-    dropDuplicates — keys RE-EMIT after their state is evicted by the
-    watermark, and duplicates under live state are dropped."""
-    from collections import Counter
-
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["streaming_dedup_watermark"],
-        entrymod.oracle_sql()["streaming_dedup_watermark"],
-    )
-    rows = entrymod.queries()["streaming_dedup_watermark"](spark, SF_DIR).collect()
-    per_key = Counter((r.user_id, r.event_type) for r in rows)
-    assert max(per_key.values()) >= 2  # eviction -> re-emission happened
-    # some batch-2/3 duplicates were held by live state (fewer emissions
-    # than staged non-straggler rows)
-    import os
-
-    import pyarrow.parquet as pq
-
-    from gdalos_spark.streaming.events import _stage_dedup_wm_batches
-
-    staged = _stage_dedup_wm_batches(spark, SF_DIR)
-    n_staged = sum(
-        pq.read_table(os.path.join(staged, f)).num_rows
-        for f in os.listdir(staged)
-        if f.endswith(".parquet")
-    )
-    assert len(rows) < n_staged
-
-
-def test_mp3_header_walk_roundtrip(spark):
-    """Synthesized MPEG-1 Layer III streams round-trip through the
-    header walk: frame count, padded frame lengths, ID3v2 skip, ID3v1
-    stop, VBR detection, and duration arithmetic all recovered from the
-    headers alone; corrupt sync raises."""
-    import pytest as _pytest
-
-    from gdalos_spark.operators.multimodal import (
-        _MP3_RATES,
-        _encode_mp3_frames,
-        _mp3_header_walk,
-        multimodal_mp3_features,
-    )
-
-    payload = b"some deterministic document text"
-    stream = _encode_mp3_frames(payload)
-    meta = _mp3_header_walk(stream)
-    assert meta["n_frames"] == 4 + (len(payload) % 13)
-    assert meta["sample_rate"] == _MP3_RATES[payload[0] % 3]
-    assert meta["has_id3v2"] and meta["is_vbr"]
-    assert meta["duration_ms"] == meta["n_frames"] * 1152 * 1000 // meta["sample_rate"]
-    # constant-bitrate stream: every byte equal -> one bitrate -> not VBR
-    cbr = _mp3_header_walk(_encode_mp3_frames(b"\x07" * 40))
-    assert not cbr["is_vbr"]
-    # zeroing a frame-header sync byte (found via the walk itself, so it
-    # is guaranteed to be a header, not body) loses sync
-    meta1 = _mp3_header_walk(stream)
-    hdr_pos = len(stream) - 128  # start of ID3v1; walk back one frame
-    # recompute the second frame's header offset from the walk arithmetic
-    pos = 10 + 32  # ID3v2 header + body
-    kbps = (stream[pos + 2] >> 4) & 0xF
-    pad = (stream[pos + 2] >> 1) & 1
-    from gdalos_spark.operators.multimodal import _MP3_BITRATES
-
-    pos2 = pos + (144_000 * _MP3_BITRATES[kbps]) // meta1["sample_rate"] + pad
-    assert stream[pos2] == 0xFF  # second frame header, by construction
-    broken = stream[:pos2] + b"\x00" + stream[pos2 + 1 :]
-    with _pytest.raises(ValueError):
-        _mp3_header_walk(broken)
-    rows = multimodal_mp3_features(spark, SF_DIR).collect()
-    assert len(rows) > 0 and all(r.n_frames >= 4 and r.sample_rate in _MP3_RATES for r in rows)
-
-
-def test_streaming_outer_join_semantics(spark, ducks):
-    """Pins the outer-specific mechanics: every inner match appears, the
-    null side is exactly the evictable unmatched clicks (min-of-both-
-    sides watermark, ms floor), and tail clicks emit nothing."""
-    from gdalos_spark.streaming.events import SSOJ_DELAY_H, SSOJ_RANGE_H
-
-    rows = entrymod.queries()["streaming_stream_outer_join"](spark, SF_DIR).collect()
-    nulls = {r.click_id for r in rows if r.buy_id == -1}
-    matched = {r.click_id for r in rows if r.buy_id != -1}
-    assert nulls and matched
-    assert not (nulls & matched)  # a click either converted or didn't
-    # gap_sec is within the horizon on matched rows, sentinel on nulls
-    for r in rows:
-        if r.buy_id != -1:
-            assert 0 <= r.gap_sec <= SSOJ_RANGE_H * 3600
-        else:
-            assert r.gap_sec == -1
-    # the watermark tail exists and is silent: unmatched clicks past the
-    # eviction bound are absent from the output entirely
-    wm_us = ducks.execute(
-        f"""SELECT (FLOOR(LEAST(
-              MAX(CASE WHEN event_type = 'click' THEN epoch_ns(ts) END),
-              MAX(CASE WHEN event_type = 'purchase' THEN epoch_ns(ts) END)
-            ) // 1000 / 1000) - {SSOJ_DELAY_H * 3600 * 1000}) * 1000 FROM events"""
-    ).fetchone()[0]
-    tail = {
-        r[0]
-        for r in ducks.execute(
-            f"""WITH c AS (SELECT * FROM events WHERE event_type = 'click'),
-            p AS (SELECT * FROM events WHERE event_type = 'purchase')
-            SELECT c.event_id FROM c
-            WHERE epoch_ns(c.ts) // 1000 + {SSOJ_RANGE_H * 3600 * 1000000} >= {wm_us}
-              AND NOT EXISTS (SELECT 1 FROM p WHERE p.user_id = c.user_id
-                              AND p.ts >= c.ts
-                              AND p.ts <= c.ts + INTERVAL {SSOJ_RANGE_H} HOUR)"""
-        ).fetchall()
-    }
-    assert tail, "corpus should leave unmatched clicks inside the watermark tail"
-    assert not (tail & nulls) and not (tail & matched)
-
-
-def test_stream_full_outer_has_both_null_tails(spark):
-    """The full-outer key must actually emit BOTH unmatched sides (else
-    it degenerates to the left-outer key). Its two arms' state metrics
-    end up under the combined query name only."""
-    from gdalos_spark.streaming.events import LAST_STATE_METRICS, SSFOJ_QUERY_NAME
-
-    rows = entrymod.queries()["streaming_stream_full_outer_join"](
-        spark, SF_DIR
-    ).collect()
-    kinds = {
-        (r.click_id == -1, r.buy_id == -1) for r in rows
-    }
-    assert (False, False) in kinds     # matched pairs
-    assert (False, True) in kinds      # unconverted clicks
-    assert (True, False) in kinds      # orphan purchases
-    assert {r["arm"] for r in LAST_STATE_METRICS[SSFOJ_QUERY_NAME]} == {"l", "r"}
-    assert [n for n in LAST_STATE_METRICS if n.startswith(SSFOJ_QUERY_NAME)] == [
-        SSFOJ_QUERY_NAME
-    ]

@@ -491,58 +491,3 @@ def test_stored_dedup_reads_store_not_corpus(spark):
     # exactly one documents scan (the batch side); the index signatures
     # come from the store, not a second corpus pass
     assert plan.count("documents.parquet") == 1
-
-
-def test_new_ops_plan_shapes(spark):
-    """Scale pins: the reprojection adds exactly ONE exchange beyond the
-    DEM derivation's own groupBy — all the Redfearn math is a fused
-    map-side projection chain (no join, no extra shuffle); the combine
-    fan broadcasts the observer dim and never plans a cartesian
-    product."""
-    from gdalos_spark.plans.asserts import assert_no_cartesian
-
-    df = entrymod.queries()["crs_reproject_utm"](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 2, plan  # dem_grid agg + target-cell agg
-    assert "Join" not in plan
-    assert_no_cartesian(df)
-
-    comb = entrymod.queries()["viewshed_combine_modes"](spark, SF_DIR)
-    plan = comb._jdf.queryExecution().executedPlan().toString()
-    # the 5-row observer dim fans out as a broadcast (BNLJ over a
-    # bounded build side — the observer_count precedent), never a
-    # shuffled cartesian product
-    assert "BroadcastExchange" in plan, plan
-    assert_no_cartesian(comb)
-
-
-def test_round7_plan_shapes(spark):
-    """Scale pins for the round-7 additions: the resampler serves both
-    bracket windows from TWO exchanges total (span agg + the shared
-    user_id window sort — a third would mean the union stream shuffled
-    twice); the kNN graph ranks through WindowGroupLimit (partial top-k
-    before the final sort); the CSV audit is scan + ONE aggregation
-    exchange. The catalog-wide no-cartesian sweep in test_plans.py
-    covers these keys too."""
-    from gdalos_spark.operators.similarity import embedding_knn_graph
-    from gdalos_spark.operators.temporal import events_resample_interpolate
-    from gdalos_spark.sources.csv_ingest import csv_ingest_audit
-
-    plan = (
-        events_resample_interpolate(spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Exchange hashpartitioning") == 2, plan
-
-    plan = (
-        embedding_knn_graph(spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "WindowGroupLimit" in plan, plan
-
-    plan = (
-        csv_ingest_audit(spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Exchange hashpartitioning") == 1, plan

@@ -1,12 +1,65 @@
-"""Raster-family tests (SURVEY §2 #1-18): the raster core, its
-projections, resamplers and hydrology. Every key's oracle compare runs
-in tests/test_catalog.py; these pin semantics, hand-computed cases and
-libm tracking."""
+"""Oracle-parity tests for the raster core (SURVEY §2 #1-18)."""
 
-import math
+import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_matches_oracle, assert_record_matches_oracle
+
+RASTER_KEYS = [
+    "rasterize_points",
+    "raster_crop",
+    "raster_overview",
+    "raster_overview_mode",
+    "raster_calc_expr",
+    "raster_combine_count",
+    "raster_combine_max",
+    "raster_combine_unique",
+    "raster_scale",
+    "raster_color_relief",
+    "raster_to_xyz",
+    "pixel_lookup",
+    "raster_mosaic",
+    "raster_info",
+    "raster_histogram",
+    "raster_warp_affine",
+    "raster_partition_stats",
+    "extent_selector",
+]
+
+
+@pytest.mark.parametrize("key", RASTER_KEYS)
+def test_raster_matches_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)
+
+
+def test_raster_hillshade_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_hillshade")
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "raster_slope_percent",
+        "raster_aspect_sector",
+        "raster_terrain_ruggedness",
+        "raster_discrete_updown",
+        "raster_overview_pyramid",
+        "raster_cutline",
+        "transform_resolution",
+        "overview_level_select",
+        "empty_raster_generate",
+        "raster_nodata_rewrite",
+    ],
+)
+def test_gdaldem_family_matches_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)
+
+
+@pytest.mark.parametrize(
+    "key", ["raster_to_czml", "raster_to_json", "viewshed_sector", "extent_intersection"]
+)
+def test_export_and_sector_match_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)
 
 
 def test_cutline_nodata_semantics(spark):
@@ -20,6 +73,10 @@ def test_cutline_nodata_semantics(spark):
     assert n_in > 0 and n_out > 0
     assert df.filter("(inside = 0) != (val = -32768.0)").count() == 0
     df.unpersist()
+
+
+def test_raster_zorder_index_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_zorder_index")
 
 
 def test_raster_zorder_tiles_are_aligned_blocks(spark):
@@ -39,6 +96,10 @@ def test_raster_zorder_tiles_are_aligned_blocks(spark):
         assert r.n_cells <= 256
 
 
+def test_raster_proximity_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_proximity")
+
+
 def test_raster_proximity_semantics(spark):
     """Targets are distance 0 from themselves; non-targets with a target
     in the window report a positive d2 bounded by the window diagonal."""
@@ -56,6 +117,10 @@ def test_raster_proximity_semantics(spark):
             assert r.nearest_d2 == -1 or 0 < r.nearest_d2 <= lim
 
 
+def test_raster_sieve_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_sieve")
+
+
 def test_raster_sieve_regions_are_consistent(spark):
     """Region ids partition the grid; every member of a region shares its
     class, and region_size equals the member count."""
@@ -71,6 +136,10 @@ def test_raster_sieve_regions_are_consistent(spark):
     for members in by_region.values():
         assert len({m.cls for m in members}) == 1
         assert all(m.region_size == len(members) for m in members)
+
+
+def test_raster_flow_direction_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_flow_direction")
 
 
 def test_raster_flow_direction_codes_valid(spark):
@@ -110,488 +179,3 @@ def test_vrt_overview_mosaic(spark, ducks):
     for (qx, qy), r in rows.items():
         if r.source == "B":
             assert qx < b_cells and qy < b_cells
-
-
-def test_focal_median_bounds(spark):
-    """Every output cell exists in the source grid (the join-back
-    guarantees it), counts its own value among the 1..9 present
-    neighbors, and n_nbr == 9 implies a full stencil."""
-    for r in entrymod.queries()["raster_focal_median"](spark, SF_DIR).collect():
-        assert 1 <= r.n_nbr <= 9, r
-
-
-def test_hypsometric_is_monotone_cdf(spark):
-    rows = entrymod.queries()["raster_hypsometric_curve"](spark, SF_DIR).collect()
-    fracs = [r.cum_area_fraction for r in sorted(rows, key=lambda r: r.bin)]
-    assert all(a <= b + 1e-12 for a, b in zip(fracs, fracs[1:]))
-    assert abs(fracs[-1] - 1.0) < 1e-12
-
-
-def test_cut_fill_balances_globally(spark):
-    """At the mean plane, total cut equals total fill exactly."""
-    rows = entrymod.queries()["raster_cut_fill"](spark, SF_DIR).collect()
-    cut = sum(r.cut_volume for r in rows)
-    fill = sum(r.fill_volume for r in rows)
-    assert abs(cut - fill) < 1e-6 * max(cut, 1.0)
-
-
-def test_color_interp_channels_bounded_and_continuous(spark):
-    """Every channel lands in [0,255]; at an exact palette stop the
-    interpolated value equals the stop's channel (continuity pin)."""
-    from gdalos_spark.functions.palette import (
-        DEFAULT_TALOS_PALETTE,
-        read_talos_palette,
-    )
-
-    pal = read_talos_palette(DEFAULT_TALOS_PALETTE)
-    rows = entrymod.queries()["raster_color_interp"](spark, SF_DIR).collect()
-    stops = {int(round(k * 100)): rgba for k, rgba in pal}
-    for r in rows:
-        for c in ("a", "r", "g", "b"):
-            assert 0 <= r[c] <= 255
-        vc = int(round(r.elev * 100))
-        if vc in stops:
-            rgba = stops[vc]
-            assert r.a == int(rgba[0:2], 16)
-            assert r.r == int(rgba[2:4], 16)
-
-
-def test_zonal_stats_bounds(spark):
-    rows = entrymod.queries()["raster_zonal_stats"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for r in rows:
-        assert r.min_elev <= r.mean_elev <= r.max_elev
-        assert r.std_elev >= 0.0
-        assert r.n_cells >= 1
-
-
-def test_morphological_opening_is_anti_extensive(spark):
-    """Opening with a symmetric 3x3 element never grows the mask: every
-    opened pixel was a mask pixel (no 'grown' class)."""
-    rows = entrymod.queries()["raster_morphology_open"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for r in rows:
-        assert r.morph_class in ("kept", "removed")
-        if r.opened == 1:
-            assert r.mask == 1
-
-
-def test_cost_distance_frontier_and_monotonicity(spark):
-    """Exactly one zero-cost source; every reached cell is within
-    COST_ROUNDS Chebyshev steps of it; costs are positive elsewhere."""
-    from gdalos_spark.operators.raster import COST_ROUNDS
-
-    rows = entrymod.queries()["raster_cost_distance"](spark, SF_DIR).collect()
-    zeros = [r for r in rows if r.cost_cents == 0]
-    assert len(zeros) == 1
-    sx, sy = zeros[0].px, zeros[0].py
-    for r in rows:
-        assert max(abs(r.px - sx), abs(r.py - sy)) <= COST_ROUNDS
-        if (r.px, r.py) != (sx, sy):
-            assert r.cost_cents > 0
-
-
-def test_utm_projection_matches_libm_reference(spark):
-    """The polynomial-trig Redfearn evaluation must agree with a straight
-    libm implementation of the same series to sub-centimeter error (the
-    polynomials replace engine trig for cross-engine bit-parity, not to
-    change the math)."""
-    import math
-
-    from gdalos_spark.operators.raster import (
-        _UTM_CELL_M,
-        crs_reproject_utm,
-    )
-
-    def utm_forward(lon, lat):
-        a = 6378137.0
-        f = 1 / 298.257223563
-        e2 = f * (2 - f)
-        ep2 = e2 / (1 - e2)
-        k0 = 0.9996
-        phi = math.radians(lat)
-        om = math.radians(lon - 33.0)
-        sf, cf = math.sin(phi), math.cos(phi)
-        t = math.tan(phi)
-        t2 = t * t
-        eta2 = ep2 * cf * cf
-        nu = a / math.sqrt(1 - e2 * sf * sf)
-        a0 = 1 - e2 / 4 - 3 * e2**2 / 64 - 5 * e2**3 / 256
-        a2 = 3 / 8 * (e2 + e2**2 / 4 + 15 * e2**3 / 128)
-        a4 = 15 / 256 * (e2**2 + 3 * e2**3 / 4)
-        a6 = 35 * e2**3 / 3072
-        m = a * (
-            a0 * phi
-            - a2 * math.sin(2 * phi)
-            + a4 * math.sin(4 * phi)
-            - a6 * math.sin(6 * phi)
-        )
-        oc = om * cf
-        e = 500000 + k0 * nu * (
-            oc
-            + oc**3 / 6 * (1 - t2 + eta2)
-            + oc**5 / 120 * (5 - 18 * t2 + t2 * t2 + 14 * eta2 - 58 * t2 * eta2)
-        )
-        n = k0 * (
-            m
-            + nu
-            * t
-            * (
-                oc**2 / 2
-                + oc**4 / 24 * (5 - t2 + 9 * eta2 + 4 * eta2 * eta2)
-                + oc**6 / 720 * (61 - 58 * t2 + t2 * t2)
-            )
-        )
-        return e, n
-
-    rows = crs_reproject_utm(spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for r in rows:
-        # the cell's min easting must sit inside its own 1 km cell, and
-        # the projected extent must agree with libm within 1 cm
-        assert r.utm_e_cell == int(r.min_easting // _UTM_CELL_M)
-        assert r.n_src >= 1
-    # spot-check the corners of the source extent against libm
-    for lon, lat in ((30.0, 30.0), (30.63, 30.63)):
-        e_ref, n_ref = utm_forward(lon, lat)
-        # the operator grid covers these corners; find the matching cell
-        ec, nc = int(e_ref // _UTM_CELL_M), int(n_ref // _UTM_CELL_M)
-        cells = {(r.utm_e_cell, r.utm_n_cell) for r in rows}
-        assert any(
-            (ec + de, nc + dn) in cells for de in (-1, 0, 1) for dn in (-1, 0, 1)
-        )
-
-
-def test_stere_series_tracks_libm_snyder(ducks):
-    """The polynomial forward projection must agree with the libm
-    Snyder 21-33/34 evaluation to sub-micrometer — the series are
-    ulp-exact on this domain, not approximations."""
-    from gdalos_spark.operators import raster as R
-
-    a = 6378137.0
-    e = math.sqrt(R._UTM_E2)
-    k0, FE, FN = 0.994, 2000000.0, 2000000.0
-
-    def snyder(lat_deg, lon_deg):
-        phi, lam = math.radians(lat_deg), math.radians(lon_deg)
-        t = math.tan(math.pi / 4 - phi / 2) * (
-            (1 + e * math.sin(phi)) / (1 - e * math.sin(phi))
-        ) ** (e / 2)
-        rho = 2 * a * k0 * t / math.sqrt((1 + e) ** (1 + e) * (1 - e) ** (1 - e))
-        return FE + rho * math.sin(lam), FN - rho * math.cos(lam)
-
-    q = (
-        "(SELECT px, py, 1 AS elev FROM (SELECT unnest(range(0, 64, 7)) AS px),"
-        " (SELECT unnest(range(0, 64, 7)) AS py))"
-    )
-    for stage in R._stere_stages():
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-    for px, py, x, y in ducks.execute(
-        f"SELECT px, py, easting, northing FROM {q}"
-    ).fetchall():
-        X, Y = snyder(30.0 + py * 0.01, 30.0 + px * 0.01)
-        assert abs(x - X) < 1e-6 and abs(y - Y) < 1e-6, (px, py)
-
-
-def test_lcc_series_tracks_libm_snyder(ducks):
-    """The extent-anchored t^n expansion must agree with libm Snyder
-    15-1..15-10 to sub-micrometer on the source extent."""
-    from gdalos_spark.operators import raster as R
-
-    a = 6378137.0
-    e = math.sqrt(R._UTM_E2)
-    p1, p2 = math.radians(30.0), math.radians(60.0)
-    phi0, lam0 = math.radians(30.0), math.radians(30.0)
-    FE = FN = 1000000.0
-    m = lambda p: math.cos(p) / math.sqrt(1 - e * e * math.sin(p) ** 2)  # noqa: E731
-    t = lambda p: math.tan(math.pi / 4 - p / 2) * (  # noqa: E731
-        (1 + e * math.sin(p)) / (1 - e * math.sin(p))
-    ) ** (e / 2)
-    n = (math.log(m(p1)) - math.log(m(p2))) / (math.log(t(p1)) - math.log(t(p2)))
-    Fc = m(p1) / (n * t(p1) ** n)
-    rho0 = a * Fc * t(phi0) ** n
-
-    def snyder(lat, lon):
-        rho = a * Fc * t(math.radians(lat)) ** n
-        g = n * (math.radians(lon) - lam0)
-        return FE + rho * math.sin(g), FN + rho0 - rho * math.cos(g)
-
-    q = (
-        "(SELECT px, py, 1 AS elev FROM (SELECT unnest(range(0, 64, 7)) AS px),"
-        " (SELECT unnest(range(0, 64, 7)) AS py))"
-    )
-    for stage in R._lcc_stages():
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-    for px, py, x, y in ducks.execute(
-        f"SELECT px, py, easting, northing FROM {q}"
-    ).fetchall():
-        X, Y = snyder(30.0 + py * 0.01, 30.0 + px * 0.01)
-        assert abs(x - X) < 1e-6 and abs(y - Y) < 1e-6, (px, py)
-
-
-def test_aea_series_tracks_libm_snyder(ducks):
-    """The authalic-q series + IEEE sqrt forward must agree with libm
-    Snyder 14-1..14-7 to sub-hundredth-of-a-micrometer on the extent."""
-    from gdalos_spark.operators import raster as R
-
-    a, e2, e = R._UTM_A, R._UTM_E2, math.sqrt(R._UTM_E2)
-
-    def m(phi):
-        return math.cos(phi) / math.sqrt(1 - e2 * math.sin(phi) ** 2)
-
-    def qf(phi):
-        return (1 - e2) * (
-            math.sin(phi) / (1 - e2 * math.sin(phi) ** 2)
-            - (1 / (2 * e))
-            * math.log((1 - e * math.sin(phi)) / (1 + e * math.sin(phi)))
-        )
-
-    p1, p2, phi0 = R._AEA_P1, R._AEA_P2, math.radians(30.0)
-    n = (m(p1) ** 2 - m(p2) ** 2) / (qf(p2) - qf(p1))
-    C = m(p1) ** 2 + n * qf(p1)
-    rho0 = a * math.sqrt(C - n * qf(phi0)) / n
-
-    def snyder(lat_deg, lon_deg):
-        phi, lam = math.radians(lat_deg), math.radians(lon_deg - 30.0)
-        rho = a * math.sqrt(C - n * qf(phi)) / n
-        th = n * lam
-        return 1e6 + rho * math.sin(th), 1e6 + rho0 - rho * math.cos(th)
-
-    q = (
-        "(SELECT px, py, 1 AS elev FROM (SELECT unnest(range(0, 64, 7)) AS px),"
-        " (SELECT unnest(range(0, 64, 7)) AS py))"
-    )
-    for stage in R._aea_stages():
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-    for px, py, x, y in ducks.execute(
-        f"SELECT px, py, easting, northing FROM {q}"
-    ).fetchall():
-        X, Y = snyder(30.0 + py * 0.01, 30.0 + px * 0.01)
-        assert abs(x - X) < 1e-7 and abs(y - Y) < 1e-7, (px, py)
-
-
-def test_dbl_lit_survives_duckdb_decimal_cast(ducks):
-    """Regression for the literal-parsing hazard _dbl_lit fixes: DuckDB's
-    DECIMAL->DOUBLE cast of the bare literal is one ulp off the correct
-    string->binary64 parse for this constant; the exponent spelling must
-    land exactly."""
-    from gdalos_spark.operators.raster import _dbl_lit
-
-    c = 0.9933056200098587
-    assert ducks.execute(f"SELECT {_dbl_lit(c)}").fetchone()[0] == c
-    # the hazard is real: the bare-literal cast path disagrees
-    assert ducks.execute(f"SELECT CAST({c!r} AS DOUBLE)").fetchone()[0] != c
-
-
-def test_fill_nodata_idw_weights_by_hand(spark):
-    """Recompute one filled hole from the raw DEM in Python: IDW with
-    integer weights 40/d^2 over unmasked Chebyshev-radius-2 neighbors."""
-    from gdalos_spark.datamodel import dem_grid
-    from gdalos_spark.operators.raster import (
-        FILL_NDV,
-        FILL_RADIUS,
-        FILL_W_LCM,
-        _FILL_MASK_MOD,
-    )
-
-    dem = {
-        (r.px, r.py): float(r.elev)
-        for r in dem_grid(spark, SF_DIR).collect()
-    }
-
-    def is_hole(px, py):
-        return (px * 7919 + py * 104729) % _FILL_MASK_MOD == 0
-
-    out = {
-        (r.px, r.py): r
-        for r in entrymod.queries()["raster_fill_nodata"](spark, SF_DIR).collect()
-    }
-    assert out
-    checked_filled = checked_empty = 0
-    for (px, py), r in out.items():
-        assert is_hole(px, py)
-        num = den = 0.0
-        n = 0
-        for dx in range(-FILL_RADIUS, FILL_RADIUS + 1):
-            for dy in range(-FILL_RADIUS, FILL_RADIUS + 1):
-                if dx == 0 and dy == 0:
-                    continue
-                key = (px + dx, py + dy)
-                if key in dem and not is_hole(*key):
-                    w = FILL_W_LCM // (dx * dx + dy * dy)
-                    num += dem[key] * w
-                    den += w
-                    n += 1
-        assert r.n_nbrs == n
-        if n:
-            assert abs(r.fill_val - num / den) < 1e-9, (px, py)
-            assert r.true_val == dem[(px, py)]
-            checked_filled += 1
-        else:
-            assert r.fill_val == FILL_NDV
-            checked_empty += 1
-    assert checked_filled > 0
-
-
-def test_flow_accumulation_conserves_path_steps(spark):
-    """Cross-operator conservation: every landing counted by the
-    accumulation is exactly one step of one cell's downstream walk, so
-    sum(flow_acc) must equal sum(path_steps) from the pointer-jumping
-    key. Sources (no parents) must carry zero accumulation."""
-    acc = entrymod.queries()["raster_flow_accumulation"](spark, SF_DIR).collect()
-    paths = entrymod.queries()["raster_flow_path_length"](spark, SF_DIR).collect()
-    assert sum(r.flow_acc for r in acc) == sum(r.path_steps for r in paths)
-    for r in acc:
-        if r.n_parents == 0:
-            assert r.flow_acc == 0
-        else:
-            assert r.flow_acc >= r.n_parents
-
-
-def test_grid_idw_by_hand(spark, ducks):
-    """Recompute a handful of cells from the raw sampled points in
-    Python: exact centi-cell distances, integerized weights, radius
-    cut, NDV for empty neighborhoods."""
-    from gdalos_spark.operators.raster import (
-        IDW_NDV,
-        IDW_RADIUS_CENTI,
-        IDW_SAMPLE_MOD,
-        IDW_W_SCALE,
-    )
-
-    pts = ducks.execute(
-        f"""SELECT CAST(event_id * 7919 % 6400 AS BIGINT),
-                   CAST(event_id * 104729 % 6400 AS BIGINT),
-                   CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
-            FROM events WHERE event_id % {IDW_SAMPLE_MOD} = 0"""
-    ).fetchall()
-    out = {
-        (r.px, r.py): r
-        for r in entrymod.queries()["raster_grid_idw"](spark, SF_DIR).collect()
-    }
-    assert len(out) == 64 * 64
-    r2 = IDW_RADIUS_CENTI * IDW_RADIUS_CENTI
-    n_filled = n_empty = 0
-    for px in range(0, 64, 11):
-        for py in range(0, 64, 11):
-            cx, cy = px * 100 + 50, py * 100 + 50
-            wsum = vsum = n = 0
-            for xi, yi, vc in pts:
-                d2 = (xi - cx) ** 2 + (yi - cy) ** 2
-                if d2 <= r2:
-                    w = IDW_W_SCALE if d2 == 0 else IDW_W_SCALE // d2
-                    wsum += w
-                    vsum += w * vc
-                    n += 1
-            r = out[(px, py)]
-            assert r.n_pts == n, (px, py)
-            if n:
-                assert abs(r.idw_val - (vsum / wsum) / 100.0) < 1e-9
-                n_filled += 1
-            else:
-                assert r.idw_val == IDW_NDV
-                n_empty += 1
-    assert n_filled > 0
-
-
-def test_stream_order_strahler_semantics(spark):
-    """Recompute Strahler by topological iteration in Python from the
-    flow field and compare cell-for-cell; also pin the classic Strahler
-    bound (order k needs >= 2^(k-1) cells upstream) against the
-    accumulation key."""
-    fd = {
-        (r.px, r.py): r.flow_dir
-        for r in entrymod.queries()["raster_flow_direction"](spark, SF_DIR).collect()
-    }
-    from gdalos_spark.operators.raster import _D8
-
-    step = {code: (dx, dy) for dx, dy, code in _D8}
-    parents = {}
-    for (px, py), d in fd.items():
-        if d:
-            t = (px + step[d][0], py + step[d][1])
-            if t in fd:
-                parents.setdefault(t, []).append((px, py))
-    order = {c: 1 for c in fd}
-    for _ in range(64):
-        new = {}
-        for c in fd:
-            ps = parents.get(c)
-            if not ps:
-                new[c] = 1
-            else:
-                mx = max(order[p] for p in ps)
-                k = sum(1 for p in ps if order[p] == mx)
-                new[c] = mx + 1 if k >= 2 else mx
-        if new == order:
-            break
-        order = new
-    got = {
-        (r.px, r.py): r
-        for r in entrymod.queries()["raster_stream_order"](spark, SF_DIR).collect()
-    }
-    assert set(got) == set(fd)
-    for c, r in got.items():
-        assert r.strahler == order[c], (c, r.strahler, order[c])
-        assert r.n_parents == len(parents.get(c, []))
-    acc = {
-        (r.px, r.py): r.flow_acc
-        for r in entrymod.queries()["raster_flow_accumulation"](spark, SF_DIR).collect()
-    }
-    for c, r in got.items():
-        assert 2 ** (r.strahler - 1) <= acc[c] + 1, c
-    assert max(r.strahler for r in got.values()) >= 2  # channels actually merge
-
-
-def test_raster_expand_rgb_consistent_with_color_relief(ducks):
-    """Expanded channels must reassemble the exact AARRGGBB string
-    raster_color_relief bins to, pixel for pixel."""
-    rel = {
-        (r[0], r[1]): r[4]
-        for r in ducks.execute(entrymod.oracle_sql()["raster_color_relief"]).fetchall()
-    }
-    rows = ducks.execute(entrymod.oracle_sql()["raster_expand_rgb"]).fetchall()
-    assert rows
-    from gdalos_spark.operators.raster import PALETTE
-
-    for px, py, idx, r, g, b, a in rows:
-        assert f"{a:02X}{r:02X}{g:02X}{b:02X}" == rel[(px, py)]
-        assert PALETTE[idx][1] == rel[(px, py)]
-
-
-def test_raster_resample_mode_semantics(ducks):
-    """The winner really is the max-weight palette class per target
-    (ties to the smallest index), recomputed independently from the
-    average key's contrib weights and the expand_rgb class map."""
-    from collections import defaultdict
-
-    cls_of = {
-        (r[0], r[1]): r[2]
-        for r in ducks.execute(entrymod.oracle_sql()["raster_expand_rgb"]).fetchall()
-    }
-    votes: dict[tuple, dict] = defaultdict(lambda: defaultdict(int))
-    # re-derive the exact thirds overlap weights per (target, source)
-    n_t = max(r[0] for r in ducks.execute(
-        entrymod.oracle_sql()["raster_resample_mode"]).fetchall()) + 1
-    for tx in range(n_t):
-        for ty in range(n_t):
-            for dx in range(4):
-                for dy in range(4):
-                    cx, cy = (8 * tx) // 3 + dx, (8 * ty) // 3 + dy
-                    wx = max(0, min(8 * tx + 8, 3 * cx + 3) - max(8 * tx, 3 * cx))
-                    wy = max(0, min(8 * ty + 8, 3 * cy + 3) - max(8 * ty, 3 * cy))
-                    if wx * wy and (cx, cy) in cls_of:
-                        votes[(tx, ty)][cls_of[(cx, cy)]] += wx * wy
-    got = {
-        (r[0], r[1]): (r[2], r[3], r[4])
-        for r in ducks.execute(entrymod.oracle_sql()["raster_resample_mode"]).fetchall()
-    }
-    assert got
-    for key, v in votes.items():
-        best = min(sorted(v.items(), key=lambda kv: (-kv[1], kv[0]))[:1])
-        cls, w = best
-        assert got[key] == (cls, w, len(v)), (key, got[key], best)
-    assert set(got) == set(votes)

@@ -1,10 +1,33 @@
-"""Relational-family tests (SURVEY §2 #23-27): the relational,
-temporal, graph and tabular-ingest operators. Every key's oracle
-compare runs in tests/test_catalog.py; these pin semantics."""
+"""Oracle-parity tests for the relational core (SURVEY §2 #23-27)."""
+
+import pytest
 
 import __spark_entry__ as entrymod
 from gdalos_spark.session import scoped_conf
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import assert_matches_oracle, assert_record_matches_oracle
+
+RELATIONAL_KEYS = [
+    "pricing_summary",
+    "top_orders",
+    "region_volume",
+    "events_sessionize",
+    "events_windowed_agg",
+    "skewed_agg_salted",
+    "order_priority_counts",
+    "customer_order_distribution",
+    "promo_revenue",
+    "large_orders",
+    "running_totals",
+    "events_json_extract",
+    "pricing_rollup",
+    "events_type_pivot",
+    "job_schedule_order",
+]
+
+
+@pytest.mark.parametrize("key", RELATIONAL_KEYS)
+def test_relational_matches_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)
 
 
 def test_events_type_pivot_is_zone_free(spark, ducks):
@@ -23,6 +46,18 @@ def test_events_type_pivot_is_zone_free(spark, ducks):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_skewed_agg_salted_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "skewed_agg_salted")
+
+
+def test_raster_calc_multi_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_calc_multi")
+
+
+def test_job_skip_overwrite_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "job_skip_overwrite")
 
 
 def test_job_skip_overwrite_contract(spark):
@@ -45,12 +80,24 @@ def test_job_skip_overwrite_contract(spark):
     assert orders == list(range(1, len(orders) + 1))
 
 
+def test_disjunctive_revenue_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "disjunctive_revenue")
+
+
+def test_export_jsonl_shards_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "export_jsonl_shards")
+
+
 def test_disjunctive_revenue_total_is_arm_sum(spark):
     import __spark_entry__ as E
     from tests.conftest import SF_DIR
 
     rows = {r.arm: r for r in E.queries()["disjunctive_revenue"](spark, SF_DIR).collect()}
     assert rows[0].n_items == sum(r.n_items for a, r in rows.items() if a != 0)
+
+
+def test_events_funnel_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "events_funnel")
 
 
 def test_events_funnel_step_ordering(spark):
@@ -67,6 +114,10 @@ def test_events_funnel_step_ordering(spark):
             assert r.t3_sec == -1
 
 
+def test_events_retention_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "events_retention")
+
+
 def test_events_retention_bounds(spark):
     import __spark_entry__ as E
     from tests.conftest import SF_DIR
@@ -77,401 +128,3 @@ def test_events_retention_bounds(spark):
         assert 0 < r.n_active <= r.cohort_n
         assert 0.0 < r.retention <= 1.0
         assert r.offset_wk >= 0
-
-
-def test_scd2_intervals_partition_time(spark):
-    """Per user: intervals are disjoint, ordered, each closed interval's
-    valid_to equals the next valid_from, and exactly one open row."""
-    rows = entrymod.queries()["scd2_apply"](spark, SF_DIR).collect()
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r.user_id, []).append(r)
-    for user, ivs in by_user.items():
-        ivs.sort(key=lambda r: r.valid_from)
-        assert sum(r.is_current for r in ivs) == 1
-        for a, b in zip(ivs, ivs[1:]):
-            assert a.valid_to == b.valid_from, (user, a, b)
-        assert ivs[-1].valid_to == -1
-
-
-def test_merge_actions_partition_keys(spark):
-    """update+keep rows == target cardinality; insert rows == distinct
-    surrogate keys; the three actions partition the merged key space."""
-    from gdalos_spark.datamodel import load
-
-    res = {r.action: r for r in entrymod.queries()["merge_upsert_plan"](spark, SF_DIR).collect()}
-    n_target = load(spark, SF_DIR, "customer").count()
-    assert res["update"].n_rows + res["keep"].n_rows == n_target
-    assert res["insert"].n_rows > 0
-    assert res["insert"].old_balance == 0.0
-    assert res["keep"].applied_delta == 0.0
-
-
-def test_triangle_census_consistency(spark):
-    r = entrymod.queries()["supplier_triangles"](spark, SF_DIR).collect()[0]
-    assert r.n_triangles >= 0
-    assert r.n_wedges >= r.n_triangles
-    if r.n_wedges:
-        assert 0.0 <= r.closure_ratio <= 3.0
-
-
-def test_pagerank_ranks_positive_and_bounded(spark):
-    rows = entrymod.queries()["pagerank_exact"](spark, SF_DIR).collect()
-    assert rows, "graph should be non-empty"
-    for r in rows:
-        # damped rank >= the teleport floor 0.15, and micro-unit
-        # truncation only ever loses mass
-        assert 0.15 <= r.rank, r
-        assert r.degree >= 1
-
-
-def test_cusum_batch_properties(spark):
-    """CUSUM is non-negative by construction; alarm count <= events;
-    the first alarm event exists iff n_alarms > 0."""
-    for r in entrymod.queries()["events_cusum_alarm"](spark, SF_DIR).collect():
-        assert r.peak_cusum >= 0.0, r
-        assert 0 <= r.n_alarms <= r.n_events, r
-        assert (r.first_alarm_event == -1) == (r.n_alarms == 0), r
-
-
-def test_markov_rows_are_stochastic(spark):
-    rows = entrymod.queries()["events_markov_transitions"](spark, SF_DIR).collect()
-    by_from = {}
-    for r in rows:
-        by_from.setdefault(r.from_type, []).append(r)
-    for ft, rs in by_from.items():
-        assert abs(sum(r.p for r in rs) - 1.0) < 1e-9, ft
-
-
-def test_rfm_buckets_complete(spark):
-    rows = entrymod.queries()["customer_rfm_scores"](spark, SF_DIR).collect()
-    for r in rows:
-        assert 1 <= r.r <= 5 and 1 <= r.f <= 5 and 1 <= r.m <= 5
-
-
-def test_snapshot_diff_partitions_key_space(spark):
-    """added/removed/changed/unchanged partition the union of both
-    snapshot key sets; changed rows all carry the +100-cent bump."""
-    rows = {r.change_class: r for r in entrymod.queries()["snapshot_diff"](spark, SF_DIR).collect()}
-    assert set(rows) <= {"added", "removed", "changed", "unchanged"}
-    if "changed" in rows:
-        assert rows["changed"].delta_cents == 100 * rows["changed"].n_rows
-    if "unchanged" in rows:
-        assert rows["unchanged"].delta_cents == 0
-
-
-def test_skyline_is_pareto_front(spark):
-    """No skyline point may dominate another skyline point."""
-    rows = entrymod.queries()["parts_skyline"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for p in rows:
-        for q in rows:
-            if p.p_partkey == q.p_partkey:
-                continue
-            dominates = (
-                q.p_retailprice <= p.p_retailprice
-                and q.p_size >= p.p_size
-                and (q.p_retailprice < p.p_retailprice or q.p_size > p.p_size)
-            )
-            assert not dominates
-
-
-def test_bloom_never_misses_and_bounds_fp(spark):
-    """The Bloom guarantee: pass set supersets the true semi-join set;
-    fp accounting is internally consistent."""
-    r = entrymod.queries()["bloom_join_prune"](spark, SF_DIR).collect()[0]
-    assert r.rows_pass_bloom >= r.rows_true_semi
-    assert r.false_positives == r.rows_pass_bloom - r.rows_true_semi
-    assert 0.0 <= r.fp_rate <= 1.0
-    assert r.rows_total >= r.rows_pass_bloom
-
-
-def test_windowed_funnel_tighter_than_unbounded(spark):
-    """The conversion-window funnel can never count MORE users at steps
-    2/3 than the unbounded funnel."""
-    win = {r.step: r.n_users for r in entrymod.queries()["events_funnel_windowed"](spark, SF_DIR).collect()}
-    unb = entrymod.queries()["events_funnel"](spark, SF_DIR).collect()
-    n2 = sum(1 for r in unb if r.stage >= 2)
-    n3 = sum(1 for r in unb if r.stage >= 3)
-    assert win[2] <= n2
-    assert win[3] <= n3
-    assert win[3] <= win[2] <= win[1]
-
-
-def test_ohlc_bars_invariants(spark):
-    """low <= open/close <= high; volume and count positive; bar starts
-    are hour-aligned."""
-    rows = entrymod.queries()["events_ohlc_bars"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for r in rows:
-        assert r.low <= r.open <= r.high
-        assert r.low <= r.close <= r.high
-        assert r.n_events >= 1
-        assert r.bar_start_s % 3600 == 0
-
-
-def test_incremental_merge_is_consistent(spark):
-    """The partial-agg merge must equal the full recompute on every
-    group — the op is its own audit."""
-    rows = entrymod.queries()["incremental_agg_update"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    assert all(r.consistent for r in rows)
-
-
-def test_zonemap_accounting(spark):
-    r = entrymod.queries()["zonemap_prune_report"](spark, SF_DIR).collect()[0]
-    assert r.files_pruned <= r.n_files
-    assert r.rows_scanned <= r.rows_total
-    assert 0.0 <= r.scan_fraction <= 1.0
-
-
-def test_streaks_accounting(spark):
-    """Streak lengths partition active days; longest <= total."""
-    rows = entrymod.queries()["user_activity_streaks"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for r in rows:
-        assert 1 <= r.longest_streak <= r.n_active_days
-        assert r.n_streaks <= r.n_active_days
-
-
-def test_attribution_partitions_purchases(spark):
-    """Every purchase lands in exactly one channel bucket; channels are
-    the three touch types plus 'direct'."""
-    from gdalos_spark.datamodel import load
-    from gdalos_spark.operators.temporal import ATTR_CHANNELS
-
-    rows = entrymod.queries()["attribution_last_touch"](spark, SF_DIR).collect()
-    assert {r.channel for r in rows} <= set(ATTR_CHANNELS) | {"direct"}
-    total = load(spark, SF_DIR, "events").where("event_type = 'purchase'").count()
-    assert sum(r.n_purchases for r in rows) == total
-
-
-def test_item_item_symmetric_cosine(spark):
-    """cosine(a,b) must equal cosine(b,a) when both directions appear,
-    and lie in (0, 1]."""
-    rows = entrymod.queries()["item_item_similarity"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    sim = {(r.part, r.neighbor): r.cosine for r in rows}
-    for (a, b), c in sim.items():
-        assert 0.0 < c <= 1.0
-        if (b, a) in sim:
-            assert sim[(b, a)] == c
-
-
-def test_layout_advisor_orders_layouts_sensibly(spark):
-    """Date-sorted files must skip at least as well as the natural
-    order for a date predicate; z-order lands between (or ties)."""
-    rows = {r.layout: r for r in entrymod.queries()["layout_advisor_report"](spark, SF_DIR).collect()}
-    assert set(rows) == {"natural_orderkey", "shipdate_sorted", "zorder_day_key"}
-    nat, dat, z = (
-        rows["natural_orderkey"].scan_fraction,
-        rows["shipdate_sorted"].scan_fraction,
-        rows["zorder_day_key"].scan_fraction,
-    )
-    assert dat <= z <= nat or dat <= nat
-    for r in rows.values():
-        assert 0.0 <= r.scan_fraction <= 1.0
-        assert r.files_scanned <= r.n_files
-
-
-def test_alert_debounce_episode_invariants(spark):
-    from gdalos_spark.operators.temporal import DEBOUNCE_MIN_RUN
-
-    rows = entrymod.queries()["events_alert_debounce"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for r in rows:
-        assert r.end_day - r.start_day + 1 == r.run_len
-        assert r.fired == (r.run_len >= DEBOUNCE_MIN_RUN)
-        assert r.peak_volume >= 1
-
-
-def test_kcore_members_meet_degree_floor(spark):
-    """Every surviving vertex keeps degree >= k within the core (the
-    defining property of a k-core)."""
-    from gdalos_spark.operators.graph import KCORE_K
-
-    rows = entrymod.queries()["supplier_kcore"](spark, SF_DIR).collect()
-    for r in rows:
-        assert r.core_degree >= KCORE_K
-
-
-def test_resample_grid_bounds_and_interp(spark):
-    """Every grid point lies inside its user's [min, max] event span on
-    the 6-hour lattice, and interpolated values sit within the corpus
-    value range (a convex combination can't extrapolate)."""
-    from pyspark.sql import functions as F
-
-    from gdalos_spark.datamodel import load
-    from gdalos_spark.operators.temporal import GRID_STEP_S, events_resample_interpolate
-
-    out = events_resample_interpolate(spark, SF_DIR)
-    ev = load(spark, SF_DIR, "events").select(
-        "user_id", F.col("ts").cast("long").alias("t"), "value"
-    )
-    span = ev.groupBy("user_id").agg(F.min("t").alias("t0"), F.max("t").alias("t1"))
-    joined = out.join(span, "user_id")
-    assert joined.filter(
-        (F.col("grid_ts") < F.col("t0")) | (F.col("grid_ts") > F.col("t1"))
-    ).count() == 0
-    assert out.filter(F.col("grid_ts") % GRID_STEP_S != 0).count() == 0
-    vmin, vmax = ev.agg(F.min("value"), F.max("value")).first()
-    bad = out.filter(
-        (F.col("v_interp") < vmin - 1e-9) | (F.col("v_interp") > vmax + 1e-9)
-    )
-    assert bad.count() == 0
-
-
-def test_csv_ingest_flags_exactly_the_corrupt_rows(spark):
-    """The PERMISSIVE parser must flag exactly the rows the staging
-    corrupted (event_id % 97 == 13) — no silent nulls, no over-flagging."""
-    from pyspark.sql import functions as F
-
-    from gdalos_spark.datamodel import load
-    from gdalos_spark.sources.csv_ingest import (
-        CORRUPT_MOD,
-        CORRUPT_REM,
-        csv_ingest_audit,
-    )
-
-    # consume the FULL audit rows (as the driver does): a projection down
-    # to n_corrupt alone legitimately re-prunes the CSV parse to the
-    # corrupt column and reports zero — the exact trap the operator's
-    # docstring records
-    rows = csv_ingest_audit(spark, SF_DIR).collect()
-    flagged = sum(r.n_corrupt for r in rows)
-    expected = (
-        load(spark, SF_DIR, "events")
-        .filter((F.col("event_id") % CORRUPT_MOD) == CORRUPT_REM)
-        .count()
-    )
-    assert flagged == expected
-    assert sum(r.n_rows for r in rows) == load(spark, SF_DIR, "events").count()
-
-
-def test_seasonal_decompose_oracle_and_additivity(spark, ducks):
-    """Oracle parity plus the defining identity: wherever all three
-    components exist, volume == trend + seasonal + residual to micro-unit
-    exactness."""
-    from gdalos_spark.operators.temporal import events_seasonal_decompose
-
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["events_seasonal_decompose"],
-        entrymod.oracle_sql()["events_seasonal_decompose"],
-    )
-    for r in events_seasonal_decompose(spark, SF_DIR).collect():
-        if r.trend is not None and r.seasonal is not None:
-            assert abs(r.volume - (r.trend + r.seasonal + r.residual)) < 1e-6
-
-
-def test_resample_short_span_users_dont_crash(spark, tmp_path):
-    """A user whose whole event span sits between two grid lines must
-    contribute zero grid rows (generate_series semantics), not crash
-    Spark's sequence() with illegal boundaries."""
-    from pyspark.sql import functions as F
-
-    from gdalos_spark.operators.temporal import GRID_STEP_S, events_resample_interpolate
-
-    d = str(tmp_path)
-    df = spark.createDataFrame(
-        [(1, 1, "a", 1.5, "x", 1000), (2, 1, "a", 2.5, "x", 2000),
-         (3, 2, "a", 3.0, "x", GRID_STEP_S * 5)],
-        "event_id long, user_id long, event_type string, value double, props string, es long",
-    ).select(
-        "event_id",
-        F.timestamp_micros(F.col("es") * 1_000_000).alias("ts"),
-        "user_id", "event_type", "value", "props",
-    )
-    df.write.mode("overwrite").parquet(d + "/events.parquet")
-    rows = events_resample_interpolate(spark, d).collect()
-    assert [(r.user_id, r.grid_ts, r.v_interp) for r in rows] == [
-        (2, GRID_STEP_S * 5, 3.0)
-    ]
-
-
-def test_jsonl_ingest_oracle_and_torn_rows_lose_all_fields(spark, ducks):
-    """Oracle parity, plus the JSON-vs-CSV semantic the operator
-    certifies: a torn object contributes NOTHING (all fields null, so
-    the corrupt group's sums are zero/null) while CSV salvages intact
-    fields."""
-    from gdalos_spark.sources.csv_ingest import jsonl_ingest_audit
-
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["jsonl_ingest_audit"],
-        entrymod.oracle_sql()["jsonl_ingest_audit"],
-    )
-    rows = {r.event_type: r for r in jsonl_ingest_audit(spark, SF_DIR).collect()}
-    corrupt = rows.get("_corrupt")
-    assert corrupt is not None and corrupt.n_corrupt == corrupt.n_rows > 0
-    assert corrupt.id_sum is None and corrupt.good_value_sum == 0.0
-
-
-def test_layout_advisor_sampled_agrees_with_exact(spark, ducks):
-    """The sampled-boundary advisor is oracle-gated (deterministic md5
-    sample) AND close to the exact three-pass report: boundary error
-    only moves rows between adjacent files, so scan_fraction differs by
-    at most a couple of file-widths, and the layout RANKING — the thing
-    the advisor exists to decide — matches."""
-    from gdalos_spark.operators.relational import (
-        layout_advisor_report,
-        layout_advisor_sampled,
-    )
-
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["layout_advisor_sampled"],
-        entrymod.oracle_sql()["layout_advisor_sampled"],
-    )
-    exact = {r.layout: r for r in layout_advisor_report(spark, SF_DIR).collect()}
-    samp = {r.layout: r for r in layout_advisor_sampled(spark, SF_DIR).collect()}
-    assert set(exact) == set(samp) == {
-        "natural_orderkey", "shipdate_sorted", "zorder_day_key",
-    }
-    for name in exact:
-        assert abs(exact[name].scan_fraction - samp[name].scan_fraction) < 0.08
-    rank = lambda d: sorted(d, key=lambda n: d[n].scan_fraction)  # noqa: E731
-    assert rank(exact) == rank(samp)
-
-
-def test_markov_stationary_is_the_chain_fixpoint(spark):
-    """Recompute the power iteration in Python ints from the transition
-    counts and compare micro-for-micro; also sanity: the mass sums to
-    ~1 (floor drop < k micro per round) and the iterate is (near) a
-    fixpoint of one more application."""
-    from gdalos_spark.operators.relational import (
-        _MK_MICRO,
-        MARKOV_POWER_ROUNDS,
-    )
-
-    trans = entrymod.queries()["events_markov_transitions"](spark, SF_DIR).collect()
-    counts = {}
-    row_total = {}
-    for r in trans:
-        if r.from_type == "_START":
-            continue
-        counts[(r.from_type, r.to_type)] = r.n
-        row_total[r.from_type] = row_total.get(r.from_type, 0) + r.n
-    states = sorted(row_total)
-    pi = {s: _MK_MICRO // len(states) for s in states}
-    for _ in range(MARKOV_POWER_ROUNDS):
-        new = {}
-        for (a, b), n in counts.items():
-            new[b] = new.get(b, 0) + (pi.get(a, 0) * n) // row_total[a]
-        pi = new
-    got = {r.state: r for r in entrymod.queries()["markov_stationary"](spark, SF_DIR).collect()}
-    assert set(got) == set(pi)
-    for s in pi:
-        assert got[s].pi_micro == pi[s], (s, got[s].pi_micro, pi[s])
-    total = sum(r.pi_micro for r in got.values())
-    drop_bound = MARKOV_POWER_ROUNDS * len(states) * len(states)
-    assert _MK_MICRO - drop_bound <= total <= _MK_MICRO
-    # near-fixpoint: one more application moves each state < 1e-3
-    nxt = {}
-    for (a, b), n in counts.items():
-        nxt[b] = nxt.get(b, 0) + (pi.get(a, 0) * n) // row_total[a]
-    for s in pi:
-        assert abs(nxt.get(s, 0) - pi[s]) < 1e-3 * _MK_MICRO, s

@@ -4,7 +4,7 @@ stereographic reprojection, and the stream-stream LEFT OUTER join."""
 import math
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_record_matches_oracle
 
 
 # --- geo_distance_ellipsoidal ---------------------------------------------
@@ -52,13 +52,8 @@ def _vincenty_m(lat1, lon1, lat2, lon2):
     return b * A * (sig - dsig)
 
 
-def test_geo_ellipsoidal_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["geo_distance_ellipsoidal"],
-        entrymod.oracle_sql()["geo_distance_ellipsoidal"],
-    )
+def test_geo_ellipsoidal_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "geo_distance_ellipsoidal")
 
 
 def test_geo_ellipsoidal_beats_sphere_vs_vincenty(spark):
@@ -82,13 +77,8 @@ def test_geo_ellipsoidal_beats_sphere_vs_vincenty(spark):
 # --- crs_reproject_stere ----------------------------------------------------
 
 
-def test_crs_stere_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["crs_reproject_stere"],
-        entrymod.oracle_sql()["crs_reproject_stere"],
-    )
+def test_crs_stere_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "crs_reproject_stere")
 
 
 def test_stere_series_tracks_libm_snyder(ducks):
@@ -126,13 +116,8 @@ def test_stere_series_tracks_libm_snyder(ducks):
 # --- crs_reproject_lcc --------------------------------------------------
 
 
-def test_crs_lcc_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["crs_reproject_lcc"],
-        entrymod.oracle_sql()["crs_reproject_lcc"],
-    )
+def test_crs_lcc_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "crs_reproject_lcc")
 
 
 def test_lcc_series_tracks_libm_snyder(ducks):
@@ -175,13 +160,8 @@ def test_lcc_series_tracks_libm_snyder(ducks):
 # --- streaming_stream_outer_join --------------------------------------------
 
 
-def test_streaming_outer_join_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["streaming_stream_outer_join"],
-        entrymod.oracle_sql()["streaming_stream_outer_join"],
-    )
+def test_streaming_outer_join_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "streaming_stream_outer_join")
 
 
 def test_streaming_outer_join_semantics(spark, ducks):

@@ -5,19 +5,14 @@ stream-stream FULL OUTER join."""
 import math
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_record_matches_oracle
 
 
 # --- crs_reproject_aea ------------------------------------------------------
 
 
-def test_crs_aea_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["crs_reproject_aea"],
-        entrymod.oracle_sql()["crs_reproject_aea"],
-    )
+def test_crs_aea_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "crs_reproject_aea")
 
 
 def test_aea_series_tracks_libm_snyder(ducks):
@@ -78,13 +73,8 @@ def test_dbl_lit_survives_duckdb_decimal_cast(ducks):
 # --- geodesic_destination ---------------------------------------------------
 
 
-def test_geodesic_destination_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["geodesic_destination"],
-        entrymod.oracle_sql()["geodesic_destination"],
-    )
+def test_geodesic_destination_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "geodesic_destination")
 
 
 def test_destination_tracks_libm_direct(spark):
@@ -122,13 +112,8 @@ def test_destination_tracks_libm_direct(spark):
 # --- dedup_containment ------------------------------------------------------
 
 
-def test_dedup_containment_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["dedup_containment"],
-        entrymod.oracle_sql()["dedup_containment"],
-    )
+def test_dedup_containment_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "dedup_containment")
 
 
 def test_containment_is_directional_and_thresholded(spark):
@@ -158,13 +143,8 @@ def test_containment_catches_what_jaccard_scores_low(spark):
 # --- raster_fill_nodata -----------------------------------------------------
 
 
-def test_fill_nodata_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["raster_fill_nodata"],
-        entrymod.oracle_sql()["raster_fill_nodata"],
-    )
+def test_fill_nodata_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_fill_nodata")
 
 
 def test_fill_nodata_idw_weights_by_hand(spark):
@@ -220,13 +200,8 @@ def test_fill_nodata_idw_weights_by_hand(spark):
 # --- streaming_stream_full_outer_join ---------------------------------------
 
 
-def test_stream_full_outer_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["streaming_stream_full_outer_join"],
-        entrymod.oracle_sql()["streaming_stream_full_outer_join"],
-    )
+def test_stream_full_outer_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "streaming_stream_full_outer_join")
 
 
 def test_stream_full_outer_has_both_null_tails(spark):
@@ -253,13 +228,8 @@ def test_stream_full_outer_has_both_null_tails(spark):
 # --- raster_flow_accumulation ------------------------------------------------
 
 
-def test_flow_accumulation_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["raster_flow_accumulation"],
-        entrymod.oracle_sql()["raster_flow_accumulation"],
-    )
+def test_flow_accumulation_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_flow_accumulation")
 
 
 def test_flow_accumulation_conserves_path_steps(spark):
@@ -280,13 +250,8 @@ def test_flow_accumulation_conserves_path_steps(spark):
 # --- raster_grid_idw ---------------------------------------------------------
 
 
-def test_grid_idw_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["raster_grid_idw"],
-        entrymod.oracle_sql()["raster_grid_idw"],
-    )
+def test_grid_idw_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_grid_idw")
 
 
 def test_grid_idw_by_hand(spark, ducks):
@@ -338,13 +303,8 @@ def test_grid_idw_by_hand(spark, ducks):
 # --- embedding_random_projection ---------------------------------------------
 
 
-def test_random_projection_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["embedding_random_projection"],
-        entrymod.oracle_sql()["embedding_random_projection"],
-    )
+def test_random_projection_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "embedding_random_projection")
 
 
 def test_random_projection_preserves_distances(spark):
@@ -381,13 +341,8 @@ def test_jl_sign_matrix_is_balanced():
 # --- raster_stream_order -----------------------------------------------------
 
 
-def test_stream_order_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["raster_stream_order"],
-        entrymod.oracle_sql()["raster_stream_order"],
-    )
+def test_stream_order_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_stream_order")
 
 
 def test_stream_order_strahler_semantics(spark):
@@ -442,13 +397,8 @@ def test_stream_order_strahler_semantics(spark):
 # --- markov_stationary -------------------------------------------------------
 
 
-def test_markov_stationary_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["markov_stationary"],
-        entrymod.oracle_sql()["markov_stationary"],
-    )
+def test_markov_stationary_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "markov_stationary")
 
 
 def test_markov_stationary_is_the_chain_fixpoint(spark):

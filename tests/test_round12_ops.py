@@ -4,7 +4,7 @@ key and the scalar_chain transcendental bank it rides on."""
 import math
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_record_matches_oracle
 
 
 # --- scalar_chain primitives vs libm ---------------------------------------
@@ -60,13 +60,8 @@ def test_chain_leveling_respects_dependencies():
 # --- radio_itm_loss ---------------------------------------------------------
 
 
-def test_radio_itm_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["radio_itm_loss"],
-        entrymod.oracle_sql()["radio_itm_loss"],
-    )
+def test_radio_itm_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "radio_itm_loss")
 
 
 def _itm_libm_h0f(r, et):
@@ -368,13 +363,8 @@ def test_radio_itm_physics_sane(ducks):
 # --- ovr_write_manifest ------------------------------------------------------
 
 
-def test_ovr_write_manifest_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["ovr_write_manifest"],
-        entrymod.oracle_sql()["ovr_write_manifest"],
-    )
+def test_ovr_write_manifest_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "ovr_write_manifest")
 
 
 def test_ovr_pair_roundtrip_and_skip(spark, tmp_path):
@@ -421,13 +411,8 @@ def test_ovr_pair_roundtrip_and_skip(spark, tmp_path):
 # --- raster_expand_rgb -------------------------------------------------------
 
 
-def test_raster_expand_rgb_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["raster_expand_rgb"],
-        entrymod.oracle_sql()["raster_expand_rgb"],
-    )
+def test_raster_expand_rgb_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_expand_rgb")
 
 
 def test_raster_expand_rgb_consistent_with_color_relief(ducks):
@@ -446,13 +431,8 @@ def test_raster_expand_rgb_consistent_with_color_relief(ducks):
         assert PALETTE[idx][1] == rel[(px, py)]
 
 
-def test_raster_resample_mode_matches_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["raster_resample_mode"],
-        entrymod.oracle_sql()["raster_resample_mode"],
-    )
+def test_raster_resample_mode_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_resample_mode")
 
 
 def test_raster_resample_mode_semantics(ducks):
@@ -512,7 +492,5 @@ import pytest
         "raster_resample_nearest",
     ],
 )
-def test_resample_kernels_match_oracle(spark, ducks, key):
-    assert_matches_oracle(
-        spark, ducks, entrymod.queries()[key], entrymod.oracle_sql()[key]
-    )
+def test_resample_kernels_match_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)

@@ -6,7 +6,7 @@ k-anonymity, snapshot diff, DBSCAN, and the real-codec multimodal ops
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_record_matches_oracle
 
 NEW_KEYS = [
     "bpe_train_merges",
@@ -45,10 +45,8 @@ NEW_KEYS = [
 
 
 @pytest.mark.parametrize("key", NEW_KEYS)
-def test_matches_oracle(spark, ducks, key):
-    assert_matches_oracle(
-        spark, ducks, entrymod.queries()[key], entrymod.oracle_sql()[key]
-    )
+def test_matches_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)
 
 
 def test_bpe_merges_are_ranked_and_shrink(spark):

@@ -5,7 +5,7 @@ viewshed CalcOperation combine modes."""
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_record_matches_oracle
 
 NEW_KEYS = [
     "crs_reproject_utm",
@@ -14,10 +14,8 @@ NEW_KEYS = [
 
 
 @pytest.mark.parametrize("key", NEW_KEYS)
-def test_matches_oracle(spark, ducks, key):
-    assert_matches_oracle(
-        spark, ducks, entrymod.queries()[key], entrymod.oracle_sql()[key]
-    )
+def test_matches_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)
 
 
 def test_utm_projection_matches_libm_reference(spark):

@@ -6,7 +6,7 @@ three-batch watermark audit."""
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_matches_oracle, assert_record_matches_oracle
 
 NEW_KEYS = [
     "events_resample_interpolate",
@@ -18,10 +18,8 @@ NEW_KEYS = [
 
 
 @pytest.mark.parametrize("key", NEW_KEYS)
-def test_matches_oracle(spark, ducks, key):
-    assert_matches_oracle(
-        spark, ducks, entrymod.queries()[key], entrymod.oracle_sql()[key]
-    )
+def test_matches_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)
 
 
 def test_resample_grid_bounds_and_interp(spark):
@@ -124,22 +122,12 @@ def test_watermark_audit_drops_are_real(spark, ducks):
     assert 0 < streamed < total
 
 
-def test_label_propagation_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["embedding_label_propagation"],
-        entrymod.oracle_sql()["embedding_label_propagation"],
-    )
+def test_label_propagation_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "embedding_label_propagation")
 
 
-def test_csv_ingest_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["csv_ingest_audit"],
-        entrymod.oracle_sql()["csv_ingest_audit"],
-    )
+def test_csv_ingest_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "csv_ingest_audit")
 
 
 def test_label_propagation_seeds_are_clamped(spark):

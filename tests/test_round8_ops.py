@@ -5,7 +5,7 @@ import os
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_matches_oracle, assert_record_matches_oracle
 
 
 def _write_docs(tmp_path, rows):
@@ -170,13 +170,8 @@ def test_geotiff_ingest_to_tiled_layout(spark, tmp_path):
         crop.count() == sum(1 for (x, y) in src if x <= 15 and y <= 15)
 
 
-def test_raster_ingest_tiff_oracle(spark, ducks):
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["raster_ingest_tiff"],
-        entrymod.oracle_sql()["raster_ingest_tiff"],
-    )
+def test_raster_ingest_tiff_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "raster_ingest_tiff")
 
 
 def test_sig_store_matches_inline_and_reuses(spark):

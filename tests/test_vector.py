@@ -1,7 +1,7 @@
 """Vector-layer ingest: the pure-stdlib ESRI Shapefile codec, the GML
 reader (including the reference's real sample layer at
-/root/reference/data/shp/comb_poly.gml), and the oracle-gated ingest
-operators (their oracle compare runs in tests/test_catalog.py)."""
+/root/reference/data/shp/comb_poly.gml), and the two oracle-gated
+ingest operators."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ import os
 import pytest
 
 from gdalos_spark.sources import vector as V
+from tests.conftest import assert_record_matches_oracle
 
 GML_SAMPLE = "/root/reference/data/shp/comb_poly.gml"
 
@@ -71,6 +72,14 @@ def test_reference_gml_sample_parses():
     assert abs(max(ys) - 32.08511289419796) < 1e-9
 
 
+def test_vector_ingest_shp_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "vector_ingest_shp")
+
+
+def test_vector_ingest_gml_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "vector_ingest_gml")
+
+
 @pytest.mark.skipif(not os.path.exists(GML_SAMPLE), reason="reference tree absent")
 def test_open_vector_reads_reference_layer(spark):
     """api.open_vector over the reference's real GML layer: per-vertex
@@ -101,6 +110,10 @@ def test_open_vector_reads_shp_file(spark, tmp_path):
     pts = [r for r in rows if r.geom_type == "Point"]
     assert len(polys) == 4 and len(pts) == 1
     assert pts[0].x == 7.0 and pts[0].y == 8.0
+
+
+def test_rasterize_vector_layer_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "rasterize_vector_layer")
 
 
 def test_rasterize_vector_layer_plan_shape(spark):

@@ -1,12 +1,28 @@
-"""Viewshed/geo-family tests (SURVEY §2 #19-22): line of sight,
-geodesics, radio loss and the scalar chains they evaluate. Every key's
-oracle compare runs in tests/test_catalog.py; these pin semantics and
-libm tracking."""
+"""Oracle-parity + semantic tests for viewshed/geo (SURVEY §2 #19-22)."""
 
-import math
+import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_record_matches_oracle
+
+VIEWSHED_KEYS = [
+    "viewshed_los",
+    "viewshed_observer_count",
+    "free_space_loss",
+    "utm_zone_convergence",
+    "viewshed_los_refraction",
+    "viewshed_sector",
+    "coord_precision_report",
+    "viewshed_los_range",
+    "azimuth_normalize",
+    "proj_string_parse",
+    "radio_path_report",
+]
+
+
+@pytest.mark.parametrize("key", VIEWSHED_KEYS)
+def test_viewshed_matches_oracle(record, ducks, key):
+    assert_record_matches_oracle(record, ducks, key)
 
 
 def test_los_first_cell_on_ray_visible(spark):
@@ -26,6 +42,10 @@ def test_observer_count_bounds(spark):
     df = entrymod.queries()["viewshed_observer_count"](spark, SF_DIR)
     bad = df.filter((F.col("n_visible") < 0) | (F.col("n_visible") > F.col("n_obs")))
     assert bad.count() == 0
+
+
+def test_geo_distance_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "geo_distance")
 
 
 def test_geo_distance_tracks_libm_haversine(spark):
@@ -49,6 +69,10 @@ def test_geo_distance_tracks_libm_haversine(spark):
         assert abs(ref - r.geo_dist_m) < 1e-5
 
 
+def test_viewshed_polygonize_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "viewshed_polygonize")
+
+
 def test_viewshed_polygonize_covers_all_visible_cells(spark):
     """Rectangle regions must partition the visible set exactly: cell
     count sum equals the number of visible LOS cells, and no two
@@ -70,6 +94,11 @@ def test_viewshed_polygonize_covers_all_visible_cells(spark):
     assert len(covered) == len(set(covered)) == len(vis)
     assert set(covered) == vis
     assert sum(r.n_cells for r in rects) == len(vis)
+
+
+def test_round3_geo_additions_match_oracle(record, ducks):
+    for key in ("viewshed_contour_polygons", "map_scale_zoom", "sector_ring_points"):
+        assert_record_matches_oracle(record, ducks, key)
 
 
 def test_sector_rings_close_and_track_libm(spark):
@@ -110,524 +139,5 @@ def test_sector_rings_close_and_track_libm(spark):
             assert abs(py + rr * math.sin(ang) - p.y) < 1e-5
 
 
-def test_geohash_buckets_are_contained(spark):
-    """Precision-4 geohash = all 10+10 quantization bits, so every
-    bucket is exactly one quantization cell: side 64/1024*6.25/6.25 =
-    6400/1024 integer units = 0.0625 coordinate units. Containment is
-    the locality property geo-joins rely on."""
-    for r in entrymod.queries()["geohash_bucket"](spark, SF_DIR).collect():
-        assert r.max_x - r.min_x <= 0.0625 + 1e-9, r
-        assert r.max_y - r.min_y <= 0.0625 + 1e-9, r
-
-
-def test_dbscan_cluster_structure(spark):
-    """Cluster ids are min member ids (<= every other count row), core
-    clusters have >= 1 core point, the noise row is unique, and point
-    counts add up to the table size."""
-    rows = entrymod.queries()["dbscan_grid_clusters"](spark, SF_DIR).collect()
-    noise = [r for r in rows if r.cluster_id == -1]
-    assert len(noise) == 1
-    clusters = [r for r in rows if r.cluster_id != -1]
-    for r in clusters:
-        assert r.n_core >= 1
-        assert r.n_points == r.n_core + r.n_border
-    from gdalos_spark.datamodel import load
-
-    total = load(spark, SF_DIR, "events").count()
-    assert sum(r.n_points for r in rows) == total
-
-
-def test_combine_modes_status_invariants(spark):
-    """Status-code algebra from the reference combine functions: max >=
-    min on every in-range cell, count_z <= number of observers, 255 only
-    when no observer is in range, unique in {0..4, 254, 255}, and
-    unique/count_z agree (unique==255 iff zero visible, ==254 iff >1)."""
-    from gdalos_spark.operators.viewshed import (
-        COMB_MULTI,
-        COMB_NDV,
-        OBSERVERS,
-    )
-
-    rows = entrymod.queries()["viewshed_combine_modes"](spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    n_obs = len(OBSERVERS)
-    saw_ndv = saw_multi = False
-    for r in rows:
-        if r.comb_max == COMB_NDV:
-            assert r.comb_min == COMB_NDV and r.comb_count_z == COMB_NDV
-            assert r.comb_unique == COMB_NDV
-            saw_ndv = True
-            continue
-        assert 2 <= r.comb_min <= r.comb_max <= 5
-        assert 0 <= r.comb_count_z <= n_obs
-        if r.comb_unique == COMB_NDV:
-            assert r.comb_count_z == 0
-        elif r.comb_unique == COMB_MULTI:
-            assert r.comb_count_z > 1
-            saw_multi = True
-        else:
-            assert r.comb_count_z == 1
-            assert 0 <= r.comb_unique < n_obs
-    # the per-observer ranges are tuned so both branches are exercised
-    assert saw_ndv and saw_multi
-
-
-def test_viewshed_grid_sweep(spark, ducks):
-    """Grid-mode viewshed (reference ViewshedGridParams.get_array()):
-    oracle parity plus the grid shape — 9 named observers at the
-    interval offsets, each with a bounded in-range cell count and a
-    sane visibility fraction."""
-    from gdalos_spark.operators.viewshed import (
-        GRID_BASE_X,
-        GRID_INTERVAL,
-        viewshed_grid_sweep,
-    )
-
-    assert_matches_oracle(
-        spark,
-        ducks,
-        entrymod.queries()["viewshed_grid_sweep"],
-        entrymod.oracle_sql()["viewshed_grid_sweep"],
-    )
-    rows = {r.oname: r for r in viewshed_grid_sweep(spark, SF_DIR).collect()}
-    assert len(rows) == 9
-    assert rows["0_0"].ox == GRID_BASE_X
-    assert rows["-1_1"].ox == GRID_BASE_X - GRID_INTERVAL
-    for r in rows.values():
-        assert 0 < r.n_visible <= r.n_in_range
-        assert 0.0 < r.vis_fraction <= 1.0
-
-
-def _vincenty_m(lat1, lon1, lat2, lon2):
-    """Pure-Python Vincenty inverse on WGS-84 (Vincenty 1975) — the
-    sub-millimeter reference the Andoyer-Lambert series is pinned to."""
-    a = 6378137.0
-    f = 1 / 298.257223563
-    b = (1 - f) * a
-    L = math.radians(lon2 - lon1)
-    U1 = math.atan((1 - f) * math.tan(math.radians(lat1)))
-    U2 = math.atan((1 - f) * math.tan(math.radians(lat2)))
-    sU1, cU1 = math.sin(U1), math.cos(U1)
-    sU2, cU2 = math.sin(U2), math.cos(U2)
-    lam = L
-    for _ in range(200):
-        sl, cl = math.sin(lam), math.cos(lam)
-        ss = math.hypot(cU2 * sl, cU1 * sU2 - sU1 * cU2 * cl)
-        if ss == 0:
-            return 0.0
-        cs = sU1 * sU2 + cU1 * cU2 * cl
-        sig = math.atan2(ss, cs)
-        sa = cU1 * cU2 * sl / ss
-        c2a = 1 - sa * sa
-        c2m = cs - 2 * sU1 * sU2 / c2a if c2a else 0.0
-        C = f / 16 * c2a * (4 + f * (4 - 3 * c2a))
-        lamp = lam
-        lam = L + (1 - C) * f * sa * (
-            sig + C * ss * (c2m + C * cs * (-1 + 2 * c2m * c2m))
-        )
-        if abs(lam - lamp) < 1e-13:
-            break
-    u2 = c2a * (a * a - b * b) / (b * b)
-    A = 1 + u2 / 16384 * (4096 + u2 * (-768 + u2 * (320 - 175 * u2)))
-    B = u2 / 1024 * (256 + u2 * (-128 + u2 * (74 - 47 * u2)))
-    dsig = B * ss * (
-        c2m
-        + B / 4 * (
-            cs * (-1 + 2 * c2m * c2m)
-            - B / 6 * c2m * (-3 + 4 * ss * ss) * (-3 + 4 * c2m * c2m)
-        )
-    )
-    return b * A * (sig - dsig)
-
-
-def test_geo_ellipsoidal_beats_sphere_vs_vincenty(spark):
-    """The point of the key (VERDICT r09 Missing #1): the ellipsoidal
-    series must land within tens of meters of the true geodesic where
-    the spherical model errs by kilometers. Residual bound follows
-    O(f^2) ~ 1e-5 relative at the <=4700 km link lengths the bounded
-    endpoints produce."""
-    rows = entrymod.queries()["geo_distance_ellipsoidal"](spark, SF_DIR).collect()
-    assert rows
-    worst_e = worst_s = 0.0
-    for r in rows:
-        true = _vincenty_m(r.lat1, r.lon1, r.lat2, r.lon2)
-        worst_e = max(worst_e, abs(r.geodesic_dist_m - true))
-        worst_s = max(worst_s, abs(r.sphere_dist_m - true))
-        assert abs((r.geodesic_dist_m - r.sphere_dist_m) - r.delta_m) < 1e-5
-    assert worst_e < 50.0, worst_e          # O(f^2) residual
-    assert worst_s > 20.0 * worst_e, (worst_s, worst_e)  # the model gap is real
-
-
-def test_destination_tracks_libm_direct(spark):
-    """The polynomial direct solution must agree with the libm spherical
-    direct formulas (asin/atan2) to ~1e-9 deg (~0.1 mm), and the
-    inverse of the output must give back the input range."""
-    from gdalos_spark.operators import viewshed as V
-
-    R = V._DEST_R_M
-    rows = entrymod.queries()["geodesic_destination"](spark, SF_DIR).collect()
-    assert rows
-    for r in rows:
-        f1, a, s = math.radians(r.lat1), math.radians(r.az_deg), r.dist_m / R
-        sf2 = math.sin(f1) * math.cos(s) + math.cos(f1) * math.sin(s) * math.cos(a)
-        lat2 = math.degrees(math.asin(sf2))
-        dl = math.degrees(
-            math.atan2(
-                math.sin(a) * math.sin(s) * math.cos(f1),
-                math.cos(s) - math.sin(f1) * sf2,
-            )
-        )
-        assert abs(r.lat2 - lat2) < 1e-8, r
-        assert abs(r.lon2 - (r.lon1 + dl)) < 1e-8, r
-        # inverse round-trip: haversine back to the emitted destination
-        f2 = math.radians(r.lat2)
-        dph = (f2 - f1) / 2
-        dlh = math.radians(r.lon2 - r.lon1) / 2
-        h = math.sqrt(
-            math.sin(dph) ** 2 + math.cos(f1) * math.cos(f2) * math.sin(dlh) ** 2
-        )
-        back = 2 * R * math.asin(h)
-        assert abs(back - r.dist_m) < 1e-3, r  # sub-millimeter closure
-
-
-def _eval_chain(ducks, build, inputs):
-    """Evaluate a ScalarChain over literal input columns in DuckDB and
-    return the final row as a dict."""
-    from gdalos_spark.functions.literals import dbl_lit
-    from gdalos_spark.functions.scalar_chain import ScalarChain, duckdb_spellings
-
-    c = ScalarChain(*duckdb_spellings())
-    build(c)
-    cols = ", ".join(f"{dbl_lit(v)} AS {k}" for k, v in inputs.items())
-    cur = ducks.execute(c.wrap_sql(f"SELECT {cols}"))
-    names = [d[0] for d in cur.description]
-    return dict(zip(names, cur.fetchone()))
-
-
-def test_chain_ln_tracks_libm(ducks):
-    for y in (1e-5, 0.02667, 0.9, 1.0, 2.718281828, 433.0, 5495.0, 1.4e6, 8.7e8):
-        row = _eval_chain(ducks, lambda c: c.ln("y", "out"), {"y": y})
-        # 1e9 integerization bounds the input quantization at 5e-10 abs
-        assert abs(row["out"] - math.log(y)) < 6e-8 + 5e-10 / y, y
-
-
-def test_chain_exp_neg_tracks_libm(ducks):
-    for x in (0.0, 1e-9, 0.1, 0.6931, 1.0, 5.2, 10.0, 29.9):
-        row = _eval_chain(ducks, lambda c: c.exp_neg("x", "out"), {"x": x})
-        assert abs(row["out"] - math.exp(-x)) < 1e-11 * max(1.0, math.exp(-x) * 1e11 * 1e-9) + 4e-12, x
-
-
-def test_chain_cbrt_tracks_libm(ducks):
-    for u in (0.011, 1.0, 90.0, 2500.0, 1.3e5, 7.7e7, 3.7e8):
-        row = _eval_chain(ducks, lambda c: c.cbrt("u", "out"), {"u": u})
-        rel = abs(row["out"] - u ** (1.0 / 3.0)) / u ** (1.0 / 3.0)
-        # dominated by the 1e-6 input integerization at small u
-        assert rel < 6e-7 / min(u, 1e6) ** 0.33 + 1e-12, u
-
-
-def test_chain_leveling_respects_dependencies():
-    from gdalos_spark.functions.scalar_chain import ScalarChain, duckdb_spellings
-
-    c = ScalarChain(*duckdb_spellings())
-    c.add("a", "(x + 1)")
-    c.add("b", "(x + 2)")  # independent of a -> same level
-    c.add("d", "(a * b)")  # depends on both -> new level
-    lv = c.levels()
-    assert [n for n, _ in lv[0]] == ["a", "b"]
-    assert [n for n, _ in lv[1]] == ["d"]
-
-
-def _itm_libm_h0f(r, et):
-    """libm twin of ITM's H0 frequency-gain table interpolation."""
-    a = (25.0, 80.0, 177.0, 395.0, 705.0)
-    b = (24.0, 45.0, 68.0, 80.0, 105.0)
-    it = int(et)
-    if it <= 0:
-        it, q = 1, 0.0
-    elif it >= 5:
-        it, q = 5, 0.0
-    else:
-        q = et - it
-    x = (1.0 / r) ** 2
-    h0fv = 4.343 * math.log((a[it - 1] * x + b[it - 1]) * x + 1.0)
-    if q != 0.0:
-        h0fv = (1.0 - q) * h0fv + q * 4.343 * math.log((a[it] * x + b[it]) * x + 1.0)
-    return h0fv
-
-
-def _itm_libm_ahd(td):
-    """libm twin of ITM's F(theta*d) scatter attenuation table."""
-    if td <= 10e3:
-        return 133.4 + 0.332e-3 * td - 4.343 * math.log(td)
-    if td <= 70e3:
-        return 104.6 + 0.212e-3 * td - 1.086 * math.log(td)
-    return 71.8 + 0.157e-3 * td + 2.171 * math.log(td)
-
-
-def _itm_libm(d_m, sm, dh, te1, te2, dl1, dl2, he1, he2):
-    """Independent pure-libm twin of the full _itm_chain lrprop program
-    (adiff line fit + two-ray LOS fit + ascat troposcatter line) —
-    validates the polynomial/Newton machinery numerically, not just
-    cross-engine equality. Follows NTIA ITM 1.2.2 lrprop/adiff/alos/
-    ascat directly, including the a6-before-a5 call order ascat's h0s
-    state makes observable. Returns (aref, dx, aes, ems)."""
-    from gdalos_spark.operators import viewshed as V
-
-    gme, wn, qk, hg = V._ITM_GME, V._ITM_WN, V._ITM_QK, V.ITM_HG
-    zgnd = V._ITM_ZGND
-    dls1, dls2 = math.sqrt(2 * he1 / gme), math.sqrt(2 * he2 / gme)
-    dla, dlsa = dl1 + dl2, dls1 + dls2
-    tha = max(te1 + te2, -(dla * gme))
-    q0 = (1 - 0.8 * math.exp(-dlsa / 50e3)) * dh
-    q1c = q0 * 0.78 * math.exp(-((q0 / 16.0) ** 0.25))
-    afo = min(15.0, 2.171 * math.log(1 + 4.77e-4 * hg * hg * wn * q1c))
-    wd1 = math.sqrt(1 + (he1 * he2 - hg * hg) / (hg * hg + 10.0))
-    xd1 = dla + tha / gme
-
-    def fht(x, pk):
-        w = -math.log(pk)
-        if x < 200.0:
-            if pk < 1e-5 or x * w**3 > 5495.0:
-                return (17.372 * math.log(x) - 117.0) if x > 1.0 else -117.0
-            return 2.5e-5 * x * x / pk - 8.686 * w - 15.0
-        f = 0.05751 * x - 4.343 * math.log(x)
-        if x < 2000.0:
-            wz = 0.0134 * x * math.exp(-0.005 * x)
-            return (1 - wz) * f + wz * (17.372 * math.log(x) - 117.0)
-        return f
-
-    xht, aht = 0.0, 20.0
-    for dlj, hej in ((dl1, he1), (dl2, he2)):
-        a = 0.5 * dlj * dlj / hej
-        wa = (a * wn) ** (1.0 / 3.0)
-        pk = qk / wa
-        qj = max((1.607 - pk) * 151.0 * wa * dlj / a, 1.0)
-        xht += qj
-        aht += fht(qj, pk)
-
-    def aknfe(v2):
-        if v2 < 5.76:
-            return 6.02 + 9.11 * math.sqrt(v2) - 1.27 * v2
-        return 12.953 + 4.343 * math.log(v2)
-
-    def adiff(d):
-        th, ds = tha + d * gme, d - dla
-        qd = 0.0795775 * wn * ds * th * th
-        adiffv = aknfe(qd * dl1 / (ds + dl1)) + aknfe(qd * dl2 / (ds + dl2))
-        wa = ((ds / th) * wn) ** (1.0 / 3.0)
-        pk = qk / wa
-        qx = max((1.607 - pk) * 151.0 * wa * th + xht, 1.0)
-        ar = 0.05751 * qx - 4.343 * math.log(qx) - aht
-        qw = (wd1 + xd1 / d) * min((1 - 0.8 * math.exp(-d / 50e3)) * dh * wn, 6283.2)
-        wd = 25.1 / (25.1 + math.sqrt(qw))
-        return ar * wd + (1 - wd) * adiffv + afo
-
-    xae = (wn * gme * gme) ** (-1.0 / 3.0)
-    d3 = max(dlsa, dla + 1.3787 * xae)
-    d4 = d3 + 2.7574 * xae
-    a3, a4 = adiff(d3), adiff(d4)
-    emd = (a4 - a3) / (d4 - d3)
-    aed = a3 - emd * d3
-
-    # --- ascat troposcatter line (computed for every link, as in the
-    # chain): d6 evaluated BEFORE d5, h0s threading the two calls
-    ad = dl1 - dl2
-    rr = he2 / he1
-    if ad < 0:
-        ad, rr = -ad, 1.0 / rr
-    ens = V.ITM_REFRACTIVITY
-    etq = (5.67e-6 * ens - 2.32e-3) * ens + 0.031
-
-    def ascat(d, h0s):
-        th = te1 + te2 + d * gme
-        r1 = 2.0 * wn * th * he1
-        r2 = 2.0 * wn * th * he2
-        if h0s > 15.0:
-            h0 = h0s
-        else:
-            if r1 < 0.2 and r2 < 0.2:
-                return 1001.0, h0s
-            ss = (d - ad) / (d + ad)
-            q = rr / ss
-            ss = max(0.1, ss)
-            q = min(max(0.1, q), 10.0)
-            z0 = (d - ad) * (d + ad) * th * 0.25 / d
-            temp = min(1.7, z0 / 8.0e3) ** 6
-            et = (etq * math.exp(-temp) + 1.0) * z0 / 1.7556e3
-            ett = max(et, 1.0)
-            h0 = (_itm_libm_h0f(r1, ett) + _itm_libm_h0f(r2, ett)) / 2.0
-            h0 += min(h0, (1.38 - math.log(ett)) * math.log(ss) * math.log(q) * 0.49)
-            h0 = max(h0, 0.0)
-            if et < 1.0:
-                tt = (1.0 + 1.4142 / r1) * (1.0 + 1.4142 / r2)
-                h0 = et * h0 + (1.0 - et) * 4.343 * math.log(
-                    tt * tt * (r1 + r2) / (r1 + r2 + 2.8284)
-                )
-            if h0 > 15.0 and h0s >= 0.0:
-                h0 = h0s
-        tht = tha + d * gme
-        return (
-            _itm_libm_ahd(tht * d)
-            + 4.343 * math.log(47.7 * wn * tht**4)
-            - 0.1 * (ens - 301.0) * math.exp(-tht * d / 40e3)
-            + h0,
-            h0,
-        )
-
-    d6 = dla + 2.0 * V._ITM_DS
-    d5 = dla + V._ITM_DS
-    a6, h0s = ascat(d6, -15.0)
-    a5, h0s = ascat(d5, h0s)
-    ems0 = (a6 - a5) / V._ITM_DS
-    if a5 < 1000.0 and abs(emd - ems0) > 1e-12:
-        ems = ems0
-        dx = max(dlsa, dla + V._ITM_DXLOG, (a5 - aed - ems0 * d5) / (emd - ems0))
-        aes = (emd - ems) * dx + aed
-    else:
-        ems, aes, dx = emd, aed, 1.0e7
-
-    if d_m >= dlsa:
-        if d_m <= dx:
-            return aed + emd * d_m, dx, aes, ems
-        return aes + ems * d_m, dx, aes, ems
-
-    wls = 0.021 / (0.021 + wn * dh / max(10e3, dlsa))
-    qh = he1 + he2
-
-    def alos(d):
-        q = (1 - 0.8 * math.exp(-d / 50e3)) * dh
-        s = 0.78 * q * math.exp(-((q / 16.0) ** 0.25))
-        sps = qh / math.sqrt(d * d + qh * qh)
-        r = (sps - zgnd) / (sps + zgnd) * math.exp(-min(10.0, wn * s * sps))
-        q2 = abs(r) ** 2
-        if q2 < 0.25 or q2 < sps:
-            r = r * math.sqrt(sps / q2)
-        alosv = emd * d + aed
-        ph = wn * he1 * he2 * 2.0 / d
-        if ph > 1.57:
-            ph = 3.14 - 2.4649 / ph
-        fld = complex(math.cos(ph), -math.sin(ph)) + r
-        return (-4.343 * math.log(abs(fld) ** 2) - alosv) * wls + alosv
-
-    d2 = dlsa
-    a2 = aed + emd * d2
-    d0 = 1.908 * wn * he1 * he2
-    if aed >= 0:
-        d0 = min(d0, 0.5 * dla)
-        d1 = d0 + 0.25 * (dla - d0)
-    else:
-        d1 = max(-aed / emd, 0.25 * dla)
-    a1 = alos(d1)
-    wq = False
-    ak1 = ak2 = 0.0
-    if d0 < d1:
-        a0 = alos(d0)
-        q = math.log(d2 / d0)
-        ak2 = max(
-            0.0,
-            ((d2 - d0) * (a1 - a0) - (d1 - d0) * (a2 - a0))
-            / ((d2 - d0) * math.log(d1 / d0) - (d1 - d0) * q),
-        )
-        wq = aed >= 0 or ak2 > 0
-        if wq:
-            ak1 = (a2 - a0 - ak2 * q) / (d2 - d0)
-            if ak1 < 0:
-                ak1 = 0.0
-                ak2 = max(a2 - a0, 0.0) / q
-                if ak2 == 0:
-                    ak1 = emd
-    if not wq:
-        ak1 = max(a2 - a1, 0.0) / (d2 - d1)
-        ak2 = 0.0
-        if ak1 == 0:
-            ak1 = emd
-    ael = a2 - ak1 * d2 - ak2 * math.log(d2)
-    return max(ael + ak1 * d_m + ak2 * math.log(d_m), 0.0), dx, aes, ems
-
-
-def test_radio_itm_aref_tracks_libm(ducks):
-    """The gated aref_db / dx_m / aes_db values must agree with an
-    independent libm evaluation of the same ITM program to ~1e-3 dB
-    (bounded by the 1e-9/1e-6 integerization of the ln/cbrt inputs)."""
-    from gdalos_spark.operators import viewshed as V
-
-    sql = V.RADIO_ITM_LOSS_SQL
-    start, end = sql.index("WITH dem AS"), sql.index("SELECT * FROM link")
-    rows = ducks.execute(
-        sql[start:end]
-        + "SELECT d_m, sm, dh, te1, te2, dl1, dl2, he1, he2 FROM link"
-    ).fetchall()
-    assert rows
-    gated = {
-        (round(r[4], 6), round(r[5], 6)): (r[11], r[14], r[15])
-        for r in ducks.execute(sql).fetchall()
-    }
-    checked = 0
-    for d_m, sm, dh, te1, te2, dl1, dl2, he1, he2 in rows:
-        ref, dx, aes, _ems = _itm_libm(d_m, sm, dh, te1, te2, dl1, dl2, he1, he2)
-        got = gated.get((round(d_m, 6), round(dh, 6)))
-        if got is None:
-            continue  # two links sharing (d, dh) — skip ambiguous pins
-        assert abs(got[0] - ref) < 1e-3, (d_m, dh, got[0], ref)
-        # dx is meters at ~2.5e5 scale — compare relatively
-        assert abs(got[1] - dx) < 1e-6 * max(abs(dx), 1.0), (d_m, got[1], dx)
-        assert abs(got[2] - aes) < 1e-3, (d_m, got[2], aes)
-        checked += 1
-    assert checked >= 5
-
-
-def test_radio_itm_scatter_regime_tracks_libm(ducks):
-    """Drive the chain itself into the d > dx troposcatter regime with
-    synthetic far links (the 9-km test geometry never leaves LOS) and
-    pin regime pick + path loss against the libm twin."""
-    from gdalos_spark.functions.scalar_chain import duckdb_spellings
-    from gdalos_spark.operators import viewshed as V
-
-    cases = [
-        # (d_m, dh, te1, te2, dl1, dl2, he1, he2)
-        (500e3, 40.0, -0.002, -0.001, 2000.0, 3000.0, 5.0, 7.0),
-        (800e3, 90.0, 0.001, 0.002, 4000.0, 2500.0, 12.0, 3.0),
-        (300e3, 15.0, -0.004, -0.003, 1500.0, 1500.0, 2.0, 2.0),
-    ]
-    c = V._itm_chain(*duckdb_spellings())
-    saw_scatter = 0
-    for d_m, dh, te1, te2, dl1, dl2, he1, he2 in cases:
-        inner = (
-            f"SELECT 1 AS c_custkey, 0 AS ox, 0 AS oy, 1 AS n_samples, "
-            f"{d_m:.1f}e0 AS d_m, 1.0e0 AS sm, 0.0e0 AS zt, "
-            f"{te1:e} AS te1, {te2:e} AS te2, {dh:.1f}e0 AS dh, "
-            f"{dl1:.1f}e0 AS dl1, {dl2:.1f}e0 AS dl2, "
-            f"{he1:.1f}e0 AS he1, {he2:.1f}e0 AS he2"
-        )
-        sql = c.wrap_sql(inner, keep=V._ITM_KEEP, inputs=V._ITM_IN)
-        regime, aref, dx, aes, ems = ducks.execute(
-            f"SELECT regime, aref, dx, aes, ems FROM ({sql})"
-        ).fetchone()
-        ref, rdx, raes, rems = _itm_libm(d_m, 1.0, dh, te1, te2, dl1, dl2, he1, he2)
-        assert abs(aref - ref) < 1e-3, (d_m, aref, ref)
-        assert abs(dx - rdx) < 1e-6 * max(abs(rdx), 1.0)
-        assert abs(aes - raes) < 1e-3
-        if d_m > rdx:
-            assert regime == "scatter", (d_m, rdx, regime)
-            saw_scatter += 1
-    assert saw_scatter >= 2, "cases failed to reach the scatter regime"
-
-
-def test_radio_itm_physics_sane(ducks):
-    """Diffraction links lose more than free space; every loss is
-    finite; the RadioBaseParams ride along verbatim."""
-    rows = ducks.execute(entrymod.oracle_sql()["radio_itm_loss"]).fetchall()
-    assert rows
-    for r in rows:
-        d = dict(zip("c_custkey ox oy n_samples dist_m dh_m dl1_m dl2_m theta_e1 theta_e2 regime aref_db fspl_db path_loss_db dx_m aes_db ems_db_per_m refractivity conductivity permittivity humidity".split(), r))
-        assert d["path_loss_db"] >= d["fspl_db"] - 1e-12
-        assert math.isfinite(d["aref_db"])
-        assert d["regime"] in ("los", "diffraction", "scatter")
-        assert (d["refractivity"], d["conductivity"], d["permittivity"], d["humidity"]) == (300.0, 0.03, 15.0, 10.0)
-        assert d["dh_m"] >= 0
-        # the scatter crossover always sits beyond the smooth-earth
-        # horizon sum and the ahd log floor
-        assert d["dx_m"] > 0 and math.isfinite(d["aes_db"])
-        assert math.isfinite(d["ems_db_per_m"])
-        if d["regime"] == "diffraction":
-            assert d["aref_db"] > 0
+def test_point_to_point_los_matches_oracle(record, ducks):
+    assert_record_matches_oracle(record, ducks, "point_to_point_los")

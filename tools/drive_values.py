@@ -2,12 +2,12 @@
 VANILLA SparkSession and compare it against its DuckDB oracle: column
 names, column types and values, exactly.
 
-The driver's correctness hash is type-sensitive, so a DuckDB HUGEINT
-(SUM over BIGINT) vs a Spark BIGINT is a hash-red even when every value
-matches — the class that burned sequence_packing in round 5 and 15
-decimal-SUM rows in round 1. `oracle_mismatch` therefore checks each
-column's DESCRIBE type before it compares values. The test suite runs
-the same compare (tests/conftest.py, tests/test_catalog.py).
+A type-sensitive result hash tells a DuckDB HUGEINT (SUM over BIGINT)
+from a Spark BIGINT even when every value matches — the class of
+mismatch that once hit sequence_packing and 15 decimal-SUM keys.
+`oracle_mismatch` therefore checks each column's DESCRIBE type before
+it compares values. The test suite runs the same compare
+(tests/conftest.py, tests/test_catalog.py).
 
 Usage:
     python tools/drive_values.py [key ...]      # default: all keys
@@ -26,10 +26,10 @@ import duckdb
 from pyspark.sql import SparkSession
 
 # DuckDB type -> acceptable Spark simpleString prefixes. Anything not in
-# this table (HUGEINT, UTINYINT, STRUCT...) is flagged. The driver's
-# value hash normalizes integer WIDTHS (an int32 Spark column hash-matches
-# a BIGINT oracle column — proven by the green r3/r5 rows for
-# customer_rfm_scores, running_totals, raster_histogram, ...), so every
+# this table (HUGEINT, UTINYINT, STRUCT...) is flagged. The result
+# hash normalizes integer WIDTHS (an int32 Spark column hash-matches a
+# BIGINT oracle column, as customer_rfm_scores, running_totals and
+# raster_histogram show), so every
 # integer width accepts every other; only int-vs-float / unmapped types
 # (HUGEINT, DECIMAL) are real findings. A DuckDB list `T[]` aligns with
 # a Spark `array<S>` when T aligns with S, or when both are decimals:
