@@ -1,27 +1,33 @@
 """Dependency-leveled scalar expression chains shared between Spark and
-DuckDB.
+DuckDB: the one renderer of every staged scalar program in the engine
+(the ITM radio model, the CRS warp series of operators/raster.py, the
+geodesic, azimuth and sector math of operators/viewshed.py).
 
 The cross-engine correctness gate hinges on both engines evaluating the
-IDENTICAL IEEE expression text (see functions/literals.py and the
-polynomial banks in operators/text.py / operators/viewshed.py). Long
-scalar programs — the ITM radio model needs ~150 intermediate columns —
-outgrow the hand-staged tuple pattern of _geo_stages, so this module
-provides a tiny ordered-column "program" with:
+IDENTICAL IEEE expression text (see functions/literals.py). A program
+calls `add(name, expr)` once per definition, where `expr` may name
+earlier definitions and the source columns; the chain provides:
 
 - transcendental helpers (ln / exp(-x) / cbrt) built ONLY from +,*,/,
   sqrt, floor, integer bit-length and CASE — every one of which is
   correctly rounded or exact in both engines, so identical text means
   identical bits (the engine-libm ban, verify-skill gotcha #6);
-- automatic dependency leveling, so the Spark side renders as a few
-  wide `withColumns` batches and the DuckDB side as the same number of
-  nested `SELECT *, ... FROM (...)` layers instead of one subquery per
-  column.
+- automatic dependency leveling and liveness pruning: given the columns
+  the caller reads (`keep`) and the source columns (`inputs`), each
+  level carries only what a later level still names, so no program
+  lists pass-through columns by hand. `apply_spark` renders one
+  `select` per level, `wrap_sql` one CTE per level.
+
+References are found by an identifier scan of the expression text, so
+a definition must not be named like the tail of an exponent-spelled
+literal (`e0` in `1.0e0`).
 
 Engine differences are confined to two spellings injected at build
 time: integer division (Spark ``div``, DuckDB ``//``) and the power-of-
 two shift (Spark ``shiftleft(CAST(1 AS BIGINT), e)``, DuckDB
-``(CAST(1 AS BIGINT) << e)``). Build the chain once per engine; all
-other generated text is byte-identical.
+``(CAST(1 AS BIGINT) << e)``). A program that uses either builds the
+chain once per engine; all other generated text is byte-identical, and
+a program that uses neither renders both engines from one chain.
 """
 
 from __future__ import annotations
@@ -33,12 +39,24 @@ from gdalos_spark.functions.literals import dbl_lit, horner
 
 LN2 = 0.6931471805599453
 LOG2E = 1.4426950408889634
-# atanh-series log2 mantissa coefficients 1/(2k+1) — the proven bank
-# from operators/text._log2_stages (7 terms, z <= 1/3 => err < 2e-8)
+# atanh-series log2 mantissa coefficients 1/(2k+1) (7 terms, z <= 1/3
+# => err < 2e-8), host-precomputed and exponent-spelled: `1.0/13.0` in
+# SQL text is DECIMAL/DECIMAL division in Spark (scale-truncated to
+# ~1e-7) but double in DuckDB
 _ATANH_C = [1.0, 1.0 / 3, 1.0 / 5, 1.0 / 7, 1.0 / 9, 1.0 / 11, 1.0 / 13]
-_LOG2_SCALE = "2.885390081777927"  # 2/ln(2), shared literal with text.py
+LOG2_SCALE = "2.885390081777927e0"  # 2/ln(2), the log2 mantissa scale
 # Maclaurin exp(-r) on r in [0, ln 2): 13 terms => truncation < 2e-12
 _EXPM_C = [(-1.0) ** k / math.factorial(k) for k in range(13)]
+
+
+def atanh_series(z2: str) -> str:
+    """The atanh series sum z2^k/(2k+1) over `z2` as the operators/text
+    log2 spells it (innermost coefficient first). ScalarChain.ln spells
+    the same bank through literals.horner; each key keeps its text."""
+    s = f"({dbl_lit(_ATANH_C[-1])})"
+    for c in reversed(_ATANH_C[:-1]):
+        s = f"({s}*{z2} + {dbl_lit(c)})"
+    return s
 
 
 def spark_spellings():
@@ -101,7 +119,7 @@ class ScalarChain:
         poly = self.add(f"{out}_p", horner(f"({z} * {z})", _ATANH_C))
         lg = self.add(
             f"{out}_lg",
-            f"(CAST({bl} AS DOUBLE) + {_LOG2_SCALE}e0 * {z} * {poly})",
+            f"(CAST({bl} AS DOUBLE) + {LOG2_SCALE} * {z} * {poly})",
         )
         return self.add(
             out, f"({dbl_lit(LN2)} * {lg} - {dbl_lit(math.log(scale))})"

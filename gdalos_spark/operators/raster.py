@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from gdalos_spark.functions import palette
 from gdalos_spark.functions import literals as _literals
+from gdalos_spark.functions.scalar_chain import ScalarChain, spark_spellings
 
 _dbl_lit = _literals.dbl_lit  # exponent-spelled float literal (see functions/literals.py)
 from gdalos_spark.datamodel import (
@@ -4584,7 +4585,41 @@ _UTM_COS_C = [
 # one shared exponent-spelled literal/horner implementation for the
 # whole warp/geodesic/log2 family — see functions/literals.py for the
 # DuckDB DECIMAL->DOUBLE one-ulp story
-_utm_horner = _literals.horner
+_horner = _literals.horner
+
+# Every forward warp is a ScalarChain over the DEM grid columns ending in
+# (easting, northing), then ONE groupBy on the target cell. The warp
+# programs use neither integer division nor a shift, so one chain renders
+# both engines.
+_WARP_IN = ("px", "py", "elev")
+_WARP_OUT = ("elev", "easting", "northing")
+
+
+def _warp_cells(pts: DataFrame, cell_m: float, prefix: str) -> DataFrame:
+    """Regrid projected points onto `cell_m` target cells: per cell the
+    source count, averaged elevation and projected bounding corner."""
+    return pts.groupBy(
+        F.floor(F.col("easting") / cell_m).cast("int").alias(f"{prefix}_e_cell"),
+        F.floor(F.col("northing") / cell_m).cast("int").alias(f"{prefix}_n_cell"),
+    ).agg(
+        F.count(F.lit(1)).alias("n_src"),
+        (F.sum("elev").cast("double") / F.count(F.lit(1))).alias("warped_elev"),
+        F.min("easting").alias("min_easting"),
+        F.max("northing").alias("max_northing"),
+    )
+
+
+def _warp_cells_sql(chain: ScalarChain, cell_m: float, prefix: str) -> str:
+    pts = chain.wrap_sql(DEM_GRID_SQL, keep=_WARP_OUT, inputs=_WARP_IN)
+    return f"""
+SELECT CAST(FLOOR(easting / {_dbl_lit(cell_m)}) AS INTEGER) AS {prefix}_e_cell,
+       CAST(FLOOR(northing / {_dbl_lit(cell_m)}) AS INTEGER) AS {prefix}_n_cell,
+       COUNT(*) AS n_src,
+       CAST(SUM(elev) AS DOUBLE) / COUNT(*) AS warped_elev,
+       MIN(easting) AS min_easting,
+       MAX(northing) AS max_northing
+FROM ({pts}) AS pts GROUP BY 1, 2
+"""
 
 
 def _utm_extent_zone(lon_0: float) -> int:
@@ -4596,82 +4631,57 @@ def _utm_extent_zone(lon_0: float) -> int:
     return utm_zone_by_lon(lon_0 + (_W / 2.0) * _UTM_DEG_PER_PX)
 
 
-def _utm_stages(
+def _utm_chain(
     lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0, zone: int | None = None
-) -> tuple[tuple[tuple[str, str], ...], ...]:
+) -> ScalarChain:
+    """Forward transverse-Mercator program over the DEM grid columns
+    (px, py) -> (easting, northing): Redfearn through the 5th/6th-order
+    terms, sin/cos from the halved-angle polynomials."""
     cm = utm_central_meridian(zone if zone is not None else _utm_extent_zone(lon_0))
-    keep = (("px", "px"), ("py", "py"), ("elev", "elev"))
-    return (
-        keep + (
-            ("phi", f"((({_dbl_lit(lat_0)} + CAST(py AS DOUBLE) * {_dbl_lit(_UTM_DEG_PER_PX)})) * {_dbl_lit(_UTM_RAD)})"),
-            ("omega", f"((({_dbl_lit(lon_0)} + CAST(px AS DOUBLE) * {_dbl_lit(_UTM_DEG_PER_PX)}) - {_dbl_lit(cm)}) * {_dbl_lit(_UTM_RAD)})"),
-        ),
-        keep + (
-            ("phi", "phi"), ("omega", "omega"),
-            ("ph", "(phi * 0.5)"),
-        ),
-        keep + (
-            ("phi", "phi"), ("omega", "omega"),
-            ("sh", f"(ph * {_utm_horner('(ph * ph)', _UTM_SIN_C)})"),
-            ("ch", _utm_horner("(ph * ph)", _UTM_COS_C)),
-        ),
-        keep + (
-            ("phi", "phi"), ("omega", "omega"),
-            ("sf", "(2.0 * (sh * ch))"),       # sin(phi)
-            ("cf", "(1.0 - 2.0 * (sh * sh))"),  # cos(phi)
-        ),
-        keep + (
-            ("phi", "phi"), ("omega", "omega"), ("sf", "sf"), ("cf", "cf"),
-            ("s2", "(2.0 * (sf * cf))"),        # sin(2 phi)
-            ("c2", "(1.0 - 2.0 * (sf * sf))"),  # cos(2 phi)
-            ("t", "(sf / cf)"),
-            ("eta2", f"({_dbl_lit(_UTM_EP2)} * (cf * cf))"),
-            ("nu", f"({_dbl_lit(_UTM_A)} / sqrt(1.0 - {_dbl_lit(_UTM_E2)} * (sf * sf)))"),
-            ("oc", "(omega * cf)"),             # omega * cos(phi)
-        ),
-        keep + (
-            ("phi", "phi"),
-            ("t", "t"), ("eta2", "eta2"), ("nu", "nu"), ("oc", "oc"),
-            ("s2", "s2"), ("c2", "c2"),
-            ("s4", "(2.0 * (s2 * c2))"),        # sin(4 phi)
-            ("c4", "(1.0 - 2.0 * (s2 * s2))"),  # cos(4 phi)
-        ),
-        keep + (
-            ("t", "t"), ("eta2", "eta2"), ("nu", "nu"), ("oc", "oc"),
-            # sin(6 phi) = sin(2 phi) cos(4 phi) + cos(2 phi) sin(4 phi)
-            # folded directly into the meridian arc M(phi)
-            (
-                "marc",
-                f"({_dbl_lit(_UTM_A)} * (((({_dbl_lit(_UTM_A0)} * phi) - ({_dbl_lit(_UTM_A2)} * s2))"
-                f" + ({_dbl_lit(_UTM_A4)} * s4))"
-                f" - ({_dbl_lit(_UTM_A6)} * ((s2 * c4) + (c2 * s4)))))",
-            ),
-        ),
+    L, H = _dbl_lit, _horner
+    c = ScalarChain(*spark_spellings())
+    c.add("phi", f"((({L(lat_0)} + CAST(py AS DOUBLE) * {L(_UTM_DEG_PER_PX)})) * {L(_UTM_RAD)})")
+    c.add("omega", f"((({L(lon_0)} + CAST(px AS DOUBLE) * {L(_UTM_DEG_PER_PX)}) - {L(cm)}) * {L(_UTM_RAD)})")
+    c.add("ph", "(phi * 0.5)")
+    c.add("sh", f"(ph * {H('(ph * ph)', _UTM_SIN_C)})")
+    c.add("ch", H("(ph * ph)", _UTM_COS_C))
+    c.add("sf", "(2.0 * (sh * ch))")  # sin(phi)
+    c.add("cf", "(1.0 - 2.0 * (sh * sh))")  # cos(phi)
+    c.add("s2", "(2.0 * (sf * cf))")  # sin(2 phi)
+    c.add("c2", "(1.0 - 2.0 * (sf * sf))")  # cos(2 phi)
+    c.add("t", "(sf / cf)")
+    c.add("eta2", f"({L(_UTM_EP2)} * (cf * cf))")
+    c.add("nu", f"({L(_UTM_A)} / sqrt(1.0 - {L(_UTM_E2)} * (sf * sf)))")
+    c.add("oc", "(omega * cf)")  # omega * cos(phi)
+    c.add("s4", "(2.0 * (s2 * c2))")  # sin(4 phi)
+    c.add("c4", "(1.0 - 2.0 * (s2 * s2))")  # cos(4 phi)
+    # sin(6 phi) = sin(2 phi) cos(4 phi) + cos(2 phi) sin(4 phi), folded
+    # directly into the meridian arc M(phi)
+    c.add(
+        "marc",
+        f"({L(_UTM_A)} * (((({L(_UTM_A0)} * phi) - ({L(_UTM_A2)} * s2))"
+        f" + ({L(_UTM_A4)} * s4))"
+        f" - ({L(_UTM_A6)} * ((s2 * c4) + (c2 * s4)))))",
     )
-
-
-def _utm_easting_northing() -> tuple[str, str]:
-    """Shared easting/northing expression text (Redfearn through the
-    5th/6th-order terms) over the stage columns."""
     t2 = "(t * t)"
-    easting = (
-        f"({_dbl_lit(_UTM_FE)} + ({_dbl_lit(_UTM_K0)} * (nu * "
-        f"((oc + (((oc * oc) * oc) * {_dbl_lit(1.0 / 6.0)}) * ((1.0 - {t2}) + eta2))"
-        f" + ((((((oc * oc) * oc) * oc) * oc) * {_dbl_lit(1.0 / 120.0)})"
+    c.add(
+        "easting",
+        f"({L(_UTM_FE)} + ({L(_UTM_K0)} * (nu * "
+        f"((oc + (((oc * oc) * oc) * {L(1.0 / 6.0)}) * ((1.0 - {t2}) + eta2))"
+        f" + ((((((oc * oc) * oc) * oc) * oc) * {L(1.0 / 120.0)})"
         f" * ((((5.0 - (18.0 * {t2})) + ({t2} * {t2})) + (14.0 * eta2))"
-        f" - ((58.0 * {t2}) * eta2)))))))"
+        f" - ((58.0 * {t2}) * eta2)))))))",
     )
-    northing = (
-        f"({_dbl_lit(_UTM_K0)} * (marc + ((nu * t) * "
+    c.add(
+        "northing",
+        f"({L(_UTM_K0)} * (marc + ((nu * t) * "
         f"((((oc * oc) * 0.5)"
-        f" + (((((oc * oc) * oc) * oc) * {_dbl_lit(1.0 / 24.0)})"
+        f" + (((((oc * oc) * oc) * oc) * {L(1.0 / 24.0)})"
         f" * (((5.0 - {t2}) + (9.0 * eta2)) + (4.0 * (eta2 * eta2)))))"
-        f" + ((((((((oc * oc) * oc) * oc) * oc) * oc) * {_dbl_lit(1.0 / 720.0)})"
-        f" * ((61.0 - (58.0 * {t2})) + ({t2} * {t2}))))))))"
+        f" + ((((((((oc * oc) * oc) * oc) * oc) * oc) * {L(1.0 / 720.0)})"
+        f" * ((61.0 - (58.0 * {t2})) + ({t2} * {t2}))))))))",
     )
-    return easting, northing
-
-
+    return c
 
 
 def crs_reproject_utm(
@@ -4694,50 +4704,16 @@ def crs_reproject_utm(
     its own zone with no other change. An explicit `zone` (the
     reference's 'w84u36'-style token, parse_proj_string_and_zone)
     overrides the extent derivation."""
-    g = dem_grid(spark, sf_dir)
-    df = g
-    for stage in _utm_stages(lon_0, lat_0, zone):
-        df = df.select(*[F.expr(sql).alias(name) for name, sql in stage])
-    e_sql, n_sql = _utm_easting_northing()
-    pts = df.select(
-        "elev",
-        F.expr(e_sql).alias("easting"),
-        F.expr(n_sql).alias("northing"),
+    pts = _utm_chain(lon_0, lat_0, zone).apply_spark(
+        dem_grid(spark, sf_dir), keep=_WARP_OUT, inputs=_WARP_IN
     )
-    return (
-        pts.groupBy(
-            F.floor(F.col("easting") / _UTM_CELL_M).cast("int").alias("utm_e_cell"),
-            F.floor(F.col("northing") / _UTM_CELL_M).cast("int").alias("utm_n_cell"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_src"),
-            (F.sum("elev").cast("double") / F.count(F.lit(1))).alias("warped_elev"),
-            F.min("easting").alias("min_easting"),
-            F.max("northing").alias("max_northing"),
-        )
-    )
+    return _warp_cells(pts, _UTM_CELL_M, "utm")
 
 
 def _crs_reproject_sql(
     lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0, zone: int | None = None
 ) -> str:
-    q = f"({DEM_GRID_SQL})"
-    for stage in _utm_stages(lon_0, lat_0, zone):
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-    e_sql, n_sql = _utm_easting_northing()
-    return f"""
-WITH pts AS (
-  SELECT elev, {e_sql} AS easting, {n_sql} AS northing FROM {q}
-)
-SELECT CAST(FLOOR(easting / {_dbl_lit(_UTM_CELL_M)}) AS INTEGER) AS utm_e_cell,
-       CAST(FLOOR(northing / {_dbl_lit(_UTM_CELL_M)}) AS INTEGER) AS utm_n_cell,
-       COUNT(*) AS n_src,
-       CAST(SUM(elev) AS DOUBLE) / COUNT(*) AS warped_elev,
-       MIN(easting) AS min_easting,
-       MAX(northing) AS max_northing
-FROM pts GROUP BY 1, 2
-"""
+    return _warp_cells_sql(_utm_chain(lon_0, lat_0, zone), _UTM_CELL_M, "utm")
 
 
 CRS_REPROJECT_UTM_SQL = _crs_reproject_sql()
@@ -4767,102 +4743,70 @@ _UTM_J8 = 1097.0 * _UTM_E1**4 / 512.0
 _UTM_MU_K = 1.0 / (_UTM_A * _UTM_A0)
 
 
-def _utm_inv_stages(cm: float) -> tuple[tuple[tuple[str, str], ...], ...]:
-    """Inverse transverse-Mercator stage pipeline over columns
-    (px, py, easting, northing) -> (lat_rt, lon_rt) in degrees
-    (Snyder 8-14..8-25 with T1 = t1^2)."""
-    L = _dbl_lit
-    H = _literals.horner
-    keep = (
-        ("px", "px"), ("py", "py"),
-        ("easting", "easting"), ("northing", "northing"),
+def _utm_inv_chain(
+    lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0, zone: int | None = None
+) -> ScalarChain:
+    """Inverse transverse-Mercator program over (px, py, easting,
+    northing) -> (lat_rt, lon_rt) in degrees (Snyder 8-14..8-25 with
+    T1 = t1^2), and the closure error against the cell's own geographic
+    coordinate. A chain of its own: it reuses the forward program's
+    names s2, c2, s4 and c4."""
+    cm = utm_central_meridian(zone if zone is not None else _utm_extent_zone(lon_0))
+    L, H = _dbl_lit, _horner
+    c = ScalarChain(*spark_spellings())
+    c.add("mu", f"((northing / {L(_UTM_K0)}) * {L(_UTM_MU_K)})")
+    c.add("muh", "(mu * 0.5)")
+    c.add("shm", f"(muh * {H('(muh * muh)', _UTM_SIN_C)})")
+    c.add("chm", H("(muh * muh)", _UTM_COS_C))
+    c.add("smu", "(2.0 * (shm * chm))")
+    c.add("cmu", "(1.0 - 2.0 * (shm * shm))")
+    c.add("s2", "(2.0 * (smu * cmu))")
+    c.add("c2", "(1.0 - 2.0 * (smu * smu))")
+    c.add("s4", "(2.0 * (s2 * c2))")
+    c.add("c4", "(1.0 - 2.0 * (s2 * s2))")
+    # phi1 = mu + J2 sin2mu + J4 sin4mu + J6 sin6mu + J8 sin8mu
+    c.add(
+        "phi1",
+        f"((((mu + ({L(_UTM_J2)} * s2)) + ({L(_UTM_J4)} * s4))"
+        f" + ({L(_UTM_J6)} * ((s2 * c4) + (c2 * s4))))"
+        f" + ({L(_UTM_J8)} * (2.0 * (s4 * c4))))",
     )
-    return (
-        keep + (
-            ("mu", f"((northing / {L(_UTM_K0)}) * {L(_UTM_MU_K)})"),
-        ),
-        keep + (("mu", "mu"), ("muh", "(mu * 0.5)")),
-        keep + (
-            ("mu", "mu"),
-            ("shm", f"(muh * {H('(muh * muh)', _UTM_SIN_C)})"),
-            ("chm", H("(muh * muh)", _UTM_COS_C)),
-        ),
-        keep + (
-            ("mu", "mu"),
-            ("smu", "(2.0 * (shm * chm))"),
-            ("cmu", "(1.0 - 2.0 * (shm * shm))"),
-        ),
-        keep + (
-            ("mu", "mu"),
-            ("s2", "(2.0 * (smu * cmu))"),
-            ("c2", "(1.0 - 2.0 * (smu * smu))"),
-        ),
-        keep + (
-            ("mu", "mu"), ("s2", "s2"), ("c2", "c2"),
-            ("s4", "(2.0 * (s2 * c2))"),
-            ("c4", "(1.0 - 2.0 * (s2 * s2))"),
-        ),
-        keep + (
-            # phi1 = mu + J2 sin2mu + J4 sin4mu + J6 sin6mu + J8 sin8mu
-            (
-                "phi1",
-                f"((((mu + ({L(_UTM_J2)} * s2)) + ({L(_UTM_J4)} * s4))"
-                f" + ({L(_UTM_J6)} * ((s2 * c4) + (c2 * s4))))"
-                f" + ({L(_UTM_J8)} * (2.0 * (s4 * c4))))",
-            ),
-        ),
-        keep + (("phi1", "phi1"), ("p1h", "(phi1 * 0.5)")),
-        keep + (
-            ("phi1", "phi1"),
-            ("sh1", f"(p1h * {H('(p1h * p1h)', _UTM_SIN_C)})"),
-            ("ch1", H("(p1h * p1h)", _UTM_COS_C)),
-        ),
-        keep + (
-            ("phi1", "phi1"),
-            ("sf1", "(2.0 * (sh1 * ch1))"),
-            ("cf1", "(1.0 - 2.0 * (sh1 * sh1))"),
-        ),
-        keep + (
-            ("phi1", "phi1"), ("cf1", "cf1"),
-            ("t1", "(sf1 / cf1)"),
-            ("c1", f"({L(_UTM_EP2)} * (cf1 * cf1))"),
-            ("w1", f"(1.0 - ({L(_UTM_E2)} * (sf1 * sf1)))"),
-        ),
-        keep + (
-            ("phi1", "phi1"), ("cf1", "cf1"), ("t1", "t1"), ("c1", "c1"),
-            ("n1", f"({L(_UTM_A)} / sqrt(w1))"),
-            ("r1", f"({L(_UTM_A * (1.0 - _UTM_E2))} / (w1 * sqrt(w1)))"),
-        ),
-        keep + (
-            ("phi1", "phi1"), ("cf1", "cf1"), ("t1", "t1"), ("c1", "c1"),
-            ("n1", "n1"), ("r1", "r1"),
-            ("d", f"((easting - {L(_UTM_FE)}) / (n1 * {L(_UTM_K0)}))"),
-            ("t2", "(t1 * t1)"),
-        ),
-        keep + (
-            ("phi1", "phi1"), ("cf1", "cf1"), ("t1", "t1"),
-            ("n1", "n1"), ("r1", "r1"), ("d", "d"), ("t2", "t2"),
-            ("k4", f"((((5.0 + (3.0 * t2)) + (10.0 * c1)) - (4.0 * (c1 * c1))) - {L(9.0 * _UTM_EP2)})"),
-            ("k6", f"(((((61.0 + (90.0 * t2)) + (298.0 * c1)) + (45.0 * (t2 * t2))) - {L(252.0 * _UTM_EP2)}) - (3.0 * (c1 * c1)))"),
-            ("l3", "((1.0 + (2.0 * t2)) + c1)"),
-            ("l5", f"(((((5.0 - (2.0 * c1)) + (28.0 * t2)) - (3.0 * (c1 * c1))) + {L(8.0 * _UTM_EP2)}) + (24.0 * (t2 * t2)))"),
-        ),
-        keep + (
-            (
-                "lat_rt",
-                f"((phi1 - (((n1 * t1) / r1) * (((((d * d) * 0.5)"
-                f" - ((((d * d) * (d * d)) * {L(1.0 / 24.0)}) * k4))"
-                f" + (((((d * d) * (d * d)) * (d * d)) * {L(1.0 / 720.0)}) * k6)))))"
-                f" / {L(_UTM_RAD)})",
-            ),
-            (
-                "lon_rt",
-                f"({L(cm)} + ((((d - ((((d * d) * d) * {L(1.0 / 6.0)}) * l3))"
-                f" + (((((d * d) * (d * d)) * d) * {L(1.0 / 120.0)}) * l5)) / cf1)"
-                f" / {L(_UTM_RAD)}))",
-            ),
-        ),
+    c.add("p1h", "(phi1 * 0.5)")
+    c.add("sh1", f"(p1h * {H('(p1h * p1h)', _UTM_SIN_C)})")
+    c.add("ch1", H("(p1h * p1h)", _UTM_COS_C))
+    c.add("sf1", "(2.0 * (sh1 * ch1))")
+    c.add("cf1", "(1.0 - 2.0 * (sh1 * sh1))")
+    c.add("t1", "(sf1 / cf1)")
+    c.add("c1", f"({L(_UTM_EP2)} * (cf1 * cf1))")
+    c.add("w1", f"(1.0 - ({L(_UTM_E2)} * (sf1 * sf1)))")
+    c.add("n1", f"({L(_UTM_A)} / sqrt(w1))")
+    c.add("r1", f"({L(_UTM_A * (1.0 - _UTM_E2))} / (w1 * sqrt(w1)))")
+    c.add("d", f"((easting - {L(_UTM_FE)}) / (n1 * {L(_UTM_K0)}))")
+    c.add("t2", "(t1 * t1)")
+    c.add("k4", f"((((5.0 + (3.0 * t2)) + (10.0 * c1)) - (4.0 * (c1 * c1))) - {L(9.0 * _UTM_EP2)})")
+    c.add("k6", f"(((((61.0 + (90.0 * t2)) + (298.0 * c1)) + (45.0 * (t2 * t2))) - {L(252.0 * _UTM_EP2)}) - (3.0 * (c1 * c1)))")
+    c.add("l3", "((1.0 + (2.0 * t2)) + c1)")
+    c.add("l5", f"(((((5.0 - (2.0 * c1)) + (28.0 * t2)) - (3.0 * (c1 * c1))) + {L(8.0 * _UTM_EP2)}) + (24.0 * (t2 * t2)))")
+    c.add(
+        "lat_rt",
+        f"((phi1 - (((n1 * t1) / r1) * (((((d * d) * 0.5)"
+        f" - ((((d * d) * (d * d)) * {L(1.0 / 24.0)}) * k4))"
+        f" + (((((d * d) * (d * d)) * (d * d)) * {L(1.0 / 720.0)}) * k6)))))"
+        f" / {L(_UTM_RAD)})",
     )
+    c.add(
+        "lon_rt",
+        f"({L(cm)} + ((((d - ((((d * d) * d) * {L(1.0 / 6.0)}) * l3))"
+        f" + (((((d * d) * (d * d)) * d) * {L(1.0 / 120.0)}) * l5)) / cf1)"
+        f" / {L(_UTM_RAD)}))",
+    )
+    c.add("err_lat_deg", f"(lat_rt - ({L(lat_0)} + (CAST(py AS DOUBLE) * {L(_UTM_DEG_PER_PX)})))")
+    c.add("err_lon_deg", f"(lon_rt - ({L(lon_0)} + (CAST(px AS DOUBLE) * {L(_UTM_DEG_PER_PX)})))")
+    return c
+
+
+_UTM_INV_IN = ("px", "py", "easting", "northing")
+_UTM_INV_OUT = (*_UTM_INV_IN, "lat_rt", "lon_rt", "err_lat_deg", "err_lon_deg")
 
 
 def crs_reproject_utm_inverse(
@@ -4880,50 +4824,23 @@ def crs_reproject_utm_inverse(
     identity within the series' truncation (measured < 2.9e-9 deg,
     test-pinned < 5e-9 deg ~ 0.5 mm), and any projected→geographic
     consumer gets the inverse arm this key certifies."""
-    cm = utm_central_meridian(zone if zone is not None else _utm_extent_zone(lon_0))
-    df = dem_grid(spark, sf_dir)
-    for stage in _utm_stages(lon_0, lat_0, zone):
-        df = df.select(*[F.expr(sql).alias(name) for name, sql in stage])
-    e_sql, n_sql = _utm_easting_northing()
-    df = df.select(
-        "px", "py",
-        F.expr(e_sql).alias("easting"),
-        F.expr(n_sql).alias("northing"),
+    fwd = _utm_chain(lon_0, lat_0, zone).apply_spark(
+        dem_grid(spark, sf_dir), keep=_UTM_INV_IN, inputs=_WARP_IN
     )
-    for stage in _utm_inv_stages(cm):
-        df = df.select(*[F.expr(sql).alias(name) for name, sql in stage])
-    L = _dbl_lit
-    return df.select(
-        "px", "py", "easting", "northing", "lat_rt", "lon_rt",
-        F.expr(
-            f"(lat_rt - ({L(lat_0)} + (CAST(py AS DOUBLE) * {L(_UTM_DEG_PER_PX)})))"
-        ).alias("err_lat_deg"),
-        F.expr(
-            f"(lon_rt - ({L(lon_0)} + (CAST(px AS DOUBLE) * {L(_UTM_DEG_PER_PX)})))"
-        ).alias("err_lon_deg"),
-    )
+    inv = _utm_inv_chain(lon_0, lat_0, zone)
+    return inv.apply_spark(fwd, keep=_UTM_INV_OUT, inputs=_UTM_INV_IN).select(*_UTM_INV_OUT)
 
 
 def _crs_reproject_utm_inverse_sql(
     lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0, zone: int | None = None
 ) -> str:
-    cm = utm_central_meridian(zone if zone is not None else _utm_extent_zone(lon_0))
-    q = f"({DEM_GRID_SQL})"
-    for stage in _utm_stages(lon_0, lat_0, zone):
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-    e_sql, n_sql = _utm_easting_northing()
-    q = f"(SELECT px, py, {e_sql} AS easting, {n_sql} AS northing FROM {q})"
-    for stage in _utm_inv_stages(cm):
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-    L = _dbl_lit
-    return f"""
-SELECT px, py, easting, northing, lat_rt, lon_rt,
-       (lat_rt - ({L(lat_0)} + (CAST(py AS DOUBLE) * {L(_UTM_DEG_PER_PX)}))) AS err_lat_deg,
-       (lon_rt - ({L(lon_0)} + (CAST(px AS DOUBLE) * {L(_UTM_DEG_PER_PX)}))) AS err_lon_deg
-FROM {q}
-"""
+    fwd = _utm_chain(lon_0, lat_0, zone).wrap_sql(
+        DEM_GRID_SQL, keep=_UTM_INV_IN, inputs=_WARP_IN
+    )
+    inv = _utm_inv_chain(lon_0, lat_0, zone).wrap_sql(
+        fwd, keep=_UTM_INV_OUT, inputs=_UTM_INV_IN
+    )
+    return f"SELECT {', '.join(_UTM_INV_OUT)} FROM ({inv}) AS t"
 
 
 CRS_REPROJECT_UTM_INVERSE_SQL = _crs_reproject_utm_inverse_sql()
@@ -4967,51 +4884,29 @@ _ST_EXP_C = [1.0, 1.0, 0.5, 1.0 / 6, 1.0 / 24, 1.0 / 120, 1.0 / 720, 1.0 / 5040]
 _ST_CELL_M = 1000.0                # target grid cell edge, meters
 
 
-def _stere_stages(
-    lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0
-) -> tuple[tuple[tuple[str, str], ...], ...]:
-    keep = (("px", "px"), ("py", "py"), ("elev", "elev"))
-    return (
-        keep + (
-            ("phi", f"((({_dbl_lit(lat_0)} + CAST(py AS DOUBLE) * {_dbl_lit(_UTM_DEG_PER_PX)})) * {_dbl_lit(_UTM_RAD)})"),
-            # UPS central meridian is 0 E: lam is the full longitude
-            ("lam", f"((({_dbl_lit(lon_0)} + CAST(px AS DOUBLE) * {_dbl_lit(_UTM_DEG_PER_PX)})) * {_dbl_lit(_UTM_RAD)})"),
-        ),
-        keep + (
-            ("lam", "lam"),
-            ("ph", "(phi * 0.5)"),
-        ),
-        keep + (
-            ("lam", "lam"),
-            ("sh", f"(ph * {_utm_horner('(ph * ph)', _UTM_SIN_C)})"),
-            ("ch", _utm_horner("(ph * ph)", _UTM_COS_C)),
-        ),
-        keep + (
-            ("sf", "(2.0 * (sh * ch))"),        # sin(phi)
-            ("cf", "(1.0 - 2.0 * (sh * sh))"),  # cos(phi)
-            ("sl", f"(lam * {_utm_horner('(lam * lam)', _UTM_SIN_C)})"),  # sin(lam)
-            ("cl", _utm_horner("(lam * lam)", _UTM_COS_C)),               # cos(lam)
-        ),
-        keep + (
-            ("sl", "sl"), ("cl", "cl"),
-            ("esf", f"({_dbl_lit(_ST_E)} * sf)"),
-            ("tcon", "(cf / (1.0 + sf))"),      # tan(pi/4 - phi/2)
-        ),
-        keep + (
-            ("sl", "sl"), ("cl", "cl"), ("tcon", "tcon"),
-            # e * atanh(e * sin phi)
-            ("ea", f"({_dbl_lit(_ST_E)} * (esf * {_utm_horner('(esf * esf)', _ST_ATANH_C)}))"),
-        ),
-        keep + (
-            ("sl", "sl"), ("cl", "cl"),
-            # t = tan(pi/4 - phi/2) * exp(e * atanh(e * sin phi))
-            ("t", f"(tcon * {_utm_horner('ea', _ST_EXP_C)})"),
-        ),
-        keep + (
-            ("easting", f"({_dbl_lit(_ST_FE)} + (({_dbl_lit(_ST_RHO_C)} * t) * sl))"),
-            ("northing", f"({_dbl_lit(_ST_FN)} - (({_dbl_lit(_ST_RHO_C)} * t) * cl))"),
-        ),
-    )
+def _stere_chain(lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0) -> ScalarChain:
+    """Polar-stereographic forward over (px, py) -> (easting, northing)."""
+    L, H = _dbl_lit, _horner
+    c = ScalarChain(*spark_spellings())
+    c.add("phi", f"((({L(lat_0)} + CAST(py AS DOUBLE) * {L(_UTM_DEG_PER_PX)})) * {L(_UTM_RAD)})")
+    # UPS central meridian is 0 E: lam is the full longitude
+    c.add("lam", f"((({L(lon_0)} + CAST(px AS DOUBLE) * {L(_UTM_DEG_PER_PX)})) * {L(_UTM_RAD)})")
+    c.add("ph", "(phi * 0.5)")
+    c.add("sh", f"(ph * {H('(ph * ph)', _UTM_SIN_C)})")
+    c.add("ch", H("(ph * ph)", _UTM_COS_C))
+    c.add("sf", "(2.0 * (sh * ch))")  # sin(phi)
+    c.add("cf", "(1.0 - 2.0 * (sh * sh))")  # cos(phi)
+    c.add("sl", f"(lam * {H('(lam * lam)', _UTM_SIN_C)})")  # sin(lam)
+    c.add("cl", H("(lam * lam)", _UTM_COS_C))  # cos(lam)
+    c.add("esf", f"({L(_ST_E)} * sf)")
+    c.add("tcon", "(cf / (1.0 + sf))")  # tan(pi/4 - phi/2)
+    # e * atanh(e * sin phi)
+    c.add("ea", f"({L(_ST_E)} * (esf * {H('(esf * esf)', _ST_ATANH_C)}))")
+    # t = tan(pi/4 - phi/2) * exp(e * atanh(e * sin phi))
+    c.add("t", f"(tcon * {H('ea', _ST_EXP_C)})")
+    c.add("easting", f"({L(_ST_FE)} + (({L(_ST_RHO_C)} * t) * sl))")
+    c.add("northing", f"({L(_ST_FN)} - (({L(_ST_RHO_C)} * t) * cl))")
+    return c
 
 
 def crs_reproject_stere(
@@ -5028,38 +4923,14 @@ def crs_reproject_stere(
     averaged elevation, source-cell count, and projected bounding
     corner. The first non-UTM target CRS of the engine's warp family
     (reference: gdalos_trans.py:82 warp_srs accepts any OSR CRS)."""
-    g = dem_grid(spark, sf_dir)
-    df = g
-    for stage in _stere_stages(lon_0, lat_0):
-        df = df.select(*[F.expr(sql).alias(name) for name, sql in stage])
-    return (
-        df.groupBy(
-            F.floor(F.col("easting") / _ST_CELL_M).cast("int").alias("ups_e_cell"),
-            F.floor(F.col("northing") / _ST_CELL_M).cast("int").alias("ups_n_cell"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_src"),
-            (F.sum("elev").cast("double") / F.count(F.lit(1))).alias("warped_elev"),
-            F.min("easting").alias("min_easting"),
-            F.max("northing").alias("max_northing"),
-        )
+    pts = _stere_chain(lon_0, lat_0).apply_spark(
+        dem_grid(spark, sf_dir), keep=_WARP_OUT, inputs=_WARP_IN
     )
+    return _warp_cells(pts, _ST_CELL_M, "ups")
 
 
 def _crs_stere_sql(lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0) -> str:
-    q = f"({DEM_GRID_SQL})"
-    for stage in _stere_stages(lon_0, lat_0):
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-    return f"""
-SELECT CAST(FLOOR(easting / {_dbl_lit(_ST_CELL_M)}) AS INTEGER) AS ups_e_cell,
-       CAST(FLOOR(northing / {_dbl_lit(_ST_CELL_M)}) AS INTEGER) AS ups_n_cell,
-       COUNT(*) AS n_src,
-       CAST(SUM(elev) AS DOUBLE) / COUNT(*) AS warped_elev,
-       MIN(easting) AS min_easting,
-       MAX(northing) AS max_northing
-FROM {q} GROUP BY 1, 2
-"""
+    return _warp_cells_sql(_stere_chain(lon_0, lat_0), _ST_CELL_M, "ups")
 
 
 CRS_REPROJECT_STERE_SQL = _crs_stere_sql()
@@ -5116,67 +4987,35 @@ def _lcc_consts(lat_0: float):
     return n, rho0
 
 
-def _lcc_stages(
-    lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0
-) -> tuple[tuple[tuple[str, str], ...], ...]:
+def _lcc_chain(lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0) -> ScalarChain:
+    """Lambert conformal conic (2SP) forward over (px, py) ->
+    (easting, northing)."""
     n, rho0 = _lcc_consts(lat_0)
     ta = _lcc_t(lat_0 * _UTM_RAD)
-    keep = (("px", "px"), ("py", "py"), ("elev", "elev"))
+    L, H = _dbl_lit, _horner
     # exp(e * atanh(e * sin phi)) — the conformal-latitude correction
-    atanh_esf = _utm_horner("(esf * esf)", _ST_ATANH_C)
-    ea = f"({_dbl_lit(_ST_E)} * (esf * {atanh_esf}))"
-    t_expr = f"(tcon * {_utm_horner(ea, _ST_EXP_C)})"
+    ea = f"({L(_ST_E)} * (esf * {H('(esf * esf)', _ST_ATANH_C)}))"
     # rho = rho0 * exp(2 n atanh(u)), u = (t - ta)/(t + ta)
-    atanh_u = _utm_horner("(u * u)", _ST_ATANH_C)
-    two_n_atanh = f"(({_dbl_lit(2.0 * n)}) * (u * {atanh_u}))"
-    rho_expr = f"({_dbl_lit(rho0)} * {_utm_horner(two_n_atanh, _ST_EXP_C)})"
-    return (
-        keep + (
-            ("phi", f"((({_dbl_lit(lat_0)} + CAST(py AS DOUBLE) * {_dbl_lit(_UTM_DEG_PER_PX)})) * {_dbl_lit(_UTM_RAD)})"),
-            # gamma = n * (lon - lon_0), lon_0 = the extent anchor
-            ("gam", f"({_dbl_lit(n)} * ((CAST(px AS DOUBLE) * {_dbl_lit(_UTM_DEG_PER_PX)}) * {_dbl_lit(_UTM_RAD)}))"),
-        ),
-        keep + (
-            ("gam", "gam"),
-            ("ph", "(phi * 0.5)"),
-        ),
-        keep + (
-            ("gam", "gam"),
-            ("sh", f"(ph * {_utm_horner('(ph * ph)', _UTM_SIN_C)})"),
-            ("ch", _utm_horner("(ph * ph)", _UTM_COS_C)),
-        ),
-        keep + (
-            ("gam", "gam"),
-            ("sf", "(2.0 * (sh * ch))"),
-            ("cf", "(1.0 - 2.0 * (sh * sh))"),
-        ),
-        keep + (
-            ("gam", "gam"),
-            ("esf", f"({_dbl_lit(_ST_E)} * sf)"),
-            ("tcon", "(cf / (1.0 + sf))"),
-        ),
-        keep + (
-            ("gam", "gam"),
-            ("t", t_expr),
-        ),
-        keep + (
-            ("gam", "gam"),
-            ("u", f"((t - {_dbl_lit(ta)}) / (t + {_dbl_lit(ta)}))"),
-        ),
-        keep + (
-            ("gam", "gam"),
-            ("rho", rho_expr),
-        ),
-        keep + (
-            ("rho", "rho"),
-            ("sg", f"(gam * {_utm_horner('(gam * gam)', _UTM_SIN_C)})"),
-            ("cg", _utm_horner("(gam * gam)", _UTM_COS_C)),
-        ),
-        keep + (
-            ("easting", f"({_dbl_lit(_LCC_FE)} + (rho * sg))"),
-            ("northing", f"({_dbl_lit(_LCC_FN)} + ({_dbl_lit(rho0)} - (rho * cg)))"),
-        ),
-    )
+    two_n_atanh = f"(({L(2.0 * n)}) * (u * {H('(u * u)', _ST_ATANH_C)}))"
+    c = ScalarChain(*spark_spellings())
+    c.add("phi", f"((({L(lat_0)} + CAST(py AS DOUBLE) * {L(_UTM_DEG_PER_PX)})) * {L(_UTM_RAD)})")
+    # gamma = n * (lon - lon_0), lon_0 = the extent anchor
+    c.add("gam", f"({L(n)} * ((CAST(px AS DOUBLE) * {L(_UTM_DEG_PER_PX)}) * {L(_UTM_RAD)}))")
+    c.add("ph", "(phi * 0.5)")
+    c.add("sh", f"(ph * {H('(ph * ph)', _UTM_SIN_C)})")
+    c.add("ch", H("(ph * ph)", _UTM_COS_C))
+    c.add("sf", "(2.0 * (sh * ch))")
+    c.add("cf", "(1.0 - 2.0 * (sh * sh))")
+    c.add("esf", f"({L(_ST_E)} * sf)")
+    c.add("tcon", "(cf / (1.0 + sf))")
+    c.add("t", f"(tcon * {H(ea, _ST_EXP_C)})")
+    c.add("u", f"((t - {L(ta)}) / (t + {L(ta)}))")
+    c.add("rho", f"({L(rho0)} * {H(two_n_atanh, _ST_EXP_C)})")
+    c.add("sg", f"(gam * {H('(gam * gam)', _UTM_SIN_C)})")
+    c.add("cg", H("(gam * gam)", _UTM_COS_C))
+    c.add("easting", f"({L(_LCC_FE)} + (rho * sg))")
+    c.add("northing", f"({L(_LCC_FN)} + ({L(rho0)} - (rho * cg)))")
+    return c
 
 
 def crs_reproject_lcc(
@@ -5192,38 +5031,14 @@ def crs_reproject_lcc(
     (ulp-exact on the source extent — see the module comment), regridded
     onto 1 km LCC cells with the same one-shuffle contract as the UTM
     and stereographic warps."""
-    g = dem_grid(spark, sf_dir)
-    df = g
-    for stage in _lcc_stages(lon_0, lat_0):
-        df = df.select(*[F.expr(sql).alias(name) for name, sql in stage])
-    return (
-        df.groupBy(
-            F.floor(F.col("easting") / _ST_CELL_M).cast("int").alias("lcc_e_cell"),
-            F.floor(F.col("northing") / _ST_CELL_M).cast("int").alias("lcc_n_cell"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_src"),
-            (F.sum("elev").cast("double") / F.count(F.lit(1))).alias("warped_elev"),
-            F.min("easting").alias("min_easting"),
-            F.max("northing").alias("max_northing"),
-        )
+    pts = _lcc_chain(lon_0, lat_0).apply_spark(
+        dem_grid(spark, sf_dir), keep=_WARP_OUT, inputs=_WARP_IN
     )
+    return _warp_cells(pts, _ST_CELL_M, "lcc")
 
 
 def _crs_lcc_sql(lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0) -> str:
-    q = f"({DEM_GRID_SQL})"
-    for stage in _lcc_stages(lon_0, lat_0):
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-    return f"""
-SELECT CAST(FLOOR(easting / {_dbl_lit(_ST_CELL_M)}) AS INTEGER) AS lcc_e_cell,
-       CAST(FLOOR(northing / {_dbl_lit(_ST_CELL_M)}) AS INTEGER) AS lcc_n_cell,
-       COUNT(*) AS n_src,
-       CAST(SUM(elev) AS DOUBLE) / COUNT(*) AS warped_elev,
-       MIN(easting) AS min_easting,
-       MAX(northing) AS max_northing
-FROM {q} GROUP BY 1, 2
-"""
+    return _warp_cells_sql(_lcc_chain(lon_0, lat_0), _ST_CELL_M, "lcc")
 
 
 CRS_REPROJECT_LCC_SQL = _crs_lcc_sql()
@@ -5266,9 +5081,6 @@ def _aea_q(phi: float) -> float:
     )
 
 
-_aea_horner = _literals.horner
-
-
 def _aea_consts(lat_0: float) -> tuple[float, float, float]:
     """Host-side 2SP parameter block (Snyder 14-3/14-5/14-7a) anchored
     at the extent origin latitude."""
@@ -5281,65 +5093,37 @@ def _aea_consts(lat_0: float) -> tuple[float, float, float]:
     return n, ccap, rho0
 
 
-def _aea_stages(
-    lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0
-) -> tuple[tuple[tuple[str, str], ...], ...]:
+def _aea_chain(lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0) -> ScalarChain:
+    """Albers equal-area conic (2SP) forward over (px, py) ->
+    (easting, northing)."""
     n, ccap, rho0 = _aea_consts(lat_0)
-    keep = (("px", "px"), ("py", "py"), ("elev", "elev"))
     # Every float literal is exponent-spelled (_dbl_lit) so both engines
     # parse it directly as DOUBLE: the bare-literal DECIMAL path rounds
     # differently in DuckDB for some values (measured here: 2560/4096
     # cells off by one ulp through the (1-e^2) multiplier).
-    d = _dbl_lit
+    d, H = _dbl_lit, _horner
+    c = ScalarChain(*spark_spellings())
+    c.add("phi", f"((({d(lat_0)} + CAST(py AS DOUBLE) * {d(_UTM_DEG_PER_PX)})) * {d(_UTM_RAD)})")
+    # theta = n * (lon - lon_0), lon_0 = the extent anchor
+    c.add("tht", f"({d(n)} * ((CAST(px AS DOUBLE) * {d(_UTM_DEG_PER_PX)}) * {d(_UTM_RAD)}))")
+    c.add("ph", "(phi * 0.5)")
+    c.add("sh", f"(ph * {H('(ph * ph)', _UTM_SIN_C)})")
+    c.add("ch", H("(ph * ph)", _UTM_COS_C))
+    c.add("sf", "(2.0 * (sh * ch))")  # sin(phi)
+    c.add("esf", f"({d(_ST_E)} * sf)")
     # q(phi): the (1/e) atanh(e sin phi) term folds to sf * P((e sf)^2)
-    atanh_p = _aea_horner("(esf * esf)", _ST_ATANH_C)
-    q_expr = (
+    c.add(
+        "qv",
         f"({d(1.0 - _UTM_E2)} * ((sf / (1.0 - {d(_UTM_E2)} * (sf * sf)))"
-        f" + (sf * {atanh_p})))"
+        f" + (sf * {H('(esf * esf)', _ST_ATANH_C)})))",
     )
-    return (
-        keep + (
-            ("phi", f"((({d(lat_0)} + CAST(py AS DOUBLE) * {d(_UTM_DEG_PER_PX)})) * {d(_UTM_RAD)})"),
-            # theta = n * (lon - lon_0), lon_0 = the extent anchor
-            ("tht", f"({d(n)} * ((CAST(px AS DOUBLE) * {d(_UTM_DEG_PER_PX)}) * {d(_UTM_RAD)}))"),
-        ),
-        keep + (
-            ("tht", "tht"),
-            ("ph", "(phi * 0.5)"),
-        ),
-        keep + (
-            ("tht", "tht"),
-            ("sh", f"(ph * {_aea_horner('(ph * ph)', _UTM_SIN_C)})"),
-            ("ch", _aea_horner("(ph * ph)", _UTM_COS_C)),
-        ),
-        keep + (
-            ("tht", "tht"),
-            ("sf", "(2.0 * (sh * ch))"),        # sin(phi)
-        ),
-        keep + (
-            ("tht", "tht"),
-            ("sf", "sf"),
-            ("esf", f"({d(_ST_E)} * sf)"),
-        ),
-        keep + (
-            ("tht", "tht"),
-            ("qv", q_expr),
-        ),
-        keep + (
-            ("tht", "tht"),
-            # rho = a sqrt(C - n q)/n — IEEE sqrt, bit-stable cross-engine
-            ("rho", f"(({d(_UTM_A)} * sqrt({d(ccap)} - ({d(n)} * qv))) / {d(n)})"),
-        ),
-        keep + (
-            ("rho", "rho"),
-            ("st", f"(tht * {_aea_horner('(tht * tht)', _UTM_SIN_C)})"),
-            ("ct", _aea_horner("(tht * tht)", _UTM_COS_C)),
-        ),
-        keep + (
-            ("easting", f"({d(_AEA_FE)} + (rho * st))"),
-            ("northing", f"({d(_AEA_FN)} + ({d(rho0)} - (rho * ct)))"),
-        ),
-    )
+    # rho = a sqrt(C - n q)/n — IEEE sqrt, bit-stable cross-engine
+    c.add("rho", f"(({d(_UTM_A)} * sqrt({d(ccap)} - ({d(n)} * qv))) / {d(n)})")
+    c.add("st", f"(tht * {H('(tht * tht)', _UTM_SIN_C)})")
+    c.add("ct", H("(tht * tht)", _UTM_COS_C))
+    c.add("easting", f"({d(_AEA_FE)} + (rho * st))")
+    c.add("northing", f"({d(_AEA_FN)} + ({d(rho0)} - (rho * ct)))")
+    return c
 
 
 def crs_reproject_aea(
@@ -5354,38 +5138,14 @@ def crs_reproject_aea(
     through the odd atanh series and the radial term through the
     engines' correctly-rounded SQRT, regridded onto 1 km AEA cells with
     the same one-shuffle contract as the UTM/stereographic/LCC warps."""
-    g = dem_grid(spark, sf_dir)
-    df = g
-    for stage in _aea_stages(lon_0, lat_0):
-        df = df.select(*[F.expr(sql).alias(name) for name, sql in stage])
-    return (
-        df.groupBy(
-            F.floor(F.col("easting") / _ST_CELL_M).cast("int").alias("aea_e_cell"),
-            F.floor(F.col("northing") / _ST_CELL_M).cast("int").alias("aea_n_cell"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_src"),
-            (F.sum("elev").cast("double") / F.count(F.lit(1))).alias("warped_elev"),
-            F.min("easting").alias("min_easting"),
-            F.max("northing").alias("max_northing"),
-        )
+    pts = _aea_chain(lon_0, lat_0).apply_spark(
+        dem_grid(spark, sf_dir), keep=_WARP_OUT, inputs=_WARP_IN
     )
+    return _warp_cells(pts, _ST_CELL_M, "aea")
 
 
 def _crs_aea_sql(lon_0: float = _UTM_LON_0, lat_0: float = _UTM_LAT_0) -> str:
-    q = f"({DEM_GRID_SQL})"
-    for stage in _aea_stages(lon_0, lat_0):
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-    return f"""
-SELECT CAST(FLOOR(easting / {_dbl_lit(_ST_CELL_M)}) AS INTEGER) AS aea_e_cell,
-       CAST(FLOOR(northing / {_dbl_lit(_ST_CELL_M)}) AS INTEGER) AS aea_n_cell,
-       COUNT(*) AS n_src,
-       CAST(SUM(elev) AS DOUBLE) / COUNT(*) AS warped_elev,
-       MIN(easting) AS min_easting,
-       MAX(northing) AS max_northing
-FROM {q} GROUP BY 1, 2
-"""
+    return _warp_cells_sql(_aea_chain(lon_0, lat_0), _ST_CELL_M, "aea")
 
 
 CRS_REPROJECT_AEA_SQL = _crs_aea_sql()

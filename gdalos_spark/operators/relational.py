@@ -2532,9 +2532,8 @@ def events_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("num", F.col("n_pair") * F.col("n_ctx"))
         .withColumn("den", F.col("n_a") * F.col("n_b"))
     )
-    spark_shift = lambda bl: f"shiftleft(CAST(1 AS BIGINT), {bl})"  # noqa: E731
-    j = _log2_col(j, "num", "lg_num", spark_shift)
-    j = _log2_col(j, "den", "lg_den", spark_shift)
+    j = _log2_col(j, "num", "lg_num")
+    j = _log2_col(j, "den", "lg_den")
     return j.select(
         "ta",
         "tb",
@@ -3362,8 +3361,7 @@ def events_type_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load(spark, sf_dir, "events").select("user_id", "event_type")
     per_ut = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("c"))
-    spark_shift = lambda bl: f"shiftleft(CAST(1 AS BIGINT), {bl})"  # noqa: E731
-    per_ut = _log2_col(per_ut, "c", "lg_c", spark_shift)
+    per_ut = _log2_col(per_ut, "c", "lg_c")
     per_user = per_ut.groupBy("user_id").agg(
         F.sum("c").alias("n"),
         F.count(F.lit(1)).alias("n_types"),
@@ -3371,7 +3369,7 @@ def events_type_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("c") * F.col("lg_c") * 1_000_000.0).cast("bigint")
         ).alias("clc_u"),
     )
-    per_user = _log2_col(per_user, "n", "lg_n", spark_shift)
+    per_user = _log2_col(per_user, "n", "lg_n")
     return per_user.select(
         "user_id",
         F.col("n").cast("bigint").alias("n_events"),

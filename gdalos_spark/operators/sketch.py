@@ -116,10 +116,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministically the same garbage on both engines)
     from gdalos_spark.operators.text import _log2_col
 
-    raw = _log2_col(
-        raw, "greatest(v, 1)", "lg_v",
-        lambda bl: f"shiftleft(CAST(1 AS BIGINT), {bl})",
-    )
+    raw = _log2_col(raw, "greatest(v, 1)", "lg_v")
     est = F.when(
         (F.col("hll_raw") <= F.lit(float(HLL_LC_BOUND))) & (F.col("v") > 0),
         F.lit(float(HLL_LN2M)) * (F.lit(8.0) - F.col("lg_v")),

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from gdalos_spark.datamodel import footer_count, load, split_for_cpu
 from gdalos_spark.functions import hashing
+from gdalos_spark.functions.scalar_chain import LOG2_SCALE, atanh_series, spark_spellings
 from gdalos_spark.operators.dedup import DOCSH_SQL, SHINGLES3_SQL, doc_shingles
 
 # ---------------------------------------------------------------------------
@@ -741,8 +742,6 @@ TEXT_C4_FILTERS_SQL = _c4_sql()
 #     rounded and differ across libms.
 # ---------------------------------------------------------------------------
 
-_LOG2_C = "2.885390081777927"  # 2/ln(2), host-precomputed literal
-
 
 def _log2_stages(x: str, shift: str) -> dict[str, str]:
     """Staged expression fragments computing log2(x) for an integer
@@ -755,25 +754,17 @@ def _log2_stages(x: str, shift: str) -> dict[str, str]:
         "m": f"(CAST({x} AS DOUBLE) / CAST({shift} AS DOUBLE))",
         "z": "((m - 1.0) / (m + 1.0))",
         "z2": "(z * z)",
-        # Horner series coefficients 1/(2k+1) as host-precomputed DOUBLE
-        # literals: the spelling `1.0/13.0` is DECIMAL/DECIMAL division
-        # in Spark SQL (scale-truncated to ~1e-7!) but double in DuckDB —
-        # a cross-engine trap that poisoned every downstream bit.
-        # Exponent-suffixed (e0) so both lexers produce DOUBLE directly:
-        # DuckDB's DECIMAL->DOUBLE cast of the bare 1/11 literal is one
-        # ulp off the correct parse (raster._dbl_lit discipline).
-        "poly": "(((((((0.07692307692307693e0)*z2 + 0.09090909090909091e0)*z2"
-                " + 0.1111111111111111e0)*z2 + 0.14285714285714285e0)*z2"
-                " + 0.2e0)*z2 + 0.3333333333333333e0)*z2 + 1.0e0)",
-        "lg": f"(CAST(bl AS DOUBLE) + {_LOG2_C}e0 * z * poly)",
+        "poly": atanh_series("z2"),
+        "lg": f"(CAST(bl AS DOUBLE) + {LOG2_SCALE} * z * poly)",
     }
 
 
-def _log2_col(df, x: str, out: str, shift_fn) -> "DataFrame":
+def _log2_col(df, x: str, out: str) -> "DataFrame":
     """Append column `out` = log2 of integer column `x` via staged
     projections (each stage a named column, so no multi-KB collapsed
     expression reaches the parser)."""
-    s = _log2_stages(x, shift_fn("bl"))
+    _, shift = spark_spellings()
+    s = _log2_stages(x, shift("bl"))
     df = df.withColumn("bl", F.expr(s["bl"]))
     df = df.withColumn("m", F.expr(s["m"]))
     df = df.withColumn("z", F.expr(s["z"]))
@@ -801,10 +792,9 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = occ.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
     total = tf.agg(F.sum("tf").alias("n_total"))
 
-    spark_shift = lambda bl: f"shiftleft(CAST(1 AS BIGINT), {bl})"  # noqa: E731
     scored = occ.join(tf, "tok").crossJoin(F.broadcast(total))
-    scored = _log2_col(scored, "n_total", "lg_n", spark_shift)
-    scored = _log2_col(scored, "tf", "lg_tf", spark_shift)
+    scored = _log2_col(scored, "n_total", "lg_n")
+    scored = _log2_col(scored, "tf", "lg_tf")
     scored = scored.select(
         "doc_id",
         F.round((F.col("lg_n") - F.col("lg_tf")) * 1_000_000.0).cast("bigint").alias("bits_u"),
@@ -898,10 +888,8 @@ def _log2_lateral_sql(x: str, out: str) -> str:
         f"(CAST({x} AS DOUBLE) / CAST((CAST(1 AS BIGINT) << {bl}) AS DOUBLE)) AS {m}, "
         f"(({m} - 1.0) / ({m} + 1.0)) AS {z}, "
         f"({z} * {z}) AS {z2}, "
-        f"(((((((0.07692307692307693e0)*{z2} + 0.09090909090909091e0)*{z2}"
-        f" + 0.1111111111111111e0)*{z2} + 0.14285714285714285e0)*{z2}"
-        f" + 0.2e0)*{z2} + 0.3333333333333333e0)*{z2} + 1.0e0) AS {poly}, "
-        f"(CAST({bl} AS DOUBLE) + {_LOG2_C}e0 * {z} * {poly}) AS {out}"
+        f"{atanh_series(z2)} AS {poly}, "
+        f"(CAST({bl} AS DOUBLE) + {LOG2_SCALE} * {z} * {poly}) AS {out}"
     )
 
 
@@ -949,9 +937,8 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_r") + F.col("v")).alias("d"),
         )
     )
-    spark_shift = lambda bl: f"shiftleft(CAST(1 AS BIGINT), {bl})"  # noqa: E731
     for x, out in (("a", "lg_a"), ("b", "lg_b"), ("c", "lg_c"), ("d", "lg_d")):
-        j = _log2_col(j, x, out, spark_shift)
+        j = _log2_col(j, x, out)
     scored = j.select(
         "doc_id",
         F.round(
@@ -1077,9 +1064,8 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dl", "n_docs", "total_len",
         )
     )
-    spark_shift = lambda bl: f"shiftleft(CAST(1 AS BIGINT), {bl})"  # noqa: E731
-    j = _log2_col(j, "idf_num", "lg_num", spark_shift)
-    j = _log2_col(j, "idf_den", "lg_den", spark_shift)
+    j = _log2_col(j, "idf_num", "lg_num")
+    j = _log2_col(j, "idf_den", "lg_den")
     sat = (
         "(CAST(tf AS DOUBLE) * (CAST({k1} AS DOUBLE) / 10.0 + 1.0)) / "
         "(CAST(tf AS DOUBLE) + (CAST({k1} AS DOUBLE) / 10.0) * "
@@ -1187,15 +1173,14 @@ def doc_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = occ.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df_tbl = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    spark_shift = lambda bl: f"shiftleft(CAST(1 AS BIGINT), {bl})"  # noqa: E731
     j = (
         tf.join(df_tbl, "tok")
         .crossJoin(F.broadcast(n_docs))
         .withColumn("num", F.col("n_docs") + 1)
         .withColumn("den", F.col("df") + 1)
     )
-    j = _log2_col(j, "num", "lg_num", spark_shift)
-    j = _log2_col(j, "den", "lg_den", spark_shift)
+    j = _log2_col(j, "num", "lg_num")
+    j = _log2_col(j, "den", "lg_den")
     scored = j.select(
         "doc_id",
         "tok",
@@ -1282,10 +1267,9 @@ def corpus_language_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = per_lang.agg(
         F.sum("n_docs").alias("total_docs"), F.sum("n_tokens").alias("total_tokens")
     )
-    spark_shift = lambda bl: f"shiftleft(CAST(1 AS BIGINT), {bl})"  # noqa: E731
     j = per_lang.crossJoin(F.broadcast(tot))
-    j = _log2_col(j, "n_docs", "lg_n", spark_shift)
-    j = _log2_col(j, "total_docs", "lg_t", spark_shift)
+    j = _log2_col(j, "n_docs", "lg_n")
+    j = _log2_col(j, "total_docs", "lg_t")
     share = F.col("n_docs").cast("double") / F.col("total_docs").cast("double")
     return j.select(
         "lang",

@@ -34,6 +34,7 @@ from gdalos_spark.datamodel import (
     load,
     query_persist,
 )
+from gdalos_spark.functions.scalar_chain import ScalarChain, duckdb_spellings, spark_spellings
 
 # observer for single-observer LOS (#19): grid center, antenna at z=500
 OBS_X, OBS_Y = 32, 32
@@ -592,77 +593,37 @@ def _norm360(x: str) -> str:
     return f"(CASE WHEN ({r1}) >= 360.0 THEN {frac1} * 360.0 ELSE ({r1}) END)"
 
 
-_AZ_RAW_S = "(CAST(value AS DOUBLE) * 7.3 - 500.0)"
-_AZ_RAW_E = "(CAST(value AS DOUBLE) * 2.9 - 100.0)"
-
-# Stage-wise expressions: each stage refers to the previous stage's columns
-# by NAME, so the expression text stays short (a single composed expression
-# re-expands every nested NormalizeAngle ~6x and overflows both parsers).
-_AZ_STAGES: tuple[tuple[tuple[str, str], ...], ...] = (
-    (("event_id", "event_id"), ("s_raw", _AZ_RAW_S), ("e_raw", _AZ_RAW_E)),
-    (
-        ("event_id", "event_id"),
-        ("az_start", "__NORM__s_raw"),
-        ("e0", "__NORM__e_raw"),
-    ),
-    (
-        ("event_id", "event_id"),
-        ("az_start", "az_start"),
-        ("az_end", "(CASE WHEN e0 < az_start THEN e0 + 360.0 ELSE e0 END)"),
-    ),
-    (
-        ("event_id", "event_id"),
-        ("az_start", "az_start"),
-        ("az_end", "az_end"),
-        ("direction", "((az_end + az_start) / 2.0)"),
-        ("aperture", "(az_end - az_start)"),
-    ),
-    (
-        ("event_id", "event_id"),
-        ("az_start", "az_start"),
-        ("az_end", "az_end"),
-        ("direction", "direction"),
-        ("aperture", "aperture"),
-        ("head", "__NORM__(90.0 - direction)"),
-    ),
-    (
-        ("event_id", "event_id"),
-        ("az_start", "az_start"),
-        ("az_end", "az_end"),
-        ("direction", "direction"),
-        ("aperture", "aperture"),
-        ("a_from0", f"(__NORM__(head - aperture * 0.5) * {M_PI_180!r})"),
-        ("a_to0", f"(__NORM__(head + aperture * 0.5) * {M_PI_180!r})"),
-    ),
-    (
-        ("event_id", "event_id"),
-        ("az_start", "az_start"),
-        ("az_end", "az_end"),
-        ("direction", "direction"),
-        ("aperture", "aperture"),
-        (
-            "a_from_rad",
-            f"(CASE WHEN aperture >= 360.0 - {FULL_CIRCLE_EPS!r} THEN 0.0 "
-            f"WHEN a_from0 > a_to0 THEN a_from0 - {M_2PI!r} ELSE a_from0 END)",
-        ),
-        (
-            "a_to_rad",
-            f"(CASE WHEN aperture >= 360.0 - {FULL_CIRCLE_EPS!r} THEN 0.0 ELSE a_to0 END)",
-        ),
-    ),
-)
+def _az_chain() -> ScalarChain:
+    """The GetFromToAngle program over raw event azimuths. Each step is
+    a named column, so the expression text stays short (one composed
+    expression re-expands every nested NormalizeAngle ~6x and overflows
+    both parsers)."""
+    c = ScalarChain(*spark_spellings())
+    c.add("s_raw", "(CAST(value AS DOUBLE) * 7.3 - 500.0)")
+    c.add("e_raw", "(CAST(value AS DOUBLE) * 2.9 - 100.0)")
+    c.add("az_start", _norm360("s_raw"))
+    # not "e0": the chain reads every exponent-spelled literal's e0 as a name
+    c.add("az_e0", _norm360("e_raw"))
+    c.add("az_end", "(CASE WHEN az_e0 < az_start THEN az_e0 + 360.0 ELSE az_e0 END)")
+    c.add("direction", "((az_end + az_start) / 2.0)")
+    c.add("aperture", "(az_end - az_start)")
+    c.add("head", _norm360("(90.0 - direction)"))
+    c.add("a_from0", f"({_norm360('(head - aperture * 0.5)')} * {M_PI_180!r})")
+    c.add("a_to0", f"({_norm360('(head + aperture * 0.5)')} * {M_PI_180!r})")
+    c.add(
+        "a_from_rad",
+        f"(CASE WHEN aperture >= 360.0 - {FULL_CIRCLE_EPS!r} THEN 0.0 "
+        f"WHEN a_from0 > a_to0 THEN a_from0 - {M_2PI!r} ELSE a_from0 END)",
+    )
+    c.add(
+        "a_to_rad",
+        f"(CASE WHEN aperture >= 360.0 - {FULL_CIRCLE_EPS!r} THEN 0.0 ELSE a_to0 END)",
+    )
+    return c
 
 
-def _expand_stage_expr(expr: str) -> str:
-    """Replace the __NORM__<arg> marker with the NormalizeAngle expansion
-    of everything after the marker (arg is the full remainder string)."""
-    if expr.startswith("__NORM__"):
-        return _norm360(expr[len("__NORM__"):])
-    if expr.startswith("(__NORM__"):
-        # form "(__NORM__<arg> * C)": expand the norm over <arg>
-        inner, tail = expr[len("(__NORM__"):].rsplit(" * ", 1)
-        return f"({_norm360(inner)} * {tail}"
-    return expr
+_AZ_IN = ("event_id", "value")
+_AZ_OUT = ("event_id", "az_start", "az_end", "direction", "aperture", "a_from_rad", "a_to_rad")
 
 
 def azimuth_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -671,25 +632,16 @@ def azimuth_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     viewshed backend consumes. A chain of narrow projections — zero
     shuffles; Catalyst collapses the stages into one whole-stage-codegen
     projection. Every stage uses the IDENTICAL expression text as the
-    oracle's nested CTEs, so every double is bit-equal."""
+    oracle's CTE chain, so every double is bit-equal."""
     from gdalos_spark.datamodel import load as _load
 
     df = _load(spark, sf_dir, "events")
-    for stage in _AZ_STAGES:
-        df = df.select(
-            *[F.expr(_expand_stage_expr(sql)).alias(name) for name, sql in stage]
-        )
-    return df
+    return _az_chain().apply_spark(df, keep=_AZ_OUT, inputs=_AZ_IN).select(*_AZ_OUT)
 
 
 def _azimuth_sql() -> str:
-    q = "events"
-    for stage in _AZ_STAGES:
-        cols = ", ".join(
-            f"{_expand_stage_expr(sql)} AS {name}" for name, sql in stage
-        )
-        q = f"(SELECT {cols} FROM {q})"
-    return f"SELECT * FROM {q} AS t"
+    q = _az_chain().wrap_sql(f"SELECT {', '.join(_AZ_IN)} FROM events", keep=_AZ_OUT, inputs=_AZ_IN)
+    return f"SELECT {', '.join(_AZ_OUT)} FROM ({q}) AS t"
 
 
 AZIMUTH_NORMALIZE_SQL = _azimuth_sql()
@@ -907,55 +859,59 @@ _GEO_ASIN_C = [
 from gdalos_spark.functions.literals import dbl_lit as _geo_lit, horner as _geo_horner  # noqa: E402
 
 
-def _geo_stages() -> tuple[tuple[tuple[str, str], ...], ...]:
-    sin_p = lambda x, x2: f"({x} * {_geo_horner(x2, _GEO_SIN_C)})"  # noqa: E731
-    cos_p = lambda x2: _geo_horner(x2, _GEO_COS_C)  # noqa: E731
+# bounded synthetic endpoints: lon/lat in [-15, 15) degrees
+_GEO_ENDPOINTS = (
+    ("lon1", "(CAST(c_custkey * 7 % 30 AS DOUBLE) - 15.0 + 0.5)"),
+    ("lat1", "(CAST(c_custkey * 13 % 30 AS DOUBLE) - 15.0 + 0.25)"),
+    ("lon2", "(CAST(c_custkey * 11 % 30 AS DOUBLE) - 15.0 + 0.75)"),
+    ("lat2", "(CAST(c_custkey * 17 % 30 AS DOUBLE) - 15.0 + 0.125)"),
+)
+_GEO_IDS = ("c_custkey", "lon1", "lat1", "lon2", "lat2")
+
+
+def _geo_links(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The synthetic links with distinct endpoints. dist = 0 iff the
+    endpoints coincide (the series sin is zero only at 0 on this bounded
+    domain), so filtering on the endpoints BEFORE the distance program
+    keeps the pushed-down predicate tiny instead of duplicating the
+    collapsed haversine expression in the scan."""
+    from gdalos_spark.datamodel import load as _load
+
+    df = _load(spark, sf_dir, "customer").select(
+        "c_custkey", *[F.expr(e).alias(n) for n, e in _GEO_ENDPOINTS]
+    )
+    return df.filter((F.col("lon1") != F.col("lon2")) | (F.col("lat1") != F.col("lat2")))
+
+
+def _geo_links_sql() -> str:
+    cols = ", ".join(f"{e} AS {n}" for n, e in _GEO_ENDPOINTS)
     return (
-        # bounded synthetic endpoints: lon/lat in [-15, 15) degrees
-        (
-            ("c_custkey", "c_custkey"),
-            ("lon1", "(CAST(c_custkey * 7 % 30 AS DOUBLE) - 15.0 + 0.5)"),
-            ("lat1", "(CAST(c_custkey * 13 % 30 AS DOUBLE) - 15.0 + 0.25)"),
-            ("lon2", "(CAST(c_custkey * 11 % 30 AS DOUBLE) - 15.0 + 0.75)"),
-            ("lat2", "(CAST(c_custkey * 17 % 30 AS DOUBLE) - 15.0 + 0.125)"),
-        ),
-        (
-            ("c_custkey", "c_custkey"),
-            ("lon1", "lon1"), ("lat1", "lat1"),
-            ("lon2", "lon2"), ("lat2", "lat2"),
-            ("f1", f"(lat1 * {_geo_lit(_GEO_RAD)})"),
-            ("f2", f"(lat2 * {_geo_lit(_GEO_RAD)})"),
-            ("dph", f"(((lat2 - lat1) * {_geo_lit(_GEO_RAD)}) * 0.5)"),
-            ("dlh", f"(((lon2 - lon1) * {_geo_lit(_GEO_RAD)}) * 0.5)"),
-        ),
-        (
-            ("c_custkey", "c_custkey"),
-            ("lon1", "lon1"), ("lat1", "lat1"),
-            ("lon2", "lon2"), ("lat2", "lat2"),
-            ("sdph", sin_p("dph", "(dph * dph)")),
-            ("sdlh", sin_p("dlh", "(dlh * dlh)")),
-            ("cf1", cos_p("(f1 * f1)")),
-            ("cf2", cos_p("(f2 * f2)")),
-        ),
-        (
-            ("c_custkey", "c_custkey"),
-            ("lon1", "lon1"), ("lat1", "lat1"),
-            ("lon2", "lon2"), ("lat2", "lat2"),
-            ("hx", "sqrt(((sdph * sdph) + (((cf1 * cf2)) * (sdlh * sdlh))))"),
-        ),
-        (
-            ("c_custkey", "c_custkey"),
-            ("lon1", "lon1"), ("lat1", "lat1"),
-            ("lon2", "lon2"), ("lat2", "lat2"),
-            (
-                "geo_dist_m",
-                f"(({_geo_lit(2.0 * _GEO_R_M)}) * (hx * {_geo_horner('(hx * hx)', _GEO_ASIN_C)}))",
-            ),
-        ),
+        f"SELECT * FROM (SELECT c_custkey, {cols} FROM customer) AS t0"
+        " WHERE lon1 <> lon2 OR lat1 <> lat2"
     )
 
 
-_GEO_STAGES = _geo_stages()
+def _geo_chain() -> ScalarChain:
+    """Polynomial haversine over the link endpoints -> geo_dist_m."""
+    sin_p = lambda x, x2: f"({x} * {_geo_horner(x2, _GEO_SIN_C)})"  # noqa: E731
+    cos_p = lambda x2: _geo_horner(x2, _GEO_COS_C)  # noqa: E731
+    c = ScalarChain(*spark_spellings())
+    c.add("f1", f"(lat1 * {_geo_lit(_GEO_RAD)})")
+    c.add("f2", f"(lat2 * {_geo_lit(_GEO_RAD)})")
+    c.add("dph", f"(((lat2 - lat1) * {_geo_lit(_GEO_RAD)}) * 0.5)")
+    c.add("dlh", f"(((lon2 - lon1) * {_geo_lit(_GEO_RAD)}) * 0.5)")
+    c.add("sdph", sin_p("dph", "(dph * dph)"))
+    c.add("sdlh", sin_p("dlh", "(dlh * dlh)"))
+    c.add("cf1", cos_p("(f1 * f1)"))
+    c.add("cf2", cos_p("(f2 * f2)"))
+    c.add("hx", "sqrt(((sdph * sdph) + (((cf1 * cf2)) * (sdlh * sdlh))))")
+    c.add(
+        "geo_dist_m",
+        f"(({_geo_lit(2.0 * _GEO_R_M)}) * (hx * {_geo_horner('(hx * hx)', _GEO_ASIN_C)}))",
+    )
+    return c
+
+
 GEO_FREQ_MHZ = 433.0  # fixed link frequency for the FSPL column
 
 
@@ -966,37 +922,24 @@ def geo_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     :627). Polynomial haversine — see module comment; the FSPL reuses the
     reference's 20*(log10(d)+log10(f))-27.55 with round(6) to absorb
     log10's last-ulp engine variance (the free_space_loss precedent)."""
-    from gdalos_spark.datamodel import load as _load
-
-    df = _load(spark, sf_dir, "customer")
-    for i, stage in enumerate(_GEO_STAGES):
-        df = df.select(*[F.expr(sql).alias(name) for name, sql in stage])
-        if i == 0:
-            # dist = 0 iff the endpoints coincide (the series sin is zero
-            # only at 0 on this bounded domain) — filtering on the
-            # endpoints keeps the pushed-down predicate tiny instead of
-            # duplicating the collapsed haversine expression in the scan
-            df = df.filter((F.col("lon1") != F.col("lon2")) | (F.col("lat1") != F.col("lat2")))
+    df = _geo_chain().apply_spark(
+        _geo_links(spark, sf_dir), keep=(*_GEO_IDS, "geo_dist_m"), inputs=_GEO_IDS
+    )
     fsl = 20.0 * (F.log10(F.col("geo_dist_m")) + F.log10(F.lit(GEO_FREQ_MHZ))) - 27.55
     return df.select(
-        "c_custkey", "lon1", "lat1", "lon2", "lat2",
+        *_GEO_IDS,
         F.round("geo_dist_m", 6).alias("geo_dist_m"),
         F.round(fsl, 6).alias("fsl_db"),
     )
 
 
 def _geo_distance_sql() -> str:
-    q = "customer"
-    for i, stage in enumerate(_GEO_STAGES):
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-        if i == 0:
-            q = f"(SELECT * FROM {q} AS t0 WHERE lon1 <> lon2 OR lat1 <> lat2)"
+    q = _geo_chain().wrap_sql(_geo_links_sql(), keep=(*_GEO_IDS, "geo_dist_m"), inputs=_GEO_IDS)
     return f"""
 SELECT c_custkey, lon1, lat1, lon2, lat2,
        ROUND(geo_dist_m, 6) AS geo_dist_m,
        ROUND(20.0 * (log10(geo_dist_m) + log10({GEO_FREQ_MHZ!r})) - 27.55, 6) AS fsl_db
-FROM {q} AS t
+FROM ({q}) AS t
 """
 
 
@@ -1033,60 +976,40 @@ _GEOD_A_M = 6378137.0  # WGS-84 semi-major axis
 _GEOD_F = 0.0033528106647474805  # WGS-84 flattening 1/298.257223563
 
 
-def _geo_ellipsoidal_stages() -> tuple[tuple[tuple[str, str], ...], ...]:
+def _geo_ellipsoidal_chain() -> ScalarChain:
+    """Andoyer-Lambert over the link endpoints -> (sphere_dist_m,
+    geodesic_dist_m)."""
     sin_p = lambda x, x2: f"({x} * {_geo_horner(x2, _GEO_SIN_C)})"  # noqa: E731
     cos_p = lambda x2: _geo_horner(x2, _GEO_COS_C)  # noqa: E731
-    keep = lambda *names: tuple((n, n) for n in names)  # noqa: E731
-    ids = ("c_custkey", "lon1", "lat1", "lon2", "lat2")
-    return (
-        _GEO_STAGES[0],  # same bounded synthetic endpoints as geo_distance
-        (
-            *keep(*ids),
-            ("fm", f"(((lat1 + lat2) * {_geo_lit(_GEO_RAD)}) * 0.5)"),
-            ("gm", f"(((lat1 - lat2) * {_geo_lit(_GEO_RAD)}) * 0.5)"),
-            ("lh", f"(((lon2 - lon1) * {_geo_lit(_GEO_RAD)}) * 0.5)"),
-        ),
-        (
-            *keep(*ids),
-            ("sfm", sin_p("fm", "(fm * fm)")),
-            ("cfm", cos_p("(fm * fm)")),
-            ("sgm", sin_p("gm", "(gm * gm)")),
-            ("cgm", cos_p("(gm * gm)")),
-            ("slh", sin_p("lh", "(lh * lh)")),
-            ("clh", cos_p("(lh * lh)")),
-        ),
-        (
-            *keep(*ids),
-            ("s2f", "(sfm * sfm)"), ("c2f", "(cfm * cfm)"),
-            ("s2g", "(sgm * sgm)"), ("c2g", "(cgm * cgm)"),
-            ("bigs", "(((sgm * sgm) * (clh * clh)) + ((cfm * cfm) * (slh * slh)))"),
-            ("bigc", "(((cgm * cgm) * (clh * clh)) + ((sfm * sfm) * (slh * slh)))"),
-        ),
-        (
-            *keep(*ids, "s2f", "c2f", "s2g", "c2g", "bigs", "bigc"),
-            (
-                "omega",
-                f"(sqrt(bigs) * {_geo_horner('bigs', _GEO_ASIN_C)})",
-            ),
-        ),
-        (
-            *keep(*ids, "s2f", "c2f", "s2g", "c2g", "bigs", "bigc", "omega"),
-            ("r3", "(sqrt((bigs * bigc)) / omega)"),
-        ),
-        (
-            *keep(*ids),
-            ("sphere_dist_m", f"(({_geo_lit(2.0 * _GEO_R_M)}) * omega)"),
-            (
-                "geodesic_dist_m",
-                f"((({_geo_lit(2.0 * _GEOD_A_M)}) * omega) * (1.0 + ({_geo_lit(_GEOD_F)} * "
-                "(((((3.0 * r3) - 1.0) / (2.0 * bigc)) * (s2f * c2g)) - "
-                "((((3.0 * r3) + 1.0) / (2.0 * bigs)) * (c2f * s2g))))))",
-            ),
-        ),
+    c = ScalarChain(*spark_spellings())
+    c.add("fm", f"(((lat1 + lat2) * {_geo_lit(_GEO_RAD)}) * 0.5)")
+    c.add("gm", f"(((lat1 - lat2) * {_geo_lit(_GEO_RAD)}) * 0.5)")
+    c.add("lh", f"(((lon2 - lon1) * {_geo_lit(_GEO_RAD)}) * 0.5)")
+    c.add("sfm", sin_p("fm", "(fm * fm)"))
+    c.add("cfm", cos_p("(fm * fm)"))
+    c.add("sgm", sin_p("gm", "(gm * gm)"))
+    c.add("cgm", cos_p("(gm * gm)"))
+    c.add("slh", sin_p("lh", "(lh * lh)"))
+    c.add("clh", cos_p("(lh * lh)"))
+    c.add("s2f", "(sfm * sfm)")
+    c.add("c2f", "(cfm * cfm)")
+    c.add("s2g", "(sgm * sgm)")
+    c.add("c2g", "(cgm * cgm)")
+    c.add("bigs", "(((sgm * sgm) * (clh * clh)) + ((cfm * cfm) * (slh * slh)))")
+    c.add("bigc", "(((cgm * cgm) * (clh * clh)) + ((sfm * sfm) * (slh * slh)))")
+    c.add("omega", f"(sqrt(bigs) * {_geo_horner('bigs', _GEO_ASIN_C)})")
+    c.add("r3", "(sqrt((bigs * bigc)) / omega)")
+    c.add("sphere_dist_m", f"(({_geo_lit(2.0 * _GEO_R_M)}) * omega)")
+    c.add(
+        "geodesic_dist_m",
+        f"((({_geo_lit(2.0 * _GEOD_A_M)}) * omega) * (1.0 + ({_geo_lit(_GEOD_F)} * "
+        "(((((3.0 * r3) - 1.0) / (2.0 * bigc)) * (s2f * c2g)) - "
+        "((((3.0 * r3) + 1.0) / (2.0 * bigs)) * (c2f * s2g))))))",
     )
+    return c
 
 
-_GEOD_STAGES = _geo_ellipsoidal_stages()
+_GEOD_KEEP = (*_GEO_IDS, "sphere_dist_m", "geodesic_dist_m")
 
 
 def geo_distance_ellipsoidal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1096,17 +1019,11 @@ def geo_distance_ellipsoidal(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the model delta per link reported the way coord_precision_report
     reports float error. Same bounded synthetic endpoints as
     geo_distance; zero shuffles."""
-    from gdalos_spark.datamodel import load as _load
-
-    df = _load(spark, sf_dir, "customer")
-    for i, stage in enumerate(_GEOD_STAGES):
-        df = df.select(*[F.expr(sql).alias(name) for name, sql in stage])
-        if i == 0:
-            df = df.filter(
-                (F.col("lon1") != F.col("lon2")) | (F.col("lat1") != F.col("lat2"))
-            )
+    df = _geo_ellipsoidal_chain().apply_spark(
+        _geo_links(spark, sf_dir), keep=_GEOD_KEEP, inputs=_GEO_IDS
+    )
     return df.select(
-        "c_custkey", "lon1", "lat1", "lon2", "lat2",
+        *_GEO_IDS,
         F.round("sphere_dist_m", 6).alias("sphere_dist_m"),
         F.round("geodesic_dist_m", 6).alias("geodesic_dist_m"),
         F.round(F.col("geodesic_dist_m") - F.col("sphere_dist_m"), 6).alias("delta_m"),
@@ -1114,18 +1031,13 @@ def geo_distance_ellipsoidal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _geo_ellipsoidal_sql() -> str:
-    q = "customer"
-    for i, stage in enumerate(_GEOD_STAGES):
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
-        if i == 0:
-            q = f"(SELECT * FROM {q} AS t0 WHERE lon1 <> lon2 OR lat1 <> lat2)"
+    q = _geo_ellipsoidal_chain().wrap_sql(_geo_links_sql(), keep=_GEOD_KEEP, inputs=_GEO_IDS)
     return f"""
 SELECT c_custkey, lon1, lat1, lon2, lat2,
        ROUND(sphere_dist_m, 6) AS sphere_dist_m,
        ROUND(geodesic_dist_m, 6) AS geodesic_dist_m,
        ROUND(geodesic_dist_m - sphere_dist_m, 6) AS delta_m
-FROM {q} AS t
+FROM ({q}) AS t
 """
 
 
@@ -1216,41 +1128,27 @@ _ARC_COS_C = [
 ]
 
 
-def _arc_stages() -> tuple[tuple[tuple[str, str], ...], ...]:
+def _arc_chain() -> ScalarChain:
+    """Ring vertex program over (event_id, point_idx, a_from_rad,
+    a_to_rad) -> kind, center (px, py), radius r and sin/cos of the
+    vertex angle."""
     pc = ARC_POINT_COUNT
-    keep = (("event_id", "event_id"), ("point_idx", "point_idx"), ("kind", "kind"),
-            ("px", "px"), ("py", "py"), ("r", "r"))
-    return (
-        (
-            ("event_id", "event_id"),
-            ("point_idx", "point_idx"),
-            (
-                "kind",
-                f"(CASE WHEN point_idx = 0 OR point_idx = {pc} THEN 'center' ELSE 'arc' END)",
-            ),
-            ("px", "((event_id * 7919 % 6400) / 100.0)"),
-            ("py", "((event_id * 104729 % 6400) / 100.0)"),
-            ("r", "(5.0 + CAST(event_id % 7 AS DOUBLE))"),
-            (
-                "angle",
-                f"(a_from_rad + (point_idx - 1) * ((a_to_rad - a_from_rad) / {pc - 2}.0))",
-            ),
-        ),
-        keep + (
-            ("half", f"((angle - {_geo_lit(M_2PI)} * floor((angle + {_geo_lit(M_PI)}) / {_geo_lit(M_2PI)})) * 0.5)"),
-        ),
-        keep + (
-            ("sh", f"(half * {_geo_horner('(half * half)', _ARC_SIN_C)})"),
-            ("ch", _geo_horner("(half * half)", _ARC_COS_C)),
-        ),
-        keep + (
-            ("sin_t", "(2.0 * (sh * ch))"),
-            ("cos_t", "(1.0 - 2.0 * (sh * sh))"),
-        ),
-    )
+    c = ScalarChain(*spark_spellings())
+    c.add("kind", f"(CASE WHEN point_idx = 0 OR point_idx = {pc} THEN 'center' ELSE 'arc' END)")
+    c.add("px", "((event_id * 7919 % 6400) / 100.0)")
+    c.add("py", "((event_id * 104729 % 6400) / 100.0)")
+    c.add("r", "(5.0 + CAST(event_id % 7 AS DOUBLE))")
+    c.add("angle", f"(a_from_rad + (point_idx - 1) * ((a_to_rad - a_from_rad) / {pc - 2}.0))")
+    c.add("half", f"((angle - {_geo_lit(M_2PI)} * floor((angle + {_geo_lit(M_PI)}) / {_geo_lit(M_2PI)})) * 0.5)")
+    c.add("sh", f"(half * {_geo_horner('(half * half)', _ARC_SIN_C)})")
+    c.add("ch", _geo_horner("(half * half)", _ARC_COS_C))
+    c.add("sin_t", "(2.0 * (sh * ch))")
+    c.add("cos_t", "(1.0 - 2.0 * (sh * sh))")
+    return c
 
 
-_ARC_STAGES = _arc_stages()
+_ARC_IN = ("event_id", "a_from_rad", "a_to_rad", "point_idx")
+_ARC_KEEP = ("event_id", "point_idx", "kind", "px", "py", "r", "sin_t", "cos_t")
 
 
 def sector_ring_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1269,9 +1167,9 @@ def sector_ring_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = spark.range(ARC_POINT_COUNT + 1).select(
         F.col("id").cast("int").alias("point_idx")
     )
-    df = specs.crossJoin(F.broadcast(idx))
-    for stage in _ARC_STAGES:
-        df = df.select(*[F.expr(sql).alias(name) for name, sql in stage])
+    df = _arc_chain().apply_spark(
+        specs.crossJoin(F.broadcast(idx)), keep=_ARC_KEEP, inputs=_ARC_IN
+    )
     x = F.when(F.col("kind") == "center", F.col("px")).otherwise(
         F.col("px") + F.col("r") * F.col("cos_t")
     )
@@ -1286,20 +1184,19 @@ def sector_ring_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sector_ring_sql() -> str:
-    q = (
-        f"(SELECT event_id, a_from_rad, a_to_rad FROM ({AZIMUTH_NORMALIZE_SQL}) az"
+    specs = (
+        f"SELECT event_id, a_from_rad, a_to_rad, point_idx FROM"
+        f" (SELECT event_id, a_from_rad, a_to_rad FROM ({AZIMUTH_NORMALIZE_SQL}) az"
         f" WHERE event_id % {ARC_SECTOR_MOD} = 0)"
         f" CROSS JOIN (SELECT CAST(range AS INTEGER) AS point_idx"
         f" FROM range({ARC_POINT_COUNT + 1})) ix"
     )
-    for stage in _ARC_STAGES:
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
+    q = _arc_chain().wrap_sql(specs, keep=_ARC_KEEP, inputs=_ARC_IN)
     return f"""
 SELECT event_id, point_idx, kind,
        ROUND(CASE WHEN kind = 'center' THEN px ELSE px + r * cos_t END, 6) AS x,
        ROUND(CASE WHEN kind = 'center' THEN py ELSE py + r * sin_t END, 6) AS y
-FROM {q} AS t
+FROM ({q}) AS t
 """
 
 
@@ -2481,71 +2378,45 @@ _DEST_R_M = _GEO_R_M          # same WGS-84 mean radius as geo_distance
 _DEST_MAX_R_M = 100000.0      # range bound: sigma <= 100 km / R ~ 0.0157
 
 
-def _dest_stages() -> tuple[tuple[tuple[str, str], ...], ...]:
+def _dest_chain() -> ScalarChain:
+    """Spherical direct problem over c_custkey -> (lat2, lon2)."""
     sin8 = lambda x, x2: f"({x} * {_geo_horner(x2, _ARC_SIN_C)})"  # noqa: E731
     cos8 = lambda x2: _geo_horner(x2, _ARC_COS_C)  # noqa: E731
     asin9 = lambda x, x2: f"({x} * {_geo_horner(x2, _GEO_ASIN_C)})"  # noqa: E731
-    keep = (
-        ("c_custkey", "c_custkey"), ("lon1", "lon1"), ("lat1", "lat1"),
-        ("az_deg", "az_deg"), ("dist_m", "dist_m"),
-    )
-    return (
-        # bounded synthetic observer + fwd spec: lon/lat in [-15, 15),
-        # azimuth in [0, 360) tenths, range in [1, 100] km
-        (
-            ("c_custkey", "c_custkey"),
-            ("lon1", "(CAST(c_custkey * 7 % 30 AS DOUBLE) - 15.0 + 0.5)"),
-            ("lat1", "(CAST(c_custkey * 13 % 30 AS DOUBLE) - 15.0 + 0.25)"),
-            ("az_deg", "(CAST(c_custkey * 29 % 3600 AS DOUBLE) / 10.0)"),
-            ("dist_m", "(1000.0 + CAST(c_custkey * 37 % 99001 AS DOUBLE))"),
-        ),
-        keep + (
-            ("alp", f"(az_deg * {_geo_lit(_GEO_RAD)})"),
-            ("f1", f"(lat1 * {_geo_lit(_GEO_RAD)})"),
-            ("sg", f"(dist_m / {_geo_lit(_DEST_R_M)})"),
-        ),
-        keep + (
-            ("f1", "f1"), ("sg", "sg"),
-            # azimuth range-reduced to [-pi, pi) then halved (arc scheme)
-            ("ah", f"((alp - {_geo_lit(M_2PI)} * floor((alp + {_geo_lit(M_PI)}) / {_geo_lit(M_2PI)})) * 0.5)"),
-        ),
-        keep + (
-            ("f1", "f1"), ("sg", "sg"),
-            ("sah", sin8("ah", "(ah * ah)")),
-            ("cah", cos8("(ah * ah)")),
-        ),
-        keep + (
-            ("sa", "(2.0 * (sah * cah))"),          # sin(azimuth)
-            ("ca", "(1.0 - 2.0 * (sah * sah))"),    # cos(azimuth)
-            ("sf1", sin8("f1", "(f1 * f1)")),       # sin(lat1), |f1| <= 0.262
-            ("cf1", cos8("(f1 * f1)")),
-            ("ss", sin8("sg", "(sg * sg)")),        # sin(sigma), sigma <= 0.0157
-            ("cs", cos8("(sg * sg)")),
-        ),
-        keep + (
-            ("sa", "sa"), ("sf1", "sf1"), ("cf1", "cf1"), ("ss", "ss"),
-            ("sf2", "((sf1 * cs) + ((cf1 * ss) * ca))"),   # sin(lat2)
-        ),
-        keep + (
-            ("sa", "sa"), ("sf1", "sf1"), ("cf1", "cf1"), ("ss", "ss"),
-            ("sf2", "sf2"),
-            ("cf2", "sqrt(1.0 - (sf2 * sf2))"),            # |lat2| < 90
-        ),
-        keep + (
-            # delta-lat via sin(f2-f1); delta-lon via the spherical sine
-            # rule sin(dlam) = sin(az) sin(sigma) / cos(lat2) — both
-            # arguments <= sigma, deep inside the asin series domain
-            ("sd", "((sf2 * cf1) - (cf2 * sf1))"),
-            ("sl", "((sa * ss) / cf2)"),
-        ),
-        keep + (
-            ("lat2", f"(lat1 + ({asin9('sd', '(sd * sd)')} / {_geo_lit(_GEO_RAD)}))"),
-            ("lon2", f"(lon1 + ({asin9('sl', '(sl * sl)')} / {_geo_lit(_GEO_RAD)}))"),
-        ),
-    )
+    c = ScalarChain(*spark_spellings())
+    # bounded synthetic observer + fwd spec: lon/lat in [-15, 15),
+    # azimuth in [0, 360) tenths, range in [1, 100] km
+    c.add("lon1", "(CAST(c_custkey * 7 % 30 AS DOUBLE) - 15.0 + 0.5)")
+    c.add("lat1", "(CAST(c_custkey * 13 % 30 AS DOUBLE) - 15.0 + 0.25)")
+    c.add("az_deg", "(CAST(c_custkey * 29 % 3600 AS DOUBLE) / 10.0)")
+    c.add("dist_m", "(1000.0 + CAST(c_custkey * 37 % 99001 AS DOUBLE))")
+    c.add("alp", f"(az_deg * {_geo_lit(_GEO_RAD)})")
+    c.add("f1", f"(lat1 * {_geo_lit(_GEO_RAD)})")
+    c.add("sg", f"(dist_m / {_geo_lit(_DEST_R_M)})")
+    # azimuth range-reduced to [-pi, pi) then halved (arc scheme)
+    c.add("ah", f"((alp - {_geo_lit(M_2PI)} * floor((alp + {_geo_lit(M_PI)}) / {_geo_lit(M_2PI)})) * 0.5)")
+    c.add("sah", sin8("ah", "(ah * ah)"))
+    c.add("cah", cos8("(ah * ah)"))
+    c.add("sa", "(2.0 * (sah * cah))")  # sin(azimuth)
+    c.add("ca", "(1.0 - 2.0 * (sah * sah))")  # cos(azimuth)
+    c.add("sf1", sin8("f1", "(f1 * f1)"))  # sin(lat1), |f1| <= 0.262
+    c.add("cf1", cos8("(f1 * f1)"))
+    c.add("ss", sin8("sg", "(sg * sg)"))  # sin(sigma), sigma <= 0.0157
+    c.add("cs", cos8("(sg * sg)"))
+    c.add("sf2", "((sf1 * cs) + ((cf1 * ss) * ca))")  # sin(lat2)
+    c.add("cf2", "sqrt(1.0 - (sf2 * sf2))")  # |lat2| < 90
+    # delta-lat via sin(f2-f1); delta-lon via the spherical sine rule
+    # sin(dlam) = sin(az) sin(sigma) / cos(lat2) — both arguments <=
+    # sigma, deep inside the asin series domain
+    c.add("sd", "((sf2 * cf1) - (cf2 * sf1))")
+    c.add("sl", "((sa * ss) / cf2)")
+    c.add("lat2", f"(lat1 + ({asin9('sd', '(sd * sd)')} / {_geo_lit(_GEO_RAD)}))")
+    c.add("lon2", f"(lon1 + ({asin9('sl', '(sl * sl)')} / {_geo_lit(_GEO_RAD)}))")
+    return c
 
 
-_DEST_STAGES = _dest_stages()
+_DEST_IDS = ("c_custkey", "lon1", "lat1", "az_deg", "dist_m")
+_DEST_KEEP = (*_DEST_IDS, "lat2", "lon2")
 
 
 def geodesic_destination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2557,26 +2428,23 @@ def geodesic_destination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (text-identical) but pins a stable display precision."""
     from gdalos_spark.datamodel import load as _load
 
-    df = _load(spark, sf_dir, "customer")
-    for stage in _DEST_STAGES:
-        df = df.select(*[F.expr(sql).alias(name) for name, sql in stage])
+    df = _dest_chain().apply_spark(
+        _load(spark, sf_dir, "customer"), keep=_DEST_KEEP, inputs=("c_custkey",)
+    )
     return df.select(
-        "c_custkey", "lon1", "lat1", "az_deg", "dist_m",
+        *_DEST_IDS,
         F.round("lat2", 9).alias("lat2"),
         F.round("lon2", 9).alias("lon2"),
     )
 
 
 def _geodesic_destination_sql() -> str:
-    q = "customer"
-    for stage in _DEST_STAGES:
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
+    q = _dest_chain().wrap_sql("SELECT c_custkey FROM customer", keep=_DEST_KEEP, inputs=("c_custkey",))
     return f"""
 SELECT c_custkey, lon1, lat1, az_deg, dist_m,
        ROUND(lat2, 9) AS lat2,
        ROUND(lon2, 9) AS lon2
-FROM {q} AS t
+FROM ({q}) AS t
 """
 
 
@@ -2668,12 +2536,11 @@ _ITM_DXLOG = 0.3 * _ITM_XAE * _m.log(47.7 * _ITM_WN)
 _ITM_ETQ = (5.67e-6 * ITM_REFRACTIVITY - 2.32e-3) * ITM_REFRACTIVITY + 0.031
 
 
-def _itm_chain(intdiv: str, shift) -> "ScalarChain":
+def _itm_chain(intdiv: str, shift) -> ScalarChain:
     """The shared adiff scalar program over the link-level inputs
     (d_m, sm, dh, te1, te2, dl1, dl2, he1, he2, zt): identical text in
     both engines except the injected div/shift spellings."""
     from gdalos_spark.functions.literals import dbl_lit as L
-    from gdalos_spark.functions.scalar_chain import ScalarChain
 
     gme, wn, qk, hg = L(_ITM_GME), L(_ITM_WN), L(_ITM_QK), L(ITM_HG)
     c = ScalarChain(intdiv, shift)
@@ -2824,7 +2691,7 @@ def _itm_chain(intdiv: str, shift) -> "ScalarChain":
     return c
 
 
-def _itm_adiff_at(c: "ScalarChain", t: str, gme: str, wn: str, qk: str, L) -> None:
+def _itm_adiff_at(c: ScalarChain, t: str, gme: str, wn: str, qk: str, L) -> None:
     """ITM adiff(d) at the distance column d{t}: double knife-edge +
     smooth-earth blend over the setup columns (tha, dla, dl1/2, xht,
     aht, afo, wd1, xd1, dh) — the same program the round-11 chain
@@ -2857,7 +2724,7 @@ def _itm_adiff_at(c: "ScalarChain", t: str, gme: str, wn: str, qk: str, L) -> No
     c.add(f"adiff_{t}", f"(ar_{t} * wd_{t} + (1.0e0 - wd_{t}) * adiffv_{t} + afo)")
 
 
-def _itm_h0f(c: "ScalarChain", tag: str, r: str, ett: str, L) -> str:
+def _itm_h0f(c: ScalarChain, tag: str, r: str, ett: str, L) -> str:
     """ITM's frequency-gain function H0(r, et) (NTIA memo eq. 6.6.x /
     itm h0f): table nodes a/b indexed by the integer part of et with
     linear interpolation between nodes; x = (1/r)^2. The >= 1 table
@@ -2898,7 +2765,7 @@ def _itm_h0f(c: "ScalarChain", tag: str, r: str, ett: str, L) -> str:
     )
 
 
-def _itm_ascat_at(c: "ScalarChain", t: str, gme: str, wn: str, L, prev) -> None:
+def _itm_ascat_at(c: ScalarChain, t: str, gme: str, wn: str, L, prev) -> None:
     """ITM ascat(d) at the distance column d{t} (NTIA memo section 4 /
     itm ascat): the H0 scatter-efficiency blend over (r1, r2), the
     F(theta*d) attenuation table ahd, and the refractivity exp term.
@@ -2998,7 +2865,7 @@ def _itm_ascat_at(c: "ScalarChain", t: str, gme: str, wn: str, L, prev) -> None:
 _ITM_SIN_C = [1.0, -1.0 / 6, 1.0 / 120, -1.0 / 5040, 1.0 / 362880, -1.0 / 39916800]
 
 
-def _itm_alos_at(c: "ScalarChain", t: str, dcol: str, wn: str, L) -> None:
+def _itm_alos_at(c: ScalarChain, t: str, dcol: str, wn: str, L) -> None:
     """ITM alos(d) at the distance column: the two-ray field
     |exp(-j*ph) + R| over the complex surface impedance zgnd (host
     constants; the complex ratio (sps - zgnd)/(sps + zgnd) is
@@ -3077,7 +2944,6 @@ def radio_itm_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ITM p2p non-free-space loss per p2p link — see the block comment
     above for the model scope and the reference citations."""
     from gdalos_spark.functions.literals import dbl_lit as L
-    from gdalos_spark.functions.scalar_chain import spark_spellings
 
     n = N_LOS_STEPS
     obs = spark.createDataFrame(list(OBSERVERS), "ox int, oy int")
@@ -3209,7 +3075,6 @@ def radio_itm_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _radio_itm_sql() -> str:
     from gdalos_spark.functions.literals import dbl_lit as L
-    from gdalos_spark.functions.scalar_chain import duckdb_spellings
 
     n = N_LOS_STEPS
     values = ", ".join(f"({x}, {y})" for x, y in OBSERVERS)

@@ -24,8 +24,6 @@ from gdalos_spark.datamodel import load, query_checkpoint, split_for_cpu
 from gdalos_spark.functions import hashing
 from gdalos_spark.operators.text import _STOP_IN, _log2_col, _log2_lateral_sql
 
-_SPARK_SHIFT = lambda bl: f"shiftleft(CAST(1 AS BIGINT), {bl})"  # noqa: E731
-
 
 # ---------------------------------------------------------------------------
 # bpe_merge_step — the pair-count stage of one BPE training iteration
@@ -139,8 +137,8 @@ def zipf_law_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = tf.withColumn(
         "rank", F.row_number().over(Window.orderBy(F.desc("tf"), "tok")).cast("bigint")
     )
-    ranked = _log2_col(ranked, "rank", "x", _SPARK_SHIFT)
-    ranked = _log2_col(ranked, "tf", "y", _SPARK_SHIFT)
+    ranked = _log2_col(ranked, "rank", "x")
+    ranked = _log2_col(ranked, "tf", "y")
     u = lambda c: F.round(c * 1_000_000.0).cast("bigint")  # noqa: E731
     sums = ranked.select(
         u(F.col("x")).alias("x_u"),
@@ -576,8 +574,8 @@ def heaps_law_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("new_tokens").over(w).cast("bigint").alias("n_tokens"),
         F.sum("new_vocab").over(w).cast("bigint").alias("vocab"),
     )
-    cum = _log2_col(cum, "n_tokens", "lg_n", _SPARK_SHIFT)
-    cum = _log2_col(cum, "vocab", "lg_v", _SPARK_SHIFT)
+    cum = _log2_col(cum, "n_tokens", "lg_n")
+    cum = _log2_col(cum, "vocab", "lg_v")
     wl = Window.orderBy("checkpoint")
     beta = (F.col("lg_v") - F.lag("lg_v").over(wl)) / (
         F.col("lg_n") - F.lag("lg_n").over(wl)

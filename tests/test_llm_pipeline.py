@@ -347,13 +347,11 @@ def test_polynomial_log2_property(spark):
 
     from gdalos_spark.operators.text import _log2_col
 
-    sh = lambda bl: f"shiftleft(CAST(1 AS BIGINT), {bl})"  # noqa: E731
-
     @settings(max_examples=20, deadline=None)
     @given(st.integers(min_value=1, max_value=2**52))
     def check(n):
         df = spark.range(1).select(F.lit(n).cast("bigint").alias("a"))
-        got = _log2_col(df, "a", "lg", sh).collect()[0]["lg"]
+        got = _log2_col(df, "a", "lg").collect()[0]["lg"]
         assert abs(got - math.log2(n)) < 2e-8, (n, got)
 
     check()

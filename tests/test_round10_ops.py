@@ -99,15 +99,14 @@ def test_stere_series_tracks_libm_snyder(ducks):
         rho = 2 * a * k0 * t / math.sqrt((1 + e) ** (1 + e) * (1 - e) ** (1 - e))
         return FE + rho * math.sin(lam), FN - rho * math.cos(lam)
 
-    q = (
-        "(SELECT px, py, 1 AS elev FROM (SELECT unnest(range(0, 64, 7)) AS px),"
-        " (SELECT unnest(range(0, 64, 7)) AS py))"
+    q = R._stere_chain().wrap_sql(
+        "SELECT px, py, 1 AS elev FROM (SELECT unnest(range(0, 64, 7)) AS px),"
+        " (SELECT unnest(range(0, 64, 7)) AS py)",
+        keep=("px", "py", "easting", "northing"),
+        inputs=("px", "py", "elev"),
     )
-    for stage in R._stere_stages():
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
     for px, py, x, y in ducks.execute(
-        f"SELECT px, py, easting, northing FROM {q}"
+        f"SELECT px, py, easting, northing FROM ({q})"
     ).fetchall():
         X, Y = snyder(30.0 + py * 0.01, 30.0 + px * 0.01)
         assert abs(x - X) < 1e-6 and abs(y - Y) < 1e-6, (px, py)
@@ -143,15 +142,14 @@ def test_lcc_series_tracks_libm_snyder(ducks):
         g = n * (math.radians(lon) - lam0)
         return FE + rho * math.sin(g), FN + rho0 - rho * math.cos(g)
 
-    q = (
-        "(SELECT px, py, 1 AS elev FROM (SELECT unnest(range(0, 64, 7)) AS px),"
-        " (SELECT unnest(range(0, 64, 7)) AS py))"
+    q = R._lcc_chain().wrap_sql(
+        "SELECT px, py, 1 AS elev FROM (SELECT unnest(range(0, 64, 7)) AS px),"
+        " (SELECT unnest(range(0, 64, 7)) AS py)",
+        keep=("px", "py", "easting", "northing"),
+        inputs=("px", "py", "elev"),
     )
-    for stage in R._lcc_stages():
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
     for px, py, x, y in ducks.execute(
-        f"SELECT px, py, easting, northing FROM {q}"
+        f"SELECT px, py, easting, northing FROM ({q})"
     ).fetchall():
         X, Y = snyder(30.0 + py * 0.01, 30.0 + px * 0.01)
         assert abs(x - X) < 1e-6 and abs(y - Y) < 1e-6, (px, py)

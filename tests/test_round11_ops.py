@@ -43,15 +43,14 @@ def test_aea_series_tracks_libm_snyder(ducks):
         th = n * lam
         return 1e6 + rho * math.sin(th), 1e6 + rho0 - rho * math.cos(th)
 
-    q = (
-        "(SELECT px, py, 1 AS elev FROM (SELECT unnest(range(0, 64, 7)) AS px),"
-        " (SELECT unnest(range(0, 64, 7)) AS py))"
+    q = R._aea_chain().wrap_sql(
+        "SELECT px, py, 1 AS elev FROM (SELECT unnest(range(0, 64, 7)) AS px),"
+        " (SELECT unnest(range(0, 64, 7)) AS py)",
+        keep=("px", "py", "easting", "northing"),
+        inputs=("px", "py", "elev"),
     )
-    for stage in R._aea_stages():
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage)
-        q = f"(SELECT {cols} FROM {q})"
     for px, py, x, y in ducks.execute(
-        f"SELECT px, py, easting, northing FROM {q}"
+        f"SELECT px, py, easting, northing FROM ({q})"
     ).fetchall():
         X, Y = snyder(30.0 + py * 0.01, 30.0 + px * 0.01)
         assert abs(x - X) < 1e-7 and abs(y - Y) < 1e-7, (px, py)
@@ -68,6 +67,14 @@ def test_dbl_lit_survives_duckdb_decimal_cast(ducks):
     assert ducks.execute(f"SELECT {_dbl_lit(c)}").fetchone()[0] == c
     # the hazard is real: the bare-literal cast path disagrees
     assert ducks.execute(f"SELECT CAST({c!r} AS DOUBLE)").fetchone()[0] != c
+
+
+def test_literal_audit_finds_no_hazard():
+    """No oracle_sql() string carries a bare fractional literal whose
+    DuckDB DECIMAL->DOUBLE cast misses the correct parse."""
+    from tools import literal_audit
+
+    assert literal_audit.main() == 0
 
 
 # --- geodesic_destination ---------------------------------------------------

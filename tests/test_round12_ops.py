@@ -1,5 +1,6 @@
 """Round-12-session tests: the ITM (Longley-Rice) non-free-space loss
-key and the scalar_chain transcendental bank it rides on."""
+key, the scalar_chain transcendental bank it rides on, and the inverse
+UTM (round-trip closure)."""
 
 import math
 
@@ -55,6 +56,65 @@ def test_chain_leveling_respects_dependencies():
     lv = c.levels()
     assert [n for n, _ in lv[0]] == ["a", "b"]
     assert [n for n, _ in lv[1]] == ["d"]
+
+
+# --- crs_reproject_utm_inverse ----------------------------------------------
+
+
+def test_utm_roundtrip_closure_submillimeter(spark):
+    """forward ∘ inverse ≡ identity within the series truncation:
+    < 5e-9 deg (~0.5 mm) on every cell of the zone-36 extent."""
+    rows = entrymod.queries()["crs_reproject_utm_inverse"](spark, SF_DIR).collect()
+    assert len(rows) > 0
+    assert max(abs(r.err_lat_deg) for r in rows) < 5e-9
+    assert max(abs(r.err_lon_deg) for r in rows) < 5e-9
+
+
+def test_utm_inverse_tracks_libm_snyder(spark):
+    """The polynomial-trig inverse must agree with a libm Snyder
+    inverse on the projected points to ~1e-9 deg."""
+    from gdalos_spark.operators import raster as R
+
+    a, e2, ep2, k0, fe = R._UTM_A, R._UTM_E2, R._UTM_EP2, R._UTM_K0, R._UTM_FE
+    e1 = R._UTM_E1
+    cm = R.utm_central_meridian(R._utm_extent_zone(R._UTM_LON_0))
+
+    def snyder_inverse(E, N):
+        m = N / k0
+        mu = m / (a * R._UTM_A0)
+        phi1 = (
+            mu
+            + R._UTM_J2 * math.sin(2 * mu)
+            + R._UTM_J4 * math.sin(4 * mu)
+            + R._UTM_J6 * math.sin(6 * mu)
+            + R._UTM_J8 * math.sin(8 * mu)
+        )
+        sf, cf = math.sin(phi1), math.cos(phi1)
+        t1, c1 = math.tan(phi1), ep2 * cf * cf
+        w1 = 1 - e2 * sf * sf
+        n1 = a / math.sqrt(w1)
+        r1 = a * (1 - e2) / (w1 * math.sqrt(w1))
+        d = (E - fe) / (n1 * k0)
+        T1 = t1 * t1
+        phi = phi1 - (n1 * t1 / r1) * (
+            d * d / 2
+            - (5 + 3 * T1 + 10 * c1 - 4 * c1 * c1 - 9 * ep2) * d**4 / 24
+            + (61 + 90 * T1 + 298 * c1 + 45 * T1 * T1 - 252 * ep2 - 3 * c1 * c1)
+            * d**6 / 720
+        )
+        lam = (
+            d
+            - (1 + 2 * T1 + c1) * d**3 / 6
+            + (5 - 2 * c1 + 28 * T1 - 3 * c1 * c1 + 8 * ep2 + 24 * T1 * T1)
+            * d**5 / 120
+        ) / cf
+        return math.degrees(phi), cm + math.degrees(lam)
+
+    rows = entrymod.queries()["crs_reproject_utm_inverse"](spark, SF_DIR).collect()
+    for r in rows[::257]:
+        lat_ref, lon_ref = snyder_inverse(r.easting, r.northing)
+        assert abs(r.lat_rt - lat_ref) < 1e-9
+        assert abs(r.lon_rt - lon_ref) < 1e-9
 
 
 # --- radio_itm_loss ---------------------------------------------------------

@@ -7,7 +7,7 @@ correct string->binary64 parse for some constants — so the oracle
 computes with a slightly different constant than the Spark plan, and
 whether the final values still match is data luck. The fix is to spell
 float literals with an exponent (`...e0`), which both lexers parse as
-DOUBLE directly (raster._dbl_lit / viewshed._geo_lit / raster._hlit).
+DOUBLE directly (functions/literals.dbl_lit).
 
 This tool extracts every bare fractional literal from every oracle_sql()
 string and flags the ones whose DuckDB decimal-cast differs from the
