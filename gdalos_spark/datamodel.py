@@ -1,5 +1,15 @@
 """Table loaders and the derived raster grid data model.
 
+Every source table opens through `source_table`: one external parquet
+table in the SparkContext's catalog per (absolute path, source
+fingerprint[, bucket spec]), with that identity hashed into the table
+name. Registering runs Spark's one schema-inference job; every later
+`load()` is a `spark.table` lookup that runs no job and reuses the
+resolved file listing, and a regenerated source (new fingerprint)
+registers a new table instead of serving a stale listing. `load()`
+serves the staged bucketed copy when one is current (the bucketed case
+of the same function, sources/bucketed.py) and normalizes events' ts.
+
 gdalos operates on GDAL rasters; the distributed equivalent is a **pixel
 grid DataFrame** ``(band, px, py, value)`` partitioned by tile. The driver's
 testdata has no raster files, so raster operators run on a deterministic
@@ -21,9 +31,11 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import re
 import shutil
 import tempfile
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
@@ -97,10 +109,24 @@ def epoch_micros(df: DataFrame, col: str = "ts") -> Column:
 
 
 def source_fingerprint(path: str) -> str:
-    """mtime+size cache key for staged copies of a source file — staging
-    helpers restage when the driver regenerates testdata between rounds."""
+    """Cache key of a source: `mtime_ns:size` of a file; of a directory,
+    a digest of (relative name, size, mtime_ns) of every data file under
+    it (names starting with `_` or `.` are skipped, as scans skip them),
+    so a part file rewritten inside the directory changes the key.
+    Staging helpers restage when it changes, and `source_table` names
+    its catalog table by it."""
     st = os.stat(path)
-    return f"{st.st_mtime_ns}:{st.st_size}"
+    if not os.path.isdir(path):
+        return f"{st.st_mtime_ns}:{st.st_size}"
+    h = hashlib.md5()
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if d[0] not in "_.")
+        for f in sorted(files):
+            if f[0] not in "_.":
+                fst = os.stat(os.path.join(root, f))
+                rel = os.path.relpath(os.path.join(root, f), path)
+                h.update(f"{rel}:{fst.st_size}:{fst.st_mtime_ns}\n".encode())
+    return h.hexdigest()
 
 
 def footer_count(sf_dir: str, name: str) -> int:
@@ -225,11 +251,54 @@ def publish_staged_dir(build, final_dir: str, fingerprint: str) -> str:
     return final_dir
 
 
+def source_table(
+    spark: SparkSession, path: str, bucketing: tuple | None = None
+) -> DataFrame:
+    """`spark.table` over an external parquet catalog table on `path`:
+    the one way the engine opens a source. The table is registered once
+    per (absolute path, `source_fingerprint`, `bucketing`) with that
+    identity hashed into its name, so regenerated data registers a new
+    table and never serves a cached file listing. `bucketing` is
+    `(key, sort columns, buckets)` for a store `write_bucketed` made;
+    the bucket spec only lives in a catalog, and Spark trusts it over
+    the bucket-id-named files. Tables live in the SparkContext's shared
+    catalog, so every session on it sees them; a later `spark.table`
+    in the same session reuses the resolved relation (no file listing,
+    no schema-inference job, unlike `spark.read.parquet`)."""
+    path = os.path.abspath(path)
+    ident = f"{path}:{source_fingerprint(path)}"
+    if bucketing is not None:
+        key, sort, buckets = bucketing
+        ident += f":{key}:{','.join(sort)}:{buckets}"
+    stem = re.sub(r"\W", "_", os.path.basename(path).split(".")[0])
+    kind = "src" if bucketing is None else "b"
+    tbl = f"gdalos_{kind}_{stem}_{hashlib.md5(ident.encode()).hexdigest()[:16]}"
+    if not spark.catalog.tableExists(tbl):
+        spec = " USING parquet"
+        if bucketing is not None:
+            # a bucket spec needs an explicit column list: take it from
+            # the plain table over the same files
+            cols = ", ".join(
+                f"`{f.name}` {f.dataType.simpleString()}"
+                for f in source_table(spark, path).schema.fields
+            )
+            sorted_by = ", ".join(f"`{c}`" for c in (key, *sort))
+            spec = (
+                f" ({cols}) USING parquet CLUSTERED BY (`{key}`)"
+                f" SORTED BY ({sorted_by}) INTO {buckets} BUCKETS"
+            )
+        location = path.replace("\\", "\\\\").replace("'", "\\'")
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {tbl}{spec} LOCATION '{location}'"
+        )
+    return spark.table(tbl)
+
+
 def read_plain(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The plain parquet scan with load()'s value normalization but no
+    """The plain source table with load()'s value normalization but no
     layout substitution — what staging helpers read so their copies are
     value-identical to the un-staged path."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = source_table(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and not isinstance(df.schema["ts"].dataType, TimestampType):
         # normalize ts to a zone-adjusted TIMESTAMP whose internal micros
         # equal the stored epoch value, whatever type the scan produced
@@ -320,14 +389,17 @@ def total_unchanged(column: Column):
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Source table `name` of `sf_dir` as a catalog table (`source_table`):
+    the staged bucketed copy when one is current for this exact source
+    fingerprint (sources/bucketed.py), else the plain parquet source.
+    events' ts is normalized either way (`read_plain`)."""
     from gdalos_spark.sources import bucketed
 
     if name in bucketed.BUCKETED_FACTS:
-        # serve the bucketed copy when one is staged for this exact
-        # source fingerprint (sources/bucketed.py): the repeated
-        # orders⋈lineitem edge then plans bucket-to-bucket and the
-        # user_id window family reads pre-clustered, pre-sorted events —
-        # zero exchanges, the layout contract that survives 100 TB
+        # a staged copy plans the repeated orders⋈lineitem edge bucket-to-
+        # bucket and gives the user_id window family pre-clustered,
+        # pre-sorted events — zero exchanges, the layout contract that
+        # survives 100 TB
         bt = bucketed.attach(spark, sf_dir, name)
         if bt is not None:
             return bt
@@ -376,27 +448,53 @@ def coalesced_partitions(spark: SparkSession, nbytes: int) -> int:
 
 
 def split_for_cpu(df: DataFrame, *keys: str) -> DataFrame:
-    """Re-spread a split-starved scan across cores before a CPU-bound map.
+    """Re-spread a split-starved scan across the cores before a CPU-bound map.
 
     ``repartition(n, key)`` is ALWAYS a full hash exchange — never a no-op
     — so calling it unconditionally would shuffle the whole corpus before
-    every per-row scoring stage at production scale. Gate it on actual
-    scan parallelism instead: a tiny-but-row-heavy file (a 2.8 MB /
-    500k-row documents.parquet arrives as ONE split no matter how small
+    every per-row scoring stage at production scale. Gate it on the scan's
+    split count instead: a tiny-but-row-heavy file (a 2.8 MB / 500k-row
+    documents.parquet arrives as ONE split no matter how small
     ``spark.sql.files.maxPartitionBytes`` is — byte-range splitting cannot
-    subdivide a small single-row-group file) gets hash-spread across the
-    session's parallelism, while any input whose scan already has at least
-    half the shuffle partitions keeps its layout and pays NO exchange.
+    subdivide a small single-row-group file) gets hash-spread over
+    ``defaultParallelism`` partitions (the cores: one task each, where
+    ``spark.sql.shuffle.partitions`` would queue max(cores, 32) tiny
+    tasks on a small host), while any input whose scan already has at
+    least half that many splits keeps its layout and pays NO exchange.
     At 100 TB the scan has thousands of splits, so this is statically a
     pass-through; only the degenerate local/bench layouts take the
     shuffle, and those are exactly the cases where it wins (measured
     10.9s -> ~1s for text_quality_score at the sf10 single-split upscale).
+
+    The split count comes from the planned physical plan (`_planned_splits`),
+    so the gate runs no Spark job at build time: ``df.rdd`` would build a
+    pickling Python RDD and, above an exchange, run the upstream stage.
     """
-    spark = df.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if df.rdd.getNumPartitions() >= max(2, n_part // 2):
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if _planned_splits(df) >= max(2, n // 2):
         return df
-    return df.repartition(n_part, *keys)
+    return df.repartition(n, *keys)
+
+
+def _planned_splits(df: DataFrame) -> int:
+    """Partition count of `df`'s physical plan as planned, before any job
+    runs: the plan's own output partitioning where it names a count (an
+    exchange, a bucketed scan), else the largest split count of the
+    leaves below a narrow chain (file scans, checkpoints, local rows),
+    read off the RDDs the leaves would scan."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()  # after EnsureRequirements, before any stage runs
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        try:
+            n = max(n, leaves.apply(i).inputRDDs().head().getNumPartitions())
+        except Py4JError:  # a leaf that reads no RDD of its own
+            pass
+    return n
 
 
 def dem_grid(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,9 +18,10 @@ earlier definitions and the source columns; the chain provides:
   lists pass-through columns by hand. `apply_spark` renders one
   `select` per level, `wrap_sql` one CTE per level.
 
-References are found by an identifier scan of the expression text, so
-a definition must not be named like the tail of an exponent-spelled
-literal (`e0` in `1.0e0`).
+References are found by an identifier scan of the expression text
+with its numeric and string literals stripped first (`_refs`), so the
+`e0` tail of an exponent-spelled literal (`1.0e0`) never reads as a
+reference to a definition named `e0`.
 
 Engine differences are confined to two spellings injected at build
 time: integer division (Spark ``div``, DuckDB ``//``) and the power-of-
@@ -47,6 +48,17 @@ _ATANH_C = [1.0, 1.0 / 3, 1.0 / 5, 1.0 / 7, 1.0 / 9, 1.0 / 11, 1.0 / 13]
 LOG2_SCALE = "2.885390081777927e0"  # 2/ln(2), the log2 mantissa scale
 # Maclaurin exp(-r) on r in [0, ln 2): 13 terms => truncation < 2e-12
 _EXPM_C = [(-1.0) ** k / math.factorial(k) for k in range(13)]
+
+
+# a numeric literal not inside an identifier (`1.0e0`, `.5`, `2e-3`), or
+# a single-quoted string literal ('' escapes a quote)
+_LITERAL = re.compile(r"(?<![A-Za-z0-9_.])(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?|'(?:[^']|'')*'")
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _refs(expr: str) -> set[str]:
+    """The identifiers `expr` names, its literals stripped first."""
+    return set(_IDENT.findall(_LITERAL.sub(" ", expr)))
 
 
 def atanh_series(z2: str) -> str:
@@ -184,8 +196,7 @@ class ScalarChain:
         cur: list[tuple[str, str]] = []
         cur_names: set[str] = set()
         for name, expr in self.items:
-            toks = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", expr))
-            if toks & cur_names:
+            if _refs(expr) & cur_names:
                 out.append(cur)
                 cur, cur_names = [], set()
             cur.append((name, expr))
@@ -217,7 +228,7 @@ class ScalarChain:
             carry = sorted(need - names_here)
             refs: set[str] = set()
             for _, e in emit:
-                refs |= {t for t in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", e) if t in known}
+                refs |= _refs(e) & known
             need = (need - names_here) | refs
             plan.append((carry, emit))
         plan.reverse()

@@ -774,6 +774,24 @@ def _log2_col(df, x: str, out: str) -> "DataFrame":
     return df.drop("bl", "m", "z", "z2", "poly")
 
 
+def _log2_lateral_sql(x: str, out: str) -> str:
+    """One-SELECT log2 of an integer expression via DuckDB lateral column
+    aliases — the same staged polynomial arithmetic as _log2_stages, but
+    with stage aliases SUFFIXED by the output name: lateral aliases lose
+    to real columns of the FROM relation on name conflicts, so
+    re-exported stage columns from a previous log2 CTE would silently
+    shadow the new stages and corrupt the value."""
+    bl, m, z, z2, poly = (f"{k}_{out}" for k in ("bl", "m", "z", "z2", "poly"))
+    return (
+        f"(length(bin({x})) - 1) AS {bl}, "
+        f"(CAST({x} AS DOUBLE) / CAST((CAST(1 AS BIGINT) << {bl}) AS DOUBLE)) AS {m}, "
+        f"(({m} - 1.0) / ({m} + 1.0)) AS {z}, "
+        f"({z} * {z}) AS {z2}, "
+        f"{atanh_series(z2)} AS {poly}, "
+        f"(CAST({bl} AS DOUBLE) + {LOG2_SCALE} * {z} * {poly}) AS {out}"
+    )
+
+
 def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-pass unigram-LM scoring: (1) corpus term frequencies (one
     shuffle keyed on the token) plus the 1-row corpus total, broadcast;
@@ -817,40 +835,21 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _unigram_sql() -> str:
-    def lg(x: str) -> str:
-        s = _log2_stages(x, "(CAST(1 AS BIGINT) << bl)")
-        # inline the stages as nested parenthesized SELECT-free text via
-        # LATERAL-style chained CTE columns is overkill in DuckDB: stage
-        # through scalar subexpression aliases in successive CTEs instead
-        return s
-
-    sn = lg("n_total")
-    sf_ = lg("tf")
-    return f"""
+TEXT_UNIGRAM_LOGPROB_SQL = f"""
 WITH occ AS (
   SELECT doc_id, unnest(str_split(text, ' ')) AS tok FROM documents
 ),
 tf AS (SELECT tok, COUNT(*) AS tf FROM occ GROUP BY tok),
 total AS (SELECT SUM(tf) AS n_total FROM tf),
 j AS (SELECT o.doc_id, t.tf, n_total FROM occ o JOIN tf t USING (tok) CROSS JOIN total),
-s1 AS (SELECT doc_id, tf, n_total,
-              {sn['bl']} AS bl FROM j),
-s2 AS (SELECT doc_id, tf, n_total, {sn['m']} AS m FROM s1),
-s3 AS (SELECT doc_id, tf, n_total, m, {sn['z']} AS z FROM s2),
-s4 AS (SELECT doc_id, tf, n_total, z, {sn['z2']} AS z2 FROM s3),
-s5 AS (SELECT doc_id, tf, n_total, z, z2, {sn['poly']} AS poly FROM s4),
-s5b AS (SELECT doc_id, tf, n_total, z, poly,
-               (length(bin(n_total)) - 1) AS bl FROM s5),
-s6 AS (SELECT doc_id, tf, {sn['lg']} AS lg_n FROM s5b),
-t1 AS (SELECT doc_id, tf, lg_n, {sf_['bl']} AS bl FROM s6),
-t2 AS (SELECT doc_id, tf, lg_n, bl, {sf_['m']} AS m FROM t1),
-t3 AS (SELECT doc_id, lg_n, bl, m, {sf_['z']} AS z FROM t2),
-t4 AS (SELECT doc_id, lg_n, bl, z, {sf_['z2']} AS z2 FROM t3),
-t5 AS (SELECT doc_id, lg_n, bl, z, z2, {sf_['poly']} AS poly FROM t4),
-t6 AS (SELECT doc_id, lg_n, {sf_['lg']} AS lg_tf FROM t5),
+lg AS (
+  SELECT doc_id,
+         {_log2_lateral_sql('n_total', 'lg_n')},
+         {_log2_lateral_sql('tf', 'lg_tf')}
+  FROM j
+),
 scored AS (
-  SELECT doc_id, CAST(ROUND((lg_n - lg_tf) * 1000000.0) AS BIGINT) AS bits_u FROM t6
+  SELECT doc_id, CAST(ROUND((lg_n - lg_tf) * 1000000.0) AS BIGINT) AS bits_u FROM lg
 ),
 per_doc AS (
   SELECT doc_id, COUNT(*) AS n_tokens, SUM(bits_u) AS bits_u FROM scored GROUP BY doc_id
@@ -862,9 +861,6 @@ FROM per_doc
 """
 
 
-TEXT_UNIGRAM_LOGPROB_SQL = _unigram_sql()
-
-
 # ---------------------------------------------------------------------------
 # 110. dsir_importance — DSIR-style importance weighting for data selection
 #     (Xie et al. 2023: weight each raw document by how much more likely
@@ -873,24 +869,6 @@ TEXT_UNIGRAM_LOGPROB_SQL = _unigram_sql()
 # ---------------------------------------------------------------------------
 
 DSIR_TARGET_SOURCE = "src0"  # the target slice whose distribution we want
-
-
-def _log2_lateral_sql(x: str, out: str) -> str:
-    """One-SELECT log2 of an integer expression via DuckDB lateral column
-    aliases — the same staged polynomial arithmetic as _log2_stages, but
-    with stage aliases SUFFIXED by the output name: lateral aliases lose
-    to real columns of the FROM relation on name conflicts, so
-    re-exported stage columns from a previous log2 CTE would silently
-    shadow the new stages and corrupt the value."""
-    bl, m, z, z2, poly = (f"{k}_{out}" for k in ("bl", "m", "z", "z2", "poly"))
-    return (
-        f"(length(bin({x})) - 1) AS {bl}, "
-        f"(CAST({x} AS DOUBLE) / CAST((CAST(1 AS BIGINT) << {bl}) AS DOUBLE)) AS {m}, "
-        f"(({m} - 1.0) / ({m} + 1.0)) AS {z}, "
-        f"({z} * {z}) AS {z2}, "
-        f"{atanh_series(z2)} AS {poly}, "
-        f"(CAST({bl} AS DOUBLE) + {LOG2_SCALE} * {z} * {poly}) AS {out}"
-    )
 
 
 def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -55,6 +55,14 @@ def conf(cpus: int | str) -> dict[str, str]:
       (events_sessionize: 2 Sorts -> 1). Off by default upstream only
       because multi-file buckets can't claim order — ours can't be
       multi-file.
+    - python.sql.dataFrameDebugging.enabled=false: PySpark 4.1 wraps
+      every `F.*`/Column call in `_with_origin`, which per call looks up
+      the active session, reads a conf, walks the Python stack and sets
+      and clears a JVM origin. Off, a DataFrame error no longer names
+      the Python call site in its context; in exchange the build of the
+      perfbench headline keys falls from ~780 to 516-605 ms (same-host
+      probe). PySpark reads the flag once per process, at the first
+      wrapped call made under an active session.
     - driver.memory from SPARK_GRAFT_DRIVER_MEM (default 16g).
     - AQE initialPartitionNum derived from the DEM cell count (round-12,
       guide §2.2/§5 "fewer, larger reduce partitions ... let AQE
@@ -62,8 +70,9 @@ def conf(cpus: int | str) -> dict[str, str]:
       are O(cells), so initial shuffle partitions hold a constant
       ~2^18 cells each (~85 MB of pass-2 kernel rows) and AQE coalesces
       everything smaller back down. shuffle.partitions itself must NOT
-      be raised for this: split_for_cpu()'s explicit repartition(n, key)
-      derives from it and is not AQE-coalescible. At the reference
+      be raised for this: every stateful stream and every bucket count
+      sized by datamodel.coalesced_partitions is capped by it and is not
+      AQE-coalescible. At the reference
       data's 64x64 dims the derived value never exceeds the base
       partitions, so the conf is omitted. Measured at the 8192x8192-cell
       grid (interleaved
@@ -80,6 +89,7 @@ def conf(cpus: int | str) -> dict[str, str]:
         "spark.sql.join.preferSortMergeJoin": "false",
         "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
         "spark.ui.enabled": "false",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
     }
     init_parts = (datamodel.GRID_W * datamodel.GRID_H) >> 18

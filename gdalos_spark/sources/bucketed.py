@@ -19,7 +19,11 @@ session's `spark.sql.shuffle.partitions` at scale.
 
 The helpers are thin by design: the VALUE is the layout contract
 (bucket count, key, sort) living in one place instead of being re-typed
-per pipeline.
+per pipeline. `attach` serves a staged copy through
+`datamodel.source_table`, the one registration of every source: the
+bucket spec only lives in a catalog, so the store is an external
+`CLUSTERED BY ... SORTED BY ... INTO n BUCKETS` table named by the
+store's own fingerprint and spec.
 """
 
 from __future__ import annotations
@@ -184,39 +188,22 @@ def stage_facts(
 def attach(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
     """Serve the staged bucketed copy of `name` for `sf_dir`, or None.
 
-    The bucket spec only lives in a session catalog, so a fresh session
-    re-registers the staged layout as an external `CREATE TABLE ...
-    CLUSTERED BY ... INTO n BUCKETS LOCATION` — the files are already
-    bucket-id-named, Spark trusts the spec. The marker's fingerprint
-    gates staleness: regenerated testdata silently falls back to the
-    plain parquet scan until someone re-stages."""
+    The bucketed case of `datamodel.source_table`: the staged layout is
+    registered once as an external `CLUSTERED BY ... SORTED BY ... INTO
+    n BUCKETS` catalog table, with the spec taken from the marker so the
+    DDL matches what was written. The marker's fingerprint gates
+    staleness: regenerated testdata falls back to the plain source until
+    someone re-stages. A re-stage rewrites the bucket files, so it also
+    changes the store's own fingerprint and registers a fresh table."""
+    from gdalos_spark.datamodel import source_table
+
     spec = BUCKETED_FACTS.get(name)
     if spec is None:
         return None
-    key = spec[0]
     final = _final_dir(sf_dir, name)
     meta = _marker_meta(final)
     if not meta or meta.get("fingerprint") != _fingerprint(sf_dir, name):
         return None
-    # pre-sort-field markers carry no "sort"; the DDL below must match
-    # what was actually written, so take the sort list from the marker
-    sort_cols = [key] + list(meta.get("sort", []))
-    # the tag hashes LOCATION + the full staging identity (fingerprint
-    # AND bucket count): switching stage roots, regenerated data, or a
-    # re-stage at a different bucket count within one session must all
-    # register a fresh table — serving new files under a previously
-    # attached (and now wrong) bucket spec would silently corrupt every
-    # bucketed join
-    ident = json.dumps(meta, sort_keys=True)
-    tag = hashlib.md5(f"{final}:{ident}".encode()).hexdigest()[:8]
-    tbl = f"gdalos_b_{name}_{_slug(sf_dir)}_{tag}"
-    if not spark.catalog.tableExists(tbl):
-        schema = spark.read.parquet(final).schema
-        ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-        sorted_by = ", ".join(f"`{c}`" for c in sort_cols)
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {tbl} ({ddl}) USING parquet "
-            f"CLUSTERED BY (`{key}`) SORTED BY ({sorted_by}) "
-            f"INTO {meta['buckets']} BUCKETS LOCATION '{final}'"
-        )
-    return spark.table(tbl)
+    # pre-sort-field markers carry no "sort"
+    bucketing = (spec[0], tuple(meta.get("sort", ())), meta["buckets"])
+    return source_table(spark, final, bucketing)

@@ -64,6 +64,7 @@ from ..datamodel import (
     query_persist,
     scratch_dir,
     source_fingerprint,
+    source_table,
 )
 from ..session import scoped_conf
 
@@ -228,7 +229,7 @@ def _events_source(
     `three_batches` as the `_stage_three_batches` files replayed one per
     micro-batch."""
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = source_table(spark, path).schema
     if three_batches:
         return _batch_source(spark, _stage_three_batches(spark, sf_dir), schema)
     src = _stage_dir(path)
@@ -1154,7 +1155,7 @@ def _stage_three_batches(spark: SparkSession, sf_dir: str) -> str:
     src = f"{sf_dir}/events.parquet"
 
     def build(d: str) -> None:
-        ev = spark.read.parquet(src)
+        ev = source_table(spark, src)
         _write_batch_files(d, [ev.filter(F.col("event_id") % 3 == i) for i in range(3)])
 
     return publish_staged_dir(
@@ -1426,7 +1427,7 @@ def _stage_dedup_wm_batches(spark: SparkSession, sf_dir: str) -> str:
     src = f"{sf_dir}/events.parquet"
 
     def build(d: str) -> None:
-        ev = spark.read.parquet(src)
+        ev = source_table(spark, src)
         us = F.expr(epoch_micros_sql(ev)).alias("us")
         base = ev.select("user_id", "event_type", us)
         day0 = base.agg(F.min(F.expr("us div 86400000000"))).collect()[0][0]

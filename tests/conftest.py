@@ -111,6 +111,19 @@ def assert_record_matches_oracle(record, ducks, key):
     assert bad is None, f"{key}: {bad}"
 
 
+def jobs_run(spark, fn):
+    """(fn(), the number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    group = f"probe-{os.urandom(8).hex()}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_matches_oracle(spark, ducks, fn, sql, sf_dir=SF_DIR):
     """The catalog compare for a test that brings its own query function,
     data dir or session layout (tests/test_catalog.py covers every key

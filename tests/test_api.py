@@ -175,8 +175,8 @@ def test_bench_conf_grid_adaptive_partitions(monkeypatch):
     monkeypatch.setattr(datamodel, "GRID_W", 65536)
     monkeypatch.setattr(datamodel, "GRID_H", 65536)
     assert conf("32")[key] == "4096"
-    # base shuffle partitions are untouched by the knob (split_for_cpu
-    # derives its explicit repartition width from them)
+    # base shuffle partitions are untouched by the knob (they cap the
+    # stream state and bucket counts that AQE cannot coalesce)
     assert conf("32")["spark.sql.shuffle.partitions"] == "32"
 
 
@@ -231,6 +231,57 @@ def test_query_persist_is_the_only_persist():
         assert len(calls) == 1, calls
         assert calls[0][0] == helper_path
         assert helper.lineno <= calls[0][1] <= helper.end_lineno
+
+
+def test_sources_open_only_through_the_catalog():
+    """Every source table opens through datamodel (`source_table`, one
+    catalog table per path and fingerprint): outside datamodel.py no
+    `read.parquet(` names a `{sf_dir}/<table>.parquet` source, whether
+    spelled inline or through a local bound to such a path."""
+    import ast
+    import pathlib
+
+    import gdalos_spark
+
+    def is_source(node) -> bool:
+        return (
+            isinstance(node, ast.JoinedStr)
+            and isinstance(node.values[0], ast.FormattedValue)
+            and isinstance(node.values[0].value, ast.Name)
+            and node.values[0].value.id == "sf_dir"
+            and isinstance(node.values[-1], ast.Constant)
+            and str(node.values[-1].value).endswith(".parquet")
+        )
+
+    root = pathlib.Path(gdalos_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "datamodel.py":
+            continue
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            bound = {
+                t.id
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Assign) and is_source(n.value)
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
+            found += [
+                (rel, n.lineno)
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "parquet"
+                and isinstance(n.func.value, ast.Attribute)
+                and n.func.value.attr == "read"
+                and n.args
+                and (is_source(n.args[0])
+                     or isinstance(n.args[0], ast.Name) and n.args[0].id in bound)
+            ]
+    assert found == [], found
 
 
 def test_stale_frame_fails_after_the_next_query(spark):

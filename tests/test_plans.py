@@ -17,7 +17,7 @@ from gdalos_spark.plans.asserts import (
     explain_str,
 )
 from gdalos_spark.session import scoped_conf
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run
 
 # 64 KiB scan splits: a many-file input plans one scan task per file
 SMALL_SPLITS = {
@@ -404,17 +404,24 @@ def test_dbscan_candidates_only_meet_on_cells(spark):
 
 def test_split_for_cpu_gates_on_scan_parallelism(spark):
     """The CPU re-spread is conditional: a split-starved scan gets hash-
-    spread to the session parallelism, while an already-wide input passes
-    through IDENTICALLY (no exchange — repartition itself is never a
-    no-op, so the gate is what keeps the 100-TB path shuffle-free)."""
+    spread over defaultParallelism (the cores), while an already-wide
+    input passes through IDENTICALLY (no exchange — repartition itself is
+    never a no-op, so the gate is what keeps the 100-TB path
+    shuffle-free). The gate plans and runs no job, also above an
+    exchange, where `df.rdd` would run the upstream stage."""
     from gdalos_spark.datamodel import split_for_cpu
 
     docs = load(spark, SF_DIR, "documents")
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert docs.rdd.getNumPartitions() < n_part  # the starved local layout
-    assert split_for_cpu(docs, "doc_id").rdd.getNumPartitions() == n_part
-    wide = docs.repartition(n_part, "doc_id")
+    cores = spark.sparkContext.defaultParallelism
+    assert docs.rdd.getNumPartitions() == 1  # the starved local layout
+    spread, jobs = jobs_run(spark, lambda: split_for_cpu(docs, "doc_id"))
+    assert jobs == 0
+    assert spread.rdd.getNumPartitions() == cores
+    wide = docs.repartition(cores, "doc_id")
     assert split_for_cpu(wide, "doc_id") is wide
+    per_source = docs.groupBy("source").count()
+    _, jobs = jobs_run(spark, lambda: split_for_cpu(per_source, "source"))
+    assert jobs == 0
 
 
 def test_text_quality_zero_exchange_on_wide_scan(spark, tmp_path):

@@ -58,6 +58,34 @@ def test_chain_leveling_respects_dependencies():
     assert [n for n, _ in lv[1]] == ["d"]
 
 
+def test_chain_literal_tail_is_not_a_reference(spark, ducks):
+    """`e0` is also the tail of every exponent-spelled literal (`1.0e0`);
+    a definition named `e0` is still carried only once it exists, so
+    both renderers bind it and agree on the rows."""
+    from gdalos_spark.functions.scalar_chain import (
+        ScalarChain,
+        duckdb_spellings,
+        spark_spellings,
+    )
+
+    def chain(spellings):
+        c = ScalarChain(*spellings)
+        c.add("x", "(a * 2.0e0)")
+        c.add("y", "(x + 1.0e0)")
+        c.add("e0", "(y * 3.0e0)")
+        return c
+
+    keep, inputs = ("k", "e0"), ("k", "a")
+    duck = chain(duckdb_spellings()).wrap_sql(
+        "SELECT * FROM (VALUES (1, 0.5e0), (2, 4.0e0)) t(k, a)", keep=keep, inputs=inputs
+    )
+    want = sorted(ducks.execute(duck).fetchall())
+    assert want == [(1, 6.0), (2, 27.0)]
+    src = spark.createDataFrame([(1, 0.5), (2, 4.0)], "k int, a double")
+    got = chain(spark_spellings()).apply_spark(src, keep=keep, inputs=inputs)
+    assert sorted(tuple(r) for r in got.select(*keep).collect()) == want
+
+
 # --- crs_reproject_utm_inverse ----------------------------------------------
 
 
