@@ -6,9 +6,10 @@ fingerprint[, bucket spec]), with that identity hashed into the table
 name. Registering runs Spark's one schema-inference job; every later
 `load()` is a `spark.table` lookup that runs no job and reuses the
 resolved file listing, and a regenerated source (new fingerprint)
-registers a new table instead of serving a stale listing. `load()`
-serves the staged bucketed copy when one is current (the bucketed case
-of the same function, sources/bucketed.py) and normalizes events' ts.
+registers a new table instead of serving a stale listing, dropping the
+one it supersedes. `load()` serves the staged bucketed copy when one is
+current (the bucketed case of the same function, sources/bucketed.py)
+and normalizes events' ts.
 
 gdalos operates on GDAL rasters; the distributed equivalent is a **pixel
 grid DataFrame** ``(band, px, py, value)`` partitioned by tile. The driver's
@@ -264,33 +265,51 @@ def source_table(
     the bucket-id-named files. Tables live in the SparkContext's shared
     catalog, so every session on it sees them; a later `spark.table`
     in the same session reuses the resolved relation (no file listing,
-    no schema-inference job, unlike `spark.read.parquet`)."""
+    no schema-inference job, unlike `spark.read.parquet`). Registering
+    drops the table the same path and bucket spec had under an older
+    fingerprint (its COMMENT holds that fingerprint-free identity), so
+    one table per path and spec stays; DROP of an external table keeps
+    the files."""
     path = os.path.abspath(path)
-    ident = f"{path}:{source_fingerprint(path)}"
+    spec_id = ""
     if bucketing is not None:
         key, sort, buckets = bucketing
-        ident += f":{key}:{','.join(sort)}:{buckets}"
+        spec_id = f":{key}:{','.join(sort)}:{buckets}"
+    origin = path + spec_id  # the identity minus the fingerprint
+    ident = f"{path}:{source_fingerprint(path)}{spec_id}"
     stem = re.sub(r"\W", "_", os.path.basename(path).split(".")[0])
     kind = "src" if bucketing is None else "b"
     tbl = f"gdalos_{kind}_{stem}_{hashlib.md5(ident.encode()).hexdigest()[:16]}"
     if not spark.catalog.tableExists(tbl):
         spec = " USING parquet"
         if bucketing is not None:
-            # a bucket spec needs an explicit column list: take it from
-            # the plain table over the same files
+            # a bucket spec needs an explicit column list: infer it from
+            # the files (no plain table is registered for a staged store)
             cols = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}"
-                for f in source_table(spark, path).schema.fields
+                for f in spark.read.parquet(path).schema.fields
             )
             sorted_by = ", ".join(f"`{c}`" for c in (key, *sort))
             spec = (
                 f" ({cols}) USING parquet CLUSTERED BY (`{key}`)"
                 f" SORTED BY ({sorted_by}) INTO {buckets} BUCKETS"
             )
-        location = path.replace("\\", "\\\\").replace("'", "\\'")
+
+        def quote(s: str) -> str:
+            return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
         spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {tbl}{spec} LOCATION '{location}'"
+            f"CREATE TABLE IF NOT EXISTS {tbl}{spec}"
+            f" LOCATION {quote(path)} COMMENT {quote(origin)}"
         )
+        # the same path and bucket spec under an older fingerprint is
+        # superseded: drop its catalog entry (external, so the files
+        # stay). SHOW TABLE EXTENDED runs no job, unlike
+        # spark.catalog.listTables (two jobs per call).
+        pattern = quote(f"gdalos_{kind}_{stem}_*")
+        for t in spark.sql(f"SHOW TABLE EXTENDED LIKE {pattern}").collect():
+            if t.tableName != tbl and f"\nComment: {origin}\n" in t.information:
+                spark.sql(f"DROP TABLE IF EXISTS {t.tableName}")
     return spark.table(tbl)
 
 

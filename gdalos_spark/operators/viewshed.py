@@ -11,6 +11,24 @@ on the ray key; rays are independent, so at 100 TB the window
 parallelizes across (observer, ray) partitions and never needs the whole
 DEM on one node.
 
+Every LOS key reaches the DEM through one of two primitives, each with
+an SQL twin that spells the same expressions for the DuckDB oracle:
+
+* the radial sweep, `_radial_los` / `_radial_los_sql`: the DEM fanned
+  out over an observer set (the fixed OBS_X/OBS_Y observer or a
+  broadcast observer frame / `obs` VALUES CTE), every cell bucketed onto
+  its ray and scored by its tangent, and the one running-max window per
+  (observer, ray). Returns `(*carry, px, py, ray, d2, tan_angle,
+  visible)`.
+* the link profile, `_los_links` / `_los_links_sql` and `_link_profile`
+  / `_link_profile_sql`: observers x sampled customer targets minus the
+  coincident pairs, `(c_custkey, tx, ty, ox, oy)`; then every link
+  sampled at the integer midpoints of steps lo..hi and equi-joined to
+  the DEM, returning the link columns plus `(i, px, py, z)`.
+
+The observer set is `_observers` (a frame) and `_observers_sql` (the
+`obs` VALUES CTE).
+
 Citations: los_calc viewshed_calc.py:636; multi-observer combine via
 CalcOperation.count viewshed_calc.py:89; calc_free_space_loss
 viewshed_calc.py:627 (20*(log10(d)+log10(f))-27.55, d meters / f MHz);
@@ -19,6 +37,8 @@ get_zone_lon0 utm_convergence.py:13.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +65,21 @@ SLOPE_BUCKETS = 32
 
 # multi-observer set (#20)
 OBSERVERS = ((16, 16), (16, 48), (48, 16), (48, 48), (32, 32))
+
+# link profiles: N_LOS_STEPS segment samples per observer->target link,
+# targets are the customer points with c_custkey % LOS_TARGET_MOD == 0
+N_LOS_STEPS = 64
+LOS_TARGET_MOD = 23
+
+
+def _observers(spark: SparkSession, rows=OBSERVERS, schema: str = "ox int, oy int") -> DataFrame:
+    """An observer set as a tiny local frame (callers broadcast it)."""
+    return spark.createDataFrame(list(rows), schema)
+
+
+def _observers_sql(rows=OBSERVERS, cols: str = "ox, oy") -> str:
+    """The same observer set as the `obs` VALUES CTE."""
+    return f"obs({cols}) AS (VALUES {', '.join(map(str, rows))})"
 
 
 def _ray_cols(dx: Column, dy: Column) -> tuple[Column, Column]:
@@ -79,6 +114,154 @@ def _ray_sql(dx: str, dy: str) -> tuple[str, str]:
     return ray, d2
 
 
+def _radial_los(
+    g: DataFrame,
+    obs: DataFrame | None = None,
+    keys: tuple[str, ...] = (),
+    carry: tuple[str, ...] | None = None,
+    num: Callable[[Column], Column] = lambda d2: F.col("elev").cast("double") - OBS_Z,
+    den: Callable[[Column], Column] = lambda d2: F.sqrt(d2.cast("double")),
+    where: Callable[[Column, Column, Column], Column] | None = None,
+) -> DataFrame:
+    """The radial sweep: a cell is visible iff its elevation-angle
+    tangent num/den (functions of the integer d2) is >= the running max
+    of every cell closer on the same (observer, ray). `obs` None is the
+    fixed OBS_X/OBS_Y observer; otherwise the DEM fans out map-side
+    against the broadcast observer frame, whose `keys` partition the
+    window next to the ray. `where(dx, dy, d2)` prunes cells before the
+    window (radial rays: a pruned set stays exact when whole rays or
+    whole ray tails go). Returns (*carry, px, py, ray, d2, tan_angle,
+    visible); carry defaults to keys."""
+    if obs is None:
+        ox, oy = OBS_X, OBS_Y
+        cells = g
+    else:
+        ox, oy = F.col("ox"), F.col("oy")
+        cells = g.crossJoin(F.broadcast(obs))
+    cells = cells.filter((F.col("px") != ox) | (F.col("py") != oy))
+    dx, dy = F.col("px") - ox, F.col("py") - oy
+    ray, d2 = _ray_cols(dx, dy)
+    if where is not None:
+        cells = cells.filter(where(dx, dy, d2))
+    scored = cells.select(
+        *(keys if carry is None else carry), "px", "py",
+        ray.alias("ray"), d2.alias("d2"), (num(d2) / den(d2)).alias("tan_angle"),
+    )
+    w = Window.partitionBy(*keys, "ray").orderBy("d2", "px", "py").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    max_before = F.max("tan_angle").over(w)
+    return scored.select(
+        "*",
+        F.when(max_before.isNull() | (F.col("tan_angle") >= max_before), 1)
+        .otherwise(0)
+        .alias("visible"),
+    )
+
+
+def _radial_los_sql(
+    obs: str | None = None,
+    keys: tuple[str, ...] = (),
+    carry: tuple[str, ...] | None = None,
+    num: Callable[[str], str] = lambda d2: f"(CAST(elev AS DOUBLE) - {OBS_Z})",
+    den: Callable[[str], str] = lambda d2: f"sqrt(CAST({d2} AS DOUBLE))",
+    where: Callable[[str, str, str], str] | None = None,
+) -> str:
+    """SQL twin of `_radial_los`: a SELECT over the `dem` CTE (crossed
+    with the observer CTE named `obs`) returning the same columns."""
+    ox, oy = (OBS_X, OBS_Y) if obs is None else ("ox", "oy")
+    dx, dy = f"(px - {ox})", f"(py - {oy})"
+    ray, d2 = _ray_sql(dx, dy)
+    src = "dem" if obs is None else f"dem CROSS JOIN {obs}"
+    pred = f"NOT (px = {ox} AND py = {oy})" + ("" if where is None else f" AND {where(dx, dy, d2)}")
+    cols = "".join(f"{c}, " for c in (keys if carry is None else carry))
+    return f"""
+SELECT {cols}px, py, ray, d2, tan_angle,
+       CAST(CASE WHEN mb IS NULL OR tan_angle >= mb THEN 1 ELSE 0 END AS INTEGER) AS visible
+FROM (
+  SELECT *, MAX(tan_angle) OVER (PARTITION BY {', '.join((*keys, 'ray'))} ORDER BY d2, px, py
+                                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mb
+  FROM (
+    SELECT {cols}px, py, {ray} AS ray, {d2} AS d2, {num(d2)} / {den(d2)} AS tan_angle
+    FROM {src} WHERE {pred}
+  )
+)"""
+
+
+def _dem_z(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The DEM as (px, py, z) with z the DOUBLE elevation."""
+    return dem_grid(spark, sf_dir).select("px", "py", F.col("elev").cast("double").alias("z"))
+
+
+def _los_links(
+    spark: SparkSession, sf_dir: str, observers=OBSERVERS, mod: int = LOS_TARGET_MOD
+) -> DataFrame:
+    """Observer->target links: every observer against the customer
+    points with c_custkey % mod == 0 snapped to their cells, coincident
+    pairs removed — (c_custkey, tx, ty, ox, oy). A broadcast of two tiny
+    tables."""
+    tgts = (
+        customer_points(spark, sf_dir)
+        .filter(F.col("c_custkey") % mod == 0)
+        .select(
+            "c_custkey",
+            F.floor(F.col("cx")).cast("int").alias("tx"),
+            F.floor(F.col("cy")).cast("int").alias("ty"),
+        )
+    )
+    return tgts.crossJoin(F.broadcast(_observers(spark, observers))).filter(
+        (F.col("ox") != F.col("tx")) | (F.col("oy") != F.col("ty"))
+    )
+
+
+def _los_links_sql(observers=OBSERVERS, mod: int = LOS_TARGET_MOD) -> str:
+    """SQL twin of `_los_links`: the `pts`, `obs`, `tgts` and `links`
+    CTEs (after a `dem` CTE)."""
+    return f"""pts AS ({CUSTOMER_POINTS_SQL}),
+{_observers_sql(observers)},
+tgts AS (
+  SELECT c_custkey, CAST(FLOOR(cx) AS INTEGER) AS tx, CAST(FLOOR(cy) AS INTEGER) AS ty
+  FROM pts WHERE c_custkey % {mod} = 0
+),
+links AS (SELECT * FROM tgts CROSS JOIN obs WHERE NOT (ox = tx AND oy = ty))"""
+
+
+def _link_profile(links: DataFrame, dem: DataFrame, lo: int, hi: int) -> DataFrame:
+    """The link profile: every link (any frame with ox, oy, tx, ty)
+    sampled at steps i = lo..hi of N_LOS_STEPS with pure integer
+    rounding, cell_i = round((o*(N-i) + t*i) / N), spelled
+    (o*(N-i) + t*i + N/2) div N so both engines floor-divide, then
+    equi-joined to `dem` (px, py, z) on the sampled cell. Returns
+    (px, py, *link columns, i, z); the step fan-out is a broadcast and
+    the DEM join the only data join — at 100 TB one shuffle
+    co-partitioned with the tiled raster layout."""
+    n = N_LOS_STEPS
+    steps = links.sparkSession.range(lo, hi + 1).select(F.col("id").cast("int").alias("i"))
+
+    def mid(o: str, t: str) -> Column:
+        return F.expr(f"({o} * ({n} - i) + {t} * i + {n // 2}) div {n}").cast("int")
+
+    return (
+        links.crossJoin(F.broadcast(steps))
+        .select("*", mid("ox", "tx").alias("px"), mid("oy", "ty").alias("py"))
+        .join(dem, ["px", "py"])
+    )
+
+
+def _link_profile_sql(links: str, lo: int, hi: int) -> str:
+    """SQL twin of `_link_profile`: a SELECT over the CTE `links` and
+    the `dem` CTE returning the link columns plus (i, px, py, z)."""
+    n = N_LOS_STEPS
+
+    def mid(o: str, t: str) -> str:
+        return f"CAST((l.{o} * ({n} - s.i) + l.{t} * s.i + {n // 2}) // {n} AS INTEGER)"
+
+    return f"""
+SELECT l.*, s.i, dem.px, dem.py, CAST(dem.elev AS DOUBLE) AS z
+FROM {links} l CROSS JOIN (SELECT CAST(range AS INTEGER) AS i FROM range({lo}, {hi + 1})) s
+JOIN dem ON dem.px = {mid('ox', 'tx')} AND dem.py = {mid('oy', 'ty')}"""
+
+
 # ---------------------------------------------------------------------------
 # 19. viewshed_los — single-observer line-of-sight over the DEM grid
 # ---------------------------------------------------------------------------
@@ -90,54 +273,18 @@ def viewshed_los(spark: SparkSession, sf_dir: str) -> DataFrame:
     is monotone in the angle, so no trig is needed; d = sqrt(int) and the
     division are IEEE-deterministic. Window partitions by ray (264
     independent rays), orders by integer d2 with (px,py) tiebreak."""
-    g = dem_grid(spark, sf_dir)
-    dx, dy = F.col("px") - OBS_X, F.col("py") - OBS_Y
-    ray, d2 = _ray_cols(dx, dy)
-    cells = (
-        g.filter((F.col("px") != OBS_X) | (F.col("py") != OBS_Y))
-        .select(
-            "px", "py",
-            ray.alias("ray"), d2.alias("d2"),
-            ((F.col("elev").cast("double") - OBS_Z) / F.sqrt(d2.cast("double"))).alias("tan_angle"),
-        )
-    )
-    w = (
-        Window.partitionBy("ray")
-        .orderBy("d2", "px", "py")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    max_before = F.max("tan_angle").over(w)
-    return cells.select(
+    return _radial_los(dem_grid(spark, sf_dir)).select(
         "px", "py", "ray",
         F.sqrt(F.col("d2").cast("double")).alias("dist"),
-        "tan_angle",
-        F.when(max_before.isNull() | (F.col("tan_angle") >= max_before), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("visible"),
+        "tan_angle", "visible",
     )
 
 
-def _los_sql() -> str:
-    ray, d2 = _ray_sql(f"(px - {OBS_X})", f"(py - {OBS_Y})")
-    return f"""
-WITH dem AS ({DEM_GRID_SQL}),
-cells AS (
-  SELECT px, py, {ray} AS ray, {d2} AS d2,
-         (CAST(elev AS DOUBLE) - {OBS_Z}) / sqrt(CAST({d2} AS DOUBLE)) AS tan_angle
-  FROM dem WHERE NOT (px = {OBS_X} AND py = {OBS_Y})
-)
-SELECT px, py, ray, sqrt(CAST(d2 AS DOUBLE)) AS dist, tan_angle,
-       CAST(CASE WHEN mb IS NULL OR tan_angle >= mb THEN 1 ELSE 0 END AS INTEGER) AS visible
-FROM (
-  SELECT *, MAX(tan_angle) OVER (PARTITION BY ray ORDER BY d2, px, py
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mb
-  FROM cells
-)
+VIEWSHED_LOS_SQL = f"""
+WITH dem AS ({DEM_GRID_SQL})
+SELECT px, py, ray, sqrt(CAST(d2 AS DOUBLE)) AS dist, tan_angle, visible
+FROM ({_radial_los_sql()})
 """
-
-
-VIEWSHED_LOS_SQL = _los_sql()
 
 # ---------------------------------------------------------------------------
 # 20. viewshed_observer_count — per-cell count of observers with LOS
@@ -150,63 +297,19 @@ def viewshed_observer_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     The observer table is a tiny broadcast dim; the DEM is scanned once
     and fans out x|observers| map-side. One window shuffle on
     (ox, oy, ray), one count shuffle on the cell."""
-    g = dem_grid(spark, sf_dir)
-    obs = spark.createDataFrame(list(OBSERVERS), "ox int, oy int")
-    cells = g.crossJoin(F.broadcast(obs)).filter(
-        (F.col("px") != F.col("ox")) | (F.col("py") != F.col("oy"))
-    )
-    dx, dy = F.col("px") - F.col("ox"), F.col("py") - F.col("oy")
-    ray, d2 = _ray_cols(dx, dy)
-    scored = cells.select(
-        "px", "py", "ox", "oy",
-        ray.alias("ray"), d2.alias("d2"),
-        ((F.col("elev").cast("double") - OBS_Z) / F.sqrt(d2.cast("double"))).alias("tan_angle"),
-    )
-    w = (
-        Window.partitionBy("ox", "oy", "ray")
-        .orderBy("d2", "px", "py")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    max_before = F.max("tan_angle").over(w)
-    vis = scored.select(
-        "px", "py",
-        F.when(max_before.isNull() | (F.col("tan_angle") >= max_before), 1)
-        .otherwise(0)
-        .alias("visible"),
-    )
-    return vis.groupBy("px", "py").agg(
+    vis = _radial_los(dem_grid(spark, sf_dir), _observers(spark), keys=("ox", "oy"))
+    return vis.select("px", "py", "visible").groupBy("px", "py").agg(
         F.count(F.lit(1)).alias("n_obs"),
         F.sum("visible").cast("bigint").alias("n_visible"),
     )
 
 
-def _obs_count_sql() -> str:
-    ray, d2 = _ray_sql("(px - ox)", "(py - oy)")
-    values = ", ".join(f"({x}, {y})" for x, y in OBSERVERS)
-    return f"""
+VIEWSHED_OBSERVER_COUNT_SQL = f"""
 WITH dem AS ({DEM_GRID_SQL}),
-obs(ox, oy) AS (VALUES {values}),
-cells AS (
-  SELECT px, py, ox, oy, {ray} AS ray, {d2} AS d2,
-         (CAST(elev AS DOUBLE) - {OBS_Z}) / sqrt(CAST({d2} AS DOUBLE)) AS tan_angle
-  FROM dem CROSS JOIN obs
-  WHERE NOT (px = ox AND py = oy)
-),
-vis AS (
-  SELECT px, py,
-         CASE WHEN mb IS NULL OR tan_angle >= mb THEN 1 ELSE 0 END AS visible
-  FROM (
-    SELECT *, MAX(tan_angle) OVER (PARTITION BY ox, oy, ray ORDER BY d2, px, py
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mb
-    FROM cells
-  )
-)
+{_observers_sql()}
 SELECT px, py, COUNT(*) AS n_obs, CAST(SUM(visible) AS BIGINT) AS n_visible
-FROM vis GROUP BY px, py
+FROM ({_radial_los_sql("obs", keys=("ox", "oy"))}) GROUP BY px, py
 """
-
-
-VIEWSHED_OBSERVER_COUNT_SQL = _obs_count_sql()
 
 # ---------------------------------------------------------------------------
 # 21. free_space_loss — radio FSL per link
@@ -316,57 +419,35 @@ def viewshed_los_refraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     window plan to viewshed_los; only the tangent numerator changes —
     d^2 in meters is exact integer*constant arithmetic, so the oracle
     stays bit-exact."""
-    g = dem_grid(spark, sf_dir)
-    dx, dy = F.col("px") - OBS_X, F.col("py") - OBS_Y
-    ray, d2 = _ray_cols(dx, dy)
-    d_m = F.sqrt(d2.cast("double") * (CELL_M * CELL_M))
-    z_corr = (
-        F.col("elev").cast("double")
-        - F.lit(CURVE_COEFF) * (d2.cast("double") * (CELL_M * CELL_M)) / F.lit(SPHERE_DIAMETER_M)
-    )
-    cells = (
-        g.filter((F.col("px") != OBS_X) | (F.col("py") != OBS_Y))
-        .select(
-            "px", "py",
-            ray.alias("ray"), d2.alias("d2"),
-            ((z_corr - OBS_Z) / d_m).alias("tan_angle"),
-        )
-    )
-    w = (
-        Window.partitionBy("ray")
-        .orderBy("d2", "px", "py")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    max_before = F.max("tan_angle").over(w)
-    return cells.select(
+
+    def d2m(d2: Column) -> Column:
+        return d2.cast("double") * (CELL_M * CELL_M)
+
+    return _radial_los(
+        dem_grid(spark, sf_dir),
+        num=lambda d2: (
+            F.col("elev").cast("double") - F.lit(CURVE_COEFF) * d2m(d2) / F.lit(SPHERE_DIAMETER_M)
+        ) - OBS_Z,
+        den=lambda d2: F.sqrt(d2m(d2)),
+    ).select(
         "px", "py", "ray",
-        F.sqrt(F.col("d2").cast("double") * (CELL_M * CELL_M)).alias("dist_m"),
-        "tan_angle",
-        F.when(max_before.isNull() | (F.col("tan_angle") >= max_before), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("visible"),
+        F.sqrt(d2m(F.col("d2"))).alias("dist_m"),
+        "tan_angle", "visible",
     )
 
 
 def _los_refraction_sql() -> str:
-    ray, d2 = _ray_sql(f"(px - {OBS_X})", f"(py - {OBS_Y})")
-    d2m = f"(CAST({d2} AS DOUBLE) * {CELL_M * CELL_M})"
-    z_corr = f"(CAST(elev AS DOUBLE) - {CURVE_COEFF} * {d2m} / {SPHERE_DIAMETER_M})"
+    def d2m(d2: str) -> str:
+        return f"(CAST({d2} AS DOUBLE) * {CELL_M * CELL_M})"
+
+    los = _radial_los_sql(
+        num=lambda d2: f"((CAST(elev AS DOUBLE) - {CURVE_COEFF} * {d2m(d2)} / {SPHERE_DIAMETER_M}) - {OBS_Z})",
+        den=lambda d2: f"sqrt({d2m(d2)})",
+    )
     return f"""
-WITH dem AS ({DEM_GRID_SQL}),
-cells AS (
-  SELECT px, py, {ray} AS ray, {d2} AS d2,
-         ({z_corr} - {OBS_Z}) / sqrt({d2m}) AS tan_angle
-  FROM dem WHERE NOT (px = {OBS_X} AND py = {OBS_Y})
-)
-SELECT px, py, ray, sqrt(CAST(d2 AS DOUBLE) * {CELL_M * CELL_M}) AS dist_m, tan_angle,
-       CAST(CASE WHEN mb IS NULL OR tan_angle >= mb THEN 1 ELSE 0 END AS INTEGER) AS visible
-FROM (
-  SELECT *, MAX(tan_angle) OVER (PARTITION BY ray ORDER BY d2, px, py
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mb
-  FROM cells
-)
+WITH dem AS ({DEM_GRID_SQL})
+SELECT px, py, ray, sqrt({d2m('d2')}) AS dist_m, tan_angle, visible
+FROM ({los})
 """
 
 
@@ -396,35 +477,14 @@ def viewshed_sector(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-sector cells can only be occluded by in-sector cells, so filtering
     before the window is exact — and it prunes ~7/8 of the fan-out before
     the one window shuffle."""
-    g = dem_grid(spark, sf_dir)
-    obs = spark.createDataFrame(list(OBSERVERS), "ox int, oy int")
-    cells = g.crossJoin(F.broadcast(obs)).filter(
-        (F.col("px") != F.col("ox")) | (F.col("py") != F.col("oy"))
+    vis = _radial_los(
+        dem_grid(spark, sf_dir), _observers(spark), keys=("ox", "oy"),
+        where=lambda dx, dy, d2: (
+            (SECTOR_U1[0] * dy - SECTOR_U1[1] * dx <= 0)
+            & (SECTOR_U2[0] * dy - SECTOR_U2[1] * dx >= 0)
+        ),
     )
-    dx, dy = F.col("px") - F.col("ox"), F.col("py") - F.col("oy")
-    in_sector = (
-        (SECTOR_U1[0] * dy - SECTOR_U1[1] * dx <= 0)
-        & (SECTOR_U2[0] * dy - SECTOR_U2[1] * dx >= 0)
-    )
-    ray, d2 = _ray_cols(dx, dy)
-    scored = cells.filter(in_sector).select(
-        "ox", "oy", "px", "py",
-        ray.alias("ray"), d2.alias("d2"),
-        ((F.col("elev").cast("double") - OBS_Z) / F.sqrt(d2.cast("double"))).alias("tan_angle"),
-    )
-    w = (
-        Window.partitionBy("ox", "oy", "ray")
-        .orderBy("d2", "px", "py")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    max_before = F.max("tan_angle").over(w)
-    vis = scored.select(
-        "ox", "oy",
-        F.when(max_before.isNull() | (F.col("tan_angle") >= max_before), 1)
-        .otherwise(0)
-        .alias("visible"),
-    )
-    return vis.groupBy("ox", "oy").agg(
+    return vis.select("ox", "oy", "visible").groupBy("ox", "oy").agg(
         F.count(F.lit(1)).alias("n_cells"),
         F.sum("visible").cast("bigint").alias("n_visible"),
         F.round(F.sum("visible") / F.count(F.lit(1)).cast("double"), 6).alias("visible_frac"),
@@ -432,33 +492,19 @@ def viewshed_sector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sector_sql() -> str:
-    ray, d2 = _ray_sql("(px - ox)", "(py - oy)")
-    values = ", ".join(f"({x}, {y})" for x, y in OBSERVERS)
-    sector = (
-        f"({SECTOR_U1[0]} * (py - oy) - {SECTOR_U1[1]} * (px - ox) <= 0"
-        f" AND {SECTOR_U2[0]} * (py - oy) - {SECTOR_U2[1]} * (px - ox) >= 0)"
+    los = _radial_los_sql(
+        "obs", keys=("ox", "oy"),
+        where=lambda dx, dy, d2: (
+            f"({SECTOR_U1[0]} * {dy} - {SECTOR_U1[1]} * {dx} <= 0"
+            f" AND {SECTOR_U2[0]} * {dy} - {SECTOR_U2[1]} * {dx} >= 0)"
+        ),
     )
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
-obs(ox, oy) AS (VALUES {values}),
-cells AS (
-  SELECT ox, oy, px, py, {ray} AS ray, {d2} AS d2,
-         (CAST(elev AS DOUBLE) - {OBS_Z}) / sqrt(CAST({d2} AS DOUBLE)) AS tan_angle
-  FROM dem CROSS JOIN obs
-  WHERE NOT (px = ox AND py = oy) AND {sector}
-),
-vis AS (
-  SELECT ox, oy,
-         CASE WHEN mb IS NULL OR tan_angle >= mb THEN 1 ELSE 0 END AS visible
-  FROM (
-    SELECT *, MAX(tan_angle) OVER (PARTITION BY ox, oy, ray ORDER BY d2, px, py
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mb
-    FROM cells
-  )
-)
+{_observers_sql()}
 SELECT ox, oy, COUNT(*) AS n_cells, CAST(SUM(visible) AS BIGINT) AS n_visible,
        ROUND(SUM(visible) / CAST(COUNT(*) AS DOUBLE), 6) AS visible_frac
-FROM vis GROUP BY ox, oy
+FROM ({los}) GROUP BY ox, oy
 """
 
 
@@ -1217,39 +1263,11 @@ SECTOR_RING_POINTS_SQL = _sector_ring_sql()
 #         one shuffle co-partitioned with the tiled raster layout.
 # ---------------------------------------------------------------------------
 
-N_LOS_STEPS = 64
-LOS_TARGET_MOD = 23  # c_custkey % 23 == 0 -> sampled link targets
-
 
 def point_to_point_los(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-point observer->target LOS verdicts (los_calc)."""
-    obs = spark.createDataFrame(list(OBSERVERS), "ox int, oy int")
-    tgts = (
-        customer_points(spark, sf_dir)
-        .filter(F.col("c_custkey") % LOS_TARGET_MOD == 0)
-        .select(
-            "c_custkey",
-            F.floor(F.col("cx")).cast("int").alias("tx"),
-            F.floor(F.col("cy")).cast("int").alias("ty"),
-        )
-    )
-    steps = spark.range(1, N_LOS_STEPS + 1).select(F.col("id").cast("int").alias("i"))
     n = N_LOS_STEPS
-    # integer segment sampling: cell_i = round((o*(N-i) + t*i) / N),
-    # spelled floor((o*(N-i) + t*i) + N/2) div N so both engines floor-div
-    px_i = F.expr(f"(ox * ({n} - i) + tx * i + {n // 2}) div {n}").cast("int")
-    py_i = F.expr(f"(oy * ({n} - i) + ty * i + {n // 2}) div {n}").cast("int")
-    samples = (
-        tgts.crossJoin(F.broadcast(obs))
-        .filter((F.col("ox") != F.col("tx")) | (F.col("oy") != F.col("ty")))
-        .crossJoin(F.broadcast(steps))
-        .select(
-            "c_custkey", "ox", "oy", "tx", "ty", "i",
-            px_i.alias("px"), py_i.alias("py"),
-        )
-    )
-    g = dem_grid(spark, sf_dir).select("px", "py", F.col("elev").cast("double").alias("z"))
-    scored = samples.join(g, ["px", "py"]).select(
+    scored = _link_profile(_los_links(spark, sf_dir), _dem_z(spark, sf_dir), 1, n).select(
         "c_custkey", "ox", "oy", "tx", "ty", "i",
         ((F.col("z") - OBS_Z) / F.col("i").cast("double")).alias("tan_i"),
     )
@@ -1282,27 +1300,12 @@ def point_to_point_los(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _p2p_los_sql() -> str:
     n = N_LOS_STEPS
-    values = ", ".join(f"({x}, {y})" for x, y in OBSERVERS)
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
-pts AS ({CUSTOMER_POINTS_SQL}),
-obs(ox, oy) AS (VALUES {values}),
-tgts AS (
-  SELECT c_custkey, CAST(FLOOR(cx) AS INTEGER) AS tx, CAST(FLOOR(cy) AS INTEGER) AS ty
-  FROM pts WHERE c_custkey % {LOS_TARGET_MOD} = 0
-),
-steps AS (SELECT CAST(range AS INTEGER) AS i FROM range(1, {n} + 1)),
-samples AS (
-  SELECT c_custkey, ox, oy, tx, ty, i,
-         CAST((ox * ({n} - i) + tx * i + {n // 2}) // {n} AS INTEGER) AS px,
-         CAST((oy * ({n} - i) + ty * i + {n // 2}) // {n} AS INTEGER) AS py
-  FROM tgts CROSS JOIN obs CROSS JOIN steps
-  WHERE NOT (ox = tx AND oy = ty)
-),
+{_los_links_sql()},
 scored AS (
-  SELECT c_custkey, ox, oy, tx, ty, i,
-         (CAST(elev AS DOUBLE) - {OBS_Z}) / CAST(i AS DOUBLE) AS tan_i
-  FROM samples JOIN dem USING (px, py)
+  SELECT c_custkey, ox, oy, tx, ty, i, (z - {OBS_Z}) / CAST(i AS DOUBLE) AS tan_i
+  FROM ({_link_profile_sql("links", 1, n)})
 ),
 tgt_tan AS (
   SELECT c_custkey, ox, oy, tan_i AS tan_t FROM scored WHERE i = {n}
@@ -1560,35 +1563,15 @@ def fresnel_clearance(spark: SparkSession, sf_dir: str) -> DataFrame:
     visibility, which is exactly what the report shows. All doubles are
     identical IEEE expressions of exact integers; sqrt is safe; the min
     is order-free."""
-    obs = spark.createDataFrame(list(OBSERVERS), "ox int, oy int")
-    tgts = (
-        customer_points(spark, sf_dir)
-        .filter(F.col("c_custkey") % LOS_TARGET_MOD == 0)
-        .select(
-            "c_custkey",
-            F.floor(F.col("cx")).cast("int").alias("tx"),
-            F.floor(F.col("cy")).cast("int").alias("ty"),
-        )
-    )
     n = N_LOS_STEPS
-    steps = spark.range(1, n).select(F.col("id").cast("int").alias("i"))
-    px_i = F.expr(f"(ox * ({n} - i) + tx * i + {n // 2}) div {n}").cast("int")
-    py_i = F.expr(f"(oy * ({n} - i) + ty * i + {n // 2}) div {n}").cast("int")
-    samples = (
-        tgts.crossJoin(F.broadcast(obs))
-        .filter((F.col("ox") != F.col("tx")) | (F.col("oy") != F.col("ty")))
-        .crossJoin(F.broadcast(steps))
-        .select("c_custkey", "ox", "oy", "tx", "ty", "i", px_i.alias("px"), py_i.alias("py"))
-    )
-    g = dem_grid(spark, sf_dir).select("px", "py", F.col("elev").cast("double").alias("z"))
-    scored = samples.join(g, ["px", "py"])
+    links = _los_links(spark, sf_dir)
+    g = _dem_z(spark, sf_dir)
+    scored = _link_profile(links, g, 1, n - 1)
     # target terrain height (the endpoint cell) per link
-    tz = (
-        tgts.crossJoin(F.broadcast(obs))
-        .select("c_custkey", "ox", "oy", F.col("tx").alias("zpx"), F.col("ty").alias("zpy"))
-        .join(g.select(F.col("px").alias("zpx"), F.col("py").alias("zpy"), F.col("z").alias("z_t")), ["zpx", "zpy"])
-        .select("c_custkey", "ox", "oy", "z_t")
-    )
+    tz = links.join(
+        g.select(F.col("px").alias("tx"), F.col("py").alias("ty"), F.col("z").alias("z_t")),
+        ["tx", "ty"],
+    ).select("c_custkey", "ox", "oy", "z_t")
     j = scored.join(tz, ["c_custkey", "ox", "oy"])
     dist = F.sqrt(
         ((F.col("tx") - F.col("ox")) * (F.col("tx") - F.col("ox"))
@@ -1618,33 +1601,16 @@ def fresnel_clearance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _fresnel_sql() -> str:
     n = N_LOS_STEPS
-    values = ", ".join(f"({x}, {y})" for x, y in OBSERVERS)
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
-pts AS ({CUSTOMER_POINTS_SQL}),
-obs(ox, oy) AS (VALUES {values}),
-tgts AS (
-  SELECT c_custkey, CAST(FLOOR(cx) AS INTEGER) AS tx, CAST(FLOOR(cy) AS INTEGER) AS ty
-  FROM pts WHERE c_custkey % {LOS_TARGET_MOD} = 0
-),
-steps AS (SELECT CAST(range AS INTEGER) AS i FROM range(1, {n})),
-samples AS (
-  SELECT c_custkey, ox, oy, tx, ty, i,
-         CAST((ox * ({n} - i) + tx * i + {n // 2}) // {n} AS INTEGER) AS px,
-         CAST((oy * ({n} - i) + ty * i + {n // 2}) // {n} AS INTEGER) AS py
-  FROM tgts CROSS JOIN obs CROSS JOIN steps
-  WHERE NOT (ox = tx AND oy = ty)
-),
-g AS (SELECT px, py, CAST(elev AS DOUBLE) AS z FROM dem),
+{_los_links_sql()},
 tz AS (
-  SELECT t.c_custkey, o.ox, o.oy, g.z AS z_t
-  FROM tgts t CROSS JOIN obs o
-  JOIN g ON g.px = t.tx AND g.py = t.ty
-  WHERE NOT (o.ox = t.tx AND o.oy = t.ty)
+  SELECT l.c_custkey, l.ox, l.oy, CAST(dem.elev AS DOUBLE) AS z_t
+  FROM links l JOIN dem ON dem.px = l.tx AND dem.py = l.ty
 ),
 j AS (
-  SELECT s.c_custkey, s.ox, s.oy, s.tx, s.ty, s.i, g.z, tz.z_t
-  FROM samples s JOIN g USING (px, py)
+  SELECT s.c_custkey, s.ox, s.oy, s.tx, s.ty, s.i, s.z, tz.z_t
+  FROM ({_link_profile_sql("links", 1, n - 1)}) s
   JOIN tz ON tz.c_custkey = s.c_custkey AND tz.ox = s.ox AND tz.oy = s.oy
 ),
 scored AS (
@@ -1680,30 +1646,8 @@ GREEDY_ROUNDS = 2
 def _vis_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(observer, cell) visibility pairs — the per-observer LOS fan that
     viewshed_observer_count aggregates, kept un-aggregated."""
-    g = dem_grid(spark, sf_dir)
-    obs = spark.createDataFrame(list(OBSERVERS), "ox int, oy int")
-    cells = g.crossJoin(F.broadcast(obs)).filter(
-        (F.col("px") != F.col("ox")) | (F.col("py") != F.col("oy"))
-    )
-    dx, dy = F.col("px") - F.col("ox"), F.col("py") - F.col("oy")
-    ray, d2 = _ray_cols(dx, dy)
-    scored = cells.select(
-        "px", "py", "ox", "oy",
-        ray.alias("ray"), d2.alias("d2"),
-        ((F.col("elev").cast("double") - OBS_Z) / F.sqrt(d2.cast("double"))).alias("tan_angle"),
-    )
-    w = (
-        Window.partitionBy("ox", "oy", "ray")
-        .orderBy("d2", "px", "py")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    max_before = F.max("tan_angle").over(w)
-    return scored.select(
-        "ox", "oy", "px", "py",
-        F.when(max_before.isNull() | (F.col("tan_angle") >= max_before), 1)
-        .otherwise(0)
-        .alias("visible"),
-    ).filter(F.col("visible") == 1).select("ox", "oy", "px", "py")
+    vis = _radial_los(dem_grid(spark, sf_dir), _observers(spark), keys=("ox", "oy"))
+    return vis.filter(F.col("visible") == 1).select("ox", "oy", "px", "py")
 
 
 def viewshed_greedy_observers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1755,23 +1699,11 @@ def viewshed_greedy_observers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _greedy_sql() -> str:
-    ray, d2 = _ray_sql("(px - ox)", "(py - oy)")
-    values = ", ".join(f"({x}, {y})" for x, y in OBSERVERS)
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
-obs(ox, oy) AS (VALUES {values}),
-scored AS (
-  SELECT px, py, ox, oy, {ray} AS ray, {d2} AS d2,
-         (CAST(elev AS DOUBLE) - {OBS_Z}) / SQRT(CAST({d2} AS DOUBLE)) AS tan_angle
-  FROM dem CROSS JOIN obs
-  WHERE NOT (px = ox AND py = oy)
-),
+{_observers_sql()},
 vis AS (
-  SELECT ox, oy, px, py FROM (
-    SELECT *, MAX(tan_angle) OVER (PARTITION BY ox, oy, ray ORDER BY d2, px, py
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS max_before
-    FROM scored
-  ) WHERE max_before IS NULL OR tan_angle >= max_before
+  SELECT ox, oy, px, py FROM ({_radial_los_sql("obs", keys=("ox", "oy"))}) WHERE visible = 1
 ),
 counts AS (SELECT ox, oy, COUNT(*) AS cov FROM vis GROUP BY 1, 2),
 best1 AS (SELECT * FROM counts ORDER BY cov DESC, ox, oy LIMIT 1),
@@ -1820,28 +1752,10 @@ def terrain_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     line's height, and the clearance — plus the per-step grade from a
     lag window over the (link, step) order. What a profile popup
     renders; one DEM equi-join, one window, no trig."""
-    obs = spark.createDataFrame(list(OBSERVERS[:2]), "ox int, oy int")
-    tgts = (
-        customer_points(spark, sf_dir)
-        .filter(F.col("c_custkey") % PROFILE_TARGET_MOD == 0)
-        .select(
-            "c_custkey",
-            F.floor(F.col("cx")).cast("int").alias("tx"),
-            F.floor(F.col("cy")).cast("int").alias("ty"),
-        )
-    )
     n = N_LOS_STEPS
-    steps = spark.range(0, n + 1).select(F.col("id").cast("int").alias("i"))
-    px_i = F.expr(f"(ox * ({n} - i) + tx * i + {n // 2}) div {n}").cast("int")
-    py_i = F.expr(f"(oy * ({n} - i) + ty * i + {n // 2}) div {n}").cast("int")
-    samples = (
-        tgts.crossJoin(F.broadcast(obs))
-        .filter((F.col("ox") != F.col("tx")) | (F.col("oy") != F.col("ty")))
-        .crossJoin(F.broadcast(steps))
-        .select("c_custkey", "ox", "oy", "i", px_i.alias("px"), py_i.alias("py"))
-    )
-    g = dem_grid(spark, sf_dir).select("px", "py", F.col("elev").cast("double").alias("z"))
-    j = samples.join(g, ["px", "py"])
+    j = _link_profile(
+        _los_links(spark, sf_dir, OBSERVERS[:2], PROFILE_TARGET_MOD), _dem_z(spark, sf_dir), 0, n
+    ).select("c_custkey", "ox", "oy", "i", "z")
     endz = j.filter(F.col("i") == n).select(
         "c_custkey", "ox", "oy", F.col("z").alias("z_t")
     )
@@ -1863,25 +1777,10 @@ def terrain_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _profile_sql() -> str:
     n = N_LOS_STEPS
-    values = ", ".join(f"({x}, {y})" for x, y in OBSERVERS[:2])
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
-pts AS ({CUSTOMER_POINTS_SQL}),
-obs(ox, oy) AS (VALUES {values}),
-tgts AS (
-  SELECT c_custkey, CAST(FLOOR(cx) AS INTEGER) AS tx, CAST(FLOOR(cy) AS INTEGER) AS ty
-  FROM pts WHERE c_custkey % {PROFILE_TARGET_MOD} = 0
-),
-steps AS (SELECT CAST(range AS INTEGER) AS i FROM range(0, {n} + 1)),
-samples AS (
-  SELECT c_custkey, ox, oy, i,
-         CAST((ox * ({n} - i) + tx * i + {n // 2}) // {n} AS INTEGER) AS px,
-         CAST((oy * ({n} - i) + ty * i + {n // 2}) // {n} AS INTEGER) AS py
-  FROM tgts CROSS JOIN obs CROSS JOIN steps
-  WHERE NOT (ox = tx AND oy = ty)
-),
-g AS (SELECT px, py, CAST(elev AS DOUBLE) AS z FROM dem),
-j AS (SELECT s.c_custkey, s.ox, s.oy, s.i, g.z FROM samples s JOIN g USING (px, py)),
+{_los_links_sql(OBSERVERS[:2], PROFILE_TARGET_MOD)},
+j AS (SELECT c_custkey, ox, oy, i, z FROM ({_link_profile_sql("links", 0, n)})),
 endz AS (SELECT c_custkey, ox, oy, z AS z_t FROM j WHERE i = {n}),
 jj AS (
   SELECT j.*, endz.z_t,
@@ -2132,6 +2031,8 @@ COMB_MULTI = 254  # viewshed_params.py:26 viewshed_comb_multi_val
 # per-observer range (grid units): R_i = 18 + 6*i leaves the far corners
 # outside EVERY observer's range, exercising vs_count_z's all-NDV branch
 COMB_RANGES = tuple(18 + 6 * i for i in range(len(OBSERVERS)))
+# the combine observer set: (obs_id, ox, oy, r2) with r2 = R_i^2
+COMB_OBSERVERS = tuple((i, x, y, r * r) for i, ((x, y), r) in enumerate(zip(OBSERVERS, COMB_RANGES)))
 
 
 def viewshed_combine_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2144,31 +2045,14 @@ def viewshed_combine_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     are out of range), and the unique-observer index (vs_unique:
     obs_id when exactly one observer sees the cell, COMB_MULTI when
     several do, COMB_NDV when none does)."""
-    g = dem_grid(spark, sf_dir)
-    obs = spark.createDataFrame(
-        [(i, x, y, r * r) for i, ((x, y), r) in enumerate(zip(OBSERVERS, COMB_RANGES))],
-        "obs_id int, ox int, oy int, r2 int",
+    scored = _radial_los(
+        dem_grid(spark, sf_dir),
+        _observers(spark, COMB_OBSERVERS, "obs_id int, ox int, oy int, r2 int"),
+        keys=("obs_id",), carry=("obs_id", "r2"),
     )
-    cells = g.crossJoin(F.broadcast(obs)).filter(
-        (F.col("px") != F.col("ox")) | (F.col("py") != F.col("oy"))
-    )
-    dx, dy = F.col("px") - F.col("ox"), F.col("py") - F.col("oy")
-    ray, d2 = _ray_cols(dx, dy)
-    scored = cells.select(
-        "px", "py", "obs_id", "r2",
-        ray.alias("ray"), d2.alias("d2"),
-        ((F.col("elev").cast("double") - OBS_Z) / F.sqrt(d2.cast("double"))).alias("tan_angle"),
-    )
-    w = (
-        Window.partitionBy("obs_id", "ray")
-        .orderBy("d2", "px", "py")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    max_before = F.max("tan_angle").over(w)
-    visible = max_before.isNull() | (F.col("tan_angle") >= max_before)
     v = (
         F.when(F.col("d2") > F.col("r2"), ST_NODATA)
-        .when(visible, ST_SEEN)
+        .when(F.col("visible") == 1, ST_SEEN)
         .otherwise(ST_HIDDEN)
     )
     coded = scored.select("px", "py", "obs_id", v.alias("v"))
@@ -2196,30 +2080,15 @@ def viewshed_combine_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _combine_modes_sql() -> str:
-    ray, d2 = _ray_sql("(px - ox)", "(py - oy)")
-    values = ", ".join(
-        f"({i}, {x}, {y}, {r * r})"
-        for i, ((x, y), r) in enumerate(zip(OBSERVERS, COMB_RANGES))
-    )
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
-obs(obs_id, ox, oy, r2) AS (VALUES {values}),
-cells AS (
-  SELECT px, py, obs_id, r2, {ray} AS ray, {d2} AS d2,
-         (CAST(elev AS DOUBLE) - {OBS_Z}) / sqrt(CAST({d2} AS DOUBLE)) AS tan_angle
-  FROM dem CROSS JOIN obs
-  WHERE NOT (px = ox AND py = oy)
-),
+{_observers_sql(COMB_OBSERVERS, "obs_id, ox, oy, r2")},
 coded AS (
   SELECT px, py, obs_id,
          CASE WHEN d2 > r2 THEN {ST_NODATA}
-              WHEN mb IS NULL OR tan_angle >= mb THEN {ST_SEEN}
+              WHEN visible = 1 THEN {ST_SEEN}
               ELSE {ST_HIDDEN} END AS v
-  FROM (
-    SELECT *, MAX(tan_angle) OVER (PARTITION BY obs_id, ray ORDER BY d2, px, py
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mb
-    FROM cells
-  )
+  FROM ({_radial_los_sql("obs", keys=("obs_id",), carry=("obs_id", "r2"))})
 )
 SELECT px, py,
        CAST(CASE WHEN SUM(CASE WHEN v <> {ST_NODATA} THEN 1 ELSE 0 END) = 0 THEN {COMB_NDV}
@@ -2282,30 +2151,10 @@ def viewshed_grid_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(GRID_BASE_Y) + F.col("j") * GRID_INTERVAL).cast("int").alias("oy"),
         )
     )
-    cells = g.crossJoin(F.broadcast(obs)).filter(
-        ((F.col("px") != F.col("ox")) | (F.col("py") != F.col("oy")))
-    )
-    dx, dy = F.col("px") - F.col("ox"), F.col("py") - F.col("oy")
-    ray, d2 = _ray_cols(dx, dy)
-    scored = cells.select(
-        "oname", "ox", "oy",
-        ray.alias("ray"), d2.alias("d2"), "px", "py",
-        (
-            (F.col("elev").cast("double") - OBS_Z) / F.sqrt(d2.cast("double"))
-        ).alias("tan_angle"),
-    ).filter(F.col("d2") <= GRID_MAX_R2)
-    w = (
-        Window.partitionBy("oname", "ray")
-        .orderBy("d2", "px", "py")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    max_before = F.max("tan_angle").over(w)
-    vis = scored.select(
-        "oname", "ox", "oy",
-        F.when(max_before.isNull() | (F.col("tan_angle") >= max_before), 1)
-        .otherwise(0)
-        .alias("visible"),
-    )
+    vis = _radial_los(
+        g, obs, keys=("oname",), carry=("oname", "ox", "oy"),
+        where=lambda dx, dy, d2: d2 <= GRID_MAX_R2,
+    ).select("oname", "ox", "oy", "visible")
     return (
         vis.groupBy("oname", "ox", "oy")
         .agg(
@@ -2318,31 +2167,20 @@ def viewshed_grid_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _grid_sweep_sql() -> str:
-    ray, d2 = _ray_sql("(px - ox)", "(py - oy)")
+    los = _radial_los_sql(
+        "obs", keys=("oname",), carry=("oname", "ox", "oy"),
+        where=lambda dx, dy, d2: f"{d2} <= {GRID_MAX_R2}",
+    )
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
-grid AS (
+obs AS (
   SELECT CAST(i AS VARCHAR) || '_' || CAST(j AS VARCHAR) AS oname,
          CAST({GRID_BASE_X} + i * {GRID_INTERVAL} AS INTEGER) AS ox,
          CAST({GRID_BASE_Y} + j * {GRID_INTERVAL} AS INTEGER) AS oy
   FROM (SELECT unnest(range(-{GRID_J}, {GRID_J} + 1)) AS i),
        (SELECT unnest(range(-{GRID_J}, {GRID_J} + 1)) AS j)
 ),
-cells AS (
-  SELECT oname, ox, oy, {ray} AS ray, {d2} AS d2, px, py,
-         (CAST(elev AS DOUBLE) - {OBS_Z}) / sqrt(CAST({d2} AS DOUBLE)) AS tan_angle
-  FROM dem CROSS JOIN grid
-  WHERE NOT (px = ox AND py = oy) AND {d2} <= {GRID_MAX_R2}
-),
-vis AS (
-  SELECT oname, ox, oy,
-         CASE WHEN mb IS NULL OR tan_angle >= mb THEN 1 ELSE 0 END AS visible
-  FROM (
-    SELECT *, MAX(tan_angle) OVER (PARTITION BY oname, ray ORDER BY d2, px, py
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mb
-    FROM cells
-  )
-)
+vis AS ({los})
 SELECT oname, ox, oy, CAST(COUNT(*) AS BIGINT) AS n_in_range,
        CAST(SUM(visible) AS BIGINT) AS n_visible,
        CAST(SUM(visible) AS DOUBLE) / COUNT(*) AS vis_fraction
@@ -2946,20 +2784,9 @@ def radio_itm_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdalos_spark.functions.literals import dbl_lit as L
 
     n = N_LOS_STEPS
-    obs = spark.createDataFrame(list(OBSERVERS), "ox int, oy int")
-    tgts = (
-        customer_points(spark, sf_dir)
-        .filter(F.col("c_custkey") % LOS_TARGET_MOD == 0)
-        .select(
-            "c_custkey",
-            F.floor(F.col("cx")).cast("int").alias("tx"),
-            F.floor(F.col("cy")).cast("int").alias("ty"),
-        )
-    )
-    g = dem_grid(spark, sf_dir).select("px", "py", F.col("elev").cast("double").alias("z"))
+    g = _dem_z(spark, sf_dir)
     base = (
-        tgts.crossJoin(F.broadcast(obs))
-        .filter((F.col("ox") != F.col("tx")) | (F.col("oy") != F.col("ty")))
+        _los_links(spark, sf_dir)
         .withColumn(
             "d2i",
             (F.col("tx") - F.col("ox")) * (F.col("tx") - F.col("ox"))
@@ -2973,12 +2800,8 @@ def radio_itm_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("zt", F.expr(f"(z_t + {L(ITM_HG)})"))
     )
-    steps = spark.range(1, n).select(F.col("id").cast("int").alias("i"))
     ps = (
-        base.crossJoin(F.broadcast(steps))
-        .withColumn("px", F.expr(f"CAST((ox * ({n} - i) + tx * i + {n // 2}) div {n} AS INT)"))
-        .withColumn("py", F.expr(f"CAST((oy * ({n} - i) + ty * i + {n // 2}) div {n} AS INT)"))
-        .join(g, ["px", "py"])
+        _link_profile(base, g, 1, n - 1)
         .withColumn("d1", F.expr(f"(CAST(i AS DOUBLE) * sm)"))
         .withColumn("d2", F.expr(f"(CAST({n} - i AS DOUBLE) * sm)"))
         .withColumn("th1", F.expr(f"((z - {L(OBS_Z)}) / d1 - {L(_ITM_GME)} * d1 * 0.5e0)"))
@@ -3077,36 +2900,22 @@ def _radio_itm_sql() -> str:
     from gdalos_spark.functions.literals import dbl_lit as L
 
     n = N_LOS_STEPS
-    values = ", ".join(f"({x}, {y})" for x, y in OBSERVERS)
     link = f"""
 WITH dem AS ({DEM_GRID_SQL}),
-pts AS ({CUSTOMER_POINTS_SQL}),
-obs(ox, oy) AS (VALUES {values}),
-tgts AS (
-  SELECT c_custkey, CAST(FLOOR(cx) AS INTEGER) AS tx, CAST(FLOOR(cy) AS INTEGER) AS ty
-  FROM pts WHERE c_custkey % {LOS_TARGET_MOD} = 0
-),
+{_los_links_sql()},
 base AS (
-  SELECT b.c_custkey, b.ox, b.oy, b.tx, b.ty,
-         sqrt(CAST(b.d2i AS DOUBLE)) * {L(CELL_M)} AS d_m,
-         sqrt(CAST(b.d2i AS DOUBLE)) * {L(CELL_M)} / {L(float(n))} AS sm,
+  SELECT l.c_custkey, l.ox, l.oy, l.tx, l.ty,
+         sqrt(CAST(l.d2i AS DOUBLE)) * {L(CELL_M)} AS d_m,
+         sqrt(CAST(l.d2i AS DOUBLE)) * {L(CELL_M)} / {L(float(n))} AS sm,
          (CAST(dem.elev AS DOUBLE) + {L(ITM_HG)}) AS zt
-  FROM (
-    SELECT c_custkey, ox, oy, tx, ty,
-           (tx-ox)*(tx-ox) + (ty-oy)*(ty-oy) AS d2i
-    FROM tgts CROSS JOIN obs
-    WHERE NOT (ox = tx AND oy = ty)
-  ) b JOIN dem ON dem.px = b.tx AND dem.py = b.ty
+  FROM (SELECT *, (tx-ox)*(tx-ox) + (ty-oy)*(ty-oy) AS d2i FROM links) l
+  JOIN dem ON dem.px = l.tx AND dem.py = l.ty
 ),
-steps AS (SELECT CAST(range AS INTEGER) AS i FROM range(1, {n})),
 ps AS (
-  SELECT b.c_custkey, b.ox, b.oy, s.i,
-         CAST(dem.elev AS DOUBLE) AS z,
-         ((CAST(dem.elev AS DOUBLE) - {L(OBS_Z)}) / (CAST(s.i AS DOUBLE) * b.sm) - {L(_ITM_GME)} * (CAST(s.i AS DOUBLE) * b.sm) * 0.5e0) AS th1,
-         ((CAST(dem.elev AS DOUBLE) - b.zt) / (CAST({n} - s.i AS DOUBLE) * b.sm) - {L(_ITM_GME)} * (CAST({n} - s.i AS DOUBLE) * b.sm) * 0.5e0) AS th2
-  FROM base b CROSS JOIN steps s
-  JOIN dem ON dem.px = CAST((b.ox * ({n} - s.i) + b.tx * s.i + {n // 2}) // {n} AS INTEGER)
-          AND dem.py = CAST((b.oy * ({n} - s.i) + b.ty * s.i + {n // 2}) // {n} AS INTEGER)
+  SELECT c_custkey, ox, oy, i, z,
+         ((z - {L(OBS_Z)}) / (CAST(i AS DOUBLE) * sm) - {L(_ITM_GME)} * (CAST(i AS DOUBLE) * sm) * 0.5e0) AS th1,
+         ((z - zt) / (CAST({n} - i AS DOUBLE) * sm) - {L(_ITM_GME)} * (CAST({n} - i AS DOUBLE) * sm) * 0.5e0) AS th2
+  FROM ({_link_profile_sql("base", 1, n - 1)})
 ),
 agg AS (
   SELECT c_custkey, ox, oy, max(th1) AS te1, max(th2) AS te2,

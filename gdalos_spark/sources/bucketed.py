@@ -194,7 +194,8 @@ def attach(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
     DDL matches what was written. The marker's fingerprint gates
     staleness: regenerated testdata falls back to the plain source until
     someone re-stages. A re-stage rewrites the bucket files, so it also
-    changes the store's own fingerprint and registers a fresh table."""
+    changes the store's own fingerprint and registers a fresh table,
+    which replaces the old one in the catalog."""
     from gdalos_spark.datamodel import source_table
 
     spec = BUCKETED_FACTS.get(name)

@@ -95,6 +95,11 @@ INVARIANCE_KEYS = [
     # join must not lose or duplicate rows however the scan is split
     "raster_resample_average",
     "raster_resample_nearest",
+    # the two LOS primitives at their simplest callers: the fixed
+    # observer's radial-sweep window and the link profile's sampler
+    # and DEM join must not depend on the layout either
+    "viewshed_los",
+    "terrain_profile",
 ]
 
 

@@ -71,3 +71,46 @@ def test_unstaged_events_load_matches_oracle_off_utc(spark, ducks):
             spark, ducks, lambda s, d: load(s, d, "events"), "SELECT * FROM events"
         )
 
+
+def _tables_at(spark, prefix, path):
+    """Catalog tables named `prefix*` whose location is `path`."""
+    found = []
+    for t in spark.catalog.listTables(pattern=f"{prefix}*"):
+        desc = spark.sql(f"DESCRIBE TABLE EXTENDED {t.name}").collect()
+        loc = next(r.data_type for r in desc if r.col_name == "Location")
+        if os.path.abspath(loc.removeprefix("file:")) == os.path.abspath(path):
+            found.append(t.name)
+    return found
+
+
+def test_rewrite_drops_the_superseded_table(spark, tmp_path):
+    """Re-registering a path under a new fingerprint drops the old
+    external table (the files stay): exactly one `gdalos_src_*` table
+    points at the path, and it reads the new rows."""
+    path = tmp_path / "region.parquet"
+    shutil.copy(f"{SF_DIR}/region.parquet", path)
+    load(spark, str(tmp_path), "region")
+    table = pq.read_table(path)
+    pq.write_table(table.slice(0, 3), path)
+    new = rows(load(spark, str(tmp_path), "region"))
+    (name,) = _tables_at(spark, "gdalos_src_", path)
+    assert rows(spark.table(name)) == new == sorted(
+        tuple(r.values()) for r in table.slice(0, 3).to_pylist()
+    )
+    assert path.exists()
+
+
+def test_bucketed_registration_leaves_no_plain_table(spark, monkeypatch, tmp_path):
+    """A bucketed store registers only its bucketed table: no plain
+    `gdalos_src_*` table is left on the store's path."""
+    from gdalos_spark.sources import bucketed
+
+    monkeypatch.setenv("GDALOS_BUCKETED_ROOT", str(tmp_path / "root"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{SF_DIR}/orders.parquet", sf / "orders.parquet")
+    bucketed.stage_facts(spark, str(sf), buckets=2)
+    assert bucketed.attach(spark, str(sf), "orders") is not None
+    store = bucketed._final_dir(str(sf), "orders")
+    assert len(_tables_at(spark, "gdalos_b_", store)) == 1
+    assert _tables_at(spark, "gdalos_src_", store) == []

@@ -141,3 +141,64 @@ def test_sector_rings_close_and_track_libm(spark):
 
 def test_point_to_point_los_matches_oracle(record, ducks):
     assert_record_matches_oracle(record, ducks, "point_to_point_los")
+
+
+def test_los_geometry_has_one_home():
+    """Every viewshed key reaches the DEM through one radial sweep or
+    one link profile: in operators/viewshed.py the running-max window
+    (`rowsBetween`, and its SQL twin's `1 PRECEDING`) and the ray
+    bucketing (`_ray_cols` / `_ray_sql`) sit only inside
+    `_radial_los` / `_radial_los_sql`, the observer set becomes a frame
+    through the one `createDataFrame` of `_observers`, and the midpoint
+    sampling is spelled once per engine, inside `_link_profile` /
+    `_link_profile_sql`."""
+    import ast
+    import pathlib
+    import re
+
+    from gdalos_spark.operators import viewshed
+
+    path = pathlib.Path(viewshed.__file__)
+    text = path.read_text()
+    tree = ast.parse(text)
+    defs = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+
+    def owner(lineno: int) -> str | None:
+        """The module-level function holding `lineno`."""
+        return next((d.name for d in defs if d.lineno <= lineno <= d.end_lineno), None)
+
+    calls = [
+        (n.func.attr if isinstance(n.func, ast.Attribute) else n.func.id, n)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, (ast.Attribute, ast.Name))
+    ]
+    homes = {
+        "rowsBetween": "_radial_los",
+        "_ray_cols": "_radial_los",
+        "_ray_sql": "_radial_los_sql",
+    }
+    for name, home in homes.items():
+        sites = [owner(n.lineno) for fn, n in calls if fn == name]
+        assert sites == [home], (name, sites)
+    obs_frames = [
+        owner(n.lineno) for fn, n in calls
+        if fn == "createDataFrame"
+        and ("OBSERVERS" in ast.unparse(n) or owner(n.lineno) == "_observers")
+    ]
+    assert obs_frames == ["_observers"], obs_frames
+
+    lines = text.splitlines()
+
+    def sites(pattern: str) -> list[tuple[str | None, str]]:
+        return sorted(
+            (owner(i + 1), m.group(0))
+            for i, line in enumerate(lines)
+            for m in re.finditer(pattern, line)
+        )
+
+    assert [s for s, _ in sites(r"1 PRECEDING")] == ["_radial_los_sql"]
+    mid = sites(r"\* (?:s\.)?i \+ \{n // 2\}\) (?:div|//) \{n\}")
+    assert [(s, "div" in m) for s, m in mid] == [
+        ("_link_profile", True), ("_link_profile_sql", False)
+    ], mid
