@@ -14,9 +14,24 @@ cast to DOUBLE at the end (exact: all sums fit in 2^53 when scaled), and
 DuckDB HUGEINT conditional sums are cast to BIGINT. Spark and DuckDB widen
 decimal SUMs differently (28,s vs 38,s), so a decimal terminal fails the
 type-sensitive hash even when values are equal.
+
+Neighbourhood rule: every grid stencil (the gdaldem family, curvature,
+focal median, D8 flow direction, contours, morphology, cost distance,
+proximity) is one `_stencil` pass, and its oracle is the CTE text of
+`_stencil_sql`; both render the same `_Offsets` rows. A cell (px, py)
+crossed with the broadcast offset row (dx, dy, *weights) contributes to
+the target (tx, ty) = (px - dx, py - dy), and one groupBy(tx, ty) folds
+the contributions. A stencil that needs the target's own value reads it
+through the centre marker: the zero-weight row (0, 0, 0.., is_c = 1)
+that `_centred` appends lands only on the cell itself, so it carries the
+cell's value into the fold and proves the target exists; no stencil
+joins back to its grid. Flow direction's per-neighbour drop needs the
+centre before the fold, so it keeps one centre equi-join (`pre_fold`).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -890,6 +905,105 @@ FROM ext
 """
 
 # ---------------------------------------------------------------------------
+# The raster stencil (the module docstring's neighbourhood rule)
+# ---------------------------------------------------------------------------
+
+
+class _Offsets(NamedTuple):
+    """A stencil's offset table: int columns (dx, dy, *weights) and rows."""
+
+    cols: tuple[str, ...]
+    rows: tuple[tuple[int, ...], ...]
+
+
+def _box(r: int = 1) -> list[tuple[int, int]]:
+    """The (2r+1)^2 offsets (dx, dy) of the Chebyshev box of radius r."""
+    return [(dx, dy) for dx in range(-r, r + 1) for dy in range(-r, r + 1)]
+
+
+def _offsets(rows, *weights: str) -> _Offsets:
+    """The offset table of rows (dx, dy, *weights)."""
+    return _Offsets(("dx", "dy", *weights), tuple(map(tuple, rows)))
+
+
+_BOX = _offsets(_box())  # the 3x3 window
+_RING = _offsets(o for o in _box() if o != (0, 0))  # its 8 neighbours
+
+
+def _centred(offsets: _Offsets) -> _Offsets:
+    """`offsets` with is_c = 0 on every row plus the zero-weight centre
+    marker (0, 0, 0.., 1): it carries the target cell's own value into
+    the fold and proves the target exists, so no stencil joins back."""
+    zeros = (0,) * (len(offsets.cols) - 2)
+    return _Offsets(
+        (*offsets.cols, "is_c"),
+        tuple((*r, 0) for r in offsets.rows) + ((0, 0, *zeros, 1),),
+    )
+
+
+def _stencil(
+    g, offsets: _Offsets, cols, aggs, where=None, pre_fold=None, centre=None
+) -> DataFrame:
+    """Fan every cell (px, py) of `g` out through the broadcast offset
+    table to the target (tx, ty) = (px - dx, py - dy), carrying `cols`
+    (over g's and the offset table's columns), then fold with one
+    groupBy(tx, ty).agg(*aggs) filtered by `where`. `pre_fold` maps the
+    contributions before the fold (flow direction's centre join).
+
+    With `centre` (a column of g) the table gets the `_centred` marker
+    row: the fold also yields n_nbr (the non-marker rows that landed)
+    first and the target's own `centre` value last, and keeps only
+    targets that are cells of g."""
+    if centre is not None:
+        offsets = _centred(offsets)
+        cols = [*cols, F.when(F.col("is_c") == 1, F.col(centre)).alias("cz"), "is_c"]
+        aggs = [F.sum(F.lit(1) - F.col("is_c")).alias("n_nbr"), *aggs, F.max("cz").alias(centre)]
+        present = F.col(centre).isNotNull()
+        where = present if where is None else where & present
+    table = g.sparkSession.createDataFrame(
+        list(offsets.rows), ", ".join(f"{c} int" for c in offsets.cols)
+    )
+    nbr = g.crossJoin(F.broadcast(table)).select(
+        (F.col("px") - F.col("dx")).alias("tx"),
+        (F.col("py") - F.col("dy")).alias("ty"),
+        *cols,
+    )
+    if pre_fold is not None:
+        nbr = pre_fold(nbr)
+    out = nbr.groupBy("tx", "ty").agg(*aggs)
+    return out if where is None else out.filter(where)
+
+
+def _stencil_sql(
+    name, src, offsets: _Offsets, cols, aggs, where=None, join="", centre=None
+) -> str:
+    """`_stencil` as CTE text: `{name}_offsets` holds the same rows,
+    `{name}_nbr` fans `src` out to (tx, ty) = (px - dx, py - dy) with
+    `cols`, and `{name}` folds GROUP BY tx, ty with `aggs`, kept where
+    `where` holds; `join` follows the fan-out in the fold's FROM, and
+    `centre` reads the target's own value as `_stencil` does."""
+    if centre is not None:
+        offsets = _centred(offsets)
+        cols = [*cols, f"CASE WHEN is_c = 1 THEN {centre} END AS cz", "is_c"]
+        aggs = ["SUM(1 - is_c) AS n_nbr", *aggs, f"MAX(cz) AS {centre}"]
+        present = f"{centre} IS NOT NULL"
+        where = present if where is None else f"{where} AND {present}"
+    values = ", ".join("(" + ", ".join(map(str, r)) + ")" for r in offsets.rows)
+    fold = [f"SELECT tx, ty, {', '.join(aggs)}", f"FROM {name}_nbr{join}", "GROUP BY tx, ty"]
+    if where is not None:
+        fold = ["SELECT * FROM (", *(f"  {line}" for line in fold), f") WHERE {where}"]
+    fold = "\n  ".join(fold)
+    return f"""{name}_offsets({", ".join(offsets.cols)}) AS (VALUES {values}),
+{name}_nbr AS (
+  SELECT px - dx AS tx, py - dy AS ty, {", ".join(cols)}
+  FROM {src} CROSS JOIN {name}_offsets
+),
+{name} AS (
+  {fold}
+)"""
+
+
+# ---------------------------------------------------------------------------
 # 47. raster_hillshade — Horn-kernel hillshade (gdaldem family)
 #    ref: gdal.DEMProcessing entry point at calc/gdalos_raster_color.py:68
 #         (the reference drives the gdaldem processing family through it;
@@ -909,11 +1023,11 @@ _SIN_AZ = _math.sin(_math.radians(HS_AZIMUTH_DEG))
 _COS_AZ = _math.cos(_math.radians(HS_AZIMUTH_DEG))
 
 # Horn weights: (dx, dy, wx, wy)
-_HORN = [
+_HORN = _offsets([
     (-1, -1, -1, -1), (-1, 0, -2, 0), (-1, 1, -1, 1),
     (0, -1, 0, -2), (0, 1, 0, 2),
     (1, -1, 1, -1), (1, 0, 2, 0), (1, 1, 1, 1),
-]
+], "wx", "wy")
 
 
 def raster_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -926,7 +1040,7 @@ def raster_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines regardless of partitioning; doubles appear only after
     aggregation in deterministic IEEE expressions. Only complete
     neighborhoods (all 8 neighbors present) are emitted."""
-    full = _horn_stencil(_dem_decimal(spark, sf_dir), spark)
+    full = _horn_stencil(_dem_decimal(spark, sf_dir))
     dzdx = F.col("sum_wx").cast("double") * HS_ZFACTOR / 8.0
     dzdy = F.col("sum_wy").cast("double") * HS_ZFACTOR / 8.0
     num = F.lit(_SIN_ALT) - F.lit(_COS_ALT) * (dzdx * F.lit(_SIN_AZ) + dzdy * F.lit(-_COS_AZ))
@@ -941,7 +1055,7 @@ def raster_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # RASTER_HILLSHADE_SQL is defined after _horn_cte below — it shares the
-# exact-decimal stencil CTE with slope/aspect/TRI.
+# exact-decimal stencil CTE with slope/aspect.
 
 
 # ---------------------------------------------------------------------------
@@ -962,41 +1076,19 @@ def raster_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
 TAN_22_5 = 0.41421356237309503  # tan(pi/8), host-precomputed
 
 
-def _horn_stencil(g: DataFrame, spark: SparkSession) -> DataFrame:
-    """Exact-decimal Horn gradient sums over the 8-neighborhood.
-
-    Single pass: one broadcast join against a 9-row offset table (the 8
-    Horn neighbors + the center as a zero-weight row that proves the
-    center cell exists and carries its value) + one groupBy on the target
-    cell — the grid is derived once, never 8 self-joins, no join back.
-    Returns (px, py, zd, sum_wx, sum_wy) for complete neighborhoods, with
-    the weighted sums still exact DECIMAL (the center's 0*zd term is an
-    exact zero of the same scale, so decimal sums are unchanged).
-    """
-    offsets = spark.createDataFrame(
-        [(dx, dy, wx, wy, 0) for dx, dy, wx, wy in _HORN] + [(0, 0, 0, 0, 1)],
-        "dx int, dy int, wx int, wy int, is_c int",
-    )
-    return (
-        g.crossJoin(F.broadcast(offsets))
-        .select(
-            (F.col("px") - F.col("dx")).alias("tx"),
-            (F.col("py") - F.col("dy")).alias("ty"),
-            (F.col("wx") * F.col("zd")).alias("wxz"),
-            (F.col("wy") * F.col("zd")).alias("wyz"),
-            F.when(F.col("is_c") == 1, F.col("zd")).alias("cz"),
-            "is_c",
-        )
-        .groupBy("tx", "ty")
-        .agg(
-            F.sum(F.lit(1) - F.col("is_c")).alias("n_nbr"),
-            F.sum("wxz").alias("sum_wx"),
-            F.sum("wyz").alias("sum_wy"),
-            F.max("cz").alias("zd"),
-        )
-        .filter((F.col("n_nbr") == 8) & F.col("zd").isNotNull())
-        .select(F.col("tx").alias("px"), F.col("ty").alias("py"), "zd", "sum_wx", "sum_wy")
-    )
+def _horn_stencil(g: DataFrame) -> DataFrame:
+    """Exact-decimal Horn gradient sums over the 8-neighborhood: one
+    `_stencil` pass over the 8 Horn rows plus the centre marker, never 8
+    self-joins, no join back. Returns (px, py, zd, sum_wx, sum_wy) for
+    complete neighborhoods, with the weighted sums still exact DECIMAL
+    (the marker's 0*zd term is an exact zero of the same scale)."""
+    return _stencil(
+        g, _HORN,
+        [(F.col("wx") * F.col("zd")).alias("wxz"), (F.col("wy") * F.col("zd")).alias("wyz")],
+        [F.sum("wxz").alias("sum_wx"), F.sum("wyz").alias("sum_wy")],
+        where=F.col("n_nbr") == 8,
+        centre="zd",
+    ).select(F.col("tx").alias("px"), F.col("ty").alias("py"), "zd", "sum_wx", "sum_wy")
 
 
 def _dem_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1005,25 +1097,19 @@ def _dem_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HORN_STENCIL_SQL = f"""
+def _horn_cte() -> str:
+    stencil = _stencil_sql(
+        "stencil", "g", _HORN,
+        ["wx * zd AS wxz", "wy * zd AS wyz"],
+        ["SUM(wxz) AS sum_wx", "SUM(wyz) AS sum_wy"],
+        where="n_nbr = 8",
+        centre="zd",
+    )
+    return f"""
 WITH dem AS ({DEM_GRID_SQL}),
 g AS (SELECT px, py, CAST(elev AS DECIMAL(18,2)) AS zd FROM dem),
-offsets(dx, dy, wx, wy) AS (VALUES {{offs}}),
-contrib AS (
-  SELECT px - dx AS tx, py - dy AS ty, wx * zd AS wxz, wy * zd AS wyz
-  FROM g CROSS JOIN offsets
-),
-stencil AS (
-  SELECT tx, ty, COUNT(*) AS n_nbr, SUM(wxz) AS sum_wx, SUM(wyz) AS sum_wy
-  FROM contrib GROUP BY 1, 2
-  HAVING COUNT(*) = 8
-)
+{stencil}
 """
-
-
-def _horn_cte() -> str:
-    offs = ", ".join(f"({dx}, {dy}, {wx}, {wy})" for dx, dy, wx, wy in _HORN)
-    return _HORN_STENCIL_SQL.format(offs=offs)
 
 
 def _hillshade_sql() -> str:
@@ -1034,11 +1120,11 @@ def _hillshade_sql() -> str:
     return (
         _horn_cte()
         + f"""
-SELECT g.px, g.py,
+SELECT tx AS px, ty AS py,
        ROUND({dzdx}, 6) AS dzdx,
        ROUND({dzdy}, 6) AS dzdy,
        CAST(FLOOR(GREATEST(0.0, LEAST(255.0, {hs}))) AS INTEGER) AS hillshade
-FROM stencil JOIN g ON stencil.tx = g.px AND stencil.ty = g.py
+FROM stencil
 """
     )
 
@@ -1051,7 +1137,7 @@ def raster_slope_percent(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the Horn gradients; plus a 5-class steepness bucket. sqrt and
     the products run on doubles AFTER the exact decimal stencil, so both
     engines compute the identical IEEE value."""
-    full = _horn_stencil(_dem_decimal(spark, sf_dir), spark)
+    full = _horn_stencil(_dem_decimal(spark, sf_dir))
     dzdx = F.col("sum_wx").cast("double") * HS_ZFACTOR / 8.0
     dzdy = F.col("sum_wy").cast("double") * HS_ZFACTOR / 8.0
     pct = F.lit(100.0) * F.sqrt(dzdx * dzdx + dzdy * dzdy)
@@ -1065,12 +1151,12 @@ def raster_slope_percent(spark: SparkSession, sf_dir: str) -> DataFrame:
 RASTER_SLOPE_SQL = (
     _horn_cte()
     + f"""
-SELECT g.px, g.py,
+SELECT tx AS px, ty AS py,
        ROUND(100.0 * SQRT(POW(CAST(sum_wx AS DOUBLE) * {HS_ZFACTOR} / 8.0, 2)
                         + POW(CAST(sum_wy AS DOUBLE) * {HS_ZFACTOR} / 8.0, 2)), 6) AS slope_pct,
        CAST(LEAST(4, FLOOR(100.0 * SQRT(POW(CAST(sum_wx AS DOUBLE) * {HS_ZFACTOR} / 8.0, 2)
                         + POW(CAST(sum_wy AS DOUBLE) * {HS_ZFACTOR} / 8.0, 2)) / 25.0)) AS INTEGER) AS slope_class
-FROM stencil JOIN g ON stencil.tx = g.px AND stencil.ty = g.py
+FROM stencil
 """
 )
 
@@ -1082,7 +1168,7 @@ def raster_aspect_sector(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign/ratio comparisons against tan(22.5 deg) — no engine trig, so the
     classification is bit-deterministic. FLAT when both gradients are 0
     (exact decimal zeros, so the flat test is exact too)."""
-    full = _horn_stencil(_dem_decimal(spark, sf_dir), spark)
+    full = _horn_stencil(_dem_decimal(spark, sf_dir))
     x = -F.col("sum_wx").cast("double")  # downhill east component
     y = -F.col("sum_wy").cast("double")  # downhill north component
     ax, ay = F.abs(x), F.abs(y)
@@ -1102,7 +1188,7 @@ def raster_aspect_sector(spark: SparkSession, sf_dir: str) -> DataFrame:
 RASTER_ASPECT_SQL = (
     _horn_cte()
     + f"""
-SELECT g.px, g.py,
+SELECT tx AS px, ty AS py,
   CASE
     WHEN sum_wx = 0 AND sum_wy = 0 THEN 'FLAT'
     WHEN ABS(-CAST(sum_wy AS DOUBLE)) <= {TAN_22_5!r} * ABS(-CAST(sum_wx AS DOUBLE))
@@ -1114,7 +1200,7 @@ SELECT g.px, g.py,
     WHEN -CAST(sum_wx AS DOUBLE) < 0 AND -CAST(sum_wy AS DOUBLE) > 0 THEN 'NW'
     ELSE 'SW'
   END AS aspect_sector
-FROM stencil JOIN g ON stencil.tx = g.px AND stencil.ty = g.py
+FROM stencil
 """
 )
 
@@ -1128,38 +1214,23 @@ def raster_terrain_ruggedness(spark: SparkSession, sf_dir: str) -> DataFrame:
       TPI       = z - sum_z / 8
       roughness = max(all 9 cells) - min(all 9 cells)
     """
-    g = _dem_decimal(spark, sf_dir)
-    offsets = spark.createDataFrame(
-        [(dx, dy, 0) for dx, dy, _, _ in _HORN] + [(0, 0, 1)], "dx int, dy int, is_c int"
-    )
-    # single pass: neighbor aggregates exclude the center via is_c-gated
-    # conditional sums; min/max run over all 9 cells (roughness wants the
-    # full 3x3 block anyway); the center's own value rides along as max(cz)
-    full = (
-        g.crossJoin(F.broadcast(offsets))
-        .select(
-            (F.col("px") - F.col("dx")).alias("tx"),
-            (F.col("py") - F.col("dy")).alias("ty"),
-            F.col("zd").alias("nz"),
-            F.when(F.col("is_c") == 1, F.col("zd")).alias("cz"),
-            "is_c",
-        )
-        .groupBy("tx", "ty")
-        .agg(
-            F.sum(F.lit(1) - F.col("is_c")).alias("n_nbr"),
-            F.sum(F.when(F.col("is_c") == 0, F.col("nz"))).alias("sum_z"),
-            F.sum(
-                F.when(F.col("is_c") == 0, (F.col("nz") * F.col("nz")).cast("decimal(38,4)"))
-            ).alias("sum_z2"),
+    # neighbour sums skip the centre marker; min/max run over all 9
+    # cells (roughness wants the full 3x3 block anyway)
+    nbr = F.col("is_c") == 0
+    full = _stencil(
+        _dem_decimal(spark, sf_dir), _RING,
+        [F.col("zd").alias("nz")],
+        [
+            F.sum(F.when(nbr, F.col("nz"))).alias("sum_z"),
+            F.sum(F.when(nbr, (F.col("nz") * F.col("nz")).cast("decimal(38,4)"))).alias("sum_z2"),
             F.min("nz").alias("min_all"),
             F.max("nz").alias("max_all"),
-            F.max("cz").alias("zd"),
-        )
-        .filter((F.col("n_nbr") == 8) & F.col("zd").isNotNull())
-        .select(
-            F.col("tx").alias("px"), F.col("ty").alias("py"),
-            "zd", "sum_z", "sum_z2", "min_all", "max_all",
-        )
+        ],
+        where=F.col("n_nbr") == 8,
+        centre="zd",
+    ).select(
+        F.col("tx").alias("px"), F.col("ty").alias("py"),
+        "zd", "sum_z", "sum_z2", "min_all", "max_all",
     )
     z = F.col("zd").cast("double")
     sz = F.col("sum_z").cast("double")
@@ -1176,29 +1247,29 @@ def raster_terrain_ruggedness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ruggedness_sql() -> str:
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy, _, _ in _HORN)
+    nbr = _stencil_sql(
+        "nbr", "g", _RING,
+        ["zd AS nz"],
+        [
+            "SUM(CASE WHEN is_c = 0 THEN nz END) AS sum_z",
+            "SUM(CASE WHEN is_c = 0 THEN CAST(nz * nz AS DECIMAL(38,4)) END) AS sum_z2",
+            "MIN(nz) AS min_all",
+            "MAX(nz) AS max_all",
+        ],
+        where="n_nbr = 8",
+        centre="zd",
+    )
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
 g AS (SELECT px, py, CAST(elev AS DECIMAL(18,2)) AS zd FROM dem),
-offsets(dx, dy) AS (VALUES {offs}),
-nbr AS (
-  SELECT px - dx AS tx, py - dy AS ty,
-         COUNT(*) AS n_nbr,
-         SUM(zd) AS sum_z,
-         SUM(CAST(zd * zd AS DECIMAL(38,4))) AS sum_z2,
-         MIN(zd) AS min_z,
-         MAX(zd) AS max_z
-  FROM g CROSS JOIN offsets
-  GROUP BY 1, 2
-  HAVING COUNT(*) = 8
-)
-SELECT g.px, g.py,
+{nbr}
+SELECT tx AS px, ty AS py,
   ROUND(SQRT(GREATEST(0.0, CAST(sum_z2 AS DOUBLE)
-        - 2.0 * CAST(g.zd AS DOUBLE) * CAST(sum_z AS DOUBLE)
-        + 8.0 * CAST(g.zd AS DOUBLE) * CAST(g.zd AS DOUBLE))), 6) AS tri,
-  ROUND(CAST(g.zd AS DOUBLE) - CAST(sum_z AS DOUBLE) / 8.0, 6) AS tpi,
-  ROUND(CAST(GREATEST(max_z, g.zd) - LEAST(min_z, g.zd) AS DOUBLE), 2) AS roughness
-FROM nbr JOIN g ON nbr.tx = g.px AND nbr.ty = g.py
+        - 2.0 * CAST(zd AS DOUBLE) * CAST(sum_z AS DOUBLE)
+        + 8.0 * CAST(zd AS DOUBLE) * CAST(zd AS DOUBLE))), 6) AS tri,
+  ROUND(CAST(zd AS DOUBLE) - CAST(sum_z AS DOUBLE) / 8.0, 6) AS tpi,
+  ROUND(CAST(max_all - min_all AS DOUBLE), 2) AS roughness
+FROM nbr
 """
 
 
@@ -2021,6 +2092,7 @@ RASTER_ZORDER_INDEX_SQL = _zorder_sql()
 # ---------------------------------------------------------------------------
 
 PROX_RADIUS = 3  # Chebyshev window radius -> (2R+1)^2 = 49 offsets
+_PROX = _offsets(((dx, dy, dx * dx + dy * dy) for dx, dy in _box(PROX_RADIUS)), "d2")
 
 
 def raster_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2048,24 +2120,9 @@ def raster_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("elev") * (F.lit(2) * F.col("n")) > F.lit(3) * F.col("tot")
         ).cast("int").alias("is_target"),
     )
-    offsets = spark.createDataFrame(
-        [
-            (dx, dy, dx * dx + dy * dy)
-            for dx in range(-PROX_RADIUS, PROX_RADIUS + 1)
-            for dy in range(-PROX_RADIUS, PROX_RADIUS + 1)
-        ],
-        "dx int, dy int, d2 int",
+    near = _stencil(
+        flagged.filter(F.col("is_target") == 1), _PROX, ["d2"], [F.min("d2").alias("d2min")]
     )
-    cand = (
-        flagged.filter(F.col("is_target") == 1)
-        .crossJoin(F.broadcast(offsets))
-        .select(
-            (F.col("px") + F.col("dx")).alias("tx"),
-            (F.col("py") + F.col("dy")).alias("ty"),
-            "d2",
-        )
-    )
-    near = cand.groupBy("tx", "ty").agg(F.min("d2").alias("d2min"))
     return flagged.join(
         near,
         (F.col("px") == F.col("tx")) & (F.col("py") == F.col("ty")),
@@ -2077,11 +2134,7 @@ def raster_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _proximity_sql() -> str:
-    offs = ", ".join(
-        f"({dx}, {dy}, {dx * dx + dy * dy})"
-        for dx in range(-PROX_RADIUS, PROX_RADIUS + 1)
-        for dy in range(-PROX_RADIUS, PROX_RADIUS + 1)
-    )
+    near = _stencil_sql("near", "targets", _PROX, ["d2"], ["MIN(d2) AS d2min"])
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
 g AS (SELECT px, py, CAST(elev AS DECIMAL(18,2)) AS elev FROM dem),
@@ -2091,12 +2144,8 @@ flagged AS (
          CAST(CASE WHEN elev * (2 * n) > 3 * tot THEN 1 ELSE 0 END AS INTEGER) AS is_target
   FROM g CROSS JOIN tot
 ),
-offsets(dx, dy, d2) AS (VALUES {offs}),
-cand AS (
-  SELECT px + dx AS tx, py + dy AS ty, d2
-  FROM flagged CROSS JOIN offsets WHERE is_target = 1
-),
-near AS (SELECT tx, ty, MIN(d2) AS d2min FROM cand GROUP BY 1, 2)
+targets AS (SELECT px, py FROM flagged WHERE is_target = 1),
+{near}
 SELECT f.px, f.py, f.is_target,
        CAST(COALESCE(n.d2min, -1) AS INTEGER) AS nearest_d2
 FROM flagged f LEFT JOIN near n ON f.px = n.tx AND f.py = n.ty
@@ -2226,86 +2275,68 @@ _D8 = (
     (1, 0, 1), (1, 1, 2), (0, 1, 4), (-1, 1, 8),
     (-1, 0, 16), (-1, -1, 32), (0, -1, 64), (1, -1, 128),
 )
+_D8_OFFSETS = _offsets(
+    ((dx, dy, code, int(dx * dy != 0)) for dx, dy, code in _D8), "code", "is_diag"
+)
 
 
 def raster_flow_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D8 flow direction: one broadcast 8-row offset join + one groupBy
-    on the center cell (identical shape to the Horn stencil — never 8
-    self-joins). The drop to each neighbor stays exact DECIMAL; diagonal
+    on the center cell (the Horn stencil's `_stencil` pass, with the
+    centre joined in before the fold — never 8 self-joins). The drop to each neighbor stays exact DECIMAL; diagonal
     distance is handled by comparing CROSS-MULTIPLIED integer-scaled
     drops (drop_straight * 99 vs drop_diag * 70, the 1/sqrt(2) ~ 70/99
     rational approximation) so the argmax never touches a float. Ties
     and flat/pit cells resolve to the smallest code / code 0 — the D8
     contract. Only complete 8-neighborhoods are emitted."""
     g = _dem_decimal(spark, sf_dir)
-    offsets = spark.createDataFrame(
-        [(dx, dy, code, 1 if dx * dy != 0 else 0) for dx, dy, code in _D8],
-        "dx int, dy int, code int, is_diag int",
-    )
-    contrib = (
-        g.crossJoin(F.broadcast(offsets))
-        .select(
-            (F.col("px") - F.col("dx")).alias("tx"),
-            (F.col("py") - F.col("dy")).alias("ty"),
-            F.col("zd").alias("nz"),
-            "code", "is_diag",
-        )
-    )
     center = g.select(
         F.col("px").alias("tx"), F.col("py").alias("ty"), F.col("zd").alias("cz")
     )
     # scaled drop: straight neighbors x99, diagonals x70 (99/70 ~ sqrt 2)
-    joined = contrib.join(center, ["tx", "ty"]).select(
-        "tx", "ty", "code",
-        (
-            (F.col("cz") - F.col("nz"))
-            * F.when(F.col("is_diag") == 1, 70).otherwise(99)
-        ).alias("sdrop"),
-    )
-    agg = joined.groupBy("tx", "ty").agg(
-        F.count(F.lit(1)).alias("n_nbr"),
-        F.max(F.struct(F.col("sdrop"), (-F.col("code")).alias("neg_code"))).alias("best"),
+    sdrop = (F.col("cz") - F.col("nz")) * F.when(F.col("is_diag") == 1, 70).otherwise(99)
+    agg = _stencil(
+        g, _D8_OFFSETS,
+        [F.col("zd").alias("nz"), "code", "is_diag"],
+        [
+            F.count(F.lit(1)).alias("n_nbr"),
+            F.max(F.struct(F.col("sdrop"), (-F.col("code")).alias("neg_code"))).alias("best"),
+        ],
+        where=F.col("n_nbr") == 8,
+        pre_fold=lambda nbr: nbr.join(center, ["tx", "ty"]).select(
+            "tx", "ty", "code", sdrop.alias("sdrop")
+        ),
     )
     best_drop = F.col("best.sdrop")
     best_code = (-F.col("best.neg_code")).cast("int")
-    return (
-        agg.filter(F.col("n_nbr") == 8)
-        .select(
-            F.col("tx").alias("px"),
-            F.col("ty").alias("py"),
-            F.when(best_drop > 0, best_code).otherwise(F.lit(0)).alias("flow_dir"),
-            (best_drop.cast("double") / 99.0).alias("scaled_drop"),
-        )
+    return agg.select(
+        F.col("tx").alias("px"),
+        F.col("ty").alias("py"),
+        F.when(best_drop > 0, best_code).otherwise(F.lit(0)).alias("flow_dir"),
+        (best_drop.cast("double") / 99.0).alias("scaled_drop"),
     )
 
 
 def _flow_sql() -> str:
-    offs = ", ".join(
-        f"({dx}, {dy}, {code}, {1 if dx * dy != 0 else 0})" for dx, dy, code in _D8
+    agg = _stencil_sql(
+        "agg", "g", _D8_OFFSETS,
+        ["zd AS nz", "code", "is_diag"],
+        [
+            "COUNT(*) AS n_nbr",
+            "MAX(struct_pack(sdrop := (g.zd - nz) * CASE WHEN is_diag = 1 THEN 70 ELSE 99 END,"
+            " neg_code := -code)) AS best",
+        ],
+        where="n_nbr = 8",
+        join=" JOIN g ON tx = g.px AND ty = g.py",
     )
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
 g AS (SELECT px, py, CAST(elev AS DECIMAL(18,2)) AS zd FROM dem),
-offsets(dx, dy, code, is_diag) AS (VALUES {offs}),
-contrib AS (
-  SELECT px - dx AS tx, py - dy AS ty, zd AS nz, code, is_diag
-  FROM g CROSS JOIN offsets
-),
-joined AS (
-  SELECT c.tx, c.ty, c.code,
-         (g.zd - c.nz) * CASE WHEN c.is_diag = 1 THEN 70 ELSE 99 END AS sdrop
-  FROM contrib c JOIN g ON c.tx = g.px AND c.ty = g.py
-),
-agg AS (
-  SELECT tx, ty, COUNT(*) AS n_nbr,
-         MAX(struct_pack(sdrop := sdrop, neg_code := -code)) AS best
-  FROM joined GROUP BY tx, ty
-)
+{agg}
 SELECT tx AS px, ty AS py,
        CASE WHEN best['sdrop'] > 0 THEN CAST(-best['neg_code'] AS INTEGER) ELSE 0 END AS flow_dir,
        CAST(best['sdrop'] AS DOUBLE) / 99.0 AS scaled_drop
 FROM agg
-WHERE n_nbr = 8
 """
 
 
@@ -3510,7 +3541,7 @@ def raster_flow_path_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _flow_path_sql() -> str:
     steps = ", ".join(f"({code}, {dx}, {dy})" for dx, dy, code in _D8)
     return f"""
-WITH RECURSIVE fd AS ({RASTER_FLOW_DIRECTION_SQL.replace('WITH dem AS', 'WITH dem AS')}),
+WITH RECURSIVE fd AS ({RASTER_FLOW_DIRECTION_SQL}),
 stepmap(code, sdx, sdy) AS (VALUES {steps}),
 nxt AS (
   SELECT f.px, f.py, f.flow_dir,
@@ -3556,10 +3587,10 @@ RASTER_FLOW_PATH_LENGTH_SQL = _flow_path_sql()
 
 
 def raster_focal_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3x3 focal median over the DEM: one broadcast 9-offset expansion
-    from the sparse cell side, one groupBy on the target cell — the
-    same single-pass fused-stencil shape as hillshade/TRI (never 9
-    self-joins). The median is percentile_disc-exact: values are
+    """3x3 focal median over the DEM: one `_stencil` pass over the 3x3
+    box plus the centre marker (which carries the cell's own value, so
+    nothing joins back) — the same single-pass fused-stencil shape as
+    hillshade/TRI (never 9 self-joins). The median is percentile_disc-exact: values are
     integer cents, the neighborhood sorts as a 9-element array, and the
     pick is rank (n+1) div 2 — the lower median, identical in both
     engines with no interpolation ambiguity. Edge cells take the median
@@ -3567,51 +3598,40 @@ def raster_focal_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = dem_grid(spark, sf_dir).select(
         "px", "py", (F.col("elev") * 100).cast("bigint").alias("cents")
     )
-    offsets = spark.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)], "dx int, dy int"
+    # the window's present cells, sorted; the centre marker adds none
+    out = _stencil(
+        g, _BOX,
+        ["cents"],
+        [F.sort_array(F.collect_list(F.when(F.col("is_c") == 0, F.col("cents")))).alias("vals")],
+        centre="cents",
     )
-    nbr = (
-        g.crossJoin(F.broadcast(offsets))
-        .groupBy(
-            (F.col("px") - F.col("dx")).alias("tx"),
-            (F.col("py") - F.col("dy")).alias("ty"),
-        )
-        .agg(
-            F.sort_array(F.collect_list("cents")).alias("vals"),
-            F.count(F.lit(1)).alias("n_nbr"),
-        )
-    )
-    g2 = g.select(
-        F.col("px").alias("cpx"), F.col("py").alias("cpy"), "cents"
-    )
-    out = nbr.join(g2, (F.col("tx") == F.col("cpx")) & (F.col("ty") == F.col("cpy")))
-    med = F.element_at(F.col("vals"), ((F.col("n_nbr") + 1) / 2).cast("int"))
+    n = F.size("vals")
+    med = F.element_at(F.col("vals"), ((n + 1) / 2).cast("int"))
     return out.select(
-        F.col("cpx").alias("px"),
-        F.col("cpy").alias("py"),
-        F.col("n_nbr").cast("bigint").alias("n_nbr"),
+        F.col("tx").alias("px"),
+        F.col("ty").alias("py"),
+        n.cast("bigint").alias("n_nbr"),
         (med.cast("double") / 100.0).alias("median_val"),
         ((med - F.col("cents")).cast("double") / 100.0).alias("delta"),
     )
 
 
 def _focal_median_sql() -> str:
-    offs = ", ".join(f"({dx}, {dy})" for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+    nbr = _stencil_sql(
+        "nbr", "g", _BOX,
+        ["cents"],
+        ["list_sort(list(cents) FILTER (WHERE is_c = 0)) AS vals"],
+        centre="cents",
+    )
+    med = "vals[CAST((len(vals) + 1) // 2 AS INTEGER)]"
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
 g AS (SELECT px, py, CAST(elev * 100 AS BIGINT) AS cents FROM dem),
-offsets(dx, dy) AS (VALUES {offs}),
-nbr AS (
-  SELECT px - dx AS tx, py - dy AS ty,
-         list_sort(list(cents)) AS vals,
-         COUNT(*) AS n_nbr
-  FROM g CROSS JOIN offsets
-  GROUP BY 1, 2
-)
-SELECT g.px, g.py, CAST(n_nbr AS BIGINT) AS n_nbr,
-       CAST(vals[CAST((n_nbr + 1) // 2 AS INTEGER)] AS DOUBLE) / 100.0 AS median_val,
-       CAST(vals[CAST((n_nbr + 1) // 2 AS INTEGER)] - g.cents AS DOUBLE) / 100.0 AS delta
-FROM nbr JOIN g ON nbr.tx = g.px AND nbr.ty = g.py
+{nbr}
+SELECT tx AS px, ty AS py, CAST(len(vals) AS BIGINT) AS n_nbr,
+       CAST({med} AS DOUBLE) / 100.0 AS median_val,
+       CAST({med} - cents AS DOUBLE) / 100.0 AS delta
+FROM nbr
 """
 
 
@@ -3627,6 +3647,9 @@ RASTER_FOCAL_MEDIAN_SQL = _focal_median_sql()
 # ---------------------------------------------------------------------------
 
 CONTOUR_HALVES = (1, 2, 3)  # levels at 0.5/1.0/1.5x the grid MEAN
+# the 2x2 window: corner k of the cell at (px, py) sits at (px + dx, py + dy)
+_CORNERS = _offsets([(0, 0, 0), (1, 0, 1), (0, 1, 2), (1, 1, 3)], "corner")
+_CORNER_Z = ("z00", "z10", "z01", "z11")  # by corner
 
 
 def raster_contour_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3646,23 +3669,12 @@ def raster_contour_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = dem_grid(spark, sf_dir).select(
         "px", "py", (F.col("elev") * 100).cast("bigint").alias("zc")
     )
-    offsets = spark.createDataFrame(
-        [(0, 0, 0), (1, 0, 1), (0, 1, 2), (1, 1, 3)], "dx int, dy int, corner int"
-    )
-    cells = (
-        g.crossJoin(F.broadcast(offsets))
-        .groupBy(
-            (F.col("px") - F.col("dx")).alias("cx"),
-            (F.col("py") - F.col("dy")).alias("cy"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_corner"),
-            F.max(F.when(F.col("corner") == 0, F.col("zc"))).alias("z00"),
-            F.max(F.when(F.col("corner") == 1, F.col("zc"))).alias("z10"),
-            F.max(F.when(F.col("corner") == 2, F.col("zc"))).alias("z01"),
-            F.max(F.when(F.col("corner") == 3, F.col("zc"))).alias("z11"),
-        )
-        .filter(F.col("n_corner") == 4)
+    cells = _stencil(
+        g, _CORNERS,
+        ["zc", "corner"],
+        [F.count(F.lit(1)).alias("n_corner")]
+        + [F.max(F.when(F.col("corner") == k, F.col("zc"))).alias(z) for k, z in enumerate(_CORNER_Z)],
+        where=F.col("n_corner") == 4,
     )
     mx = g.agg(F.sum("zc").alias("total_zc"), F.count(F.lit(1)).alias("n_zc"))
     halves = spark.createDataFrame(
@@ -3765,16 +3777,17 @@ def _contour_sql() -> str:
       WHEN 5 THEN CASE WHEN {ch} THEN {L(xb, yb, xr, yr)} ELSE {L(xr, yr, xt, yt)} END
       WHEN 10 THEN CASE WHEN {ch} THEN {L(xr, yr, xt, yt)} ELSE {L(xb, yb, xr, yr)} END
     END"""
+    cells = _stencil_sql(
+        "cells", "g", _CORNERS,
+        ["zc", "corner"],
+        ["COUNT(*) AS n_corner"]
+        + [f"MAX(CASE WHEN corner = {k} THEN zc END) AS {z}" for k, z in enumerate(_CORNER_Z)],
+        where="n_corner = 4",
+    )
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
 g AS (SELECT px, py, CAST(elev * 100 AS BIGINT) AS zc FROM dem),
-cells AS (
-  SELECT a.px AS cx, a.py AS cy, a.zc AS z00, b.zc AS z10, c.zc AS z01, d.zc AS z11
-  FROM g a
-  JOIN g b ON b.px = a.px + 1 AND b.py = a.py
-  JOIN g c ON c.px = a.px AND c.py = a.py + 1
-  JOIN g d ON d.px = a.px + 1 AND d.py = a.py + 1
-),
+{cells},
 mx AS (SELECT CAST(SUM(zc) AS BIGINT) AS total_zc, COUNT(*) AS n_zc FROM g),
 qk(k) AS (VALUES {halves}),
 lv AS (SELECT CAST(total_zc * k // (2 * n_zc) AS BIGINT) AS level FROM mx CROSS JOIN qk),
@@ -4043,15 +4056,14 @@ RASTER_WATERSHED_BASINS_SQL = RASTER_WATERSHED_BASINS_SQL.format(
 # raster_curvature — second-derivative surface curvature (gdaldem family)
 # ---------------------------------------------------------------------------
 
-# 9-offset weights for the three second differences: zxx = zW - 2z + zE,
-# zyy = zS - 2z + zN, zxy*4 = zNE + zSW - zNW - zSE (kept x4 so the
-# stencil sums stay integer-weighted decimals)
-_CURV = [
-    # dx, dy, wxx, wyy, wxy4
+# 9-offset weights (dx, dy, wxx, wyy, wxy4) of the second differences:
+# zxx = zW - 2z + zE, zyy = zS - 2z + zN, zxy*4 = zNE + zSW - zNW - zSE
+# (kept x4 so the stencil sums stay integer-weighted decimals)
+_CURV = _offsets([
     (-1, 0, 1, 0, 0), (1, 0, 1, 0, 0), (0, 0, -2, -2, 0),
     (0, -1, 0, 1, 0), (0, 1, 0, 1, 0),
     (1, 1, 0, 0, 1), (-1, -1, 0, 0, 1), (-1, 1, 0, 0, -1), (1, -1, 0, 0, -1),
-]
+], "wxx", "wyy", "wxy4")
 
 
 def raster_curvature(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4062,34 +4074,16 @@ def raster_curvature(spark: SparkSession, sf_dir: str) -> DataFrame:
     convex/flat/concave class decides on the DECIMAL Laplacian sign —
     no float touches the classification; the emitted derivative columns
     are exact decimals cast once."""
-    g = _dem_decimal(spark, sf_dir)
-    offsets = spark.createDataFrame(
-        [(dx, dy, wxx, wyy, wxy4, 0) for dx, dy, wxx, wyy, wxy4 in _CURV]
-        + [(0, 0, 0, 0, 0, 1)],
-        "dx int, dy int, wxx int, wyy int, wxy4 int, is_c int",
-    )
-    full = (
-        g.crossJoin(F.broadcast(offsets))
-        .select(
-            (F.col("px") - F.col("dx")).alias("tx"),
-            (F.col("py") - F.col("dy")).alias("ty"),
+    full = _stencil(
+        _dem_decimal(spark, sf_dir), _CURV,
+        [
             (F.col("wxx") * F.col("zd")).alias("xx"),
             (F.col("wyy") * F.col("zd")).alias("yy"),
             (F.col("wxy4") * F.col("zd")).alias("xy"),
-            F.when(F.col("is_c") == 1, F.col("zd")).alias("cz"),
-            "is_c",
-        )
-        .groupBy("tx", "ty")
-        .agg(
-            F.sum(F.lit(1) - F.col("is_c")).alias("n_nbr"),
-            F.sum("xx").alias("zxx"),
-            F.sum("yy").alias("zyy"),
-            F.sum("xy").alias("zxy4"),
-            F.max("cz").alias("zd"),
-        )
-        # 9 weighted rows + the center marker row land on each target;
-        # n_nbr counts the 9 (center emits via is_c separately)
-        .filter((F.col("n_nbr") == 9) & F.col("zd").isNotNull())
+        ],
+        [F.sum("xx").alias("zxx"), F.sum("yy").alias("zyy"), F.sum("xy").alias("zxy4")],
+        where=F.col("n_nbr") == 9,  # all 9 weighted rows (the centre is one)
+        centre="zd",
     )
     lap = F.col("zxx") + F.col("zyy")
     cls = (
@@ -4107,26 +4101,17 @@ def raster_curvature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curvature_sql() -> str:
-    offs = ", ".join(
-        f"({dx}, {dy}, {wxx}, {wyy}, {wxy4})" for dx, dy, wxx, wyy, wxy4 in _CURV
+    nbr = _stencil_sql(
+        "nbr", "g", _CURV,
+        ["wxx * zd AS xx", "wyy * zd AS yy", "wxy4 * zd AS xy"],
+        ["SUM(xx) AS zxx", "SUM(yy) AS zyy", "SUM(xy) AS zxy4"],
+        where="n_nbr = 9",
+        centre="zd",
     )
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
 g AS (SELECT px, py, CAST(elev AS DECIMAL(18,2)) AS zd FROM dem),
-offsets(dx, dy, wxx, wyy, wxy4) AS (VALUES {offs}),
-nbr AS (
-  SELECT px - dx AS tx, py - dy AS ty,
-         COUNT(*) AS n_nbr,
-         SUM(wxx * zd) AS zxx,
-         SUM(wyy * zd) AS zyy,
-         SUM(wxy4 * zd) AS zxy4
-  FROM g CROSS JOIN offsets
-  GROUP BY 1, 2
-  HAVING COUNT(*) = 9
-),
-full_c AS (
-  SELECT n.*, g.zd FROM nbr n JOIN g ON n.tx = g.px AND n.ty = g.py
-)
+{nbr}
 SELECT tx AS px, ty AS py,
        CAST(zxx AS DOUBLE) AS zxx,
        CAST(zyy AS DOUBLE) AS zyy,
@@ -4135,7 +4120,7 @@ SELECT tx AS px, ty AS py,
        CASE WHEN zxx + zyy > 0 THEN 'convex'
             WHEN zxx + zyy < 0 THEN 'concave'
             ELSE 'flat' END AS curv_class
-FROM full_c
+FROM nbr
 """
 
 
@@ -4301,23 +4286,17 @@ def raster_morphology_open(spark: SparkSession, sf_dir: str) -> DataFrame:
         "px", "py",
         (F.col("c") * F.col("n") > F.col("ts")).cast("int").alias("m"),
     )
-    offsets = spark.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)], "dx int, dy int"
+    in_grid = (
+        (F.col("tx") >= 0) & (F.col("tx") < GRID_W)
+        & (F.col("ty") >= 0) & (F.col("ty") < GRID_H)
     )
 
     def stencil(df, col, agg_fn, strict):
-        nb = df.crossJoin(F.broadcast(offsets)).select(
-            (F.col("px") + F.col("dx")).alias("tx"),
-            (F.col("py") + F.col("dy")).alias("ty"),
-            F.col(col).alias("v"),
-        )
-        agg = (
-            nb.where(
-                (F.col("tx") >= 0) & (F.col("tx") < GRID_W)
-                & (F.col("ty") >= 0) & (F.col("ty") < GRID_H)
-            )
-            .groupBy("tx", "ty")
-            .agg(agg_fn(F.col("v")).alias("a"), F.count(F.lit(1)).alias("n"))
+        agg = _stencil(
+            df, _BOX,
+            [F.col(col).alias("v")],
+            [agg_fn(F.col("v")).alias("a"), F.count(F.lit(1)).alias("n")],
+            where=in_grid,
         )
         # strict (erosion): a missing neighbor IS background, so any cell
         # with < 9 contributors (border or grid hole) erodes to 0. For
@@ -4355,8 +4334,13 @@ def raster_morphology_open(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _morph_sql() -> str:
-    offs = ", ".join(
-        f"({dx}, {dy})" for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+    in_grid = f"tx >= 0 AND tx < {GRID_W} AND ty >= 0 AND ty < {GRID_H}"
+    er = _stencil_sql(
+        "er", "g", _BOX, ["m AS v"],
+        ["CASE WHEN COUNT(*) < 9 THEN 0 ELSE MIN(v) END AS m"], where=in_grid,
+    )
+    di = _stencil_sql(
+        "di", "eroded", _BOX, ["m AS v"], ["MAX(v) AS opened"], where=in_grid,
     )
     return f"""
 WITH dem AS ({DEM_GRID_SQL}),
@@ -4366,26 +4350,10 @@ g AS (
   SELECT px, py, CASE WHEN c * n > ts THEN 1 ELSE 0 END AS m
   FROM c, tot
 ),
-offsets(dx, dy) AS (VALUES {offs}),
-er AS (
-  SELECT px + dx AS tx, py + dy AS ty, m AS v FROM g CROSS JOIN offsets
-),
-eroded AS (
-  SELECT tx AS px, ty AS py,
-         CASE WHEN COUNT(*) < 9 THEN 0 ELSE MIN(v) END AS m
-  FROM er
-  WHERE tx >= 0 AND tx < {GRID_W} AND ty >= 0 AND ty < {GRID_H}
-  GROUP BY 1, 2
-),
-di AS (
-  SELECT px + dx AS tx, py + dy AS ty, m AS v FROM eroded CROSS JOIN offsets
-),
-opened AS (
-  SELECT tx AS px, ty AS py, MAX(v) AS opened
-  FROM di
-  WHERE tx >= 0 AND tx < {GRID_W} AND ty >= 0 AND ty < {GRID_H}
-  GROUP BY 1, 2
-),
+{er},
+eroded AS (SELECT tx AS px, ty AS py, m FROM er),
+{di},
+opened AS (SELECT tx AS px, ty AS py, opened FROM di),
 j AS (
   SELECT g.px, g.py, g.m, COALESCE(o.opened, 0) AS opened
   FROM g LEFT JOIN opened o ON g.px = o.px AND g.py = o.py
@@ -4417,8 +4385,8 @@ def raster_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted cost-distance from the global maximum-elevation cell:
     entering a cell costs its elevation in cents, and each of
     COST_ROUNDS Bellman-Ford rounds relaxes cost(c) = min(cost(c),
-    min over 8-neighbors n of cost(n) + w(c)) — one broadcast 9-offset
-    join + one groupBy-min per round, query_checkpoint cutting lineage
+    min over 8-neighbors n of cost(n) + w(c)) — one broadcast 8-offset
+    `_stencil` join + groupBy-min per round, query_checkpoint cutting lineage
     exactly like the CC loop. k rounds bound the frontier to k cells
     (the honest contract, stated in the output); production runs
     delta-stepping to the fixed point with the same per-round plan. All
@@ -4441,21 +4409,10 @@ def raster_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cost"),
     ))
-    offsets = spark.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if not (dx == 0 and dy == 0)],
-        "dx int, dy int",
-    )
     for _ in range(COST_ROUNDS):
-        nb = (
-            cost.where(F.col("cost").isNotNull())
-            .crossJoin(F.broadcast(offsets))
-            .select(
-                (F.col("px") + F.col("dx")).alias("tx"),
-                (F.col("py") + F.col("dy")).alias("ty"),
-                F.col("cost").alias("ncost"),
-            )
-            .groupBy("tx", "ty")
-            .agg(F.min("ncost").alias("best_nb"))
+        nb = _stencil(
+            cost.where(F.col("cost").isNotNull()), _RING,
+            [F.col("cost").alias("ncost")], [F.min("ncost").alias("best_nb")],
         )
         cost = query_checkpoint(
             cost.join(
@@ -4478,30 +4435,24 @@ def raster_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cost_distance_sql() -> str:
-    offs = ", ".join(
-        f"({dx}, {dy})" for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-        if not (dx == 0 and dy == 0)
-    )
     parts = [f"""
 WITH dem AS ({DEM_GRID_SQL}),
 g AS (SELECT px, py, CAST(elev * 100 AS BIGINT) AS w FROM dem),
 src AS (
   SELECT px AS sx, py AS sy FROM g ORDER BY w DESC, px, py LIMIT 1
 ),
-offsets(dx, dy) AS (VALUES {offs}),
 c0 AS (
   SELECT px, py, w,
          CASE WHEN px = sx AND py = sy THEN CAST(0 AS BIGINT) END AS cost
   FROM g, src
 )"""]
     for i in range(1, COST_ROUNDS + 1):
+        nb = _stencil_sql(
+            f"nb{i}", f"(SELECT px, py, cost FROM c{i - 1} WHERE cost IS NOT NULL)", _RING,
+            ["cost AS ncost"], ["MIN(ncost) AS best_nb"],
+        )
         parts.append(f""",
-nb{i} AS (
-  SELECT px + dx AS tx, py + dy AS ty, MIN(cost) AS best_nb
-  FROM c{i - 1} CROSS JOIN offsets
-  WHERE cost IS NOT NULL
-  GROUP BY 1, 2
-),
+{nb},
 c{i} AS (
   SELECT c.px, c.py, c.w,
          LEAST(c.cost, n.best_nb + c.w) AS cost

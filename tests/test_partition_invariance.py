@@ -100,6 +100,11 @@ INVARIANCE_KEYS = [
     # and DEM join must not depend on the layout either
     "viewshed_los",
     "terrain_profile",
+    # the raster stencil's fold: the focal median's collect_list order
+    # (sort_array must make it layout-free) and the flow direction's
+    # max(struct) tie-break must not move with the partitioning
+    "raster_focal_median",
+    "raster_flow_direction",
 ]
 
 

@@ -102,12 +102,37 @@ def test_salted_agg_two_phase(spark):
 
 
 def test_gdaldem_stencils_are_broadcast_joins(spark):
-    for key in ("raster_slope_percent", "raster_terrain_ruggedness"):
-        # fused single-pass stencil: broadcast 9-row offset expansion only,
-        # one dem derivation, NOT a cartesian shuffle or 8 self-joins
+    # key -> dem derivations its plan may hold: the stencil's own, plus
+    # the centre join (flow direction), the grid mean (contour), or a
+    # mean-thresholded grid read by the stencil and the final join
+    # (morphology, proximity)
+    for key, derivations in {
+        "raster_hillshade": 1, "raster_slope_percent": 1,
+        "raster_aspect_sector": 1, "raster_terrain_ruggedness": 1,
+        "raster_curvature": 1, "raster_focal_median": 1,
+        "raster_flow_direction": 2, "raster_contour_segments": 2,
+        "raster_morphology_open": 4, "raster_proximity": 4,
+    }.items():
+        # fused single-pass stencil (raster._stencil): broadcast offset
+        # expansion only, NOT a cartesian shuffle or per-offset self-joins
         plan = assert_in_plan(q(spark, key), "BroadcastNestedLoopJoin")
-        assert plan.count("Scan parquet") <= 2
+        # the formatted plan names each scan twice (tree line + details)
+        assert plan.count("Scan parquet") <= 2 * derivations, key
         assert "CartesianProduct" not in plan
+
+
+def test_plan_audit_counts_build_time_plans(spark):
+    """raster_cost_distance returns a frame standing on its last round's
+    checkpoint, so its returned plan shows no shuffle; the audit's
+    `build` record reads the rounds' SQL executions back from the status
+    store and counts their hash exchanges."""
+    from perfbench.sparkstats import SparkStats
+    from tools.plan_audit import audit_key
+
+    row = audit_key(spark, SparkStats(spark), entrymod.queries()["raster_cost_distance"], SF_DIR)
+    assert row["hash_exchanges"] == 0, row
+    assert row["build"]["executions"] >= 1, row
+    assert row["build"]["hash_exchanges"] >= 1, row
 
 
 def test_order_priority_is_semi_join(spark):

@@ -179,3 +179,55 @@ def test_vrt_overview_mosaic(spark, ducks):
     for (qx, qy), r in rows.items():
         if r.source == "B":
             assert qx < b_cells and qy < b_cells
+
+
+def test_stencil_has_one_home():
+    """Every grid-neighbourhood key reaches its neighbours through one
+    offset fan-out and one fold: in operators/raster.py the cell-to-
+    target offset arithmetic (`px ± dx`), the broadcast cross join of an
+    offset table and the SQL `CROSS JOIN` of an offsets CTE sit only in
+    `_stencil` / `_stencil_sql`, and the 3x3 box is spelled only by
+    `_box`. The two gather keys are the exception: fill_nodata and
+    grid_idw equi-join each offset to a second frame instead of folding
+    the grid onto itself."""
+    import ast
+    import pathlib
+    import re
+
+    from gdalos_spark.operators import raster
+
+    text = pathlib.Path(raster.__file__).read_text()
+    tree = ast.parse(text)
+    homes = [n for n in tree.body if isinstance(n, (ast.FunctionDef, ast.Assign))]
+
+    def owner(lineno: int) -> str | None:
+        """The module-level function or assignment holding `lineno`."""
+        for d in homes:
+            if d.lineno <= lineno <= d.end_lineno:
+                return d.name if isinstance(d, ast.FunctionDef) else d.targets[0].id
+        return None
+
+    def col(node, names) -> bool:
+        """`node` is F.col(<one of names>)."""
+        return isinstance(node, ast.Call) and ast.unparse(node) in {f"F.col('{n}')" for n in names}
+
+    spark_sites = {
+        owner(n.lineno) for n in ast.walk(tree)
+        if isinstance(n, ast.BinOp) and col(n.left, ("px", "py")) and col(n.right, ("dx", "dy"))
+    } | {
+        owner(n.lineno) for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "crossJoin"
+        and ast.unparse(n.args[0]) in ("F.broadcast(offsets)", "F.broadcast(table)")
+    }
+    assert spark_sites == {"_stencil", "raster_fill_nodata", "raster_grid_idw"}, spark_sites
+
+    lines = text.splitlines()
+    sql_sites = {
+        owner(i + 1)
+        for i, line in enumerate(lines)
+        if re.search(r"CROSS JOIN \w*offs|\bSELECT px [-+] dx\b|p[xy] [-+] o\.d[xy]\b", line)
+    }
+    assert sql_sites == {"_stencil_sql", "RASTER_FILL_NODATA_SQL", "RASTER_GRID_IDW_SQL"}, sql_sites
+    assert "for dx in (-1, 0, 1)" not in text
